@@ -275,7 +275,7 @@ class DeltaLakeLoadAlgorithm(Algorithm):
             return [merge_delta(lake, condensed, merge_keys, record_mode_column=rm,
                                 records_to_delete=rtd, match_operator=bk_op)]
 
-        from m3d_engine_spark.sources.writers import LoadMode
+        from m3d_engine_spark.sources.writers import LoadMode, repartitioned
 
         if is_init:
             # Init load (DeltaLakeLoad.scala:101-120): deletes dropped,
@@ -288,10 +288,7 @@ class DeltaLakeLoadAlgorithm(Algorithm):
                 # The init write must itself be format("delta") — a
                 # parquet init would leave a table that never takes the
                 # DeltaTable.merge path on subsequent runs.
-                n = p.get_optional("output_partitions_num")
-                w = init_df
-                if n:
-                    w = w.repartition(n, *targets) if targets else w.repartition(n)
+                w = repartitioned(init_df, p.get_optional("output_partitions_num"), targets)
                 writer = w.write.format("delta").mode("overwrite")
                 if targets:
                     writer = writer.partitionBy(*targets)
@@ -377,14 +374,14 @@ class DeltaLakeLoadAlgorithm(Algorithm):
         rewrites the same partition directories atomically — same
         file-count outcome, minus the no-op-for-streams marker."""
         from m3d_engine_spark.plans.partitions import partition_where_sql
-        from m3d_engine_spark.sources.writers import LoadMode
+        from m3d_engine_spark.sources.writers import LoadMode, repartitioned
 
         df = self._read_delta()
         if targets and self.affected:
             df = df.filter(partition_predicate(self.affected))
         n = self.params.get_optional("output_partitions_num")
         if self._is_real_delta():
-            w = (df.repartition(n, *targets) if targets else df.repartition(n)) if n else df
+            w = repartitioned(df, n, targets)
             writer = w.write.format("delta").mode("overwrite").option("dataChange", "false")
             if targets and self.affected:
                 writer = writer.option(

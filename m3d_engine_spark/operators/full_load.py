@@ -27,6 +27,7 @@ from m3d_engine_spark.plans.partitions import enforce_schema
 from m3d_engine_spark.sources.dfs import DFS, next_version_dir
 from m3d_engine_spark.sources.formats import format_from_params
 from m3d_engine_spark.sources import catalog as cat
+from m3d_engine_spark.sources.writers import AtomicWriter, LoadMode, repartitioned
 
 NULL_SENTINEL = "XXNULLXXX"  # FullLoadConfiguration.scala:81-83
 
@@ -190,8 +191,6 @@ class FullLoad(Algorithm):
             # mid-write failure destroys the previous dataset with
             # nothing to restore. Route through the temp-write → dir
             # swap → restore protocol instead.
-            from m3d_engine_spark.sources.writers import AtomicWriter, LoadMode
-
             AtomicWriter(
                 self.spark,
                 self.next_location,
@@ -199,10 +198,7 @@ class FullLoad(Algorithm):
                 output_files_num=n,
             ).write(df, LoadMode.OVERWRITE_TABLE)
             return
-        if self.partition_targets:
-            df = df.repartition(n, *self.partition_targets)
-        else:
-            df = df.repartition(n)
+        df = repartitioned(df, n, self.partition_targets)
         try:
             w = df.write.mode("overwrite").format("parquet")
             if self.partition_targets:

@@ -27,7 +27,7 @@ from m3d_engine_spark.functions.dates import aligned_week_of_year  # noqa: F401 
 from m3d_engine_spark.operators.base import Algorithm, register
 from m3d_engine_spark.plans.partitions import partition_predicate
 from m3d_engine_spark.sources.dfs import DFS, next_version_dir
-from m3d_engine_spark.sources.writers import AtomicWriter, LoadMode
+from m3d_engine_spark.sources.writers import AtomicWriter, LoadMode, repartitioned
 
 
 def date_range_criteria(
@@ -128,18 +128,17 @@ class FullMaterialization(Algorithm):
     def write(self, dfs: list[DataFrame]) -> None:
         df = dfs[0]
         parts = self.params.get_optional("target_partitions", [])
-        if self.params.has("number_output_partitions") and not self.params.has(
+        # reference spelling → reference semantics: plain round-robin
+        # repartition(n) (Algorithm.scala:138,157)
+        spread = self.params.has("number_output_partitions") and not self.params.has(
             "output_files_num"
-        ):
-            # reference spelling → reference semantics: plain
-            # round-robin repartition(n) (Algorithm.scala:138,157)
-            df = df.repartition(
-                int(self.params.get_int("number_output_partitions"))
-            )
-        else:
-            n = self.params.get_optional("output_files_num", 10)
-            df = df.repartition(n, *parts) if parts else df.repartition(n)
-        w = df.write.mode("overwrite").format("parquet")
+        )
+        n = (
+            int(self.params.get_int("number_output_partitions"))
+            if spread
+            else self.params.get_optional("output_files_num", 10)
+        )
+        w = repartitioned(df, n, parts, spread).write.mode("overwrite").format("parquet")
         if parts:
             w = w.partitionBy(*parts)
         try:

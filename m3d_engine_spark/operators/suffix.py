@@ -1012,18 +1012,21 @@ def _maybe_compact_state(spark, params, state_loc: str) -> None:
 
 
 def _recover_swap_litter(dfs, state_root: str) -> None:
-    """Complete any compaction swap a crash interrupted. AtomicWriter's
-    protocol is temp-write → base→backup rename → tmp→base rename →
-    delete backup, so a hard kill can leave (a) a ``__tmp_*`` sibling
-    (uncommitted rewrite — base intact: drop it), (b) a ``__bak_*``
-    sibling WITH its base present (the final delete failed — the base
-    is authoritative: drop the backup), or (c) a ``__bak_*`` sibling
-    with its base GONE (killed between the two renames — the backup IS
-    the data: restore it; the layout-only rewrite in the tmp dir is
-    expendable). The base is derived from the SWAP name (split on the
-    marker), so an orphan backup whose base dir no longer exists is
-    still found. Two scan scopes, both name-guarded so entries
-    belonging to anything else are never touched:
+    """Complete any compaction swap a crash interrupted. A compaction
+    rewrites a dir with AtomicWriter's ``OverwriteTable``, which commits
+    the whole dir as one unit of its single protocol: temp write →
+    base→backup rename → tmp→base rename → delete backup (the temp dir
+    is also deleted on every exit the process survives). A hard kill
+    can leave (a) a ``__tmp_*`` sibling (uncommitted rewrite — base
+    intact: drop it), (b) a ``__bak_*`` sibling WITH its base present
+    (the final delete failed — the base is authoritative: drop the
+    backup), or (c) a ``__bak_*`` sibling with its base GONE (killed
+    between the two renames — the backup IS the data: restore it; the
+    layout-only rewrite in the tmp dir is expendable). The base is
+    derived from the SWAP name (split on the marker), so an orphan
+    backup whose base dir no longer exists is still found. Two scan
+    scopes, both name-guarded so entries belonging to anything else are
+    never touched:
 
     * INSIDE the state root — ``batch_tag=*`` leaf swaps (tagged
       states);

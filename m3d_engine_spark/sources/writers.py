@@ -3,17 +3,26 @@
 Reference parity: util/OutputWriter.scala + util/LoadMode.scala —
 five load modes:
 
-* ``OverwriteTable``        — full swap (OutputWriter.scala:120-122,148)
-* ``OverwritePartitions``   — replace only the partitions present in the
-                              DataFrame, with backup/restore (:149-150,230-261)
+* ``OverwriteTable``        — replace the whole target (OutputWriter.scala:120-122,148)
+* ``OverwritePartitions``   — replace only the affected partitions
+                              (:149-150,230-261)
 * ``OverwritePartitionsWithAddedColumns`` — as above, padding the new
                               data to the on-disk schema first (:151-161)
 * ``AppendJoinPartitions``  — FULL OUTER JOIN new vs existing rows of the
                               affected partitions, rewrite them (:162-176)
 * ``AppendUnionPartitions`` — UNION new + existing rows, rewrite (:177-190)
 
-and the atomic protocol (write temp → backup existing partitions → move
-new into place → restore on failure, OutputWriter.scala:96-262).
+Every mode commits through ONE protocol (OutputWriter.scala:96-262)
+over a list of units: the affected partitions, or the whole target as
+one unit (criterion ``[]``) for ``OverwriteTable`` and for any mode on
+a non-partitioned target. An absent target is written directly;
+otherwise: write ``<target>__tmp_<12 hex>``, then per unit rename the
+live dir into ``<target>__bak_<12 hex>`` and the new one into place,
+then delete the backup. A failure restores the moved units and removes
+newly created ones; the temp dir is deleted on every exit. The live
+target is never overwritten in place, so a frame that reads it stays
+valid. ``operators.suffix._recover_swap_litter`` relies on these names
+and this order.
 
 Scale notes: affected-partition discovery is a distinct+collect on the
 partition columns only; existing-partition reads are scoped with a
@@ -117,6 +126,42 @@ def _rename_or_raise(dfs: DFS, src: str, dst: str) -> None:
         raise IOError(f"commit rename failed: {src} -> {dst}")
 
 
+def _join(root: str, rel: str) -> str:
+    """``root/rel``; the empty rel path (criterion ``[]``) names ``root``
+    itself — the whole-target unit of the commit."""
+    return f"{root}/{rel}" if rel else root
+
+
+def repartitioned(
+    df: DataFrame, n: int | None, partition_columns: Sequence[str], spread: bool = False
+) -> DataFrame:
+    """The output-file layout of every engine write: ``n`` files, rows
+    hashed on the partition columns so each partition dir gets at most
+    ``n`` (not one file per task × partition). ``spread`` is the
+    reference's round-robin form (numberOutputPartitions): up to ``n``
+    files in every dir. No ``n``: the frame is left as is."""
+    if not n:
+        return df
+    if spread or not partition_columns:
+        return df.repartition(n)
+    return df.repartition(n, *partition_columns)
+
+
+def _canonical_criteria(affected: list) -> list:
+    """One criterion per on-disk directory. NULL and '' partition
+    values share one directory (__HIVE_DEFAULT_PARTITION__): criteria
+    carrying both would back up the same dir twice and abort on the
+    second rename. '' is canonicalized to None FIRST (mirrors
+    collect_partitions) so the result never leaks a ('col','')
+    criterion into downstream ADD PARTITION / ANALYZE specs when the ''
+    variant happens to come first."""
+    by_rel: dict[str, Any] = {}
+    for crit in affected:
+        crit = [(c, None if v == "" else v) for c, v in crit]
+        by_rel.setdefault(partition_rel_path(crit), crit)
+    return list(by_rel.values())
+
+
 @dataclass
 class AtomicWriter:
     """Partitioned parquet writer with backup/restore semantics."""
@@ -126,35 +171,21 @@ class AtomicWriter:
     partition_columns: list[str] = field(default_factory=list)
     format: str = "parquet"
     output_files_num: int | None = None
-    # Reference semantics for the file-count knob
-    # (MaterializationConfiguration's numberOutputPartitions →
-    # df.repartition(n) round-robin): every written partition dir gets
-    # up to n files and the write runs n-way parallel even for one dir.
-    # Off by default — the hash form below is the scale-friendly shape
-    # (no small-files explosion across thousands of dirs).
+    # The reference's round-robin file-count semantics (see
+    # ``repartitioned``); off by default.
     spread_output_files: bool = False
     # Partition criteria the last write() touched, collected while the
     # frame was persisted — callers needing the ANALYZE scope reuse this
-    # instead of re-scanning the source (None for non-partitioned modes).
+    # instead of re-scanning the source (None for whole-target writes).
     last_affected: list | None = None
 
     def _dfs(self) -> DFS:
         return DFS(self.spark)
 
-    def _repartitioned(self, df: DataFrame) -> DataFrame:
-        if not self.output_files_num:
-            return df
-        if self.spread_output_files:
-            return df.repartition(self.output_files_num)
-        if self.partition_columns:
-            # Co-locate rows of one output partition in one task so each
-            # Hive partition dir gets ≤ output_files_num files instead of
-            # one file per (task × partition).
-            return df.repartition(self.output_files_num, *self.partition_columns)
-        return df.repartition(self.output_files_num)
-
     def _write_dir(self, df: DataFrame, path: str) -> None:
-        w = self._repartitioned(df).write.format(self.format).mode("overwrite")
+        w = repartitioned(
+            df, self.output_files_num, self.partition_columns, self.spread_output_files
+        ).write.format(self.format).mode("overwrite")
         if self.partition_columns:
             w = w.partitionBy(*self.partition_columns)
         w.save(path)
@@ -169,9 +200,6 @@ class AtomicWriter:
         output rows there, and deriving criteria from the frame alone
         would leave the emptied partition's old directory untouched
         (its deletions silently never applied)."""
-        if load_mode is LoadMode.OVERWRITE_TABLE:
-            self._overwrite_table(df)
-            return
         if load_mode is LoadMode.OVERWRITE_PARTITIONS_WITH_ADDED_COLUMNS:
             existing_schema = self._existing_schema()
             if existing_schema is not None:
@@ -180,7 +208,23 @@ class AtomicWriter:
             df, affected = self._combine_with_existing(df, how="join")
         elif load_mode is LoadMode.APPEND_UNION_PARTITIONS:
             df, affected = self._combine_with_existing(df, how="union")
-        self._overwrite_partitions(df, affected=affected)
+        if load_mode is LoadMode.OVERWRITE_TABLE or not self.partition_columns:
+            self._commit(df, [[]])
+            return
+        if affected is not None:
+            self.last_affected = _canonical_criteria(affected)
+            self._commit(df, self.last_affected)
+            return
+        # The frame feeds two jobs (partition discovery, then the
+        # write): cache it so the source is computed once.
+        df = df.persist()
+        try:
+            self.last_affected = _canonical_criteria(
+                collect_partitions(df, self.partition_columns)
+            )
+            self._commit(df, self.last_affected)
+        finally:
+            df.unpersist()
 
     def _existing_schema(self):
         """On-disk schema from ONE data-file footer plus the partition
@@ -255,13 +299,13 @@ class AtomicWriter:
         shared = [c for c in df.columns if c in existing.columns]
         return existing.join(df, on=shared, how="full_outer"), affected
 
-    def _overwrite_table(self, df: DataFrame) -> None:
-        """Whole-table overwrite via temp write → dir swap → delete
-        backup, restoring the original on failure. An in-place
-        ``mode("overwrite")`` save would delete the target's files
-        while a self-referential plan (e.g. the DeltaLakeLoad fallback
-        merge, which reads the dir it rewrites) is still scanning them
-        (same protocol as OutputWriter.scala:96-262)."""
+    def _commit(self, df: DataFrame, criteria: list) -> None:
+        """The module-docstring protocol over ``criteria`` (``[[]]``:
+        the whole target). A criterion the frame has no rows for is
+        backed up and not replaced, i.e. deleted. Every rename is
+        CHECKED (_rename_or_raise); the restore also removes units
+        newly CREATED before the failure, or a retry would union the
+        landing data with its own half-committed copy."""
         dfs = self._dfs()
         base = self.target_location.rstrip("/")
         if not dfs.exists(base):
@@ -269,88 +313,34 @@ class AtomicWriter:
             return
         tmp = f"{base}__tmp_{uuid.uuid4().hex[:12]}"
         backup = f"{base}__bak_{uuid.uuid4().hex[:12]}"
-        self._write_dir(df, tmp)
-        _rename_or_raise(dfs, base, backup)
+        moved: list[tuple[str, str]] = []  # (final, backup) pairs
+        created: list[str] = []  # moved in with no prior dir
         try:
-            _rename_or_raise(dfs, tmp, base)
-        except Exception:
-            if dfs.exists(backup):
-                dfs.delete(base)
-                dfs.rename(backup, base)
-            raise
-        dfs.delete(backup)
-
-    def _overwrite_partitions(
-        self, df: DataFrame, affected: list | None = None
-    ) -> None:
-        """Atomic partition replacement: temp write → backup affected →
-        move in → restore on failure (OutputWriter.scala:96-262).
-
-        ``affected`` lets the caller hand in pre-collected criteria
-        (append modes, emptied-partition deletes); they may include
-        partitions the frame has NO rows for — those directories are
-        backed up and NOT replaced, i.e. the partition is deleted. Every
-        commit rename is CHECKED (_rename_or_raise), and the restore
-        path also removes partitions that were newly CREATED before the
-        failure — otherwise a retry would union the landing data with
-        its own half-committed copy and duplicate rows."""
-        if not self.partition_columns:
-            self._write_dir(df, self.target_location)
-            return
-        dfs = self._dfs()
-        base = self.target_location.rstrip("/")
-        df = df.persist()
-        try:
-            if affected is None:
-                affected = collect_partitions(df, self.partition_columns)
-            # NULL and '' partition values share one on-disk directory
-            # (__HIVE_DEFAULT_PARTITION__): caller-supplied criteria
-            # carrying both would back up the same dir twice and abort
-            # on the second rename — keep one criterion per rel path,
-            # canonicalizing '' -> None FIRST (mirrors
-            # collect_partitions) so last_affected never leaks a
-            # ('col','') criterion into downstream ADD PARTITION /
-            # ANALYZE specs when the '' variant happens to win the
-            # setdefault.
-            by_rel: dict[str, Any] = {}
-            for crit in affected:
-                crit = [(c, None if v == "" else v) for c, v in crit]
-                by_rel.setdefault(partition_rel_path(crit), crit)
-            affected = list(by_rel.values())
-            self.last_affected = affected
-            tmp = f"{base}__tmp_{uuid.uuid4().hex[:12]}"
-            backup = f"{base}__bak_{uuid.uuid4().hex[:12]}"
             self._write_dir(df, tmp)
-            moved: list[tuple[str, str]] = []  # (final, backup) pairs
-            created: list[str] = []  # moved in with no prior dir
-            try:
-                for crit in affected:
-                    rel = partition_rel_path(crit)
-                    final_dir = f"{base}/{rel}"
-                    had_prior = dfs.exists(final_dir)
-                    if had_prior:
-                        _rename_or_raise(dfs, final_dir, f"{backup}/{rel}")
-                        moved.append((final_dir, f"{backup}/{rel}"))
-                    if dfs.exists(f"{tmp}/{rel}"):
-                        _rename_or_raise(dfs, f"{tmp}/{rel}", final_dir)
-                        if not had_prior:
-                            created.append(final_dir)
-                    # else: the frame had no rows for this criterion —
-                    # an explicit full-partition delete (the old dir
-                    # stays in the backup and is removed with it)
-            except Exception:
-                # Restore: put backups back (OutputWriter.scala:230-261).
-                for final_dir in created:
-                    dfs.delete(final_dir)
-                for final_dir, bak_dir in moved:
-                    dfs.delete(final_dir)
-                    dfs.rename(bak_dir, final_dir)
-                raise
-            finally:
-                dfs.delete(tmp)
-            dfs.delete(backup)
+            for crit in criteria:
+                rel = partition_rel_path(crit)
+                final_dir, bak_dir, new_dir = (
+                    _join(root, rel) for root in (base, backup, tmp)
+                )
+                had_prior = dfs.exists(final_dir)
+                if had_prior:
+                    _rename_or_raise(dfs, final_dir, bak_dir)
+                    moved.append((final_dir, bak_dir))
+                if dfs.exists(new_dir):
+                    _rename_or_raise(dfs, new_dir, final_dir)
+                    if not had_prior:
+                        created.append(final_dir)
+        except Exception:
+            # Restore: put backups back (OutputWriter.scala:230-261).
+            for final_dir in created:
+                dfs.delete(final_dir)
+            for final_dir, bak_dir in moved:
+                dfs.delete(final_dir)
+                dfs.rename(bak_dir, final_dir)
+            raise
         finally:
-            df.unpersist()
+            dfs.delete(tmp)
+        dfs.delete(backup)
 
 
 def write_output(
@@ -382,9 +372,7 @@ def write_output(
     load_mode = LoadMode(mode_name)
     if params.has("target_table"):
         table = params.get_string("target_table")
-        w = df
-        if n_files:
-            w = df.repartition(n_files, *partition_cols) if partition_cols else df.repartition(n_files)
+        w = repartitioned(df, n_files, partition_cols)
         if (
             partition_cols
             and load_mode is not LoadMode.OVERWRITE_TABLE
@@ -420,7 +408,10 @@ def write_output(
                 else:
                     spark.conf.set(conf_key, prev)
             failed_drops: list[str] = []
-            if affected and overwrite:
+            # AppendJoin collected `affected` from `w` itself: every
+            # criterion is present, so there is nothing to drop and no
+            # reason to scan `w` again.
+            if affected and overwrite and load_mode is not LoadMode.APPEND_JOIN_PARTITIONS:
                 # dynamic overwrite replaces only partitions PRESENT in
                 # the frame: a partition the load emptied entirely (all
                 # rows deleted by the CDC) must be dropped explicitly or
@@ -436,11 +427,7 @@ def write_output(
                 # ('c','') would miss `present` and then feed DROP
                 # PARTITION(c='') — an AnalysisException AFTER the
                 # insert already committed.
-                canon = {
-                    tuple((c, None if v == "" else v) for c, v in crit)
-                    for crit in affected
-                }
-                for crit in canon:
+                for crit in map(tuple, _canonical_criteria(affected)):
                     if crit in present:
                         continue
                     # A NULL (Hive default) partition value has no SQL

@@ -1855,20 +1855,16 @@ def test_fse_string_select_conditions_prune_partitioned_scan(spark, tmp_path):
     assert "year" in pf and "2021" in pf and "month" in pf, pf
 
 
-def test_spread_output_files_single_roundrobin_exchange(spark, tmp_path):
+def test_spread_output_files_single_roundrobin_exchange(spark):
     """number_output_partitions (the reference's round-robin knob) must
     add exactly ONE RoundRobinPartitioning exchange — not a hash
     shuffle, and nothing extra above it."""
-    from m3d_engine_spark.sources.writers import AtomicWriter
+    from m3d_engine_spark.sources.writers import repartitioned
 
     df = spark.createDataFrame(
         [(i, 2020 + i % 2) for i in range(50)], "k int, year int"
     )
-    w = AtomicWriter(
-        spark, str(tmp_path / "t"), partition_columns=["year"],
-        output_files_num=5, spread_output_files=True,
-    )
-    shaped = w._repartitioned(df)
+    shaped = repartitioned(df, 5, ["year"], spread=True)
     plan = shaped._jdf.queryExecution().executedPlan().toString()
     assert "roundrobin" in plan.lower(), plan
     assert plan.lower().count("exchange") == 1, plan

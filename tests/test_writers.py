@@ -4,6 +4,7 @@ import os
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from m3d_engine_spark.sources.writers import AtomicWriter, LoadMode
 from tests.conftest import multiset_equal
@@ -133,3 +134,96 @@ def test_affected_criteria_delete_emptied_partition(spark, tmp_path):
     )
     rows = {r.year: r.k for r in spark.read.parquet(tgt).collect()}
     assert rows == {2017: 99}  # 2016 emptied, not stale
+
+
+def _failing_frame(spark):
+    """A year-2016 row whose `k` raises when the write job runs. One
+    partition: no sibling task is still writing when the job aborts."""
+    return spark.createDataFrame([Row(k=1, year=2016)]).coalesce(1).withColumn(
+        "k", F.expr("if(k > 0, raise_error('injected write failure'), k)")
+    )
+
+
+@pytest.mark.parametrize(
+    "mode, partition_cols, affected",
+    [
+        pytest.param(LoadMode.OVERWRITE_TABLE, [], None, id="table"),
+        pytest.param(LoadMode.OVERWRITE_TABLE, ["year"], None, id="table-partitioned"),
+        pytest.param(
+            LoadMode.OVERWRITE_PARTITIONS, ["year"], [[("year", 2016)]],
+            id="partitions",
+        ),
+        # A partition mode on a non-partitioned target used to overwrite
+        # the live dir in place: Spark deleted it before the job failed.
+        pytest.param(
+            LoadMode.OVERWRITE_PARTITIONS, [], None, id="partitions-unpartitioned-target",
+        ),
+    ],
+)
+def test_failed_write_keeps_previous_rows_and_leaves_no_swap_dirs(
+    spark, tmp_path, mode, partition_cols, affected
+):
+    tgt = str(tmp_path / "t")
+    before = [Row(k=7, year=2016), Row(k=8, year=2017)]
+    _write(spark, tgt, before, partition_cols, LoadMode.OVERWRITE_TABLE)
+    writer = AtomicWriter(spark, tgt, partition_columns=partition_cols)
+    with pytest.raises(Exception, match="injected write failure"):
+        writer.write(_failing_frame(spark), mode, affected=affected)
+    rows = sorted((r.k, r.year) for r in spark.read.parquet(tgt).collect())
+    assert rows == [(7, 2016), (8, 2017)]
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def test_frame_persisted_only_when_writer_collects_partitions(spark, tmp_path, monkeypatch):
+    tgt = str(tmp_path / "t")
+    _write(spark, tgt, [Row(k=1, year=2016)], ["year"], LoadMode.OVERWRITE_TABLE)
+    batch = spark.createDataFrame([Row(k=2, year=2016)])
+    calls = []
+    for name in ("persist", "unpersist"):
+        # the concrete class: Spark 4's classic DataFrame overrides both
+        real = getattr(type(batch), name)
+        monkeypatch.setattr(
+            type(batch), name,
+            lambda self, *a, _real=real, _name=name, **kw: (
+                calls.append(_name) or _real(self, *a, **kw)
+            ),
+        )
+    writer = AtomicWriter(spark, tgt, partition_columns=["year"])
+    writer.write(batch, LoadMode.OVERWRITE_PARTITIONS, affected=[[("year", 2016)]])
+    assert calls == []
+    writer.write(batch, LoadMode.OVERWRITE_PARTITIONS)
+    assert calls == ["persist", "unpersist"]
+    assert writer.last_affected == [[("year", 2016)]]
+
+
+def test_write_output_append_join_collects_partitions_once(spark, monkeypatch):
+    from m3d_engine_spark.config import ParamsFile
+    from m3d_engine_spark.sources import writers
+
+    calls = []
+    real = writers.collect_partitions
+    monkeypatch.setattr(
+        writers, "collect_partitions", lambda *a: calls.append(a) or real(*a)
+    )
+    table = "t_writers_append_join_scan"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        spark.createDataFrame(
+            [(1, "old", 2016), (2, "old", 2017)], "k INT, a STRING, year INT"
+        ).write.partitionBy("year").saveAsTable(table)
+        writers.write_output(
+            spark,
+            spark.createDataFrame([(1, "new", 2016)], "k INT, a STRING, year INT"),
+            ParamsFile({
+                "target_table": table,
+                "target_partitions": ["year"],
+                "load_mode": "AppendJoinPartitions",
+            }),
+        )
+        spark.catalog.refreshTable(table)
+        got = sorted((r.k, r.a, r.year) for r in spark.table(table).collect())
+        # the join keys are every shared column: both 2016 rows survive
+        assert got == [(1, "new", 2016), (1, "old", 2016), (2, "old", 2017)]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    assert len(calls) == 1

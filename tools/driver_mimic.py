@@ -1,7 +1,7 @@
 """Faithful pandas-level mimic of the round driver's correctness gate.
 
-``tools/check_oracle.py`` compares VALUES (fetchall; Python ints/floats
-compare across dtypes), which is blind to the dtype-render class that
+A VALUES-only comparison (fetchall; Python ints/floats
+compare across dtypes) is blind to the dtype-render class that
 produced round 8's three red rows: the driver materializes BOTH sides
 as pandas frames and its hash is dtype-sensitive, so a DuckDB column
 pandas renders as float64 (HUGEINT, DECIMAL) mismatches a Spark int64
