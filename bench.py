@@ -18,6 +18,7 @@ codegen/JIT warmup per query shape.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import re
@@ -30,155 +31,27 @@ import __spark_entry__ as entry_mod
 from m3d_engine_spark.session import build_session
 
 
+_lock_fh = None  # held open for the life of the process
+
+
 def acquire_bench_lock(lock_path: str) -> int:
-    """Take the single-sweep pid lock. Returns 0 on success, 3 when a
-    live bench holds it (or the reclaim race was lost). Concurrency
-    guard: two sweeps on one host contaminate each other (round 12
-    measured a 1.2-1.3x inflation when a second sweep or the test lanes
-    overlapped). Stale locks (dead pid) are reclaimed via atomic rename
-    so a racing reclaimer can never be tricked into deleting a LIVE
-    lock."""
-
-    def _try_acquire() -> bool:
-        # Write the pid to a private temp file FIRST, then hard-link it
-        # into place: link() is atomic, so no observer can ever read an
-        # EMPTY lock. The old O_CREAT|O_EXCL-then-write sequence had a
-        # window where a descheduled acquirer's lock looked dead and
-        # could be reclaimed out from under it (round-13 advice).
-        tmp = lock_path + f".acquire.{os.getpid()}"
-        try:
-            with open(tmp, "w") as fh:
-                fh.write(str(os.getpid()))
-            try:
-                os.link(tmp, lock_path)
-                return True
-            except FileExistsError:
-                return False
-        finally:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-
-    # Sweep orphans from crashed acquirers/reclaimers whose pid is dead
-    # (a failed restore deliberately leaves its .reclaim.<pid> file in
-    # place rather than risk deleting a racer's live lock inode; this is
-    # where those get collected).
-    lock_dir = os.path.dirname(lock_path) or "."
-    lock_name = os.path.basename(lock_path)
+    """Take the single-sweep lock: an exclusive ``flock`` on
+    ``lock_path`` that the kernel drops when this process exits, so a
+    crashed sweep never leaves a stale lock behind. Returns 0 on
+    success, 3 when another bench holds it. Concurrency guard: two
+    sweeps on one host contaminate each other (round 12 measured a
+    1.2-1.3x inflation when a second sweep or the test lanes
+    overlapped)."""
+    global _lock_fh
+    fh = open(lock_path, "w")
     try:
-        for fn in os.listdir(lock_dir):
-            for suffix in (".reclaim.", ".acquire."):
-                prefix = lock_name + suffix
-                if fn.startswith(prefix):
-                    try:
-                        pid = int(fn[len(prefix):])
-                        os.kill(pid, 0)
-                    except (ValueError, PermissionError):
-                        pass  # garbage name or live foreign pid: leave it
-                    except ProcessLookupError:
-                        path = os.path.join(lock_dir, fn)
-                        if suffix == ".reclaim.":
-                            # The changed-hands path leaves a .reclaim
-                            # file holding a RACER's pid because that
-                            # inode may be the racer's only lock (see
-                            # below). The filename pid (the dead
-                            # reclaimer) says nothing about the CONTENT
-                            # pid — sweep only when that one is dead too.
-                            try:
-                                content_pid = int(open(path).read().strip())
-                                os.kill(content_pid, 0)
-                                continue  # content owner alive: keep it
-                            except PermissionError:
-                                continue  # EPERM = alive, foreign user
-                            except (ValueError, OSError):
-                                pass  # empty/garbage or dead: sweepable
-                        try:
-                            os.remove(path)
-                        except OSError:
-                            pass
-    except OSError:
-        pass
-
-    acquired = _try_acquire()
-    if not acquired:
-        try:
-            raw = open(lock_path).read().strip()
-        except OSError:
-            raw = ""
-        try:
-            other = int(raw or "0")
-        except ValueError:
-            other = 0  # garbage content = unknown owner = treat as dead
-        alive = False
-        if other:
-            try:
-                os.kill(other, 0)
-                alive = True
-            except ProcessLookupError:
-                alive = False
-            except PermissionError:
-                alive = True  # EPERM = exists, owned by another user
-        if alive:
-            print(f"another bench.py (pid {other}) is running; "
-                  "refusing to contaminate its numbers", file=sys.stderr)
-            return 3
-        # Reclaim the stale lock via atomic rename, not remove: a plain
-        # remove races — another process can reclaim and re-create the
-        # lock between our liveness check and the remove, and we'd then
-        # delete the LIVE lock and double-sweep. rename() moves exactly
-        # the inode we checked; if a racer already renamed it away the
-        # rename fails and we defer.
-        claimed = lock_path + f".reclaim.{os.getpid()}"
-        try:
-            os.rename(lock_path, claimed)
-        except OSError:
-            claimed = None  # someone else reclaimed first
-        if claimed is not None:
-            # Compare against the RAW content read at the liveness
-            # check, not str(other): an empty/garbage lock (a bench
-            # that crashed between open and write) parses to other=0
-            # and would never compare equal, bricking the lock forever.
-            # An EMPTY lock needs no grace period anymore: acquisition
-            # links a fully-written pid file into place atomically, so
-            # a live acquirer can never be observed mid-write — empty
-            # means dead (pre-link-protocol remnant or manual touch).
-            try:
-                reclaimed = open(claimed).read().strip()
-            except OSError:
-                reclaimed = None
-            if reclaimed != raw:
-                # We renamed away a LIVE lock a racer created after our
-                # liveness check — put it back and defer. If the link
-                # fails (a third process created yet another lock),
-                # LEAVE the claimed file in place: removing it would
-                # destroy the racer's only lock inode and re-enable the
-                # double-sweep this lock exists to prevent.
-                try:
-                    os.link(claimed, lock_path)
-                    os.remove(claimed)
-                except OSError:
-                    pass
-                print("bench lock changed hands during reclaim; exiting",
-                      file=sys.stderr)
-                return 3
-            os.remove(claimed)
-        # re-acquire atomically: if a racing process grabbed it between
-        # the reclaim and here, defer to it rather than double-sweeping
-        if not _try_acquire():
-            print("lost the bench-lock race to another process; exiting",
-                  file=sys.stderr)
-            return 3
-    import atexit
-
-    def _release() -> None:
-        try:
-            if open(lock_path).read().strip() == str(os.getpid()):
-                os.remove(lock_path)
-        except OSError:
-            pass
-
-    atexit.register(_release)
+        fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        fh.close()
+        print("another bench.py is running; "
+              "refusing to contaminate its numbers", file=sys.stderr)
+        return 3
+    _lock_fh = fh
     return 0
 
 

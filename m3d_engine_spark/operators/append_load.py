@@ -213,20 +213,7 @@ class AppendLoad(Algorithm):
         return [df]
 
     def transform(self, dfs: list[DataFrame]) -> list[DataFrame]:
-        df = dfs[0]
-        if self.params.has("regex_filename"):
-            df = with_filename_partitions(df, self.targets, self.params.get_list("regex_filename"))
-        elif self.params.has("partition_column"):
-            df = with_date_components(
-                df,
-                self.params.get_string("partition_column"),
-                # default format parity: AppendLoad.scala:50 falls back
-                # to yyyy-MM-dd (date-typed partition sources need no
-                # explicit format — the cast-to-string form is ISO)
-                self.params.get_optional("partition_column_format", "yyyy-MM-dd"),
-                self.targets,
-            )
-        return [df]
+        return [self._with_partitions(dfs[0])]
 
     def write(self, dfs: list[DataFrame]) -> None:
         df = dfs[0]
@@ -281,7 +268,8 @@ class AppendLoad(Algorithm):
             )
 
     def _with_partitions(self, df: DataFrame) -> DataFrame:
-        """The transform() partition derivation, applied to one frame."""
+        """The partition derivation: of the loaded frame in transform(),
+        and of each source group when headers are persisted."""
         if self.params.has("regex_filename"):
             return with_filename_partitions(
                 df, self.targets, self.params.get_list("regex_filename")
@@ -290,7 +278,10 @@ class AppendLoad(Algorithm):
             return with_date_components(
                 df,
                 self.params.get_string("partition_column"),
-                self.params.get_string("partition_column_format"),
+                # default format parity: AppendLoad.scala:50 falls back
+                # to yyyy-MM-dd (date-typed partition sources need no
+                # explicit format — the cast-to-string form is ISO)
+                self.params.get_optional("partition_column_format", "yyyy-MM-dd"),
                 self.targets,
             )
         return df

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from m3d_engine_spark.functions.text import fingerprint, tokens
 from m3d_engine_spark.functions.vectors import sign_lsh_bucket
-from m3d_engine_spark.plans.skew import SALT_PART_COL, salted_self_join_streams
+from m3d_engine_spark.plans.skew import salted_self_join
 
 
 # ---------------------------------------------------------------- exact
@@ -242,19 +242,10 @@ def _banded_candidates(
             F.col(f"r.{id_col}").alias("id_b"),
         )
 
-    if salt_size is None:
-        if max_bucket_size is not None:
-            rel = rel.drop("_bsz")
-        out = _pairs(rel, rel)
-    else:
-        cold, hot_l, hot_r = salted_self_join_streams(
-            rel, ["band", "band_key"], id_col, salt_size, salt_parts,
-            size_col="_bsz",
-        )
-        out = _pairs(cold, cold).unionByName(
-            _pairs(hot_l, hot_r, SALT_PART_COL)
-        )
-    return out.distinct()
+    return salted_self_join(
+        rel, ["band", "band_key"], id_col, _pairs, salt_size, salt_parts,
+        size_col="_bsz",
+    ).distinct()
 
 
 def lsh_bands(
@@ -503,25 +494,17 @@ def ngram_jaccard_pairs(
             F.col("r.n_sh").alias("nb"),
         )
 
-    if salt_df is None:
-        if max_shingle_df is not None:
-            tok = tok.drop("_df")
-        matches = _pair_matches(tok, tok)
-    else:
-        # Cold shingles keep the plain (exchange-reused) self-join;
-        # shingles hotter than salt_df go through the salted join so no
-        # single (block, shingle) key owns a quadratic task. A shingle
-        # is cold or hot for BOTH sides of a pair (df is a key-level
-        # property), so every (pair, shingle) match lands in exactly
-        # one stream — and in the salted stream exactly once, in the
-        # left row's deterministic part.
-        cold, hot_l, hot_r = salted_self_join_streams(
-            tok, [*block_cols, "shingle"], id_col, salt_df, salt_buckets,
-            size_col="_df",
-        )
-        matches = _pair_matches(cold, cold).unionByName(
-            _pair_matches(hot_l, hot_r, SALT_PART_COL)
-        )
+    # Cold shingles keep the plain (exchange-reused) self-join;
+    # shingles hotter than salt_df go through the salted join so no
+    # single (block, shingle) key owns a quadratic task. A shingle is
+    # cold or hot for BOTH sides of a pair (df is a key-level
+    # property), so every (pair, shingle) match lands in exactly one
+    # stream — and in the salted stream exactly once, in the left
+    # row's deterministic part.
+    matches = salted_self_join(
+        tok, [*block_cols, "shingle"], id_col, _pair_matches, salt_df,
+        salt_buckets, size_col="_df",
+    )
     inter = matches.groupBy("id_a", "id_b", "na", "nb").agg(
         F.count(F.lit(1)).alias("inter")
     )
@@ -655,21 +638,13 @@ def containment_pairs(
             F.col("r.n_sh").alias("nb"),
         )
 
-    if salt_df is None:
-        if max_shingle_df is not None:
-            tok = tok.drop("_df")
-        matches = _pair_matches(tok, tok)
-    else:
-        # Exactly-once routing: df is a (block, shingle)-key property,
-        # so each (pair, shingle) match lands in one stream only — and
-        # in the salted stream once, in the left row's part.
-        cold, hot_l, hot_r = salted_self_join_streams(
-            tok, [*block_cols, "shingle"], id_col, salt_df, salt_buckets,
-            size_col="_df",
-        )
-        matches = _pair_matches(cold, cold).unionByName(
-            _pair_matches(hot_l, hot_r, SALT_PART_COL)
-        )
+    # Exactly-once routing: df is a (block, shingle)-key property, so
+    # each (pair, shingle) match lands in one stream only — and in the
+    # salted stream once, in the left row's part.
+    matches = salted_self_join(
+        tok, [*block_cols, "shingle"], id_col, _pair_matches, salt_df,
+        salt_buckets, size_col="_df",
+    )
     inter = matches.groupBy("id_a", "id_b", "na", "nb").agg(
         F.count(F.lit(1)).alias("inter")
     )
@@ -864,15 +839,9 @@ def embedding_near_dupes(
             sim.alias("cosine"),
         )
 
-    if salt_size is None:
-        out = _pairs(base, base)
-    else:
-        cold, hot_l, hot_r = salted_self_join_streams(
-            base, ["bucket"], id_col, salt_size, salt_parts
-        )
-        out = _pairs(cold, cold).unionByName(
-            _pairs(hot_l, hot_r, SALT_PART_COL)
-        )
+    out = salted_self_join(
+        base, ["bucket"], id_col, _pairs, salt_size, salt_parts
+    )
     return out.filter(F.col("cosine") >= threshold)
 
 
@@ -983,15 +952,9 @@ def simhash64_hamming_pairs(
             ).alias("hamming"),
         )
 
-    if salt_size is None:
-        matched = _pairs(banded, banded)
-    else:
-        cold, hot_l, hot_r = salted_self_join_streams(
-            banded, ["band", "band_val"], id_col, salt_size, salt_parts
-        )
-        matched = _pairs(cold, cold).unionByName(
-            _pairs(hot_l, hot_r, SALT_PART_COL)
-        )
+    matched = salted_self_join(
+        banded, ["band", "band_val"], id_col, _pairs, salt_size, salt_parts
+    )
     return matched.distinct().filter(F.col("hamming") <= hamming_k)
 
 
@@ -1124,15 +1087,9 @@ def semantic_dedup(
             F.col(f"r.{id_col}").alias(id_col), pair_sim.alias("_ps")
         )
 
-    if salt_size is None:
-        sims = _mates(asg, asg)
-    else:
-        cold, hot_l, hot_r = salted_self_join_streams(
-            asg, ["cluster"], id_col, salt_size, salt_parts
-        )
-        sims = _mates(cold, cold).unionByName(
-            _mates(hot_l, hot_r, SALT_PART_COL)
-        )
+    sims = salted_self_join(
+        asg, ["cluster"], id_col, _mates, salt_size, salt_parts
+    )
     dup_sim = sims.groupBy(id_col).agg(F.max("_ps").alias("max_sim"))
     return asg.join(dup_sim, on=id_col, how="left").select(
         F.col(id_col),

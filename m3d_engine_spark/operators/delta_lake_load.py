@@ -400,30 +400,25 @@ class DeltaLakeLoadAlgorithm(Algorithm):
         from m3d_engine_spark.config import ConfigError
         from m3d_engine_spark.sources.writers import write_output
 
-        try:
-            if self.params.get_optional("target_partitions"):
-                # Same trap as DeltaLoad: the merge result is scoped to
-                # affected partitions — never whole-table overwrite it.
-                if self.params.get_optional("load_mode") == "OverwriteTable":
-                    raise ConfigError(
-                        "DeltaLakeLoad with target_partitions produces a "
-                        "partition-scoped result; load_mode=OverwriteTable "
-                        "would delete unaffected partitions."
-                    )
-                # Plain OverwritePartitions (not ...WithAddedColumns): the
-                # snapshot comes from the schema-evolved delta table, which
-                # IS the source of truth — padding it down to the lake's
-                # old on-disk schema would strip freshly added columns.
-                write_output(
-                    self.spark, dfs[0], self.params,
-                    default_load_mode="OverwritePartitions",
+        if self.params.get_optional("target_partitions"):
+            # Same trap as DeltaLoad: the merge result is scoped to
+            # affected partitions — never whole-table overwrite it.
+            if self.params.get_optional("load_mode") == "OverwriteTable":
+                raise ConfigError(
+                    "DeltaLakeLoad with target_partitions produces a "
+                    "partition-scoped result; load_mode=OverwriteTable "
+                    "would delete unaffected partitions."
                 )
-            else:
-                write_output(self.spark, dfs[0], self.params)
-        finally:
-            for df in self._persisted:
-                df.unpersist()
-            self._persisted.clear()
+            # Plain OverwritePartitions (not ...WithAddedColumns): the
+            # snapshot comes from the schema-evolved delta table, which
+            # IS the source of truth — padding it down to the lake's
+            # old on-disk schema would strip freshly added columns.
+            write_output(
+                self.spark, dfs[0], self.params,
+                default_load_mode="OverwritePartitions",
+            )
+        else:
+            write_output(self.spark, dfs[0], self.params)
 
 
 def DFSExists(spark: SparkSession, path: str) -> bool:

@@ -57,6 +57,7 @@ from m3d_engine_spark.operators.graph import (
     connected_components,
     connected_components_star,
 )
+from m3d_engine_spark.plans.skew import salt_size_param
 
 
 def fuzzy_dedup_corpus(
@@ -190,32 +191,6 @@ def _positive_or_none(p, key: str) -> int | None:
     return val
 
 
-def _salt_size_param(p) -> int | None | str:
-    """``salt_size`` CLI tri-state: absent / "auto" → self-tuning
-    (the composition default), "off"/"none"/null → salting disabled,
-    positive int → manual threshold, 0/negative → error (a typo must
-    not silently disable the straggler control)."""
-    raw = p.get_optional("salt_size", "auto")
-    if raw is None or (isinstance(raw, str) and raw.lower() in ("off", "none")):
-        return None
-    if isinstance(raw, str) and raw.lower() == "auto":
-        return "auto"
-    if isinstance(raw, bool):
-        # bool is an int subclass: {"salt_size": true} would coerce to
-        # int(True)=1, a threshold that salts nearly every bucket.
-        raise ValueError(
-            f"salt_size must be a positive integer, 'auto', or "
-            f"'off'; got {raw!r}"
-        )
-    val = int(raw)
-    if val <= 0:
-        raise ValueError(
-            f"salt_size must be a positive integer, 'auto', or "
-            f"'off'; got {raw!r}"
-        )
-    return val
-
-
 from m3d_engine_spark.operators.base import Algorithm, register  # noqa: E402
 
 
@@ -305,7 +280,7 @@ class FuzzyDedupAlgorithm(Algorithm):
                 threshold=float(p.get_optional("threshold", 0.5)),
                 use_star=bool(p.get_optional("use_star", False)),
                 max_bucket_size=_positive_or_none(p, "max_bucket_size"),
-                salt_size=_salt_size_param(p),
+                salt_size=salt_size_param(p),
                 salt_parts=p.get_optional_int("salt_parts", 8, minimum=1),
             )
         ]

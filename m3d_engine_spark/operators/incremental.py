@@ -33,8 +33,9 @@ from pyspark.sql import functions as F
 from m3d_engine_spark.operators.dedup import lsh_bands, shingle_array
 from m3d_engine_spark.plans.skew import (
     SALT_PART_COL,
-    derive_salt_size,
-    salted_big_side_streams,
+    collect_hot_threshold,
+    salted_big_side_join,
+    salt_size_param,
 )
 
 
@@ -72,7 +73,8 @@ def materialize_dedup_artifacts(
     ``salt_size`` precomputes the hot-bucket skew artifact the batch
     join self-tunes from: ``"auto"`` (default) derives the threshold
     from the written band relation's per-bucket count distribution
-    (``plans/skew.py::derive_salt_size`` — one cheap agg over the
+    (``plans/skew.py::collect_hot_threshold`` — the in-plan
+    ``auto_salt_threshold`` rule read back in one collect over the
     just-written parquet, NOT a second LSH pass); an int forces the
     threshold; None skips the stats entirely. When any bucket is hot,
     ``{base}/hot_bands`` — the (band, band_key) rows above the
@@ -126,23 +128,15 @@ def materialize_dedup_artifacts(
         bucket_counts = written_bands.groupBy("band", "band_key").agg(
             F.count(F.lit(1)).alias("bucket_rows")
         )
-    if isinstance(salt_size, str):
-        if salt_size != "auto":
-            raise ValueError(
-                f"salt_size must be an int, None, or 'auto'; got {salt_size!r}"
-            )
-        salt_size = derive_salt_size(
-            bucket_counts, [], size_col="bucket_rows"
+        # None when no bucket exceeds the threshold: don't make every
+        # batch pay the split machinery for an empty relation
+        salt_size = collect_hot_threshold(
+            bucket_counts, "bucket_rows", salt_size
         )
     if salt_size is not None:
-        hot = bucket_counts.filter(F.col("bucket_rows") > int(salt_size))
+        hot = bucket_counts.filter(F.col("bucket_rows") > salt_size)
         hot_path = f"{base_path}/hot_bands"
         hot.write.mode("overwrite").parquet(hot_path)
-        if len(corpus.sparkSession.read.parquet(hot_path).take(1)) == 0:
-            # a forced threshold nothing exceeds: don't make every
-            # batch pay the split machinery for an empty relation
-            hot_path = None
-            salt_size = None
     # The LSH parameters are BAKED INTO the band/shingle relations; a
     # batch joining with different dials would silently match nothing.
     # Record them next to the data so the read side derives them.
@@ -347,7 +341,7 @@ def incremental_dedup(
     ``salt_size`` is the hot-bucket straggler dial for the new × old
     band join — a boilerplate (band, band_key) bucket with n new and m
     old rows fans n·m candidate pairs into one task. Default ``"auto"``
-    self-tunes IN-PLAN via ``plans/skew.py::salted_big_side_streams``:
+    self-tunes IN-PLAN via ``plans/skew.py::salted_big_side_join``:
     the corpus side's per-bucket count is a window over the same
     exchange its join shuffles on, the threshold folds from a
     size-histogram branch of that window (``auto_salt_threshold``),
@@ -389,19 +383,13 @@ def incremental_dedup(
         n2 = nb.select(F.col(id_col).alias("new_id"), "band", "band_key")
         o2 = ob.select(F.col(id_col).alias("old_id"), "band", "band_key")
         keys = ["band", "band_key"]
-        cold_n, cold_o, hot_n, hot_o = salted_big_side_streams(
-            n2, o2, keys, "old_id", salt_size, salt_parts,
-        )
-        cand = (
-            cold_n.join(cold_o, on=keys)
-            .select("new_id", "old_id")
-            .unionByName(
-                hot_n.join(hot_o, on=keys + [SALT_PART_COL]).select(
-                    "new_id", "old_id"
-                )
-            )
-            .distinct()
-        )
+        cand = salted_big_side_join(
+            n2, o2, keys, "old_id",
+            lambda n, o, *extra: n.join(o, on=[*keys, *extra]).select(
+                "new_id", "old_id"
+            ),
+            salt_size, salt_parts,
+        ).distinct()
     # Candidate-bounded verification (guide §2.3: shuffle fewer bytes /
     # don't compute what you throw away): the verify joins below are
     # INNER on the candidate ids, so shingling the full batch and the
@@ -559,14 +547,12 @@ class IncrementalDedupAlgorithm(Algorithm):
             ]
         base = p.get_string("artifact_location")
         if p.get_optional("action", "batch") == "materialize":
-            from m3d_engine_spark.operators.fuzzy_dedup import _salt_size_param
-
             materialize_dedup_artifacts(
                 dfs[0], id_col, text_col, base,
                 num_hashes=int(p.get_optional("num_hashes", 16)),
                 bands=int(p.get_optional("bands", 8)),
                 shingle_n=int(p.get_optional("shingle_n", 3)),
-                salt_size=_salt_size_param(p),
+                salt_size=salt_size_param(p),
             )
             return []
         artifacts = {

@@ -31,7 +31,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from m3d_engine_spark.plans.skew import SALT_PART_COL, salted_self_join_streams
+from m3d_engine_spark.plans.skew import salted_self_join, salted_two_sided_join
 
 
 def field_similarity(left: Column, right: Column) -> Column:
@@ -105,23 +105,13 @@ def record_linkage(
         *[F.col(c).alias(f"_r_{c}") for c in fields],
     )
     join_keys = [f"_bl_{c}" for c in block_cols]
-    if salt_size is None:
-        pairs = lsel.join(rsel, on=join_keys)
-    else:
-        # Hot blocks (larger side > salt_size) and which side salts are
-        # decided per block from a broadcast count relation — the
-        # shared two-sided helper (plans/skew.py), extracted from this
-        # operator in round 11 so the incremental-dedup composition
-        # reuses the same exactly-once construction.
-        from m3d_engine_spark.plans.skew import (
-            SALT_PART_COL,
-            salted_two_sided_streams,
-        )
-
-        l2, r2 = salted_two_sided_streams(
-            lsel, rsel, join_keys, "_lid", "_rid", salt_size, salt_parts
-        )
-        pairs = l2.join(r2, on=join_keys + [SALT_PART_COL]).drop(SALT_PART_COL)
+    # Hot blocks (larger side > salt_size) and which side salts are
+    # decided per block from a broadcast count relation.
+    pairs = salted_two_sided_join(
+        lsel, rsel, join_keys, "_lid", "_rid",
+        lambda l, r, *extra: l.join(r, on=[*join_keys, *extra]),
+        salt_size, salt_parts,
+    )
     total_w = float(sum(fields.values()))
     score = None
     for c, w in fields.items():
@@ -215,15 +205,9 @@ def fastss_pairs(
             .select("id_a", "id_b", "str_a", "str_b")
         )
 
-    if salt_size is None:
-        cands = _cand(variants, variants)
-    else:
-        cold, hot_a, hot_b = salted_self_join_streams(
-            variants, ["_vk"], "_id", salt_size, salt_parts
-        )
-        cands = _cand(cold, cold).unionByName(
-            _cand(hot_a, hot_b, SALT_PART_COL)
-        )
+    cands = salted_self_join(
+        variants, ["_vk"], "_id", _cand, salt_size, salt_parts
+    )
     pairs = (
         cands.distinct()
         .withColumn(

@@ -279,7 +279,7 @@ def _lsh_candidate_pairs(
     the non-broadcast (two web-scale sides) path — a degenerate
     hyperplane bucket (e.g. many near-zero or duplicated embeddings
     sharing one sign pattern) fans n·m candidate rows into a single
-    SMJ task. Routed through ``plans/skew.py::salted_big_side_streams``
+    SMJ task. Routed through ``plans/skew.py::salted_big_side_join``
     with side_a as the big/salted side (the corpus-scale side by the
     callers' convention): side_a's bucket count is a window over its
     own join exchange (the Arrow matmul is never re-evaluated), side_b
@@ -313,23 +313,14 @@ def _lsh_candidate_pairs(
             .select(a_out, b_out)
             .distinct()
         )
-    from m3d_engine_spark.plans.skew import (
-        SALT_PART_COL,
-        salted_big_side_streams,
-    )
+    from m3d_engine_spark.plans.skew import salted_big_side_join
 
     keys = ["t", "bucket"]
-    cold_b, cold_a, hot_b, hot_a = salted_big_side_streams(
-        eb, ea, keys, a_out, salt_size, salt_parts
-    )
-    return (
-        cold_b.join(cold_a, on=keys)
-        .select(a_out, b_out)
-        .unionByName(
-            hot_b.join(hot_a, on=keys + [SALT_PART_COL]).select(a_out, b_out)
-        )
-        .distinct()
-    )
+    return salted_big_side_join(
+        eb, ea, keys, a_out,
+        lambda b, a, *extra: b.join(a, on=[*keys, *extra]).select(a_out, b_out),
+        salt_size, salt_parts,
+    ).distinct()
 
 
 def seeded_ann_topk(

@@ -1,5 +1,5 @@
-"""Skew mitigation: salted joins, two-stage aggregations, and
-exactly-once salted SELF-joins for pair generation.
+"""Skew mitigation: salted joins, two-stage aggregations, and the one
+hot-key split every pair-generating join in this package goes through.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
 runtime by splitting oversized partitions; these explicit forms cover
@@ -9,6 +9,26 @@ the pair-generating self-joins that deliberately pin ReusedExchange
 (AQE skips splitting a join whose shuffle is reused — repartitioning
 one consumer would invalidate the other).
 
+The hot-key split is one decision — which join keys are hot, and how
+their rows spread over ``salt_parts`` tasks — and this module owns it:
+
+* **Three join helpers.** ``salted_self_join`` (both sides are one
+  relation: the banded/blocked dedup self-joins),
+  ``salted_two_sided_join`` (two symmetric sides; the bigger side of
+  each hot key salts) and ``salted_big_side_join`` (one side is known
+  big and always salts). Each takes the caller's
+  ``join(left, right, *extra_keys)`` and returns the joined rows:
+  the output is identical to the plain join, because every pair
+  meets exactly once, in the salted row's part.
+* **One threshold rule.** ``salt_size`` is an int (a fixed per-key row
+  threshold) or ``"auto"``: ``max(floor, ratio·p95)`` of the per-key
+  count distribution, computed in-plan by ``auto_salt_threshold``.
+  ``collect_hot_threshold`` is the driver-side read of the same rule
+  for callers that persist the threshold. ``salt_size_param`` parses
+  the CLI form of the dial.
+* **One owner of** ``SALT_PART_COL``. The helpers add the part column
+  to the join key and drop it from the output; callers never name it.
+
 All forms are deterministic — the salt comes from hashing existing
 columns, never ``rand()``, so results are reproducible and
 oracle-checkable.
@@ -16,13 +36,17 @@ oracle-checkable.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SALT_PART_COL = "_salt_part"
 _SIZE_COL = "_salt_bsz"
+
+# join(left, right, *extra_keys) -> joined rows; the helpers pass
+# SALT_PART_COL as the extra key of the hot stream
+PairJoin = Callable[..., DataFrame]
 
 
 def deterministic_salt(cols: Sequence[str], buckets: int) -> Column:
@@ -90,68 +114,43 @@ def two_stage_agg(
     )
 
 
-def derive_salt_size(
-    rel: DataFrame,
-    key_cols: Sequence[str],
-    *,
-    floor: int = 4096,
-    q: float = 0.95,
-    ratio: float = 8.0,
-    size_col: str | None = None,
-) -> int | None:
-    """Data-derived hot-key threshold for the salted joins — the
-    self-tuning form of the manual ``salt_size`` dial, lifted from
-    ``record_linkage``'s per-block count relation into a reusable rule
-    the end-to-end compositions apply by default.
-
-    One aggregation job over ``rel`` (per-key counts → a single
-    collected row of max + the ``q``-quantile). The threshold is
-    ``max(floor, ratio · p_q)``:
-
-    * ``floor`` keeps salting OFF until a key is big enough that its
-      pair stream actually stalls one task — a 4096-row bucket is
-      ~8.4M generated pairs in one sort-merge task, roughly where a
-      straggler becomes visible; below that the salted stream's extra
-      exchange costs more than the spread saves.
-    * ``ratio · p_q`` keeps salting off for distributions that are
-      uniformly chunky (everything near the quantile is not "hot",
-      it's just the workload — salting every key re-shuffles the whole
-      relation for nothing). Only out-of-distribution keys salt.
-      ``q`` is deliberately 0.95, not an extreme tail quantile: with
-      few distinct keys p99.9+ IS the max, and ``ratio · p_max`` can
-      never be exceeded — the rule would go blind exactly when one key
-      dominates. p95 tracks the "typical" key size at every
-      cardinality; at real LSH scale (p95 of bucket sizes ≈ single
-      digits) the ``floor`` term dominates anyway.
-
-    Returns None when no key exceeds the threshold — callers then keep
-    the lean unsalted plan (single reused exchange, no hot branch) —
-    else the threshold to pass as ``salt_size``.
-
-    The threshold only routes rows between two output-identical plans,
-    so the approximate quantile costs nothing in correctness; callers
-    pass a checkpointed ``rel`` when its lineage is expensive. When the
-    caller already holds the per-key COUNT relation (one row per key),
-    pass it with ``size_col`` naming the count column — the groupBy is
-    skipped, so the count aggregation runs once, not twice.
-    """
-    if size_col is None:
-        counts = rel.groupBy(*[F.col(c) for c in key_cols]).agg(
-            F.count(F.lit(1)).alias("_c")
-        )
-    else:
-        counts = rel.select(F.col(size_col).alias("_c"))
-    row = (
-        counts.agg(
-            F.max("_c").alias("mx"),
-            F.expr(f"approx_percentile(_c, CAST({q} AS DOUBLE))").alias("pq"),
-        )
-        .collect()[0]
-    )
-    if row["mx"] is None:  # empty relation
+# ------------------------------------------------------ threshold rule
+def salt_size_param(p) -> int | None | str:
+    """``salt_size`` CLI tri-state: absent / "auto" → self-tuning
+    (the composition default), "off"/"none"/null → salting disabled,
+    positive int → manual threshold, 0/negative → error (a typo must
+    not silently disable the straggler control)."""
+    raw = p.get_optional("salt_size", "auto")
+    if raw is None or (isinstance(raw, str) and raw.lower() in ("off", "none")):
         return None
-    thr = max(int(floor), int(float(ratio) * float(row["pq"])))
-    return thr if int(row["mx"]) > thr else None
+    if isinstance(raw, str) and raw.lower() == "auto":
+        return "auto"
+    if isinstance(raw, bool):
+        # bool is an int subclass: {"salt_size": true} would coerce to
+        # int(True)=1, a threshold that salts nearly every bucket.
+        raise ValueError(
+            f"salt_size must be a positive integer, 'auto', or "
+            f"'off'; got {raw!r}"
+        )
+    val = int(raw)
+    if val <= 0:
+        raise ValueError(
+            f"salt_size must be a positive integer, 'auto', or "
+            f"'off'; got {raw!r}"
+        )
+    return val
+
+
+def _is_auto(salt_size: int | str) -> bool:
+    """True for ``"auto"``, False for an int threshold; any other
+    string is a caller error."""
+    if isinstance(salt_size, str):
+        if salt_size != "auto":
+            raise ValueError(
+                f"salt_size must be an int or 'auto'; got {salt_size!r}"
+            )
+        return True
+    return False
 
 
 def auto_salt_threshold(
@@ -162,9 +161,25 @@ def auto_salt_threshold(
     ratio: int = 8,
     bucket_level: bool = False,
 ) -> DataFrame:
-    """The ``derive_salt_size`` decision rule as a 1-ROW RELATION
-    (column ``_thr``) computed entirely inside the plan — no driver
-    collect, no checkpoint, no extra pass over the data:
+    """The hot-key threshold rule as a 1-ROW RELATION (column ``_thr``)
+    computed entirely inside the plan — no driver collect, no
+    checkpoint, no extra pass over the data. The threshold is
+    ``max(floor, ratio · p95)`` of the per-key row counts:
+
+    * ``floor`` keeps salting OFF until a key is big enough that its
+      pair stream actually stalls one task — a 4096-row bucket is
+      ~8.4M generated pairs in one sort-merge task, roughly where a
+      straggler becomes visible; below that the salted stream's extra
+      exchange costs more than the spread saves.
+    * ``ratio · p95`` keeps salting off for distributions that are
+      uniformly chunky (everything near the quantile is not "hot",
+      it's just the workload — salting every key re-shuffles the whole
+      relation for nothing). Only out-of-distribution keys salt. The
+      quantile is deliberately 0.95, not an extreme tail quantile:
+      with few distinct keys p99.9+ IS the max, and ``ratio · p_max``
+      can never be exceeded — the rule would go blind exactly when one
+      key dominates. At real LSH scale (p95 of bucket sizes ≈ single
+      digits) the ``floor`` term dominates anyway.
 
     ``rel_w`` must already carry ``size_col`` = the per-key row count
     (the window the salted joins compute anyway, riding the join's own
@@ -173,15 +188,14 @@ def auto_salt_threshold(
     = (buckets of size k) · k, so bucket counts are the exact integer
     division — one tiny aggregate whose input is one small int per row
     and whose output is one row per distinct size (hundreds at any
-    scale). p95 and the threshold ``max(floor, ratio·p95)`` then fold
-    over the histogram. Callers ``crossJoin(broadcast(...))`` the
-    result and compare ``size_col > _thr`` per row — the only join this
-    adds is a 1-row broadcast.
+    scale). p95 and the threshold then fold over the histogram.
+    Callers ``crossJoin(broadcast(...))`` the result and compare
+    ``size_col > _thr`` per row — the only join this adds is a 1-row
+    broadcast.
 
-    The quantile here is EXACT (disc, value at the first cumulative
-    bucket count reaching ceil(0.95·n)) where ``derive_salt_size`` uses
-    ``approx_percentile`` — exactness is free once the histogram
-    exists, and it keeps the in-plan form oracle-checkable.
+    The quantile is EXACT (disc, value at the first cumulative bucket
+    count reaching ceil(0.95·n)) — exactness is free once the
+    histogram exists, and it keeps the rule oracle-checkable.
 
     ``bucket_level=True`` says ``rel_w`` already carries ONE ROW PER
     KEY (e.g. a groupBy count relation) — the histogram then counts
@@ -222,172 +236,214 @@ def auto_salt_threshold(
     )
 
 
-def salted_big_side_streams(
-    small: DataFrame,
-    big: DataFrame,
-    key_cols: Sequence[str],
-    big_id: str,
+def collect_hot_threshold(
+    counts: DataFrame,
+    size_col: str,
     salt_size: int | str,
-    salt_parts: int,
     *,
     floor: int = 4096,
     ratio: int = 8,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Exactly-once salted two-sided equi-join streams for the
-    ASYMMETRIC case — one side is known big (a corpus-derived
-    relation whose lineage is expensive), the other small (a batch).
-    Returns ``(cold_small, cold_big, hot_small, hot_big)``; callers
-    join the cold pair on ``key_cols``, the hot pair on ``key_cols +
-    [SALT_PART_COL]``, and union — output identical to the plain join
-    (a pair's key is either hot or cold, and within a hot key every
-    pair meets exactly once, in the big row's part).
+) -> int | None:
+    """The threshold as a driver-side int, for callers that persist it
+    (the dedup artifacts). ``counts`` holds one row per key with its
+    row count in ``size_col``; ``salt_size`` is an int or ``"auto"``
+    (``auto_salt_threshold``'s rule over ``counts``).
 
-    Where ``salted_two_sided_streams`` derives hotness from groupBy
-    count relations of BOTH sides (fine when both sides are cheap
-    scans, as in record_linkage), this form never re-reads the big
-    side's SOURCE: the expensive prefix of ``big``'s lineage up to its
-    first exchange (for the dedup callers: shingle → minhash, the
-    dominant cost) is canonically identical under every branch, so
-    runtime stage reuse materializes it ONCE — pinned as an
-    executed-plan walk in ``tests/test_plans.py::
-    test_incremental_dedup_auto_reuses_corpus_exchange`` (the corpus
-    file contributes exactly one live scan to this construction).
-    Above that reuse point the streams split in two: (1) the join
-    stream — the per-key count is a WINDOW over the same full-width
-    exchange the cold join shuffles on, so cold and hot filters read
-    ONE exchange and cold big rows reach their join with no second
-    exchange (window + filter preserve the partitioning; only the hot
-    slice re-shuffles, on (key..., part)); (2) the stats stream — the
-    hot-key set AND (under ``salt_size="auto"``) the threshold
-    histogram both fold over ONE ``groupBy(keys)`` count relation,
-    whose partial aggregate map-side combines: only per-key counts
-    ship. Deriving those stats from the window relation instead (the
-    round-11 form) re-SHUFFLED the entire big relation once per stat
-    branch — column pruning specializes each branch's window input, so
-    those exchanges can never match the full-width join exchange; at
-    100 TB that is two extra corpus-wide shuffles purely to learn a
-    threshold and a (tiny) hot-key set. The small side learns hotness
-    from the broadcast hot-key set.
-
-    The big side always salts and the small side always replicates —
-    correct by the caller's contract that ``small`` ≪ ``big`` per key
-    (replicating a few batch rows ``salt_parts``× is cheaper than
-    counting both sides to pick a winner; use
-    ``salted_two_sided_streams`` when the sides are symmetric).
+    One collect returns the threshold together with the largest key:
+    the result is None when no key exceeds the threshold (an empty
+    ``counts`` included), so callers keep the plain plan.
     """
+    if _is_auto(salt_size):
+        thr = auto_salt_threshold(
+            counts, size_col, floor=floor, ratio=ratio, bucket_level=True
+        )
+    else:
+        thr = counts.sparkSession.range(1).select(
+            F.lit(int(salt_size)).cast("bigint").alias("_thr")
+        )
+    row = thr.crossJoin(counts.agg(F.max(size_col).alias("_mx"))).collect()[0]
+    if row["_mx"] is None or row["_mx"] <= row["_thr"]:
+        return None
+    return int(row["_thr"])
+
+
+# -------------------------------------------------------- join helpers
+def _check_salted(
+    what: str, salt_parts: int, reserved: set[str], **sides: DataFrame
+) -> None:
     if salt_parts < 2:
         raise ValueError("salt_parts must be ≥ 2 when salt_size is set")
-    keys = list(key_cols)
-    for side, df in (("small", small), ("big", big)):
-        clash = {SALT_PART_COL, _SIZE_COL, "_thr"} & set(df.columns)
+    for side, df in sides.items():
+        # a caller column silently clobbered by withColumn would turn
+        # into corrupted pair output (or an AMBIGUOUS_REFERENCE deep in
+        # the plan), not this deliberate error
+        clash = reserved & set(df.columns)
         if clash:
             raise ValueError(
-                f"salted big-side join reserves column name(s) "
-                f"{sorted(clash)} (clash on the {side} input); rename "
-                f"the conflicting column(s)"
+                f"{what} reserves column name(s) {sorted(clash)} (clash "
+                f"on the {side} input); rename the conflicting column(s)"
             )
-    # stats stream: ONE groupBy-count lineage shared (via partial-agg
-    # exchange reuse) by the threshold histogram and the hot-key set —
-    # see the docstring for why these must NOT derive from the window
-    stats = big.groupBy(*keys).agg(F.count(F.lit(1)).alias(_SIZE_COL))
-    big_w = big.withColumn(
-        _SIZE_COL, F.count(F.lit(1)).over(Window.partitionBy(*keys))
-    )
-    if isinstance(salt_size, str):
-        if salt_size != "auto":
-            raise ValueError(
-                f"salt_size must be an int or 'auto'; got {salt_size!r}"
-            )
-        thr_rel = F.broadcast(
-            auto_salt_threshold(
-                stats, _SIZE_COL, floor=floor, ratio=ratio, bucket_level=True
-            )
-        )
-        big_w = big_w.crossJoin(thr_rel)
-        is_hot = F.col(_SIZE_COL) > F.col("_thr")
-        drop_cols = [_SIZE_COL, "_thr"]
-        hot_stats = stats.crossJoin(thr_rel).filter(is_hot)
-    else:
-        is_hot = F.col(_SIZE_COL) > int(salt_size)
-        drop_cols = [_SIZE_COL]
-        hot_stats = stats.filter(is_hot)
-    cold_big = big_w.filter(~is_hot).drop(*drop_cols)
-    hot_big = (
-        big_w.filter(is_hot)
-        .drop(*drop_cols)
-        .withColumn(
-            SALT_PART_COL,
-            F.pmod(F.xxhash64(F.col(big_id)), F.lit(salt_parts)),
-        )
-    )
-    # already one row per key (aggregate output) — no distinct needed
-    hot_keys = F.broadcast(hot_stats.select(*keys))
-    cold_small = small.join(hot_keys, on=keys, how="left_anti")
-    hot_small = small.join(hot_keys, on=keys, how="left_semi").withColumn(
-        SALT_PART_COL,
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(salt_parts - 1).cast("long"))
-        ),
-    )
-    return cold_small, cold_big, hot_small, hot_big
 
 
-def salted_two_sided_streams(
+def _part_of(id_col: str, salt_parts: int) -> Column:
+    """The salted side's part: a deterministic hash of the row id."""
+    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_parts))
+
+
+def _all_parts(salt_parts: int) -> Column:
+    """Every part, for the replicated side."""
+    return F.sequence(F.lit(0).cast("long"), F.lit(salt_parts - 1).cast("long"))
+
+
+def _flag_hot(
+    rel: DataFrame,
+    key_cols: Sequence[str],
+    salt_size: int | str,
+    size_col: str | None,
+    floor: int,
+    ratio: int,
+) -> tuple[DataFrame, Column, list[str], DataFrame | None, DataFrame | None]:
+    """Attach the per-key row count (and, under ``"auto"``, the
+    threshold) to ``rel``. Returns ``(rel, is_hot, helper columns to
+    drop, per-key count relation, broadcast threshold relation)``.
+
+    ``size_col`` names a per-key count the caller already carries; when
+    None the count is a window over ``key_cols``, reading the same
+    exchange the join shuffles on, and the threshold histogram folds
+    over a separate ``groupBy(keys)`` count relation (returned too).
+    The histogram must not derive from the window: column pruning
+    specializes its input, so it would re-SHUFFLE the whole relation
+    just to learn one number, where the groupBy's partial aggregate
+    map-side combines and ships only per-key counts. The expensive
+    lineage below ``rel``'s first exchange is shared by both streams
+    through runtime stage reuse either way.
+    """
+    stats = None
+    if size_col is None:
+        size_col = _SIZE_COL
+        stats = rel.groupBy(*key_cols).agg(F.count(F.lit(1)).alias(size_col))
+        rel = rel.withColumn(
+            size_col, F.count(F.lit(1)).over(Window.partitionBy(*key_cols))
+        )
+    if not _is_auto(salt_size):
+        return rel, F.col(size_col) > int(salt_size), [size_col], stats, None
+    thr = F.broadcast(
+        auto_salt_threshold(stats, size_col, floor=floor, ratio=ratio,
+                            bucket_level=True)
+        if stats is not None
+        # caller-supplied size_col: its value distribution IS the
+        # quantity the hot filter tests — fold over rel itself
+        else auto_salt_threshold(rel, size_col, floor=floor, ratio=ratio)
+    )
+    return (
+        rel.crossJoin(thr), F.col(size_col) > F.col("_thr"),
+        [size_col, "_thr"], stats, thr,
+    )
+
+
+def salted_self_join(
+    rel: DataFrame,
+    key_cols: Sequence[str],
+    id_col: str,
+    join: PairJoin,
+    salt_size: int | str | None,
+    salt_parts: int,
+    size_col: str | None = None,
+    *,
+    floor: int = 4096,
+    ratio: int = 8,
+) -> DataFrame:
+    """``join(rel, rel)`` with hot keys salted — the pair-generation
+    counterpart of ``salted_join``.
+
+    Every banded/blocked dedup self-join in this package shares one
+    straggler mode: a single join key (a shingle, an LSH bucket, a
+    SimHash band slice, a deletion variant) with k rows fans its
+    k·(k−1)/2 candidate pairs into ONE sort-merge-join task. AQE
+    cannot split these — the plans pin ReusedExchange so the signature
+    pipeline evaluates once, and AQE skips joins whose shuffle is
+    reused. Rows of keys hotter than ``salt_size`` are split off: the
+    LEFT copy gets a deterministic part ``pmod(xxhash64(id),
+    salt_parts)``, the RIGHT copy replicates once per part, and their
+    join adds ``SALT_PART_COL`` to the equi-key. Every intra-key
+    (id_a < id_b) pair still meets exactly once — in the left row's
+    part — so the output, ``join(cold, cold) ∪ join(hot_l, hot_r,
+    SALT_PART_COL)``, is IDENTICAL to the unsalted join while the hot
+    key's pair stream spreads over ``salt_parts`` tasks. Cold keys keep
+    the original (exchange-reused) self-join.
+
+    ``salt_size=None`` is the plain plan: ``join(rel, rel)``, after
+    dropping ``size_col`` when ``rel`` carries it. ``size_col`` names a
+    per-key row count already present on ``rel`` (pass it when the
+    caller computes one anyway — e.g. for a df cutoff — so the plan
+    keeps a single window); the joined frames never carry it.
+
+    ``salt_size="auto"`` is the self-tuning form: the threshold is
+    ``auto_salt_threshold``'s 1-row relation, broadcast-joined back so
+    every row compares against it IN-PLAN — no driver collect, no
+    checkpoint. On un-skewed data the hot stream is empty at runtime
+    and the cold stream carries everything — the split itself costs
+    only the broadcast of one row.
+    """
+    if salt_size is None:
+        if size_col is not None and size_col in rel.columns:
+            rel = rel.drop(size_col)
+        return join(rel, rel)
+    reserved = {SALT_PART_COL, "_thr"} | ({_SIZE_COL} if size_col is None else set())
+    _check_salted("salted self-join", salt_parts, reserved, input=rel)
+    rel, is_hot, drop_cols, _, _ = _flag_hot(
+        rel, key_cols, salt_size, size_col, floor, ratio
+    )
+    cold = rel.filter(~is_hot).drop(*drop_cols)
+    hot = rel.filter(is_hot).drop(*drop_cols)
+    hot_left = hot.withColumn(SALT_PART_COL, _part_of(id_col, salt_parts))
+    hot_right = hot.withColumn(SALT_PART_COL, F.explode(_all_parts(salt_parts)))
+    return join(cold, cold).unionByName(join(hot_left, hot_right, SALT_PART_COL))
+
+
+def salted_two_sided_join(
     left: DataFrame,
     right: DataFrame,
     key_cols: Sequence[str],
     left_id: str,
     right_id: str,
-    salt_size: int | str,
+    join: PairJoin,
+    salt_size: int | str | None,
     salt_parts: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Exactly-once salted TWO-SIDED equi-join streams — the
-    ``record_linkage`` hot-block pattern as a reusable helper: per hot
-    key (either side's count > ``salt_size``) the BIGGER side gets a
+) -> DataFrame:
+    """``join(left, right)`` with hot keys salted, for two SYMMETRIC
+    sides (the ``record_linkage`` hot-block pattern): per hot key
+    (either side's count > ``salt_size``) the BIGGER side gets a
     deterministic part ``pmod(xxhash64(id), salt_parts)`` and the
     smaller side replicates once per part; cold keys carry part 0 on
-    both sides. Callers join on ``key_cols + [SALT_PART_COL]`` and
-    drop the part — output identical to the unsalted join (every
-    (l, r) pair meets exactly once, in the salted row's part).
+    both sides. Both streams go through ONE ``join(l, r,
+    SALT_PART_COL)`` and the part is dropped — output identical to the
+    unsalted join (every (l, r) pair meets exactly once, in the salted
+    row's part). ``salt_size=None`` is ``join(left, right)``.
 
     Which side salts is decided PER KEY from a broadcast count
     relation (≤ N/salt_size hot rows by construction) — the caller
-    never has to know which side is skewed, matching how
-    ``record_linkage`` self-tunes. Both inputs must already expose
-    ``key_cols`` under the same names; ``left_id``/``right_id`` seed
-    the deterministic salt. ``salt_size="auto"`` derives the threshold
-    in-plan from the distribution of the per-key LARGER-side counts
-    (``auto_salt_threshold`` over the count relation itself — exactly
-    the quantity the hot filter tests).
+    never has to know which side is skewed. Both inputs must already
+    expose ``key_cols`` under the same names; ``left_id``/``right_id``
+    seed the deterministic salt. ``salt_size="auto"`` derives the
+    threshold in-plan from the distribution of the per-key LARGER-side
+    counts (``auto_salt_threshold`` over the count relation itself —
+    exactly the quantity the hot filter tests).
     """
-    if salt_parts < 2:
-        raise ValueError("salt_parts must be ≥ 2 when salt_size is set")
+    if salt_size is None:
+        return join(left, right)
+    _check_salted(
+        "salted two-sided join", salt_parts,
+        {SALT_PART_COL, "_lsalts", "_cl", "_cr", "_cmax", "_thr"},
+        left=left, right=right,
+    )
     keys = list(key_cols)
-    for side, df in (("left", left), ("right", right)):
-        # reserve every internal name this construction introduces —
-        # a clash would surface as an AMBIGUOUS_REFERENCE deep in the
-        # plan instead of this deliberate error
-        clash = {SALT_PART_COL, "_lsalts", "_cl", "_cr", "_cmax", "_thr"} & set(
-            df.columns
-        )
-        if clash:
-            raise ValueError(
-                f"salted two-sided join reserves column name(s) "
-                f"{sorted(clash)} (clash on the {side} input); rename "
-                f"the conflicting column(s)"
-            )
     cnt = (
         left.groupBy(keys).agg(F.count(F.lit(1)).alias("_cl"))
         .join(right.groupBy(keys).agg(F.count(F.lit(1)).alias("_cr")), on=keys)
         .withColumn("_cmax", F.greatest("_cl", "_cr"))
     )
-    if isinstance(salt_size, str):
-        if salt_size != "auto":
-            raise ValueError(
-                f"salt_size must be an int or 'auto'; got {salt_size!r}"
-            )
-        # self-tuning threshold from the distribution of the per-key
-        # larger-side counts — the exact quantity the hot filter tests;
+    if _is_auto(salt_size):
         # the count relation is already one row per key (bucket_level)
         cnt = cnt.crossJoin(
             F.broadcast(
@@ -401,9 +457,7 @@ def salted_two_sided_streams(
         *keys, (F.col("_cl") >= F.col("_cr")).alias("_lsalts")
     )
     one = F.array(F.lit(0).cast("long"))
-    allp = F.sequence(
-        F.lit(0).cast("long"), F.lit(salt_parts - 1).cast("long")
-    )
+    allp = _all_parts(salt_parts)
 
     def _tag(df: DataFrame, id_col: str, salts_when: Column) -> DataFrame:
         return (
@@ -412,131 +466,87 @@ def salted_two_sided_streams(
                 SALT_PART_COL,
                 F.explode(
                     F.when(F.col("_lsalts").isNull(), one)  # cold key
-                    .when(
-                        salts_when,
-                        F.array(
-                            F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_parts))
-                        ),
-                    )
+                    .when(salts_when, F.array(_part_of(id_col, salt_parts)))
                     .otherwise(allp)  # other side salts → replicate
                 ),
             )
             .drop("_lsalts")
         )
 
-    return (
+    return join(
         _tag(left, left_id, F.col("_lsalts")),
         _tag(right, right_id, ~F.col("_lsalts")),
-    )
+        SALT_PART_COL,
+    ).drop(SALT_PART_COL)
 
 
-def salted_self_join_streams(
-    rel: DataFrame,
+def salted_big_side_join(
+    small: DataFrame,
+    big: DataFrame,
     key_cols: Sequence[str],
-    id_col: str,
+    big_id: str,
+    join: PairJoin,
     salt_size: int | str,
     salt_parts: int,
-    size_col: str | None = None,
+    *,
     floor: int = 4096,
     ratio: int = 8,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Split ``rel`` into (cold, hot_left, hot_right) for an
-    exactly-once salted SELF-join on ``key_cols`` — the pair-generation
-    counterpart of ``salted_join``.
+) -> DataFrame:
+    """``join(small, big)`` with hot keys salted, for the ASYMMETRIC
+    case — ``big`` is a corpus-derived relation whose lineage is
+    expensive, ``small`` a batch. Returns ``join(cold_small, cold_big)
+    ∪ join(hot_small, hot_big, SALT_PART_COL)`` — output identical to
+    the plain join (a pair's key is either hot or cold, and within a
+    hot key every pair meets exactly once, in the big row's part).
+    Salting only: callers whose plain join differs in shape keep it
+    for ``salt_size=None``.
 
-    Every banded/blocked dedup self-join in this package shares one
-    straggler mode: a single join key (a shingle, an LSH bucket, a
-    SimHash band slice, a deletion variant) with k rows fans its
-    k·(k−1)/2 candidate pairs into ONE sort-merge-join task. AQE
-    cannot split these — the plans pin ReusedExchange so the signature
-    pipeline evaluates once, and AQE skips joins whose shuffle is
-    reused. Rows of keys hotter than ``salt_size`` are split off: the
-    LEFT copy gets a deterministic part ``pmod(xxhash64(id),
-    salt_parts)``, the RIGHT copy replicates once per part, and the
-    caller adds ``SALT_PART_COL`` to its equi-key. Every intra-key
-    (id_a < id_b) pair still meets exactly once — in the left row's
-    part — so the joined output is IDENTICAL to the unsalted join
-    while the hot key's pair stream spreads over ``salt_parts`` tasks.
-    Cold keys keep the original (exchange-reused) self-join; callers
-    union the two match streams.
+    Where ``salted_two_sided_join`` derives hotness from groupBy count
+    relations of BOTH sides (fine when both sides are cheap scans, as
+    in record_linkage), this form never re-reads the big side's
+    SOURCE: the expensive prefix of ``big``'s lineage up to its first
+    exchange (for the dedup callers: shingle → minhash, the dominant
+    cost) is canonically identical under every branch, so runtime
+    stage reuse materializes it ONCE — pinned as an executed-plan walk
+    in ``tests/test_plans.py::
+    test_incremental_dedup_auto_reuses_corpus_exchange`` (the corpus
+    file contributes exactly one live scan to this construction).
+    Above that reuse point the streams split in two (see
+    ``_flag_hot``): the join stream, whose per-key count is a window
+    over the same exchange the cold join shuffles on (cold big rows
+    reach their join with no second exchange; only the hot slice
+    re-shuffles, on (key..., part)), and the stats stream, one
+    ``groupBy(keys)`` count relation that feeds both the hot-key set
+    and (under ``"auto"``) the threshold histogram. The small side
+    learns hotness from the broadcast hot-key set.
 
-    ``size_col`` names a per-key row count already present on ``rel``
-    (pass it when the caller computes one anyway — e.g. for a df
-    cutoff — so the plan keeps a single window); when None the count
-    is computed here as a window over ``key_cols``, reading the same
-    exchange the self-join shuffles on. The size column is consumed:
-    none of the returned frames carry it.
-
-    ``salt_size="auto"`` is the self-tuning form: the threshold is
-    ``auto_salt_threshold``'s 1-row relation (``max(floor, ratio·p95)``
-    of the per-key count distribution), broadcast-joined back so every
-    row compares against it IN-PLAN — zero extra passes (the histogram
-    branch re-reads the same exchange the window count rides), no
-    driver collect, no checkpoint. On un-skewed data the hot streams
-    are empty at runtime and the cold stream carries everything — the
-    split itself costs only the broadcast of one row.
+    The big side always salts and the small side always replicates —
+    correct by the caller's contract that ``small`` ≪ ``big`` per key
+    (replicating a few batch rows ``salt_parts``× is cheaper than
+    counting both sides to pick a winner; use
+    ``salted_two_sided_join`` when the sides are symmetric).
     """
-    if salt_parts < 2:
-        raise ValueError("salt_parts must be ≥ 2 when salt_size is set")
-    reserved = {SALT_PART_COL, "_thr"} | (
-        {_SIZE_COL} if size_col is None else set()
+    _check_salted(
+        "salted big-side join", salt_parts, {SALT_PART_COL, _SIZE_COL, "_thr"},
+        small=small, big=big,
     )
-    clash = reserved & set(rel.columns)
-    if clash:
-        # a caller column silently clobbered by withColumn would turn
-        # into corrupted pair output, not an error — refuse loudly
-        raise ValueError(
-            f"salted self-join reserves column name(s) {sorted(clash)}; "
-            "rename the conflicting input column(s)"
-        )
-    thr_src = None
-    if size_col is None:
-        size_col = _SIZE_COL
-        # the threshold histogram folds over a groupBy-count lineage
-        # instead of the window relation: the per-key counts map-side
-        # combine (only partials ship), where a histogram over the
-        # window output would re-SHUFFLE the whole (column-pruned)
-        # relation a second time just to learn one number — the same
-        # rationale as salted_big_side_streams' stats stream; the
-        # expensive lineage below rel's first exchange is shared with
-        # the join stream by runtime stage reuse either way
-        thr_src = rel.groupBy(*key_cols).agg(
-            F.count(F.lit(1)).alias(size_col)
-        )
-        rel = rel.withColumn(
-            size_col,
-            F.count(F.lit(1)).over(Window.partitionBy(*key_cols)),
-        )
-    if isinstance(salt_size, str):
-        if salt_size != "auto":
-            raise ValueError(
-                f"salt_size must be an int or 'auto'; got {salt_size!r}"
-            )
-        thr_rel = F.broadcast(
-            auto_salt_threshold(thr_src, size_col, floor=floor, ratio=ratio,
-                                bucket_level=True)
-            if thr_src is not None
-            # caller-supplied size_col: its value distribution IS the
-            # quantity the hot filter tests — fold over rel itself
-            else auto_salt_threshold(rel, size_col, floor=floor, ratio=ratio)
-        )
-        rel = rel.crossJoin(thr_rel)
-        cold = rel.filter(F.col(size_col) <= F.col("_thr")).drop(
-            size_col, "_thr"
-        )
-        hot = rel.filter(F.col(size_col) > F.col("_thr")).drop(
-            size_col, "_thr"
-        )
-    else:
-        cold = rel.filter(F.col(size_col) <= salt_size).drop(size_col)
-        hot = rel.filter(F.col(size_col) > salt_size).drop(size_col)
-    hot_left = hot.withColumn(
-        SALT_PART_COL, F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_parts))
+    keys = list(key_cols)
+    big_w, is_hot, drop_cols, stats, thr = _flag_hot(
+        big, keys, salt_size, None, floor, ratio
     )
-    hot_right = hot.withColumn(
-        SALT_PART_COL,
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(salt_parts - 1).cast("long"))
-        ),
+    hot_stats = (stats if thr is None else stats.crossJoin(thr)).filter(is_hot)
+    cold_big = big_w.filter(~is_hot).drop(*drop_cols)
+    hot_big = (
+        big_w.filter(is_hot)
+        .drop(*drop_cols)
+        .withColumn(SALT_PART_COL, _part_of(big_id, salt_parts))
     )
-    return cold, hot_left, hot_right
+    # already one row per key (aggregate output) — no distinct needed
+    hot_keys = F.broadcast(hot_stats.select(*keys))
+    cold_small = small.join(hot_keys, on=keys, how="left_anti")
+    hot_small = small.join(hot_keys, on=keys, how="left_semi").withColumn(
+        SALT_PART_COL, F.explode(_all_parts(salt_parts))
+    )
+    return join(cold_small, cold_big).unionByName(
+        join(hot_small, hot_big, SALT_PART_COL)
+    )

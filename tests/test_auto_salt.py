@@ -1,12 +1,11 @@
-"""Self-tuning skew salting (round 11): the fuzzy/incremental dedup
-compositions derive the hot-bucket ``salt_size`` from the observed
-per-key count distribution by default (``plans/skew.py::
-derive_salt_size``), instead of requiring a user to know the dial at
-100 TB. Pins: the decision rule itself, output-identity of the auto
-paths (hot and cold) against the unsalted plans, the precomputed
-``hot_bands`` artifact contract, and the two-sided helper extraction
-(``salted_two_sided_streams``) that record_linkage and
-incremental_dedup now share.
+"""Self-tuning skew salting: the fuzzy/incremental dedup compositions
+derive the hot-bucket ``salt_size`` from the observed per-key count
+distribution by default (``plans/skew.py::auto_salt_threshold``, read
+back on the driver by ``collect_hot_threshold``), instead of requiring
+a user to know the dial at 100 TB. Pins: the decision rule itself,
+output-identity of the auto paths (hot and cold) against the unsalted
+plans, the precomputed ``hot_bands`` artifact contract, and the
+exactly-once contract of the salted join helpers.
 """
 
 from __future__ import annotations
@@ -16,9 +15,13 @@ from pyspark.sql import functions as F
 
 from m3d_engine_spark.plans.skew import (
     SALT_PART_COL,
-    derive_salt_size,
-    salted_two_sided_streams,
+    collect_hot_threshold,
+    salted_two_sided_join,
 )
+
+
+def _key_join(l, r, *extra):
+    return l.join(r, on=["k", *extra])
 
 
 # ------------------------------------------------------ decision rule
@@ -28,7 +31,9 @@ def test_derive_salt_size_uniform_distribution_is_none(spark):
     rel = spark.range(400).select(
         (F.col("id") % 50).alias("k"), F.lit(1).alias("v")
     )
-    assert derive_salt_size(rel, ["k"], floor=4, ratio=4.0) is None
+    assert collect_hot_threshold(
+        rel.groupBy("k").count(), "count", "auto", floor=4, ratio=4
+    ) is None
 
 
 def test_derive_salt_size_hot_key_yields_threshold(spark):
@@ -39,7 +44,9 @@ def test_derive_salt_size_hot_key_yields_threshold(spark):
     rel = spark.range(80).select((F.col("id") % 40).alias("k")).unionAll(
         spark.range(64).select(F.lit(999).alias("k"))
     )
-    thr = derive_salt_size(rel, ["k"], floor=8, ratio=4.0)
+    thr = collect_hot_threshold(
+        rel.groupBy("k").count(), "count", "auto", floor=8, ratio=4
+    )
     assert thr is not None and 8 <= thr < 64
 
 
@@ -47,14 +54,16 @@ def test_derive_salt_size_floor_keeps_small_data_unsalted(spark):
     # one 64-row key but the default floor (4096) dwarfs it: a bucket
     # this small cannot stall a task, so no salting
     rel = spark.range(64).select(F.lit(1).alias("k"))
-    assert derive_salt_size(rel, ["k"]) is None
+    assert collect_hot_threshold(rel.groupBy("k").count(), "count", "auto") is None
 
 
 def test_derive_salt_size_empty_relation_is_none(spark):
     rel = spark.range(10).filter(F.col("id") < 0).select(
         F.col("id").alias("k")
     )
-    assert derive_salt_size(rel, ["k"], floor=1) is None
+    assert collect_hot_threshold(
+        rel.groupBy("k").count(), "count", "auto", floor=1
+    ) is None
 
 
 # ------------------------------------------- two-sided helper contract
@@ -73,12 +82,12 @@ def test_salted_two_sided_streams_exactly_once(spark):
     plain = sorted(
         (r.lid, r.rid) for r in left.join(right, on="k").collect()
     )
-    l2, r2 = salted_two_sided_streams(
-        left, right, ["k"], "lid", "rid", salt_size=4, salt_parts=3
-    )
     salted = sorted(
         (r.lid, r.rid)
-        for r in l2.join(r2, on=["k", SALT_PART_COL]).collect()
+        for r in salted_two_sided_join(
+            left, right, ["k"], "lid", "rid", _key_join,
+            salt_size=4, salt_parts=3,
+        ).collect()
     )
     assert salted == plain and len(plain) == 36
 
@@ -87,7 +96,7 @@ def test_salted_two_sided_streams_reserved_name_guard(spark):
     left = spark.createDataFrame([(1, "a", 0)], f"lid long, k string, {SALT_PART_COL} int")
     right = spark.createDataFrame([(2, "a")], "rid long, k string")
     with pytest.raises(ValueError, match="reserve"):
-        salted_two_sided_streams(left, right, ["k"], "lid", "rid", 1, 2)
+        salted_two_sided_join(left, right, ["k"], "lid", "rid", _key_join, 1, 2)
 
 
 # --------------------------------------- composition output identity
@@ -439,9 +448,10 @@ def test_auto_salt_threshold_floor_dominates(spark):
 
 
 def test_salted_self_join_streams_auto_exactly_once(spark):
-    """salt_size='auto' with a tiny floor must split the hot key and
-    keep every intra-key pair exactly once."""
-    from m3d_engine_spark.plans.skew import salted_self_join_streams
+    """Every salt value — none, a forced int, and 'auto' with a tiny
+    floor (which splits the hot key) — keeps every intra-key pair
+    exactly once."""
+    from m3d_engine_spark.plans.skew import salted_self_join
 
     rel = spark.createDataFrame(
         [(i, "h") for i in range(12)] + [(100 + i, f"c{i}") for i in range(6)],
@@ -453,9 +463,6 @@ def test_salted_self_join_streams_auto_exactly_once(spark):
         for b in rel.collect()
         if a.k == b.k and a.rid < b.rid
     )
-    cold, hot_l, hot_r = salted_self_join_streams(
-        rel, ["k"], "rid", "auto", 4, floor=2, ratio=4
-    )
 
     def pairs(l, r, *extra):
         cond = [F.col(f"l.k") == F.col(f"r.k")]
@@ -466,13 +473,15 @@ def test_salted_self_join_streams_auto_exactly_once(spark):
             .select(F.col("l.rid").alias("a"), F.col("r.rid").alias("b"))
         )
 
-    got = sorted(
-        (r.a, r.b)
-        for r in pairs(cold, cold)
-        .unionByName(pairs(hot_l, hot_r, "_salt_part"))
-        .collect()
-    )
-    assert got == plain and len(plain) == 66 + 0  # 12C2 hot only
+    # unsalted, a forced threshold, and the self-tuning form
+    for salt_size in (None, 2, "auto"):
+        got = sorted(
+            (r.a, r.b)
+            for r in salted_self_join(
+                rel, ["k"], "rid", pairs, salt_size, 4, floor=2, ratio=4
+            ).collect()
+        )
+        assert got == plain and len(plain) == 66 + 0  # 12C2 hot only
 
 
 # ----------------------------------- 'auto' across the primitive dials
@@ -640,9 +649,7 @@ def test_incremental_advise_needs_no_artifact_location(spark, tmp_path, sf_dir):
 def test_two_sided_streams_reserves_internal_count_names(spark):
     """A caller column named _cl/_cr/_cmax/_thr must raise the guard's
     deliberate ValueError, not an AMBIGUOUS_REFERENCE later."""
-    from m3d_engine_spark.plans.skew import salted_two_sided_streams
-
     left = spark.createDataFrame([(1, "a", 5)], "lid long, k string, _cl int")
     right = spark.createDataFrame([(2, "a")], "rid long, k string")
     with pytest.raises(ValueError, match="reserve"):
-        salted_two_sided_streams(left, right, ["k"], "lid", "rid", 1, 2)
+        salted_two_sided_join(left, right, ["k"], "lid", "rid", _key_join, 1, 2)

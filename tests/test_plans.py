@@ -1646,7 +1646,7 @@ def _live_file_scans(df, path_substr: str) -> int:
 def test_incremental_dedup_auto_reuses_corpus_exchange(spark):
     """``incremental_dedup(salt_size='auto')``'s big-side path makes the
     same evaluated-ONCE promise as the self-join helper
-    (``salted_big_side_streams`` docstring), but through a different
+    (``salted_big_side_join`` docstring), but through a different
     construction: the corpus band relation feeds the cold SMJ, the hot
     slice, the broadcast hot-key set AND the broadcast threshold fold.
     The promise holds through runtime stage reuse at the corpus

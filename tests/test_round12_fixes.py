@@ -11,17 +11,15 @@ cap every bucket at one row.
 import pytest
 
 from m3d_engine_spark.config import ParamsFile
-from m3d_engine_spark.operators.fuzzy_dedup import (
-    _positive_or_none,
-    _salt_size_param,
-)
+from m3d_engine_spark.operators.fuzzy_dedup import _positive_or_none
+from m3d_engine_spark.plans.skew import salt_size_param
 
 
 @pytest.mark.parametrize("bad", [True, False])
 def test_salt_size_rejects_json_boolean(bad):
     p = ParamsFile({"salt_size": bad})
     with pytest.raises(ValueError, match="salt_size"):
-        _salt_size_param(p)
+        salt_size_param(p)
 
 
 @pytest.mark.parametrize("bad", [True, False])
@@ -32,12 +30,12 @@ def test_positive_or_none_rejects_json_boolean(bad):
 
 
 def test_salt_size_valid_forms_unchanged():
-    assert _salt_size_param(ParamsFile({})) == "auto"
-    assert _salt_size_param(ParamsFile({"salt_size": "auto"})) == "auto"
-    assert _salt_size_param(ParamsFile({"salt_size": "off"})) is None
-    assert _salt_size_param(ParamsFile({"salt_size": None})) is None
-    assert _salt_size_param(ParamsFile({"salt_size": 64})) == 64
-    assert _salt_size_param(ParamsFile({"salt_size": "64"})) == 64
+    assert salt_size_param(ParamsFile({})) == "auto"
+    assert salt_size_param(ParamsFile({"salt_size": "auto"})) == "auto"
+    assert salt_size_param(ParamsFile({"salt_size": "off"})) is None
+    assert salt_size_param(ParamsFile({"salt_size": None})) is None
+    assert salt_size_param(ParamsFile({"salt_size": 64})) == 64
+    assert salt_size_param(ParamsFile({"salt_size": "64"})) == 64
 
 
 def test_fse_parse_conditions_forms():

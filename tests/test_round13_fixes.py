@@ -10,9 +10,9 @@ Pins:
 - The PERMISSIVE corrupt-record schema field follows the EFFECTIVE
   columnNameOfCorruptRecord reader option, not the literal
   '_corrupt_record'.
-- bench.py stale-lock reclaim is rename-based: a racer re-creating the
-  lock between the liveness check and the reclaim can no longer have
-  its live lock deleted out from under it.
+- bench.py's single-sweep lock is an flock the kernel drops when the
+  holder exits: a live holder refuses a second sweep, a dead one never
+  leaves a stale lock.
 """
 
 import os
@@ -146,73 +146,39 @@ def test_corrupt_record_column_custom_name(spark, tmp_path):
 # ---------------------------------------------------------------- bench lock
 
 
-def test_bench_lock_acquire_and_stale_reclaim(tmp_path):
+def test_bench_flock_refuses_second_holder(tmp_path):
+    """A second open file description holding the flock makes the
+    acquire refuse with the exit code bench.main returns."""
+    import fcntl
+
     import bench
 
     lock = str(tmp_path / ".bench.lock")
-    assert bench.acquire_bench_lock(lock) == 0
-    assert open(lock).read().strip() == str(os.getpid())
-    os.remove(lock)
-
-    # stale lock from a dead pid is reclaimed
-    with open(lock, "w") as f:
-        f.write("999999999")  # beyond pid_max -> never alive
-    assert bench.acquire_bench_lock(lock) == 0
-    assert open(lock).read().strip() == str(os.getpid())
-    os.remove(lock)
+    with open(lock, "w") as holder:
+        fcntl.flock(holder, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        assert bench.acquire_bench_lock(lock) == 3
 
 
-def test_bench_lock_refuses_live_holder(tmp_path):
+def test_bench_flock_free_after_holder_exits(tmp_path):
+    """A lock taken by a process that has since exited is free: the
+    kernel dropped it with the process, no reclaim step needed."""
+    import subprocess
+    import sys
+
     import bench
 
     lock = str(tmp_path / ".bench.lock")
-    with open(lock, "w") as f:
-        f.write("1")  # pid 1 exists; os.kill(1,0) -> EPERM -> alive
-    assert bench.acquire_bench_lock(lock) == 3
-    assert open(lock).read().strip() == "1"  # untouched
-    os.remove(lock)
-
-
-def test_bench_lock_reclaim_respects_racer(tmp_path, monkeypatch):
-    """The TOCTOU fix: if a racer replaces the stale lock with a LIVE
-    one between our liveness check and the reclaim rename, we must not
-    delete it — we restore it and defer."""
-    import bench
-
-    lock = str(tmp_path / ".bench.lock")
-    with open(lock, "w") as f:
-        f.write("999999999")  # stale
-
-    real_rename = os.rename
-
-    def racing_rename(src, dst):
-        # simulate the racer winning just before our rename: the stale
-        # lock is gone and a live lock (pid 1) sits at the path
-        with open(lock, "w") as f:
-            f.write("1")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(bench.os, "rename", racing_rename)
-    assert bench.acquire_bench_lock(lock) == 3
-    # the racer's live lock is back in place, not deleted
-    assert os.path.exists(lock) and open(lock).read().strip() == "1"
-    os.remove(lock)
-
-
-def test_bench_lock_reclaims_empty_or_garbage_lock(tmp_path):
-    """A bench that crashed between open() and write() leaves an empty
-    lock; content that never parses to a pid must also reclaim. Both
-    previously bricked the lock forever (content was compared to
-    str(parsed_pid) = '0', never equal)."""
-    import bench
-
-    for content in ("", "not-a-pid"):
-        lock = str(tmp_path / ".bench.lock")
-        with open(lock, "w") as f:
-            f.write(content)
-        assert bench.acquire_bench_lock(lock) == 0, repr(content)
-        assert open(lock).read().strip() == str(os.getpid())
-        os.remove(lock)
+    subprocess.run(
+        [sys.executable, "-c",
+         "import fcntl, sys; fh = open(sys.argv[1], 'w'); "
+         "fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)", lock],
+        check=True,
+    )
+    try:
+        assert bench.acquire_bench_lock(lock) == 0
+    finally:
+        bench._lock_fh.close()
+        bench._lock_fh = None
 
 
 def test_pipeline_report_write_failure_does_not_mask_step_error(
@@ -279,40 +245,6 @@ def test_full_load_cleanup_multi_segment_base_data_dir(spark, tmp_path):
     assert "data_20190101000000000" not in entries, entries
     assert len([e for e in entries if re.fullmatch(r"data_\d{17}", e)]) == 1
     spark.sql("DROP TABLE ms_tbl")
-
-
-def test_bench_lock_acquire_is_atomic_never_empty(tmp_path):
-    """Acquisition links a fully-written pid file into place: the lock
-    path is never observable empty, so the nascent-writer ambiguity
-    (and its grace sleep) is gone by construction. The temp acquire
-    file must not linger either way."""
-    import bench
-
-    lock = str(tmp_path / ".bench.lock")
-    assert bench.acquire_bench_lock(lock) == 0
-    assert open(lock).read().strip() == str(os.getpid())
-    assert not os.path.exists(f"{lock}.acquire.{os.getpid()}")
-    os.remove(lock)
-
-
-def test_bench_lock_orphan_reclaim_files_cleaned(tmp_path):
-    """Crashed reclaimers/acquirers leave .reclaim.<pid>/.acquire.<pid>
-    files (the failed-restore path leaves them DELIBERATELY); startup
-    collects the ones whose pid is dead and leaves live-pid ones."""
-    import bench
-
-    lock = str(tmp_path / ".bench.lock")
-    dead = f"{lock}.reclaim.999999999"
-    dead2 = f"{lock}.acquire.999999998"
-    live = f"{lock}.reclaim.1"  # pid 1 alive -> EPERM -> leave it
-    for p in (dead, dead2, live):
-        with open(p, "w") as f:
-            f.write("x")
-    assert bench.acquire_bench_lock(lock) == 0
-    assert not os.path.exists(dead) and not os.path.exists(dead2)
-    assert os.path.exists(live)
-    os.remove(live)
-    os.remove(lock)
 
 
 # ------------------------------------------------------- third review pass

@@ -1,7 +1,6 @@
 """Round-15 fixes (ADVICE r14): sidecar span_tokens validation,
-state-append retry safety + self-scan materialization, the bench
-reclaim sweep's content-pid liveness check, and the streaming
-meta-less-artifact warning noise."""
+state-append retry safety + self-scan materialization, and the
+streaming meta-less-artifact warning noise."""
 
 import json
 import logging
@@ -114,29 +113,6 @@ def test_state_append_table_target_materializes_ids(spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS r15_night1")
         spark.sql("DROP TABLE IF EXISTS r15_night2")
-
-
-# ------------------------------------------- bench orphan sweep fix
-def test_reclaim_sweep_respects_live_content_pid(tmp_path):
-    """A .reclaim.<dead-pid> file left by the changed-hands path may be
-    a LIVE racer's only lock inode — its pid is in the file CONTENT,
-    not the filename. The orphan sweep must key liveness on both."""
-    import bench
-
-    lock = str(tmp_path / ".bench.lock")
-    keep = tmp_path / ".bench.lock.reclaim.999999999"
-    keep.write_text("1")  # dead reclaimer, LIVE content pid (EPERM)
-    sweep = tmp_path / ".bench.lock.reclaim.999999998"
-    sweep.write_text("999999997")  # dead reclaimer, dead content pid
-    sweep_empty = tmp_path / ".bench.lock.reclaim.999999996"
-    sweep_empty.write_text("")  # dead reclaimer, empty content
-
-    assert bench.acquire_bench_lock(lock) == 0
-    assert keep.exists(), "swept a file whose content pid is alive"
-    assert not sweep.exists(), "dead-content reclaim file not collected"
-    assert not sweep_empty.exists(), "empty reclaim file not collected"
-    os.remove(lock)
-    keep.unlink()
 
 
 # ---------------------------------- streaming meta-less warning noise

@@ -246,6 +246,36 @@ def test_append_load_verify_schema_rejects_mismatch(spark, tmp_path):
         AppendLoad(spark, params).run()
 
 
+def test_append_load_empty_batch_default_date_format_headers(spark, tmp_path):
+    """An empty landing batch with header_dir and a partition_column but
+    no partition_column_format: the header pass derives the partitions
+    with the same yyyy-MM-dd default as transform(), instead of
+    raising a ConfigError after the write has committed."""
+    from m3d_engine_spark.operators.append_load import AppendLoad
+
+    land = tmp_path / "land"
+    land.mkdir()
+    (land / "empty.psv").write_text("")
+    target = str(tmp_path / "table")
+    AppendLoad(spark, ParamsFile({
+        "file_format": "dsv",
+        "source_dir": str(land),
+        "target_location": target,
+        "header_dir": str(tmp_path / "headers"),
+        "target_partitions": ["year", "month", "day"],
+        "partition_column": "d",
+        "schema": {
+            "type": "struct",
+            "fields": [
+                {"name": "k", "type": "integer", "nullable": True, "metadata": {}},
+                {"name": "d", "type": "string", "nullable": True, "metadata": {}},
+            ],
+        },
+    })).run()
+    # no partition was written, so no header either
+    assert not os.path.exists(tmp_path / "headers")
+
+
 # ----------------------------------------- DeltaLakeLoad full lifecycle
 def test_delta_lake_load_lifecycle_fallback(spark, tmp_path):
     """Init → merge → compaction → snapshot on the parquet fallback
