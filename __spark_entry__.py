@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from m3d_engine_spark.functions import text as T
@@ -2363,6 +2363,21 @@ WHERE r.rn = 1
 """
 
 
+def _three_token_lines(text: Column) -> Column:
+    """The synthesized line structure of the gopher_quality /
+    boilerplate_lines / paragraph_dedup entries (testdata text is
+    single-line): consecutive 3-token groups, the last one short."""
+    return T.with_tokens(
+        text,
+        lambda t: F.transform(
+            F.sequence(
+                F.lit(0), F.ceil(F.size(t) / F.lit(3)).cast("int") - F.lit(1)
+            ),
+            lambda i: F.concat_ws(" ", F.slice(t, i * F.lit(3) + F.lit(1), 3)),
+        ),
+    )
+
+
 def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/RefinedWeb quality rules
     (decontamination.py::gopher_quality_stats): duplicate-line
@@ -2372,19 +2387,12 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the entry deterministically synthesizes line structure first
     (3-token lines; every 5th line gets a '- ' bullet, every 7th a
     trailing '...'), identically in Spark and the DuckDB twin."""
-    from m3d_engine_spark.functions.text import tokens
     from m3d_engine_spark.operators.decontamination import (
         gopher_quality_stats,
     )
 
     docs = _tp(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    lines = F.transform(
-        F.sequence(
-            F.lit(0), F.ceil(F.size(t) / F.lit(3)).cast("int") - F.lit(1)
-        ),
-        lambda i: F.concat_ws(" ", F.slice(t, i * F.lit(3) + F.lit(1), 3)),
-    )
+    lines = _three_token_lines(F.col("text"))
     decorated = F.transform(
         lines,
         lambda x, i: F.when(i % 5 == 2, F.concat(F.lit("- "), x))
@@ -2664,19 +2672,12 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     in original line order. Line structure is synthesized (3-token
     lines, same recipe as gopher_quality minus decoration); the small
     vocabulary makes cross-document line collisions real."""
-    from m3d_engine_spark.functions.text import tokens
     from m3d_engine_spark.operators.curation import (
         remove_boilerplate_lines,
     )
 
     docs = _tp(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    lines = F.transform(
-        F.sequence(
-            F.lit(0), F.ceil(F.size(t) / F.lit(3)).cast("int") - F.lit(1)
-        ),
-        lambda i: F.concat_ws(" ", F.slice(t, i * F.lit(3) + F.lit(1), 3)),
-    )
+    lines = _three_token_lines(F.col("text"))
     synth = docs.select("doc_id", F.array_join(lines, "\n").alias("text"))
     return remove_boilerplate_lines(synth, "doc_id", "text", max_df=3)
 
@@ -2861,17 +2862,10 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraph collisions are real. The winner election is a
     map-side-combinable min_by on the 64-bit paragraph hash — the
     paragraph text never rides the election exchange."""
-    from m3d_engine_spark.functions.text import tokens
     from m3d_engine_spark.operators.curation import dedup_paragraphs
 
     docs = _tp(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    lines = F.transform(
-        F.sequence(
-            F.lit(0), F.ceil(F.size(t) / F.lit(3)).cast("int") - F.lit(1)
-        ),
-        lambda i: F.concat_ws(" ", F.slice(t, i * F.lit(3) + F.lit(1), 3)),
-    )
+    lines = _three_token_lines(F.col("text"))
     synth = docs.select("doc_id", F.array_join(lines, "\n").alias("text"))
     return dedup_paragraphs(synth, "doc_id", "text", sep="\n")
 

@@ -11,6 +11,8 @@ materializes the referenced columns.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,6 +44,20 @@ def tokens(text: Column) -> Column:
     return F.when(F.length(trimmed) == 0, F.array().cast("array<string>")).otherwise(
         F.split(trimmed, r"\s+")
     )
+
+
+def with_tokens(text: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(tokens(text))`` with the token array computed once per row.
+
+    Catalyst inlines an outer Column referenced inside a higher-order
+    function's lambda, so ``transform(xs, i -> slice(tokens(text), ...))``
+    re-runs the tokenizer over the whole document once per ELEMENT —
+    quadratic in document length. Binding the array as a lambda
+    variable (``element_at(transform(array(toks), t -> body(t)), 1)``)
+    evaluates it exactly once; ``body`` receives the bound array and
+    must reference it instead of re-deriving ``tokens(text)``.
+    """
+    return F.element_at(F.transform(F.array(tokens(text)), body), 1)
 
 
 def token_count(text: Column) -> Column:

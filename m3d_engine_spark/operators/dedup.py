@@ -31,7 +31,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from m3d_engine_spark.functions.text import fingerprint, tokens
+from m3d_engine_spark.functions.text import fingerprint, tokens, with_tokens
 from m3d_engine_spark.functions.vectors import sign_lsh_bucket
 from m3d_engine_spark.plans.skew import salted_self_join
 
@@ -53,16 +53,22 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ------------------------------------------------------------- shingles
 def shingle_array(text: Column, n: int) -> Column:
     """Token n-gram shingles (space-joined); fewer than n tokens → the
-    whole text as the single shingle."""
-    toks = tokens(text)
+    whole text as the single shingle.
 
-    def make(i: Column) -> Column:
-        return F.concat_ws(" ", F.slice(toks, i + 1, n))
+    Cost contract: ONE tokenization per document and O(tokens × n) work
+    for the shingles (``with_tokens`` binds the token array, so the
+    per-shingle lambda slices it instead of re-splitting the text)."""
 
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(toks) - n), make),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
+    def shingles(toks: Column) -> Column:
+        return F.when(
+            F.size(toks) >= n,
+            F.transform(
+                F.sequence(F.lit(0), F.size(toks) - n),
+                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", toks)))
+
+    return with_tokens(text, shingles)
 
 
 # ----------------------------------------------------------- winnowing

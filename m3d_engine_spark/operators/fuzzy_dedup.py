@@ -26,7 +26,14 @@ Scale topology (the reason this is one operator, not a notebook):
   re-execute the whole LSH + shingle + verification pipeline (the most
   expensive part of the job, quadratic in rounds). Checkpointing also
   means the edges DataFrame carries no lineage into the CC loop, so the
-  loop's own per-round checkpoints stay tiny.
+  loop's own per-round checkpoints stay tiny. CC checkpoints its
+  symmetrized edges and initial labels too, so AQE sizes every round to
+  the few-hundred-row state instead of ``spark.sql.shuffle.partitions``
+  tasks.
+* Stages 1 and 2 shingle each document with one tokenization and
+  O(tokens × n) work (``dedup.shingle_array``); a shingle lambda that
+  re-split the text per shingle would make both stages quadratic in
+  document length.
 * Every exchange is keyed: LSH self-join on (band, band_key),
   verification joins on the document id, CC rounds on the vertex id,
   survivor agg on the component, the final semi-join on the id. No

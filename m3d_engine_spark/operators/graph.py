@@ -98,19 +98,21 @@ def connected_components(
     the output is restricted to ``nodes`` — the same semantics as
     ``connected_components_star``, so the two stay swap-equivalent
     when ``nodes`` was pre-filtered but ``edges`` was not (pinned)."""
-    sym = (
-        _symmetrize(edges, src_col, dst_col)
-        # The edge list is re-read EVERY round; left lazy, an expensive
-        # upstream (an LSH pair pipeline) would be re-executed per
-        # iteration. Unpersisted before returning — by then the labels
-        # are checkpointed and carry no lineage into sym.
-        .persist()
-    )
+    # The edge list is re-read EVERY round; left lazy, an expensive
+    # upstream (an LSH pair pipeline) would be re-executed per
+    # iteration. A checkpoint, not a cache: AQE coalesces the distinct's
+    # shuffle before the rows land, so every round reads a state-sized
+    # partition count (a cached plan keeps all spark.sql.shuffle.partitions
+    # partitions and pays one task each, every round).
+    sym = _symmetrize(edges, src_col, dst_col).localCheckpoint(eager=True)
+    # Checkpointed once for the same reason; left lazy, round 1 would
+    # compute the union + distinct twice (its join and its fold).
     labels = (
         nodes.select(F.col(id_col).alias("a"))
         .union(sym.select("a"))  # sym is symmetric: "a" covers both ends
         .distinct()
         .select("a", F.col("a").alias("component"))
+        .localCheckpoint(eager=True)
     )
     converged = False
     for i in range(max_iterations):
@@ -130,17 +132,12 @@ def connected_components(
         # Same contract as connected_components_star: an unconverged
         # labeling is WRONG (a chain longer than max_iterations hops
         # would be split into fabricated components), never return it.
-        sym.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             f"label-propagation rounds (graph diameter exceeds the "
             f"budget); raise max_iterations or use "
             f"connected_components_star (O(log^2 n) rounds on chains)"
         )
-    if checkpoint_every != 1:
-        # Cut any remaining lineage through sym before releasing it.
-        labels = labels.localCheckpoint(eager=True)
-    sym.unpersist()
     return (
         nodes.select(F.col(id_col).alias("a"))
         .join(labels, on="a")

@@ -20,10 +20,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from m3d_engine_spark.functions.text import md5_uint32
+from m3d_engine_spark.functions.text import md5_uint32, with_tokens
 
 
 def stratified_sample(
@@ -231,29 +231,30 @@ def chunk_documents(
     downstream partitioned write at any scale; empty documents emit no
     chunks (posexplode of an empty array), not nulls.
     """
-    from m3d_engine_spark.functions.text import tokens
-
     step = chunk_tokens if stride is None else stride
     if step <= 0 or chunk_tokens <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
-    t = tokens(F.col(text_col))
-    # With stride < chunk_tokens, a start past size - chunk_tokens + 1
-    # yields a window that is a pure SUFFIX of its predecessor (the
-    # predecessor already reached the document end) — emitting it
-    # duplicates training data. Keep start 1 plus every start whose
-    # PREVIOUS window did not reach the end: s - step + chunk - 1 <
-    # size. With stride == chunk_tokens the filter keeps everything.
-    starts = F.when(
-        F.size(t) > 0,
-        F.filter(
-            F.sequence(F.lit(1), F.size(t), F.lit(step)),
-            lambda st: (st == 1)
-            | (st - step + chunk_tokens - 1 < F.size(t)),
-        ),
-    ).otherwise(F.array().cast("array<int>"))
-    chunks = F.transform(
-        starts, lambda s: F.array_join(F.slice(t, s, chunk_tokens), " ")
-    )
+
+    def windows(t: Column) -> Column:
+        # With stride < chunk_tokens, a start past size - chunk_tokens + 1
+        # yields a window that is a pure SUFFIX of its predecessor (the
+        # predecessor already reached the document end) — emitting it
+        # duplicates training data. Keep start 1 plus every start whose
+        # PREVIOUS window did not reach the end: s - step + chunk - 1 <
+        # size. With stride == chunk_tokens the filter keeps everything.
+        starts = F.when(
+            F.size(t) > 0,
+            F.filter(
+                F.sequence(F.lit(1), F.size(t), F.lit(step)),
+                lambda st: (st == 1)
+                | (st - step + chunk_tokens - 1 < F.size(t)),
+            ),
+        ).otherwise(F.array().cast("array<int>"))
+        return F.transform(
+            starts, lambda s: F.array_join(F.slice(t, s, chunk_tokens), " ")
+        )
+
+    chunks = with_tokens(F.col(text_col), windows)
     return df.select(
         F.col(id_col),
         F.posexplode(chunks).alias("chunk_id", "chunk"),

@@ -76,6 +76,20 @@ def test_chunk_documents_windows_and_overlap(spark):
     assert t1 == {0: "t0 t1 t2 t3", 1: "t4 t5 t6"}
 
 
+def test_chunk_documents_tokenizes_once(spark):
+    """The start filter and the window slices read one bound token
+    array; referencing tokens(text) inside their lambdas re-split the
+    whole document once per start."""
+    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    plan = (
+        chunk_documents(docs, "doc_id", "text", chunk_tokens=2, stride=1)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    # split(trim(text)) is the tokenizer; the n_tokens column's
+    # split(chunk, ' ') is a separate, per-chunk count.
+    assert plan.count("split(trim(") == 1, plan
+
+
 def test_chunk_documents_rejects_bad_sizes(spark):
     docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
     for kwargs in ({"chunk_tokens": 0}, {"chunk_tokens": 4, "stride": -1}):

@@ -221,3 +221,39 @@ def test_components_raise_instead_of_returning_unconverged(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, edges, max_iterations=2)
+
+
+def test_components_rounds_sized_to_state_not_shuffle_partitions(spark):
+    """The loop re-reads its edge list and labels every round. Both are
+    checkpointed after AQE coalesced their shuffle, so a 6-vertex graph
+    runs every stage at a handful of tasks; a cached edge list keeps all
+    spark.sql.shuffle.partitions partitions and runs a task for each of
+    them every round."""
+    sc = spark.sparkContext
+    group = "test_components_rounds_sized_to_state"
+    # Two-partition inputs: only a stage sized by the shuffle partition
+    # count could reach 16 tasks (one partition would let the planner
+    # drop the exchanges altogether).
+    nodes = spark.createDataFrame([Row(id=i) for i in range(6)]).coalesce(2)
+    edges = spark.createDataFrame(
+        [Row(src=0, dst=1), Row(src=1, dst=2), Row(src=3, dst=4)]
+    ).coalesce(2)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    sc.setJobGroup(group, group)
+    try:
+        out = {r.id: r.component for r in
+               connected_components(nodes, edges).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert out == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
+    tracker = sc.statusTracker()
+    ran = {
+        sid: tracker.getStageInfo(sid).numCompletedTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    }
+    assert ran and max(ran.values()) < 16, ran

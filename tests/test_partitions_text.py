@@ -210,3 +210,45 @@ def test_script_census_multilingual(spark):
     assert got[6] == (4, 3, 0, 0, 0, "latin")
     assert got[7] == (0, 0, 0, 0, 3, "none")
     assert got[8] == (0, 0, 0, 0, 0, "none")
+
+
+def _shingle_array_reference(text, n):
+    """shingle_array as it was before ``with_tokens``: the lambda
+    captures ``tokens(text)`` and so re-splits the text per shingle."""
+    from m3d_engine_spark.functions.text import tokens
+
+    toks = tokens(text)
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", toks)))
+
+
+def test_shingle_array_matches_reference_and_tokenizes_once(spark):
+    from m3d_engine_spark.operators.dedup import shingle_array
+
+    long_doc = " ".join(f"w{i % 37}" for i in range(300))
+    docs = spark.createDataFrame(
+        [(0, None), (1, ""), (2, "   "), (3, "a"), (4, "a b"),
+         (5, "a  b\tc d"), (6, long_doc)],
+        "id int, text string",
+    )
+    for n in (1, 3, 5):
+        got = docs.select(
+            "id", shingle_array(F.col("text"), n).alias("sh")
+        ).orderBy("id").collect()
+        want = docs.select(
+            "id", _shingle_array_reference(F.col("text"), n).alias("sh")
+        ).orderBy("id").collect()
+        assert got == want, n
+        assert len(got[6].sh) == 300 - n + 1
+    plan = (
+        docs.select(shingle_array(F.col("text"), 3).alias("sh"))
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    # One tokenizer split per row: the old lambda-captured token array
+    # put one in the plan per reference (and ran it per shingle).
+    assert plan.count("split(") == 1, plan
