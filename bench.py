@@ -28,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
-from m3d_engine_spark.session import build_session
+from m3d_engine_spark.session import build_session, codegen_compiles
 
 
 _lock_fh = None  # held open for the life of the process
@@ -118,12 +118,17 @@ def main() -> int:
               file=sys.stderr)
         return 2
     timings: dict[str, float] = {}
+    # Generated classes compiled during each entry's timed runs; 0 on a
+    # warm entry whose plans fit the codegen cache (session.py).
+    compiles: dict[str, int] = {}
     total = 0.0
     for name, fn in registry.items():
         if only and name not in only:
             continue
         best = -1.0
+        compiles[name] = 0
         for _ in range(runs):
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             try:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -132,6 +137,8 @@ def main() -> int:
                 print(f"bench error in {name}: {type(e).__name__}: {e}", file=sys.stderr)
                 best = -1.0
                 break
+            finally:
+                compiles[name] += codegen_compiles(spark) - c0
             best = dt if best < 0 else min(best, dt)
             # Isolate runs: drop any relations the query persisted so a
             # later measurement doesn't pay (or profit from) earlier state.
@@ -184,6 +191,7 @@ def main() -> int:
         "queries": timings,
         "sf": sf,
         "protocol": f"min_of_{runs}",
+        "codegen_compiles": compiles,
     }
     # ONLY-runs are supplementary counter-reads — never let them clobber
     # the full-sweep detail artifact the judge reads.
@@ -193,7 +201,8 @@ def main() -> int:
         json.dump(full, f)
     budget = int(os.environ.get("SPARK_GRAFT_BENCH_LINE_BYTES", "2400"))
     by_cost = sorted(timings, key=lambda k: -timings[k])
-    line_obj = dict(full)
+    # detail-file only: the printed line keeps its historical keys
+    line_obj = {k: v for k, v in full.items() if k != "codegen_compiles"}
     for n in range(len(by_cost), -1, -1):
         line_obj["queries"] = {k: timings[k] for k in by_cost[:n]}
         line_obj["queries_total"] = len(timings)

@@ -12,7 +12,7 @@ Two interchangeable implementations, same signature and output:
       label(v) <- min(label(v), min over neighbors(label(u)))
 
   Each iteration is ONE distributed join + aggregation (shuffles keyed
-  on vertex id); the driver only checks a convergence count.
+  on vertex id); the driver only probes for one changed label.
   Iterations needed = graph diameter — dedup-cluster diameters are
   tiny (banded LSH emits near-cliques), so 2-4 rounds in practice.
   This is the default for dedup workloads.
@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from m3d_engine_spark.plans.partitions import is_empty
 
 
 def propagation_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
@@ -118,14 +120,19 @@ def connected_components(
     for i in range(max_iterations):
         updated = propagation_round(sym, labels)
         if (i + 1) % checkpoint_every == 0:
-            # Materialize: the convergence count below is an action, and
+            # Materialize: the convergence probe below is an action, and
             # without a checkpoint every later round would re-execute the
             # whole join chain from the start (quadratic in rounds); the
             # checkpoint also truncates the two-joins-per-round lineage.
             updated = updated.localCheckpoint(eager=True)
-        changed = updated.filter(F.col("_changed")).limit(1).count()
+        # head(1), not limit(1).count(): a LIMIT in generated code names
+        # its counter from a JVM-global id, so a per-round limit(1)
+        # compiles fresh classes every round of every run. head(1) runs
+        # as executeTake with no LIMIT operator in the generated code,
+        # and later rounds and runs hit the codegen cache.
+        unchanged = is_empty(updated.filter(F.col("_changed")))
         labels = updated.drop("_changed")
-        if changed == 0:
+        if unchanged:
             converged = True
             break
     if not converged:

@@ -54,6 +54,15 @@ SCALE_DEFAULTS: dict[str, str] = {
     # Read parquet TIMESTAMP(NANOS) (pandas/pyarrow default) as long —
     # Spark has no ns timestamp; sources/testdata.py converts to µs.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated-class cache, per JVM (driver and each executor). Static:
+    # read once when the JVM's first session starts. The cache is LRU
+    # and Spark's default is 100 entries; a FuzzyDedup run generates
+    # ~155 distinct classes in the same order every run, so at 100
+    # every lookup misses and every warm run recompiles all of them
+    # (~1 s of Janino CPU, mostly inside tasks). A lake_loads run
+    # generates 58 and already fit. 1000 holds both working sets with
+    # room for plans that grow.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -82,3 +91,12 @@ def build_session(
     if hive:
         builder = builder.enableHiveSupport()
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled so far in this driver JVM
+    (Spark's ``CodegenMetrics``). In local mode the executors share the
+    JVM, so classes compiled inside tasks count too; read it before and
+    after a run to see how much of its working set missed the cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

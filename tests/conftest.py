@@ -34,6 +34,7 @@ _LANE_FILES = {
         "test_selection_anomaly.py", # 29.6
         "test_suffix_cli.py",        # ~22 (slow subset; r14)
         "test_curation_chunking.py", # 4.5
+        "test_codegen_cache.py",     # ~25 (slow subset)
     },
     # lane_d (the default for unlisted slow files):
     #   test_reference_golden.py (69.3), test_streaming_incremental.py
