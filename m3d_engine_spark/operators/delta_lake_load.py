@@ -369,10 +369,11 @@ class DeltaLakeLoadAlgorithm(Algorithm):
 
     def _compact(self, delta_dir: str, targets: list) -> None:
         """Small-file compaction (DeltaLakeLoad.scala:318-352): rewrite
-        the affected partitions at output_partitions_num files. Real
-        Delta uses dataChange=false + replaceWhere; the parquet fallback
-        rewrites the same partition directories atomically — same
-        file-count outcome, minus the no-op-for-streams marker."""
+        the affected partitions in ``writers.repartitioned``'s layout
+        (one file per partition dir). Real Delta uses dataChange=false +
+        replaceWhere; the parquet fallback rewrites the same partition
+        directories atomically — same file-count outcome, minus the
+        no-op-for-streams marker."""
         from m3d_engine_spark.plans.partitions import partition_where_sql
         from m3d_engine_spark.sources.writers import LoadMode, repartitioned
 

@@ -28,6 +28,11 @@ Scale notes: affected-partition discovery is a distinct+collect on the
 partition columns only; existing-partition reads are scoped with a
 Catalyst Column predicate (partition-pruned scan), unlike the
 reference's row-lambda filter which scanned the whole table (SURVEY §4).
+``output_files_num`` sets the file count of non-partitioned and spread
+writes only. A partitioned write is hashed on its partition columns:
+one file per partition dir, with AQE choosing the number of write tasks
+from the data, at most ``spark.sql.shuffle.partitions``
+(``repartitioned``).
 """
 
 from __future__ import annotations
@@ -135,16 +140,22 @@ def _join(root: str, rel: str) -> str:
 def repartitioned(
     df: DataFrame, n: int | None, partition_columns: Sequence[str], spread: bool = False
 ) -> DataFrame:
-    """The output-file layout of every engine write: ``n`` files, rows
-    hashed on the partition columns so each partition dir gets at most
-    ``n`` (not one file per task × partition). ``spread`` is the
-    reference's round-robin form (numberOutputPartitions): up to ``n``
-    files in every dir. No ``n``: the frame is left as is."""
+    """The output-file layout of every engine write. ``n`` sets the
+    file count of two forms only: a non-partitioned write gets ``n``
+    files, and ``spread``, the reference's round-robin form
+    (numberOutputPartitions), up to ``n`` files in every dir. Any other
+    partitioned write hashes its rows on the partition columns, so each
+    partition dir gets exactly one file whatever ``n`` is. That
+    exchange carries no count: AQE coalesces it to a task count sized
+    by the data, capped by ``spark.sql.shuffle.partitions`` like every
+    keyed exchange. (A fixed count would only add write tasks, each
+    paying a task deserialization and a 16 MB sort page for a few
+    dirs' rows.) No ``n``: the frame is left as is."""
     if not n:
         return df
     if spread or not partition_columns:
         return df.repartition(n)
-    return df.repartition(n, *partition_columns)
+    return df.repartition(*partition_columns)
 
 
 def _canonical_criteria(affected: list) -> list:

@@ -516,20 +516,47 @@ def test_semantic_dedup_checkpoints_assignment_once(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_incremental_dedup_keyed_joins_only(spark, sf_dir):
+def _incremental_candidates(spark, monkeypatch, build):
+    """``build()``'s frame plus the candidate-pair relation that
+    ``incremental_dedup`` lazily ``localCheckpoint``-s: the final plan
+    reads the pairs as ``Scan ExistingRDD``, so the band join, its salted
+    stream and its exchange reuse are only visible in the candidate
+    relation's own plan, captured here as it enters the checkpoint."""
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+    lazy = []
+
+    def spy(self, eager=True, storageLevel=None):
+        if not eager:
+            lazy.append(self)
+        return checkpoint(self, eager, storageLevel)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    df = build()
+    (cand,) = [c for c in lazy if c.columns == ["new_id", "old_id"]]
+    return df, cand
+
+
+def test_incremental_dedup_keyed_joins_only(spark, sf_dir, monkeypatch):
     """Cross-batch dedup: fingerprint anti-join + band equi-join +
     Jaccard verify — every join keyed, no cartesian, no BNLJ, no
-    Python; the existing corpus is never self-joined."""
+    Python; the existing corpus is never self-joined. Checked on the
+    final plan and on the candidate relation behind its checkpoint."""
     import __spark_entry__ as m
 
-    plan = _plan_simple(m.queries()["incremental_dedup"](spark, sf_dir))
-    assert "CartesianProduct" not in plan, plan
-    # in-plan auto-salt: the threshold broadcast is the only permitted
-    # nested-loop join (1-row side, tiny plan line)
-    bnlj = [ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln]
-    assert all(len(ln.strip()) < 400 for ln in bnlj), bnlj
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "_salt_part" in plan, plan  # the salted stream exists
+    df, cand = _incremental_candidates(
+        spark, monkeypatch,
+        lambda: m.queries()["incremental_dedup"](spark, sf_dir),
+    )
+    cand_plan = _plan_simple(cand)
+    for plan in (_plan_simple(df), cand_plan):
+        assert "CartesianProduct" not in plan, plan
+        # in-plan auto-salt: the threshold broadcast is the only
+        # permitted nested-loop join (1-row side, tiny plan line)
+        bnlj = [ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln]
+        assert all(len(ln.strip()) < 400 for ln in bnlj), bnlj
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "_salt_part" in cand_plan, cand_plan  # the salted stream exists
 
 
 def test_bigram_lm_broadcast_vocab_only_bnlj(spark, sf_dir):
@@ -1643,7 +1670,7 @@ def _live_file_scans(df, path_substr: str) -> int:
     return count
 
 
-def test_incremental_dedup_auto_reuses_corpus_exchange(spark):
+def test_incremental_dedup_auto_reuses_corpus_exchange(spark, monkeypatch):
     """``incremental_dedup(salt_size='auto')``'s big-side path makes the
     same evaluated-ONCE promise as the self-join helper
     (``salted_big_side_join`` docstring), but through a different
@@ -1655,7 +1682,9 @@ def test_incremental_dedup_auto_reuses_corpus_exchange(spark):
     pipeline per branch at scale. Pin the runtime ground truth: the
     corpus parquet contributes exactly TWO distinct materialized scans
     (one under the shared LSH lineage, one for the shingle-verify
-    relation) and at least one exchange is reused."""
+    relation) and at least one exchange is reused. The LSH lineage
+    runs in the candidate relation's own plan, behind its checkpoint:
+    the scans are counted over both plans, the reuse in that one."""
     from m3d_engine_spark.operators.incremental import incremental_dedup
     from m3d_engine_spark.sources.testdata import load_table
 
@@ -1664,11 +1693,15 @@ def test_incremental_dedup_auto_reuses_corpus_exchange(spark):
     )
     batch = docs.filter(F.col("doc_id") % 7 == 0)
     corpus = docs.filter(F.col("doc_id") % 7 != 0)
-    df = incremental_dedup(batch, corpus, "doc_id", "text", salt_size="auto")
+    df, cand = _incremental_candidates(
+        spark, monkeypatch,
+        lambda: incremental_dedup(batch, corpus, "doc_id", "text", salt_size="auto"),
+    )
     df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    executed = cand._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     assert "ReusedExchange" in executed, executed[:3000]
-    assert _live_file_scans(df, "documents") == 2, executed[:3000]
+    scans = _live_file_scans(cand, "documents") + _live_file_scans(df, "documents")
+    assert scans == 2, executed[:3000]
 
 
 def test_incremental_artifact_hot_split_plan(spark, tmp_path):

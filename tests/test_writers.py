@@ -1,6 +1,7 @@
 """Load modes + atomic partition-overwrite protocol."""
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import Row
@@ -77,6 +78,44 @@ def test_output_files_num_controls_file_count(spark, tmp_path):
     )
     files = [f for f in os.listdir(tgt) if f.endswith(".parquet")]
     assert len(files) == 3
+
+
+def test_partitioned_write_one_file_per_dir_aqe_sized_tasks(spark, tmp_path):
+    """A partitioned write hashes rows on the partition columns: one
+    file per partition dir, and ``output_files_num`` does not fix the
+    write's task count — AQE coalesces the count-free exchange, so 30
+    small dirs with n=10 run fewer than 10 write tasks."""
+    tgt = str(tmp_path / "t")
+    df = spark.range(0, 300, numPartitions=2).select(
+        F.col("id").alias("k"), (F.col("id") % 30).alias("day")
+    )
+    sc = spark.sparkContext
+    group = f"partitioned_write_{uuid.uuid4().hex}"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    sc.setJobGroup(group, group)
+    try:
+        AtomicWriter(
+            spark, tgt, partition_columns=["day"], output_files_num=10
+        ).write(df, LoadMode.OVERWRITE_TABLE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    dirs = sorted(d for d in os.listdir(tgt) if d.startswith("day="))
+    assert len(dirs) == 30, dirs
+    for d in dirs:
+        files = [f for f in os.listdir(f"{tgt}/{d}") if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    assert multiset_equal(spark.read.parquet(tgt).select("k", "day"), df)
+    tracker = sc.statusTracker()
+    ran = {
+        sid: tracker.getStageInfo(sid).numCompletedTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    }
+    assert ran and max(ran.values()) < 10, ran
 
 
 def test_empty_string_partition_value_commits(spark, tmp_path):
