@@ -5,8 +5,9 @@ before the run melts a reducer.
 The compositions self-tune inside their own plans
 (``fuzzy_dedup_corpus`` / ``incremental_dedup`` default
 ``salt_size="auto"`` → ``plans/skew.py::auto_salt_threshold``, an
-in-plan histogram fold). This module is the HUMAN-facing twin: the
-same decision rule plus the quantities an operator wants to see
+in-plan histogram fold). This module is the HUMAN-facing twin: it
+reads the percentiles and threshold from that same fold over the same
+per-key count relation, plus the quantities an operator wants to see
 before committing a cluster — bucket-size distribution, total candidate
 pairs the LSH join will generate, how concentrated they are in the
 hottest bucket, and the recommended ``salt_size`` / ``salt_parts`` /
@@ -16,19 +17,20 @@ and the pair estimate is ``reporting.join_size_estimate``'s exact
 self-join arithmetic (k·(k−1)/2 per key — the self-join case where the
 "estimate" is the ground truth).
 
-Exact disc percentiles are computed from a bucket-SIZE histogram (one
-row per distinct size — hundreds of rows at any corpus scale) instead
-of ``approx_percentile``, so the report is bit-deterministic and
-DuckDB-oracle-checkable at no scale cost: nothing larger than the
+The fold's exact disc percentiles come from a bucket-SIZE histogram
+(one row per distinct size — hundreds of rows at any corpus scale)
+instead of ``approx_percentile``, so the report is bit-deterministic
+and DuckDB-oracle-checkable at no scale cost: nothing larger than the
 histogram is ever sorted or single-partitioned.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from m3d_engine_spark.operators.dedup import lsh_bands
+from m3d_engine_spark.plans.skew import auto_salt_threshold
 
 
 def bucket_dial_report(
@@ -65,37 +67,10 @@ def bucket_dial_report(
     counts = rel.groupBy(*[F.col(c) for c in key_cols]).agg(
         F.count(F.lit(1)).alias("k")
     )
-    # Exact disc percentiles WITHOUT sorting the bucket relation: a
-    # size-histogram (one row per DISTINCT bucket size — hundreds of
-    # rows even at 100 TB, since sizes are small integers) carries a
-    # cumulative bucket count; p_disc(q) = min size whose cumulative
-    # count reaches ceil(q·n_buckets). The only window runs over the
-    # histogram, so the single-partition WindowExec is a few hundred
-    # rows, never the bucket relation itself.
-    hist = counts.groupBy("k").agg(F.count(F.lit(1)).alias("nk"))
-    w_cum = Window.orderBy(F.col("k").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select(
-        F.col("k"), F.sum("nk").over(w_cum).alias("cum")
-    )
-    n_buckets_rel = F.broadcast(hist.agg(F.sum("nk").alias("_nb")))
-    pct = (
-        cum.crossJoin(n_buckets_rel)
-        .select(
-            F.min(
-                F.when(
-                    F.col("cum") >= F.ceil(F.lit(0.5) * F.col("_nb")),
-                    F.col("k"),
-                )
-            ).alias("bucket_p50"),
-            F.min(
-                F.when(
-                    F.col("cum") >= F.ceil(F.lit(0.95) * F.col("_nb")),
-                    F.col("k"),
-                )
-            ).alias("bucket_p95"),
-        )
+    pct = auto_salt_threshold(counts, "k", floor=floor, ratio=ratio).select(
+        F.col("_p50").alias("bucket_p50"),
+        F.col("_p95").alias("bucket_p95"),
+        "_thr",
     )
     # integer-exact pair arithmetic (k·(k−1) is always even, so DIV 2
     # is exact; a double intermediate would drift at extreme sums and
@@ -108,11 +83,9 @@ def bucket_dial_report(
         F.sum(kk).cast("bigint").alias("est_pairs"),
         F.max(kk).cast("bigint").alias("_top_pairs"),
     )
-    thr = F.greatest(F.lit(int(floor)), F.lit(int(ratio)) * F.col("bucket_p95"))
     boiler = F.lit(int(boilerplate_factor)) * F.col("bucket_p95")
     return (
         pairs.crossJoin(F.broadcast(pct))
-        .withColumn("_thr", thr.cast("bigint"))
         .select(
             "n_rows",
             "n_buckets",

@@ -214,12 +214,8 @@ def _banded_candidates(
       ``salt_size="auto"`` derives the threshold IN-PLAN from the
       per-bucket count distribution (``plans/skew.py::
       auto_salt_threshold``; no driver collect) — the self-tuning
-      default the compositions use. It is not free: the histogram
-      folds over the ``_bsz`` window, so column pruning re-shuffles
-      the band relation for it. On the perfbench fuzzy_dedup corpus
-      (500 docs) "auto" runs 10 stages and 0.74-0.93 executor CPU-s
-      against 4 stages and 0.62-0.66 CPU-s for ``None`` (118,346 B of
-      extra shuffle write).
+      default the compositions use. It costs one extra exchange of
+      map-side-combined per-bucket counts.
 
     Why AQE doesn't cover this: these self-joins deliberately pin
     ReusedExchange (one evaluation of the signature pipeline), and
@@ -229,15 +225,14 @@ def _banded_candidates(
     exchange-reuse plan.
     """
     rel = bands_rel
-    if max_bucket_size is not None or salt_size is not None:
+    if max_bucket_size is not None:
         # Bucket size via a window count on the join's own key — the
         # exchange is shared with the self-join below.
         rel = rel.withColumn(
             "_bsz",
             F.count(F.lit(1)).over(Window.partitionBy("band", "band_key")),
         )
-    if max_bucket_size is not None:
-        rel = rel.filter(F.col("_bsz") <= max_bucket_size)
+        rel = rel.filter(F.col("_bsz") <= max_bucket_size).drop("_bsz")
 
     def _pairs(left: DataFrame, right: DataFrame, *extra_keys: str):
         l, r = left.alias("l").hint("merge"), right.alias("r")
@@ -253,8 +248,7 @@ def _banded_candidates(
         )
 
     return salted_self_join(
-        rel, ["band", "band_key"], id_col, _pairs, salt_size, salt_parts,
-        size_col="_bsz",
+        rel, ["band", "band_key"], id_col, _pairs, salt_size, salt_parts
     ).distinct()
 
 
@@ -420,8 +414,9 @@ def ngram_jaccard_pairs(
     the cost of replicating hot-shingle rows ``salt_buckets``×.
     Cold shingles (df ≤ salt_df) keep today's exchange-reused plan.
     ``salt_df="auto"`` derives the threshold in-plan from the df
-    distribution (``plans/skew.py::auto_salt_threshold`` over the
-    same window count — no extra pass, no collect).
+    distribution (``plans/skew.py::auto_salt_threshold``; no collect),
+    at the cost of one extra exchange of map-side-combined per-key
+    counts.
     """
     if threshold <= 0:
         raise ValueError("ngram_jaccard_pairs requires threshold > 0")
@@ -455,7 +450,7 @@ def ngram_jaccard_pairs(
         F.xxhash64("_shingle_str").alias("shingle"),
     )
     hot_sets = None
-    if max_shingle_df is not None or salt_df is not None:
+    if max_shingle_df is not None:
         # Per-(block, shingle) document frequency — same key as the
         # self-join, so the exchange is reusable. The window form (one
         # count over a partition) avoids a separate agg+join pass.
@@ -465,7 +460,6 @@ def ngram_jaccard_pairs(
                 Window.partitionBy(*block_cols, "shingle")
             ),
         )
-    if max_shingle_df is not None:
         # Correction table: each hot document's dropped shingles. Only
         # documents that contain a hot shingle appear, and each carries
         # only its hot shingles — tiny next to the full shingle sets,
@@ -475,7 +469,7 @@ def ngram_jaccard_pairs(
             .groupBy(id_col)
             .agg(F.collect_set("shingle").alias("hot_sh"))
         )
-        tok = tok.filter(F.col("_df") <= max_shingle_df)
+        tok = tok.filter(F.col("_df") <= max_shingle_df).drop("_df")
 
     # Size filter: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so a pair whose
     # sizes differ by more than the threshold ratio can never qualify —
@@ -513,7 +507,7 @@ def ngram_jaccard_pairs(
     # row's deterministic part.
     matches = salted_self_join(
         tok, [*block_cols, "shingle"], id_col, _pair_matches, salt_df,
-        salt_buckets, size_col="_df",
+        salt_buckets,
     )
     inter = matches.groupBy("id_a", "id_b", "na", "nb").agg(
         F.count(F.lit(1)).alias("inter")
@@ -617,7 +611,7 @@ def containment_pairs(
         F.xxhash64("_s").alias("shingle"),
     )
     hot_sets = None
-    if max_shingle_df is not None or salt_df is not None:
+    if max_shingle_df is not None:
         # Per-(block, shingle) df via a window count — same key as the
         # self-join, so it reads the join's own exchange (no extra
         # agg+join pass); see ngram_jaccard_pairs.
@@ -627,13 +621,12 @@ def containment_pairs(
                 Window.partitionBy(*block_cols, "shingle")
             ),
         )
-    if max_shingle_df is not None:
         hot_sets = (
             tok.filter(F.col("_df") > max_shingle_df)
             .groupBy(id_col)
             .agg(F.collect_set("shingle").alias("hot_sh"))
         )
-        tok = tok.filter(F.col("_df") <= max_shingle_df)
+        tok = tok.filter(F.col("_df") <= max_shingle_df).drop("_df")
 
     def _pair_matches(left: DataFrame, right: DataFrame, *extra_keys: str):
         l, r = left.alias("l").hint("merge"), right.alias("r")
@@ -653,7 +646,7 @@ def containment_pairs(
     # salted stream once, in the left row's part.
     matches = salted_self_join(
         tok, [*block_cols, "shingle"], id_col, _pair_matches, salt_df,
-        salt_buckets, size_col="_df",
+        salt_buckets,
     )
     inter = matches.groupBy("id_a", "id_b", "na", "nb").agg(
         F.count(F.lit(1)).alias("inter")

@@ -26,7 +26,6 @@ from m3d_engine_spark.config import ParamsFile
 from m3d_engine_spark.operators.base import Algorithm, register
 from m3d_engine_spark.operators.delta_load import condense, merge_delta
 from m3d_engine_spark.plans.partitions import collect_partitions, partition_predicate
-from m3d_engine_spark.plans.partitions import partition_where_sql  # noqa: F401
 
 try:  # pragma: no cover - depends on environment
     from delta.tables import DeltaTable  # type: ignore
@@ -158,7 +157,7 @@ class DeltaLakeLoadAlgorithm(Algorithm):
 
     def _delta_exists(self) -> bool:
         d = self._delta_dir()
-        return bool(d) and DFSExists(self.spark, d)
+        return bool(d) and _dfs_has_files(self.spark, d)
 
     def _is_real_delta(self) -> bool:
         d = self._delta_dir()
@@ -217,7 +216,7 @@ class DeltaLakeLoadAlgorithm(Algorithm):
             # init-load condensation ordering only on true init loads
             # (DeltaLakeLoad.scala:84-87).
             target = p.get_optional("target_location")
-            lake_exists = bool(target) and DFSExists(self.spark, target)
+            lake_exists = bool(target) and _dfs_has_files(self.spark, target)
             is_init = not lake_exists
         else:
             is_init = not self._delta_exists()
@@ -422,7 +421,8 @@ class DeltaLakeLoadAlgorithm(Algorithm):
             write_output(self.spark, dfs[0], self.params)
 
 
-def DFSExists(spark: SparkSession, path: str) -> bool:
+def _dfs_has_files(spark: SparkSession, path: str) -> bool:
     from m3d_engine_spark.sources.dfs import DFS
 
-    return DFS(spark).exists(path) and bool(DFS(spark).list_files(path))
+    dfs = DFS(spark)
+    return dfs.exists(path) and bool(dfs.list_files(path))

@@ -209,80 +209,79 @@ class FullLoad(Algorithm):
         except Exception:
             self.dfs.delete(self.next_location)  # FullLoad.scala:47-58
             raise
-        if self.table:
-            # Capture the schema BEFORE any DROP: if the swap fails
-            # mid-way the table may already be gone, and the restore
-            # must not depend on reading it back from the catalog.
-            saved_schema = self.spark.table(self.table).schema
-            try:
+        # Capture the schema BEFORE any DROP: if the swap fails
+        # mid-way the table may already be gone, and the restore
+        # must not depend on reading it back from the catalog.
+        saved_schema = self.spark.table(self.table).schema
+        try:
+            cat.recreate_table_at_location(
+                self.spark, self.table, self.next_location,
+                self.partition_targets, schema=saved_schema,
+            )
+        except Exception:
+            if self.previous_location:  # restore (FullLoad.scala:60-70)
                 cat.recreate_table_at_location(
-                    self.spark, self.table, self.next_location,
+                    self.spark, self.table, self.previous_location,
                     self.partition_targets, schema=saved_schema,
                 )
-            except Exception:
-                if self.previous_location:  # restore (FullLoad.scala:60-70)
-                    cat.recreate_table_at_location(
-                        self.spark, self.table, self.previous_location,
-                        self.partition_targets, schema=saved_schema,
-                    )
-                self.dfs.delete(self.next_location)
-                raise
-            if self.previous_location and self.previous_location != self.next_location:
-                self.dfs.delete(self.previous_location)
-            # Leftover cleanup (FullLoad.scala:73-74 +
-            # HadoopLoadHelper.cleanupDirectoryLeftovers:50-63): stray
-            # version dirs / $folder$ markers from earlier crashed loads
-            # would otherwise accumulate at the table root forever.
-            # ONLY when the table demonstrably lives in a versioned
-            # layout: the reference always runs under a dedicated
-            # base_data_dir, but an onboarded external table may sit
-            # flat next to OTHER tables (/lake/db/orders beside
-            # /lake/db/customers) — deleting siblings there would
-            # destroy unrelated datasets, so the cleanup is skipped
-            # unless the old location's own name carries a version
-            # stamp or the caller configured target_dir explicitly.
-            base, _, keep = self.next_location.rstrip("/").rpartition("/")
-            prev_name = (
-                self.previous_location.rstrip("/").rsplit("/", 1)[-1]
-                if self.previous_location
-                else ""
-            )
-            versioned_layout = self.params.has("target_dir") or _re.search(
-                r"\d{8}[_]?\d{6}", prev_name
-            )
-            if versioned_layout:
-                # Delete ONLY entries that are themselves engine
-                # version artifacts — a name matching one of the two
-                # version-dir schemes (next_version_dir's
-                # YYYYmmdd_HHMMSS, or base_data_dir's <name>_<17-digit
-                # stamp>), optionally with an EMR '$folder$' marker
-                # suffix. Anything else in the root (an unrelated
-                # sibling dataset on a shared parent, a _SUCCESS file)
-                # is NOT a leftover and must survive: a flat table
-                # whose own dir name happens to look stamped would
-                # otherwise trip versioned_layout on its second run
-                # and wipe every sibling.
-                if self.params.has("base_data_dir"):
-                    # only the FINAL path segment: list_entries returns
-                    # bare child names, so a multi-segment base_data_dir
-                    # ('archive/data') must match on 'data_<stamp>' —
-                    # the full path could never fullmatch and would
-                    # silently disable cleanup forever
-                    stem = _re.escape(
-                        self.params.get_string("base_data_dir")
-                        .strip("/")
-                        .rsplit("/", 1)[-1]
-                    )
-                    version_name = _re.compile(
-                        rf"{stem}_\d{{17}}(_\$folder\$)?"
-                    )
-                else:
-                    version_name = _re.compile(
-                        r"(?:\d{8}_\d{6}|.+_\d{17})(_\$folder\$)?"
-                    )
-                for entry in self.dfs.list_entries(base):
-                    if keep not in entry and version_name.fullmatch(entry):
-                        self.dfs.delete(f"{base}/{entry}")
+            self.dfs.delete(self.next_location)
+            raise
+        if self.previous_location and self.previous_location != self.next_location:
+            self.dfs.delete(self.previous_location)
+        # Leftover cleanup (FullLoad.scala:73-74 +
+        # HadoopLoadHelper.cleanupDirectoryLeftovers:50-63): stray
+        # version dirs / $folder$ markers from earlier crashed loads
+        # would otherwise accumulate at the table root forever.
+        # ONLY when the table demonstrably lives in a versioned
+        # layout: the reference always runs under a dedicated
+        # base_data_dir, but an onboarded external table may sit
+        # flat next to OTHER tables (/lake/db/orders beside
+        # /lake/db/customers) — deleting siblings there would
+        # destroy unrelated datasets, so the cleanup is skipped
+        # unless the old location's own name carries a version
+        # stamp or the caller configured target_dir explicitly.
+        base, _, keep = self.next_location.rstrip("/").rpartition("/")
+        prev_name = (
+            self.previous_location.rstrip("/").rsplit("/", 1)[-1]
+            if self.previous_location
+            else ""
+        )
+        versioned_layout = self.params.has("target_dir") or _re.search(
+            r"\d{8}[_]?\d{6}", prev_name
+        )
+        if versioned_layout:
+            # Delete ONLY entries that are themselves engine
+            # version artifacts — a name matching one of the two
+            # version-dir schemes (next_version_dir's
+            # YYYYmmdd_HHMMSS, or base_data_dir's <name>_<17-digit
+            # stamp>), optionally with an EMR '$folder$' marker
+            # suffix. Anything else in the root (an unrelated
+            # sibling dataset on a shared parent, a _SUCCESS file)
+            # is NOT a leftover and must survive: a flat table
+            # whose own dir name happens to look stamped would
+            # otherwise trip versioned_layout on its second run
+            # and wipe every sibling.
+            if self.params.has("base_data_dir"):
+                # only the FINAL path segment: list_entries returns
+                # bare child names, so a multi-segment base_data_dir
+                # ('archive/data') must match on 'data_<stamp>' —
+                # the full path could never fullmatch and would
+                # silently disable cleanup forever
+                stem = _re.escape(
+                    self.params.get_string("base_data_dir")
+                    .strip("/")
+                    .rsplit("/", 1)[-1]
+                )
+                version_name = _re.compile(
+                    rf"{stem}_\d{{17}}(_\$folder\$)?"
+                )
+            else:
+                version_name = _re.compile(
+                    r"(?:\d{8}_\d{6}|.+_\d{17})(_\$folder\$)?"
+                )
+            for entry in self.dfs.list_entries(base):
+                if keep not in entry and version_name.fullmatch(entry):
+                    self.dfs.delete(f"{base}/{entry}")
 
     def update_statistics(self) -> None:
         if self.table:

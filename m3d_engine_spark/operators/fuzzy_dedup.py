@@ -97,17 +97,15 @@ def fuzzy_dedup_corpus(
     ``salt_size`` defaults to ``"auto"`` — the self-tuning form: the
     hot-bucket threshold is derived IN-PLAN from the observed
     per-bucket count distribution (``plans/skew.py::
-    auto_salt_threshold`` — a size-histogram branch broadcast back as
-    one row; no driver collect, no checkpoint). When no bucket is hot
-    — the common case — the hot streams are empty at runtime and every
-    pair flows through the same exchange-reused cold join as
-    ``salt_size=None``; when a boilerplate bucket IS hot, its pair
-    stream spreads over ``salt_parts`` tasks with output pinned
-    identical. The histogram branch costs a second shuffle of the band
-    relation: candidate generation runs 10 stages under "auto" against
-    4 under None on the perfbench fuzzy_dedup corpus (measured cost in
-    ``_banded_candidates``). Pass an int to force the threshold or
-    None to disable salting entirely.
+    auto_salt_threshold`` over a ``groupBy(band, band_key)`` count,
+    broadcast back as one row; no driver collect, no checkpoint). When
+    no bucket is hot — the common case — the hot streams are empty at
+    runtime and every pair flows through the same exchange-reused cold
+    join as ``salt_size=None``; when a boilerplate bucket IS hot, its
+    pair stream spreads over ``salt_parts`` tasks with output pinned
+    identical. The threshold costs one extra exchange of
+    map-side-combined per-bucket counts. Pass an int to force the
+    threshold or None to disable salting entirely.
     """
     if quality is None:
         quality = F.length(F.col(text_col))

@@ -50,9 +50,16 @@ def propagation_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
 
     ``sym`` is the symmetric (a, b) edge relation; ``labels`` is
     (a, component).
+
+    Both joins are hinted sort-merge. Checkpointed inputs carry no size
+    statistics, so unhinted, AQE picks the join strategy and build side
+    from whichever shuffle stage finishes first: a rerun then plans a
+    different join, generates different code and misses the codegen
+    cache. At scale both sides are vertex-sized and sort-merge is the
+    plan anyway.
     """
     neighbor_min = (
-        sym.join(
+        sym.hint("merge").join(
             labels.select(
                 F.col("a").alias("b"), F.col("component").alias("nb_label")
             ),
@@ -61,7 +68,7 @@ def propagation_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
         .groupBy("a")
         .agg(F.min("nb_label").alias("nb_min"))
     )
-    return labels.join(neighbor_min, on="a", how="left").select(
+    return labels.hint("merge").join(neighbor_min, on="a", how="left").select(
         "a",
         F.least(
             F.col("component"), F.coalesce("nb_min", F.col("component"))

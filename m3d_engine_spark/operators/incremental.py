@@ -343,11 +343,13 @@ def incremental_dedup(
     old rows fans n·m candidate pairs into one task. Default ``"auto"``
     self-tunes IN-PLAN via ``plans/skew.py::salted_big_side_join``:
     the corpus side's per-bucket count is a window over the same
-    exchange its join shuffles on, the threshold folds from a
-    size-histogram branch of that window (``auto_salt_threshold``),
-    and the batch side learns hotness from a broadcast hot-bucket set
-    — the corpus LSH pipeline is evaluated ONCE, with no checkpoint,
-    no driver collect, and no second corpus exchange for cold buckets.
+    exchange its join shuffles on, the threshold folds over a
+    ``groupBy(band, band_key)`` count of the corpus bands
+    (``auto_salt_threshold``; one extra exchange of map-side-combined
+    per-bucket counts), and the batch side learns hotness from a
+    broadcast hot-bucket set — the corpus LSH pipeline is evaluated
+    ONCE, with no checkpoint, no driver collect, and no second corpus
+    exchange for cold buckets.
     Hot buckets salt the corpus rows by ``pmod(xxhash64(id), parts)``
     and replicate the batch rows; every (new, old) pair meets exactly
     once, output pinned identical. Pass an int to force the threshold,

@@ -22,10 +22,11 @@ their rows spread over ``salt_parts`` tasks — and this module owns it:
   meets exactly once, in the salted row's part.
 * **One threshold rule.** ``salt_size`` is an int (a fixed per-key row
   threshold) or ``"auto"``: ``max(floor, ratio·p95)`` of the per-key
-  count distribution, computed in-plan by ``auto_salt_threshold``.
-  ``collect_hot_threshold`` is the driver-side read of the same rule
-  for callers that persist the threshold. ``salt_size_param`` parses
-  the CLI form of the dial.
+  count distribution, computed in-plan by ``auto_salt_threshold`` from
+  one ``groupBy(keys).count()`` relation. ``collect_hot_threshold`` is
+  the driver-side read of the same rule for callers that persist the
+  threshold, and ``operators/advisor.py`` reports its percentiles.
+  ``salt_size_param`` parses the CLI form of the dial.
 * **One owner of** ``SALT_PART_COL``. The helpers add the part column
   to the join key and drop it from the output; callers never name it.
 
@@ -154,17 +155,18 @@ def _is_auto(salt_size: int | str) -> bool:
 
 
 def auto_salt_threshold(
-    rel_w: DataFrame,
+    counts: DataFrame,
     size_col: str,
     *,
     floor: int = 4096,
     ratio: int = 8,
-    bucket_level: bool = False,
 ) -> DataFrame:
-    """The hot-key threshold rule as a 1-ROW RELATION (column ``_thr``)
-    computed entirely inside the plan — no driver collect, no
-    checkpoint. The threshold is
-    ``max(floor, ratio · p95)`` of the per-key row counts:
+    """The hot-key threshold rule as a 1-ROW RELATION computed entirely
+    inside the plan — no driver collect, no checkpoint. ``counts``
+    holds ONE ROW PER KEY with its row count in ``size_col`` (a
+    ``groupBy(keys).count()``). The relation carries the exact disc
+    percentiles ``_p50`` and ``_p95`` of those counts and the threshold
+    ``_thr = max(floor, ratio · _p95)``:
 
     * ``floor`` keeps salting OFF until a key is big enough that its
       pair stream actually stalls one task — a 4096-row bucket is
@@ -181,38 +183,16 @@ def auto_salt_threshold(
       key dominates. At real LSH scale (p95 of bucket sizes ≈ single
       digits) the ``floor`` term dominates anyway.
 
-    ``rel_w`` must already carry ``size_col`` = the per-key row count
-    (the window the salted joins compute anyway, riding the join's own
-    exchange). Bucket-level statistics come from a SIZE HISTOGRAM:
-    ``groupBy(size).count()`` counts ROWS per size, and rows-with-size-k
-    = (buckets of size k) · k, so bucket counts are the exact integer
-    division — one tiny aggregate whose input is one small int per row
-    and whose output is one row per distinct size (hundreds at any
-    scale). p95 and the threshold then fold over the histogram.
-    Callers ``crossJoin(broadcast(...))`` the result and compare
-    ``size_col > _thr`` per row — the only join this adds is a 1-row
-    broadcast. When ``rel_w`` is a window relation, the histogram's
-    pruned input does not reuse the window's exchange: it re-shuffles
-    ``rel_w`` (see ``salted_self_join`` for the measured cost); a
-    ``bucket_level`` count relation avoids that.
-
-    The quantile is EXACT (disc, value at the first cumulative bucket
-    count reaching ceil(0.95·n)) — exactness is free once the
-    histogram exists, and it keeps the rule oracle-checkable.
-
-    ``bucket_level=True`` says ``rel_w`` already carries ONE ROW PER
-    KEY (e.g. a groupBy count relation) — the histogram then counts
-    rows directly instead of dividing by the size.
+    The percentiles fold over a SIZE HISTOGRAM (``groupBy(size)
+    .count()``: one row per distinct size, hundreds at any scale), so
+    the only single-partition window sorts the histogram, never the
+    key relation. A percentile is the value at the first cumulative
+    key count reaching ``ceil(q·n)`` — exact, so the rule stays
+    oracle-checkable. Callers that only need ``_thr`` select it;
+    Catalyst prunes the rest.
     """
-    hist = (
-        rel_w.groupBy(F.col(size_col).alias("_k"))
-        .agg(F.count(F.lit(1)).alias("_rows"))
-        .select(
-            "_k",
-            (F.col("_rows") if bucket_level else F.expr("_rows DIV _k")).alias(
-                "_nk"
-            ),
-        )
+    hist = counts.groupBy(F.col(size_col).alias("_k")).agg(
+        F.count(F.lit(1)).alias("_nk")
     )
     w_cum = Window.orderBy(F.col("_k").asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -225,17 +205,18 @@ def auto_salt_threshold(
         F.sum("_nk").over(w_cum).alias("_cum"),
         F.sum("_nk").over(w_all).alias("_nb"),
     )
-    return cum.agg(
+
+    def _pct(q: float) -> Column:
+        return F.min(
+            F.when(F.col("_cum") >= F.ceil(F.lit(q) * F.col("_nb")), F.col("_k"))
+        )
+
+    return cum.agg(_pct(0.5).alias("_p50"), _pct(0.95).alias("_p95")).select(
+        "_p50",
+        "_p95",
         F.greatest(
-            F.lit(int(floor)).cast("bigint"),
-            F.lit(int(ratio))
-            * F.min(
-                F.when(
-                    F.col("_cum") >= F.ceil(F.lit(0.95) * F.col("_nb")),
-                    F.col("_k"),
-                )
-            ),
-        ).alias("_thr")
+            F.lit(int(floor)).cast("bigint"), F.lit(int(ratio)) * F.col("_p95")
+        ).alias("_thr"),
     )
 
 
@@ -257,9 +238,7 @@ def collect_hot_threshold(
     ``counts`` included), so callers keep the plain plan.
     """
     if _is_auto(salt_size):
-        thr = auto_salt_threshold(
-            counts, size_col, floor=floor, ratio=ratio, bucket_level=True
-        )
+        thr = auto_salt_threshold(counts, size_col, floor=floor, ratio=ratio)
     else:
         thr = counts.sparkSession.range(1).select(
             F.lit(int(salt_size)).cast("bigint").alias("_thr")
@@ -302,45 +281,38 @@ def _flag_hot(
     rel: DataFrame,
     key_cols: Sequence[str],
     salt_size: int | str,
-    size_col: str | None,
     floor: int,
     ratio: int,
-) -> tuple[DataFrame, Column, list[str], DataFrame | None, DataFrame | None]:
+) -> tuple[DataFrame, Column, list[str], DataFrame, DataFrame | None]:
     """Attach the per-key row count (and, under ``"auto"``, the
     threshold) to ``rel``. Returns ``(rel, is_hot, helper columns to
     drop, per-key count relation, broadcast threshold relation)``.
 
-    ``size_col`` names a per-key count the caller already carries; when
-    None the count is a window over ``key_cols``, reading the same
-    exchange the join shuffles on, and the threshold histogram folds
-    over a separate ``groupBy(keys)`` count relation (returned too).
-    The histogram must not derive from the window: column pruning
-    specializes its input, so it would re-SHUFFLE the whole relation
-    just to learn one number, where the groupBy's partial aggregate
-    map-side combines and ships only per-key counts. The expensive
-    lineage below ``rel``'s first exchange is shared by both streams
-    through runtime stage reuse either way.
+    The count on ``rel`` is a window over ``key_cols``, reading the
+    same exchange the join shuffles on. The threshold folds over a
+    separate ``groupBy(keys)`` count relation (returned too), because
+    a fold over the window would not reuse its exchange: column
+    pruning specializes that input, so it would re-shuffle the whole
+    relation to learn one number. The groupBy's partial aggregate
+    combines map-side, so ``"auto"`` costs one extra exchange of
+    per-key counts, plus the histogram's two exchanges of one row per
+    distinct size. The expensive lineage below ``rel``'s first
+    exchange is shared by both streams through runtime stage reuse.
     """
-    stats = None
-    if size_col is None:
-        size_col = _SIZE_COL
-        stats = rel.groupBy(*key_cols).agg(F.count(F.lit(1)).alias(size_col))
-        rel = rel.withColumn(
-            size_col, F.count(F.lit(1)).over(Window.partitionBy(*key_cols))
-        )
+    stats = rel.groupBy(*key_cols).agg(F.count(F.lit(1)).alias(_SIZE_COL))
+    rel = rel.withColumn(
+        _SIZE_COL, F.count(F.lit(1)).over(Window.partitionBy(*key_cols))
+    )
     if not _is_auto(salt_size):
-        return rel, F.col(size_col) > int(salt_size), [size_col], stats, None
+        return rel, F.col(_SIZE_COL) > int(salt_size), [_SIZE_COL], stats, None
     thr = F.broadcast(
-        auto_salt_threshold(stats, size_col, floor=floor, ratio=ratio,
-                            bucket_level=True)
-        if stats is not None
-        # caller-supplied size_col: its value distribution IS the
-        # quantity the hot filter tests — fold over rel itself
-        else auto_salt_threshold(rel, size_col, floor=floor, ratio=ratio)
+        auto_salt_threshold(stats, _SIZE_COL, floor=floor, ratio=ratio).select(
+            "_thr"
+        )
     )
     return (
-        rel.crossJoin(thr), F.col(size_col) > F.col("_thr"),
-        [size_col, "_thr"], stats, thr,
+        rel.crossJoin(thr), F.col(_SIZE_COL) > F.col("_thr"),
+        [_SIZE_COL, "_thr"], stats, thr,
     )
 
 
@@ -351,7 +323,6 @@ def salted_self_join(
     join: PairJoin,
     salt_size: int | str | None,
     salt_parts: int,
-    size_col: str | None = None,
     *,
     floor: int = 4096,
     ratio: int = 8,
@@ -375,36 +346,23 @@ def salted_self_join(
     key's pair stream spreads over ``salt_parts`` tasks. Cold keys keep
     the original (exchange-reused) self-join.
 
-    ``salt_size=None`` is the plain plan: ``join(rel, rel)``, after
-    dropping ``size_col`` when ``rel`` carries it. ``size_col`` names a
-    per-key row count already present on ``rel`` (pass it when the
-    caller computes one anyway — e.g. for a df cutoff — so the plan
-    keeps a single window); the joined frames never carry it.
+    ``salt_size=None`` is the plain plan, ``join(rel, rel)``.
 
     ``salt_size="auto"`` is the self-tuning form: the threshold is
-    ``auto_salt_threshold``'s 1-row relation, broadcast-joined back so
-    every row compares against it IN-PLAN — no driver collect, no
-    checkpoint. On un-skewed data the hot stream is empty at runtime
-    and the cold stream carries everything, but the split is not free.
-    With a caller-supplied ``size_col`` the threshold histogram folds
-    over the window relation itself, and column pruning specializes
-    that input into a second shuffle of ``rel`` (the cost ``_flag_hot``
-    warns about for the ``size_col=None`` path). Measured on the
-    perfbench fuzzy_dedup corpus (500 docs, ``local[4]``, warm):
-    ``minhash_lsh_candidates(salt_size="auto")`` runs 10 stages and
-    0.74-0.93 executor CPU-s, against 4 stages and 0.62-0.66 CPU-s for
-    ``salt_size=None``; the extra shuffle writes 118,346 B of the band
-    relation.
+    ``auto_salt_threshold``'s 1-row relation over the per-key counts,
+    broadcast-joined back so every row compares against it IN-PLAN —
+    no driver collect, no checkpoint. On un-skewed data the hot stream
+    is empty at runtime and the cold stream carries everything; the
+    threshold costs one extra exchange of map-side-combined per-key
+    counts (see ``_flag_hot``).
     """
     if salt_size is None:
-        if size_col is not None and size_col in rel.columns:
-            rel = rel.drop(size_col)
         return join(rel, rel)
-    reserved = {SALT_PART_COL, "_thr"} | ({_SIZE_COL} if size_col is None else set())
-    _check_salted("salted self-join", salt_parts, reserved, input=rel)
-    rel, is_hot, drop_cols, _, _ = _flag_hot(
-        rel, key_cols, salt_size, size_col, floor, ratio
+    _check_salted(
+        "salted self-join", salt_parts, {SALT_PART_COL, _SIZE_COL, "_thr"},
+        input=rel,
     )
+    rel, is_hot, drop_cols, _, _ = _flag_hot(rel, key_cols, salt_size, floor, ratio)
     cold = rel.filter(~is_hot).drop(*drop_cols)
     hot = rel.filter(is_hot).drop(*drop_cols)
     hot_left = hot.withColumn(SALT_PART_COL, _part_of(id_col, salt_parts))
@@ -455,11 +413,8 @@ def salted_two_sided_join(
         .withColumn("_cmax", F.greatest("_cl", "_cr"))
     )
     if _is_auto(salt_size):
-        # the count relation is already one row per key (bucket_level)
         cnt = cnt.crossJoin(
-            F.broadcast(
-                auto_salt_threshold(cnt, "_cmax", bucket_level=True)
-            )
+            F.broadcast(auto_salt_threshold(cnt, "_cmax").select("_thr"))
         )
         hot_pred = F.col("_cmax") > F.col("_thr")
     else:
@@ -543,7 +498,7 @@ def salted_big_side_join(
     )
     keys = list(key_cols)
     big_w, is_hot, drop_cols, stats, thr = _flag_hot(
-        big, keys, salt_size, None, floor, ratio
+        big, keys, salt_size, floor, ratio
     )
     hot_stats = (stats if thr is None else stats.crossJoin(thr)).filter(is_hot)
     cold_big = big_w.filter(~is_hot).drop(*drop_cols)

@@ -99,6 +99,17 @@ def test_salted_two_sided_streams_reserved_name_guard(spark):
         salted_two_sided_join(left, right, ["k"], "lid", "rid", _key_join, 1, 2)
 
 
+def test_salted_self_join_reserves_count_column(spark):
+    """The self-join always counts keys into ``_salt_bsz``: a caller
+    column of that name must raise the guard's ValueError, not be
+    silently overwritten by the window count."""
+    from m3d_engine_spark.plans.skew import salted_self_join
+
+    rel = spark.createDataFrame([(1, "a", 5)], "rid long, k string, _salt_bsz long")
+    with pytest.raises(ValueError, match="reserve"):
+        salted_self_join(rel, ["k"], "rid", _key_join, 2, 2)
+
+
 # --------------------------------------- composition output identity
 @pytest.mark.slow
 def test_fuzzy_dedup_auto_default_equals_unsalted(spark, sf_dir):
@@ -424,26 +435,22 @@ def test_auto_salt_threshold_value(spark):
     """The in-plan histogram fold must produce max(floor, ratio·p95)
     exactly: 40 cold keys of size 2 + one 64-row key → p95 = 2 (the
     hot key is past the 95th bucket), thr = max(8, 4·2) = 8."""
-    from pyspark.sql import Window as W
-
     from m3d_engine_spark.plans.skew import auto_salt_threshold
 
     rel = spark.range(80).select((F.col("id") % 40).alias("k")).unionAll(
         spark.range(64).select(F.lit(999).alias("k"))
     )
-    rel_w = rel.withColumn("sz", F.count(F.lit(1)).over(W.partitionBy("k")))
-    row = auto_salt_threshold(rel_w, "sz", floor=8, ratio=4).collect()
+    counts = rel.groupBy("k").agg(F.count(F.lit(1)).alias("sz"))
+    row = auto_salt_threshold(counts, "sz", floor=8, ratio=4).collect()
     assert len(row) == 1 and row[0]["_thr"] == 8
 
 
 def test_auto_salt_threshold_floor_dominates(spark):
-    from pyspark.sql import Window as W
-
     from m3d_engine_spark.plans.skew import auto_salt_threshold
 
     rel = spark.range(64).select(F.lit(1).alias("k"))
-    rel_w = rel.withColumn("sz", F.count(F.lit(1)).over(W.partitionBy("k")))
-    row = auto_salt_threshold(rel_w, "sz").collect()  # defaults 4096/8
+    counts = rel.groupBy("k").agg(F.count(F.lit(1)).alias("sz"))
+    row = auto_salt_threshold(counts, "sz").collect()  # defaults 4096/8
     assert row[0]["_thr"] == 4096
 
 
@@ -482,6 +489,44 @@ def test_salted_self_join_streams_auto_exactly_once(spark):
             ).collect()
         )
         assert got == plain and len(plain) == 66 + 0  # 12C2 hot only
+
+
+def test_lsh_bucket_cap_and_salt_together(spark, monkeypatch):
+    """``max_bucket_size`` and ``salt_size`` set at once: the cap's
+    window count and the salted join's own key count both run, and the
+    output is exactly the pairs of the cap alone — for a forced int
+    threshold and for "auto" with the rule forced to a tiny threshold.
+    A 20-doc boilerplate bucket is capped away; a 6-doc bucket survives
+    the cap and is hot under both thresholds, so its pairs go through
+    the salted stream."""
+    import m3d_engine_spark.plans.skew as skew
+    from m3d_engine_spark.operators.dedup import minhash_lsh_candidates
+
+    rows = [(i, "boiler plate page body text") for i in range(20)]
+    rows += [(50 + i, "a mid sized cluster of copies") for i in range(6)]
+    rows += [(100, "a rare near dup document xx"), (101, "a rare near dup document yy")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def pairs(**kw):
+        return {
+            (r.id_a, r.id_b)
+            for r in minhash_lsh_candidates(
+                docs, "doc_id", "text", max_bucket_size=10, **kw
+            ).collect()
+        }
+
+    capped = pairs()
+    assert sum(50 <= a < 56 and 50 <= b < 56 for a, b in capped) == 15
+    assert not any(a < 20 and b < 20 for a, b in capped)
+    assert pairs(salt_size=2, salt_parts=3) == capped
+    monkeypatch.setattr(
+        skew,
+        "auto_salt_threshold",
+        lambda rel, size_col, **kw: rel.sparkSession.range(1).select(
+            F.lit(2).cast("bigint").alias("_thr")
+        ),
+    )
+    assert pairs(salt_size="auto", salt_parts=3) == capped
 
 
 # ----------------------------------- 'auto' across the primitive dials
