@@ -5118,7 +5118,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, quarter of orders). Exact long arithmetic on a 10¹² lattice
     — bit-identical across engines/partitionings, where float PageRank
     diverges on summation order; one keyed join + one sum per round,
-    edge relation persisted once."""
+    edge relation checkpointed once."""
     from m3d_engine_spark.operators.graph import pagerank
 
     li = (
@@ -5478,7 +5478,7 @@ def q_ppr_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     teleport concentrated on a seed set (every 50th part), so rank
     measures graph proximity to the seeds — the topic-seed → corpus
     -subset expansion primitive. Same integer-exact recurrence as
-    `pagerank`; the seed mask rides the cached nodes relation."""
+    `pagerank`; the seed mask rides the checkpointed nodes relation."""
     from m3d_engine_spark.operators.graph import pagerank
 
     li = (
@@ -5765,7 +5765,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     by 10M to keep the id spaces disjoint). Exact DECIMAL(38)
     fixed-point with per-round L-infinity lattice normalization —
     bit-identical across engines at any graph size; one keyed join +
-    one sum per half-round off the persisted edge relation."""
+    one sum per half-round off the checkpointed edge relation."""
     from m3d_engine_spark.operators.graph import hits
 
     li = _t(spark, sf_dir, "lineitem").select(

@@ -209,21 +209,12 @@ class FullLoad(Algorithm):
         except Exception:
             self.dfs.delete(self.next_location)  # FullLoad.scala:47-58
             raise
-        # Capture the schema BEFORE any DROP: if the swap fails
-        # mid-way the table may already be gone, and the restore
-        # must not depend on reading it back from the catalog.
-        saved_schema = self.spark.table(self.table).schema
         try:
-            cat.recreate_table_at_location(
+            cat.swap_table_location(
                 self.spark, self.table, self.next_location,
-                self.partition_targets, schema=saved_schema,
+                self.previous_location, self.partition_targets,
             )
         except Exception:
-            if self.previous_location:  # restore (FullLoad.scala:60-70)
-                cat.recreate_table_at_location(
-                    self.spark, self.table, self.previous_location,
-                    self.partition_targets, schema=saved_schema,
-                )
             self.dfs.delete(self.next_location)
             raise
         if self.previous_location and self.previous_location != self.next_location:

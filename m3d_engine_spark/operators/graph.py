@@ -96,7 +96,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 20,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(id, component) with component = min id reachable from ``id``
     (including itself); nodes absent from ``edges`` form singleton
@@ -124,14 +123,12 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     converged = False
-    for i in range(max_iterations):
-        updated = propagation_round(sym, labels)
-        if (i + 1) % checkpoint_every == 0:
-            # Materialize: the convergence probe below is an action, and
-            # without a checkpoint every later round would re-execute the
-            # whole join chain from the start (quadratic in rounds); the
-            # checkpoint also truncates the two-joins-per-round lineage.
-            updated = updated.localCheckpoint(eager=True)
+    for _ in range(max_iterations):
+        # Materialize: the convergence probe below is an action, and
+        # without a checkpoint every later round would re-execute the
+        # whole join chain from the start (quadratic in rounds); the
+        # checkpoint also truncates the two-joins-per-round lineage.
+        updated = propagation_round(sym, labels).localCheckpoint(eager=True)
         # head(1), not limit(1).count(): a LIMIT in generated code names
         # its counter from a JVM-global id, so a per-round limit(1)
         # compiles fresh classes every round of every run. head(1) runs
@@ -167,7 +164,7 @@ def _large_star(down: DataFrame) -> DataFrame:
     two directions are disjoint by construction, so the union needs no
     distinct. Every emitted edge (v, m) has v > m (v > u ≥ m), so the
     output is already in directed hi→lo form; one distinct dedups
-    multi-source emissions."""
+    multi-source emissions. Join hinted as in ``propagation_round``."""
     sym = down.union(down.select(F.col("b").alias("a"), F.col("a").alias("b")))
     m = (
         sym.groupBy("a")
@@ -175,7 +172,7 @@ def _large_star(down: DataFrame) -> DataFrame:
         .select("a", F.least(F.col("_nbmin"), F.col("a")).alias("m"))
     )
     return (
-        sym.join(m, on="a")
+        sym.hint("merge").join(m, on="a")
         .filter(F.col("b") > F.col("a"))
         .select(F.col("b").alias("a"), F.col("m").alias("b"))
         .distinct()
@@ -186,10 +183,10 @@ def _small_star(down: DataFrame) -> DataFrame:
     """Small-star over the directed (hi=a, lo=b) edge set: u and all
     its smaller neighbors point at the lowest of them. Emitted edges
     (v, m) have v > m and (u, m) has u > m — output stays directed
-    hi→lo; one distinct dedups."""
+    hi→lo; one distinct dedups. Join hinted as in ``propagation_round``."""
     m = down.groupBy("a").agg(F.min("b").alias("m"))
     relink = (
-        down.join(m, on="a")
+        down.hint("merge").join(m, on="a")
         .filter(F.col("b") != F.col("m"))
         .select(F.col("b").alias("a"), F.col("m").alias("b"))
     )
@@ -398,7 +395,6 @@ def pagerank(
     iterations: int = 5,
     damping_pct: int = 85,
     scale: int = 10**12,
-    checkpoint: bool = True,
     seeds: DataFrame | None = None,
     seed_col: str = "node",
 ) -> DataFrame:
@@ -411,8 +407,8 @@ def pagerank(
     the teleport term concentrates on the seed set (base and init are
     nonzero only for seeds), so rank measures proximity to the seeds —
     the "expand a topic seed into a corpus subset" primitive. Same
-    recurrence, same exactness; seeds ride the cached nodes relation
-    as a flag column (one semi-style left join at build time, nothing
+    recurrence, same exactness; seeds ride the nodes relation as a
+    flag column (one semi-style left join at build time, nothing
     per-round).
 
         r_{t+1}(v) = (100-d)·scale/100
@@ -431,14 +427,14 @@ def pagerank(
     stays under 2⁶³ while n_nodes·scale < 10¹⁷ — drop ``scale`` one
     decade per decade of nodes beyond that.
 
-    Topology: outdeg is ONE count aggregate; the (src, dst, outdeg)
-    relation is persisted and re-read from cache each round; a round
-    is ONE equi-join on src (ranks are node-keyed and outdeg-sized)
-    plus ONE sum aggregate on dst — never a cross product, state never
-    exceeds one long per node. ``iterations`` is fixed (PageRank
-    converges geometrically at rate d; 5-10 rounds rank-order most
-    graphs) so there is no per-round driver action at all — the whole
-    loop executes once, at the terminal eager checkpoint.
+    Topology: outdeg is ONE count aggregate; the (src, dst, outdeg) and
+    node relations are eagerly checkpointed once and re-read each
+    round; a round is ONE equi-join on src (ranks are node-keyed and
+    outdeg-sized) plus ONE sum aggregate on dst — never a cross
+    product, state never exceeds one long per node. ``iterations`` is
+    fixed (PageRank converges geometrically at rate d; 5-10 rounds
+    rank-order most graphs), so there is no per-round driver action:
+    the result is lazy and the caller's action runs the whole loop.
 
     Returns (node, rank_int, rank): the exact lattice value and its
     6dp decode (rank ≈ 1.0 = the regular-graph stationary value).
@@ -452,12 +448,11 @@ def pagerank(
         .distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = e.join(deg, on="src").persist()
-    # nodes is read EVERY round (the left side of the rank rebuild) —
-    # derive it from the PERSISTED relation and cache it, or each
-    # round's plan re-executes the full upstream edge pipeline just to
-    # re-distinct the endpoints. Carries the per-node teleport base
-    # (constant for uniform PageRank, seed-masked for personalized).
+    # Checkpoints, not caches, as in connected_components: every round
+    # reads a state-sized partition count. nodes is read EVERY round
+    # (the left side of the rank rebuild); it carries the per-node
+    # teleport base (constant, or seed-masked for personalized).
+    ed = e.join(deg, on="src").localCheckpoint(eager=True)
     base = ((100 - damping_pct) * scale) // 100
     endpoints = (
         ed.select(F.col("src").alias("node"))
@@ -469,7 +464,7 @@ def pagerank(
             "node",
             F.lit(base).cast("long").alias("b"),
             F.lit(int(scale)).cast("long").alias("r0"),
-        ).persist()
+        ).localCheckpoint(eager=True)
     else:
         sd = seeds.select(
             F.col(seed_col).cast("long").alias("node")
@@ -487,7 +482,7 @@ def pagerank(
                 .cast("long")
                 .alias("r0"),
             )
-            .persist()
+            .localCheckpoint(eager=True)
         )
     ranks = nodes.select("node", F.col("r0").alias("r"))
     for _ in range(iterations):
@@ -510,23 +505,13 @@ def pagerank(
                 + F.expr(f"{damping_pct} * coalesce(s, 0L) div 100")
             ).alias("r"),
         )
-    out = ranks.select(
+    return ranks.select(
         F.col("node"),
         F.col("r").alias("rank_int"),
         F.round(F.col("r").cast("double") / F.lit(float(scale)), 6).alias(
             "rank"
         ),
     )
-    if checkpoint:
-        # One eager materialization runs the whole loop; afterwards the
-        # result carries no lineage into the cached relations, so they
-        # can be released. checkpoint=False keeps the full lazy plan
-        # (plan inspection / composition into a larger job) — caller
-        # owns the cache lifetimes implicitly via lineage then.
-        out = out.localCheckpoint(eager=True)
-        ed.unpersist()
-        nodes.unpersist()
-    return out
 
 
 def hits(
@@ -535,7 +520,6 @@ def hits(
     dst_col: str = "dst",
     iterations: int = 3,
     scale: int = 10**6,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """HITS hubs & authorities over a DIRECTED edge list (Kleinberg's
     link-analysis pair to PageRank): authority(v) sums the hub scores
@@ -556,13 +540,13 @@ def hits(
     graph size — n·scale² has 38 digits of headroom instead of
     long overflow at 10⁷ nodes.
 
-    Topology (the pagerank discipline): the distinct edge relation is
-    persisted once; each half-round is ONE equi-join of the
-    node-keyed score relation against it plus ONE sum aggregate on
-    the opposite endpoint; the round max is a broadcast 1-row
-    aggregate (no driver traffic); ``iterations`` is fixed, and one
-    terminal eager checkpoint executes the whole loop. Nodes with no
-    in-edges hold authority 0; no out-edges, hub 0.
+    Topology (the pagerank discipline): the distinct edge and node
+    relations are eagerly checkpointed once; each half-round is ONE
+    equi-join of the node-keyed score relation against the edges plus
+    ONE sum aggregate on the opposite endpoint; the round max is a
+    broadcast 1-row aggregate (no driver traffic); ``iterations`` is
+    fixed, and the caller's action executes the whole loop once.
+    Nodes with no in-edges hold authority 0; no out-edges, hub 0.
 
     Returns (node, auth_int, hub_int, authority, hub): exact lattice
     values and their 6dp decodes (1.0 = the round's max).
@@ -578,13 +562,13 @@ def hits(
             F.col(dst_col).cast("long").alias("dst"),
         )
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     renorm = (
         f"CAST(CAST(v AS DECIMAL(38,0)) * {scale} div mx AS BIGINT)"
@@ -597,7 +581,7 @@ def hits(
         # every half-round (64x the base tree by round 3, an
         # OutOfMemory in plan stringification alone). A LAZY
         # localCheckpoint collapses the subtree to one RDD-backed scan
-        # at build time while deferring execution to the terminal
+        # at build time while deferring execution to the caller's
         # action, preserving the run-the-loop-once discipline.
         a_raw = (
             e.join(hubs.select(F.col("node").alias("src"), "h"), on="src")
@@ -623,7 +607,7 @@ def hits(
         hubs = nodes.join(h_norm, on="node", how="left").select(
             "node", F.coalesce(F.col("h"), F.lit(0).cast("long")).alias("h")
         )
-    out = (
+    return (
         auths.join(hubs, on="node")
         .select(
             "node",
@@ -637,11 +621,6 @@ def hits(
             ),
         )
     )
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        e.unpersist()
-        nodes.unpersist()
-    return out
 
 
 def kcore(
@@ -715,14 +694,15 @@ def random_walks(
     dead-end nodes (inner join semantics).
 
     Topology: the neighbor relation is ranked ONCE (row_number + count
-    over one (src)-keyed exchange) and persisted, with the per-node
-    degree split into its own (node, outdeg) relation; each step first
-    computes the pick index on the WALK side (one md5 per live walk —
-    the original form evaluated it inside the neighbor-join filter,
-    i.e. once per ADJACENCY row: Σoutdeg ≈ |E| hashes per step instead
-    of |walks|, measured as the dominant stage of the entry), then
-    1:1 equi-joins the pick against the ranked neighbors on
-    ``(src, rk)`` — no per-step fan-out of the full adjacency at all.
+    over one (src)-keyed exchange) and eagerly checkpointed, with the
+    per-node degree split into its own (node, outdeg) relation; each
+    step first computes the pick index on the WALK side (one md5 per
+    live walk — the original form evaluated it inside the
+    neighbor-join filter, i.e. once per ADJACENCY row: Σoutdeg ≈ |E|
+    hashes per step instead of |walks|, measured as the dominant stage
+    of the entry), then 1:1 equi-joins the pick against the ranked
+    neighbors on ``(src, rk)`` — no per-step fan-out of the full
+    adjacency at all.
     The per-step state is one row per live walk, collapsed by a lazy
     checkpoint (the state feeds both the output union and the next
     step — the hits() lineage discipline). ``length`` is fixed: the
@@ -743,7 +723,7 @@ def random_walks(
         .distinct()
         .withColumn("rk", F.row_number().over(w_rank))
         .withColumn("outdeg", F.count(F.lit(1)).over(w_deg))
-        .persist()
+        .localCheckpoint(eager=True)
     )
     deg = nb.filter(F.col("rk") == 1).select("src", "outdeg")
     state = (

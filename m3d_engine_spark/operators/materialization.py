@@ -26,6 +26,7 @@ from m3d_engine_spark.config import ParamsFile
 from m3d_engine_spark.functions.dates import aligned_week_of_year  # noqa: F401 (week parity)
 from m3d_engine_spark.operators.base import Algorithm, register
 from m3d_engine_spark.plans.partitions import partition_predicate
+from m3d_engine_spark.sources import catalog as cat
 from m3d_engine_spark.sources.dfs import DFS, next_version_dir
 from m3d_engine_spark.sources.writers import AtomicWriter, LoadMode, repartitioned
 
@@ -143,20 +144,18 @@ class FullMaterialization(Algorithm):
             w = w.partitionBy(*parts)
         try:
             w.save(self.next_location)
+            if self.params.has("target_table"):
+                table = self.params.get_string("target_table")
+                cat.swap_table_location(
+                    self.spark, table, self.next_location,
+                    cat.table_location(self.spark, table), parts,
+                )
         except Exception:
-            # a partial version dir would be retained by _retain_versions
-            # ordering AND served by version_as_of time-travel as a
-            # valid snapshot — remove it (the FullLoad discipline)
-            from m3d_engine_spark.sources.dfs import DFS
-
-            DFS(self.spark).delete(self.next_location)
+            # a partial or unswapped version dir would be kept by
+            # _retain_versions AND served by version_as_of time-travel
+            # as a valid snapshot — remove it (the FullLoad discipline)
+            self.dfs.delete(self.next_location)
             raise
-        if self.params.has("target_table"):
-            from m3d_engine_spark.sources import catalog as cat
-
-            cat.recreate_table_at_location(
-                self.spark, self.params.get_string("target_table"), self.next_location, parts
-            )
         self._retain_versions()
 
     # Entries containing these tokens are never version candidates:

@@ -60,6 +60,26 @@ def recreate_table_at_location(
         recover_partitions_native(spark, table)
 
 
+def swap_table_location(
+    spark: SparkSession,
+    table: str,
+    location: str,
+    previous: str | None,
+    partition_columns: Sequence[str] = (),
+) -> None:
+    """Re-point ``table`` at ``location``; if that fails, re-point it at
+    ``previous`` (when given) and re-raise, so a failed swap never loses
+    the table (FullLoad.scala:60-70). The schema is captured before the
+    DROP. The caller deletes its own new dir."""
+    schema = spark.table(table).schema
+    try:
+        recreate_table_at_location(spark, table, location, partition_columns, schema)
+    except Exception:
+        if previous:
+            recreate_table_at_location(spark, table, previous, partition_columns, schema)
+        raise
+
+
 def recover_partitions_native(spark: SparkSession, table: str) -> None:
     """MSCK-equivalent (util/RecoverPartitionsNative.scala:11-13)."""
     spark.catalog.recoverPartitions(table)

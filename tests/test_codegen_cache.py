@@ -8,7 +8,10 @@ import pytest
 from pyspark.sql import Row
 
 from m3d_engine_spark.operators.fuzzy_dedup import fuzzy_dedup_corpus
-from m3d_engine_spark.operators.graph import connected_components
+from m3d_engine_spark.operators.graph import (
+    connected_components,
+    connected_components_star,
+)
 from m3d_engine_spark.session import SCALE_DEFAULTS, codegen_compiles
 
 _CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
@@ -29,6 +32,22 @@ def test_components_rerun_compiles_nothing(spark):
     first = dict(connected_components(nodes, edges).collect())
     before = codegen_compiles(spark)
     second = dict(connected_components(nodes, edges).collect())
+    assert codegen_compiles(spark) - before == 0
+    assert first == second == expected
+
+
+def test_components_star_rerun_compiles_nothing(spark):
+    # A 4-chain and a 3-chain: several star rounds, each with its own
+    # fingerprint probe.
+    nodes = spark.createDataFrame([Row(id=i) for i in range(7)])
+    edges = spark.createDataFrame(
+        [Row(src=0, dst=1), Row(src=1, dst=2), Row(src=2, dst=3),
+         Row(src=4, dst=5), Row(src=5, dst=6)]
+    )
+    expected = {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 4}
+    first = dict(connected_components_star(nodes, edges).collect())
+    before = codegen_compiles(spark)
+    second = dict(connected_components_star(nodes, edges).collect())
     assert codegen_compiles(spark) - before == 0
     assert first == second == expected
 

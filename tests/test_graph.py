@@ -11,7 +11,12 @@ pytestmark = pytest.mark.slow
 
 from pyspark.sql import Row
 
-from m3d_engine_spark.operators.graph import connected_components
+from m3d_engine_spark.operators.graph import (
+    connected_components,
+    hits,
+    pagerank,
+    random_walks,
+)
 
 
 def test_components_chain_triangle_singleton(spark):
@@ -223,32 +228,20 @@ def test_components_raise_instead_of_returning_unconverged(spark):
         connected_components(nodes, edges, max_iterations=2)
 
 
-def test_components_rounds_sized_to_state_not_shuffle_partitions(spark):
-    """The loop re-reads its edge list and labels every round. Both are
-    checkpointed after AQE coalesced their shuffle, so a 6-vertex graph
-    runs every stage at a handful of tasks; a cached edge list keeps all
-    spark.sql.shuffle.partitions partitions and runs a task for each of
-    them every round."""
+def _stage_tasks(spark, group, action):
+    """Run ``action()`` under job group ``group`` with 16 shuffle
+    partitions; return its result and {stage id: completed tasks} for
+    every stage the group ran."""
     sc = spark.sparkContext
-    group = "test_components_rounds_sized_to_state"
-    # Two-partition inputs: only a stage sized by the shuffle partition
-    # count could reach 16 tasks (one partition would let the planner
-    # drop the exchanges altogether).
-    nodes = spark.createDataFrame([Row(id=i) for i in range(6)]).coalesce(2)
-    edges = spark.createDataFrame(
-        [Row(src=0, dst=1), Row(src=1, dst=2), Row(src=3, dst=4)]
-    ).coalesce(2)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     sc.setJobGroup(group, group)
     try:
-        out = {r.id: r.component for r in
-               connected_components(nodes, edges).collect()}
+        result = action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert out == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
     tracker = sc.statusTracker()
     ran = {
         sid: tracker.getStageInfo(sid).numCompletedTasks
@@ -256,4 +249,55 @@ def test_components_rounds_sized_to_state_not_shuffle_partitions(spark):
         for sid in tracker.getJobInfo(jid).stageIds
         if tracker.getStageInfo(sid) is not None
     }
+    return result, ran
+
+
+def test_components_rounds_sized_to_state_not_shuffle_partitions(spark):
+    """The loop re-reads its edge list and labels every round. Both are
+    checkpointed after AQE coalesced their shuffle, so a 6-vertex graph
+    runs every stage at a handful of tasks; a cached edge list keeps all
+    spark.sql.shuffle.partitions partitions and runs a task for each of
+    them every round."""
+    # Two-partition inputs: only a stage sized by the shuffle partition
+    # count could reach 16 tasks (one partition would let the planner
+    # drop the exchanges altogether).
+    nodes = spark.createDataFrame([Row(id=i) for i in range(6)]).coalesce(2)
+    edges = spark.createDataFrame(
+        [Row(src=0, dst=1), Row(src=1, dst=2), Row(src=3, dst=4)]
+    ).coalesce(2)
+    rows, ran = _stage_tasks(
+        spark, "test_components_rounds_sized_to_state",
+        lambda: connected_components(nodes, edges).collect(),
+    )
+    assert {r.id: r.component for r in rows} == {
+        0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5
+    }
+    assert ran and max(ran.values()) < 16, ran
+
+
+@pytest.mark.parametrize(
+    "run, n_rows",
+    [
+        pytest.param(lambda e: pagerank(e, iterations=3), 5, id="pagerank"),
+        pytest.param(lambda e: hits(e, iterations=2), 5, id="hits"),
+        # every node has an out-edge: 5 walks live for steps 0..3
+        pytest.param(lambda e: random_walks(e, length=3), 20, id="random_walks"),
+    ],
+)
+def test_iterative_rounds_sized_to_state_not_shuffle_partitions(spark, run, n_rows):
+    """pagerank, hits and random_walks re-read their loop-invariant
+    relations every round. Those are checkpoints taken after AQE
+    coalesced their shuffles, so a 5-node graph runs every stage at a
+    handful of tasks; a cached relation keeps all
+    spark.sql.shuffle.partitions partitions and runs a task for each
+    of them every round."""
+    edges = spark.createDataFrame(
+        [Row(src=0, dst=1), Row(src=1, dst=2), Row(src=2, dst=0),
+         Row(src=2, dst=3), Row(src=3, dst=4), Row(src=4, dst=2)]
+    ).coalesce(2)
+    rows, ran = _stage_tasks(
+        spark, "test_iterative_rounds_sized_to_state",
+        lambda: run(edges).collect(),
+    )
+    assert len(rows) == n_rows
     assert ran and max(ran.values()) < 16, ran

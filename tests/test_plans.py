@@ -969,21 +969,27 @@ def test_ivfpq_probe_is_keyed_equi_join(spark, sf_dir):
 
 
 def test_pagerank_rounds_are_keyed_joins(spark):
-    """pagerank (checkpoint=False exposes the full lazy recurrence):
-    every round is an equi-join on src plus a sum aggregate on dst —
-    no cartesian/BNLJ anywhere in the 5-round plan, no Python, and
-    the persisted edge relation is read from cache per round
-    (InMemoryTableScan), never recomputed."""
+    """pagerank returns the full lazy recurrence: every round is an
+    equi-join on src plus a sum aggregate on dst — no cartesian/BNLJ
+    anywhere in the 5-round plan, no Python, and the checkpointed edge
+    and node relations are read per round as RDD scans (ExistingRDD),
+    never recomputed."""
     from m3d_engine_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)],
         "src long, dst long",
     )
-    plan = _plan_simple(pagerank(edges, iterations=5, checkpoint=False))
+    plan = _plan_simple(pagerank(edges, iterations=5))
+    joins = (
+        plan.count("SortMergeJoin")
+        + plan.count("BroadcastHashJoin")
+        + plan.count("ShuffledHashJoin")
+    )
+    assert joins == 2 * 5, plan  # the rank join and the rebuild, per round
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoop" not in plan, plan
-    assert "InMemoryTableScan" in plan, plan
+    assert "ExistingRDD" in plan and "InMemoryTableScan" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
@@ -1133,7 +1139,7 @@ def test_hits_checkpointed_rounds_stay_bounded(spark):
     from m3d_engine_spark.operators.graph import hits
 
     e = spark.range(200).selectExpr("id % 14 AS src", "(id * id) % 23 + 100 AS dst")
-    out = hits(e, iterations=3, checkpoint=False)
+    out = hits(e, iterations=3)
     plan = _plan_simple(out)
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan, plan[:500]
     assert len(plan) < 200_000, len(plan)

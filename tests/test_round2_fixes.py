@@ -71,6 +71,49 @@ def test_recreate_table_restore_with_saved_schema(spark, tmp_path):
     spark.sql("DROP TABLE t_restore")
 
 
+def test_full_materialization_restores_table_on_failed_swap(
+    spark, tmp_path, monkeypatch
+):
+    """A swap whose CREATE fails after the DROP must put the table back
+    on the previous version and remove the new version dir, as FullLoad
+    does (FullLoad.scala:60-70)."""
+    from m3d_engine_spark.operators.materialization import FullMaterialization
+
+    base = tmp_path / "mat"
+    old = str(base / "20200101_000000_UTC")
+    spark.createDataFrame([(1, "old")], "k int, v string").write.parquet(old)
+    spark.sql("DROP TABLE IF EXISTS t_mat_restore")
+    spark.sql(
+        f"CREATE TABLE t_mat_restore (k int, v string) USING PARQUET LOCATION '{old}'"
+    )
+    spark.createDataFrame([(2, "new")], "k int, v string").createOrReplaceTempView(
+        "mat_restore_source"
+    )
+    orig = cat.recreate_table_at_location
+    calls = []
+
+    def failing_first(spark_, table, location, *args, **kwargs):
+        calls.append(location)
+        if len(calls) == 1:
+            spark_.sql(f"DROP TABLE IF EXISTS {table}")
+            raise RuntimeError("injected create failure")
+        return orig(spark_, table, location, *args, **kwargs)
+
+    monkeypatch.setattr(cat, "recreate_table_at_location", failing_first)
+    algo = FullMaterialization(spark, ParamsFile({
+        "source_table": "mat_restore_source",
+        "target_dir": str(base),
+        "target_table": "t_mat_restore",
+    }))
+    with pytest.raises(RuntimeError, match="injected"):
+        algo.run()
+    monkeypatch.setattr(cat, "recreate_table_at_location", orig)
+
+    assert [tuple(r) for r in spark.table("t_mat_restore").collect()] == [(1, "old")]
+    assert not os.path.exists(algo.next_location)
+    spark.sql("DROP TABLE t_mat_restore")
+
+
 # ------------------------------------------- DeltaLoad write defaults
 def _delta_params(tmp_path, extra=None):
     p = {

@@ -73,7 +73,7 @@ HEADLINERS = {
     "data_profile": "One-pass table profile: every per-column metric (nulls, distinct, min, max) folds into ONE aggregate over ONE scan (pinned: a single parquet scan), then a stack unpivot reshapes the 1-row result — profiling k columns costs one pass, not k. The production tier swaps count_distinct for HLL++ sketches: no Expand, one exchange (pinned).",
     "event_transitions": "First-order Markov census: ONE hash exchange on user_id feeds the ordered lead window; transitions partial-aggregate map-side on the (from, to) pair key; the per-from totals window runs over the aggregated pair relation (states^2-sized), never the corpus.",
     "benford_audit": "Benford first-digit audit: digit from the string form (no float log bucketing) -> one (digit)-keyed partial/final HashAggregate; the global totals window runs over the 9-row digit census above the aggregate, so the single-partition exchange carries 9 rows, not the scan.",
-    "hits_scores": "HITS hubs/authorities, 3 exact-integer rounds: each half-round is one keyed join + one sum off the persisted edge relation; the L-infinity renormalization references each round aggregate twice, so each half-round is collapsed to a lazy localCheckpoint (ExistingRDD scans here) - left lazy the logical plan doubles per half-round and OOMs in stringification alone by round 3.",
+    "hits_scores": "HITS hubs/authorities, 3 exact-integer rounds: each half-round is one keyed join + one sum off the edge relation, eagerly checkpointed once; the L-infinity renormalization references each round aggregate twice, so each half-round is collapsed to a lazy localCheckpoint (ExistingRDD scans here) - left lazy the logical plan doubles per half-round and OOMs in stringification alone by round 3.",
     "ngram_novelty": "Per-doc shingle novelty: the inverted-index backbone - explode distinct shingles, corpus df as a map-side-combinable aggregate on the 64-bit xxhash key, equi-join back on the hash, one per-doc aggregate. Shingle TEXT never crosses an exchange.",
     "lsh_calibration": "MinHash dial audit: signatures via the hash-once explode->min aggregation (each md5 computed exactly once), band keys posexplode from the same signature relation, banded self-equi-join for candidates; signature compare and exact-Jaccard verify are candidate-sized keyed joins - full shingle arrays ride only to candidate pairs, never the banded join.",
     "classifier_calibration": "Reliability diagram: zero-exchange scoring projection -> ONE bin-keyed map-side-combinable aggregate (exact 1e-4-lattice sums); output is bins-sized, nothing else moves.",
@@ -91,7 +91,7 @@ HEADLINERS = {
     "fertility_stats": "Tokenizer fertility census: ONE lang-keyed map-side-combinable aggregate of exact long sums; divisions happen on the 5-row result.",
     "vocab_drift": "Vocabulary drift: token explode per side, one (lang, token) left join against the distinct reference vocabulary, one lang-keyed census aggregate.",
     "interp_lm": "Interpolated LM: bigram_lm topology + one extra vocabulary-sized join (the unigram floor); totals as broadcast 1-row aggregates keep the plan lazy.",
-    "random_walks": "Random-walk corpus: neighbor relation ranked once (one keyed exchange) and persisted; each step is ONE equi-join with the md5-mod pick inside the join condition; per-step state collapses to a lazy checkpoint (ExistingRDD scans).",
+    "random_walks": "Random-walk corpus: neighbor relation ranked once (one keyed exchange) and eagerly checkpointed; each step is ONE equi-join with the md5-mod pick inside the join condition; per-step state collapses to a lazy checkpoint (ExistingRDD scans).",
     "negative_sampling": "Negative-sampling table: one vocabulary aggregate, broadcast lattice totals, slot projection - correctly-rounded sqrts instead of libm pow keep it engine-exact.",
     "scd2_history": "Type-2 SCD build: ONE exchange on the key feeds BOTH windows (change-detect lag, validity lead/version) - the filter between them preserves partitioning and order, so no second sort or shuffle (pinned == 1 exchange); no join anywhere.",
     "kanon_census": "k-anonymity gate: one map-side-combinable census on the quasi key (exchange carries one row per class) + a class-count-sized re-aggregate pooling the under-k classes - a plain census at any corpus size.",
@@ -177,10 +177,10 @@ HEADLINERS = {
     "script_profile": "Unicode-script census: five regexp_replace+length projections (one per script class) over the scan — zero exchanges, no Python; the dominant-script election is a CASE chain with a fixed precedence tie-break (engine-portable, unlike an array_max over structs).",
     "session_transcript": "Order-preserving assembly: ONE keyed exchange (groupBy user) with partial aggregation; the turn order is restored INSIDE the aggregated value by array_sort over (ts, event_id, text) structs — deterministic under any partitioning, where orderBy-then-collect_list is neither guaranteed nor cheaper (it adds a full sort exchange).",
     "blame_supplier": "Q21-shape double correlation: EXISTS -> LeftSemi and NOT EXISTS -> LeftAnti, both KEYED on l_orderkey with the suppkey inequality as join-condition refine (never a cartesian); orders and supplier broadcast; one final count aggregate.",
-    "ppr_expand": "Personalized PageRank: identical per-round topology to pagerank (one keyed join + one sum off the cached edge relation); the seed mask is a flag column on the cached nodes relation — built with one left join at setup, ZERO per-round cost for personalization.",
-    "rank_weighted_sample": "PageRank -> weighted-sample composition: the rank loop's eager checkpoint materializes once, then selection is a priority projection + one global WindowGroupLimit top-50 (each task pre-limits to 50 rows, so the single-partition final window receives 50 x tasks rows, not the corpus). Both stages are bit-deterministic, so the composition is too.",
+    "ppr_expand": "Personalized PageRank: identical per-round topology to pagerank (one keyed join + one sum off the checkpointed edge relation); the seed mask is a flag column on the checkpointed nodes relation — built with one left join at setup, ZERO per-round cost for personalization.",
+    "rank_weighted_sample": "PageRank -> weighted-sample composition: the lazy rank loop runs once inside the selection job, then selection is a priority projection + one global WindowGroupLimit top-50 (each task pre-limits to 50 rows, so the single-partition final window receives 50 x tasks rows, not the corpus). Both stages are bit-deterministic, so the composition is too.",
     "weighted_sample": "Weighted deterministic sampling: priority = exact md5 integer / weight — IEEE division is correctly rounded, so the draw is bit-identical across engines (ln/pow A-ES keys are not); selection probability is proportional to weight in the small-fraction regime (the 5/6-vs-3/4 large-fraction bias is pinned by test). One projection + the same WindowGroupLimit top-n-per-stratum shape as stratified_sample: the exchange carries n rows per stratum per task, never the stratum.",
-    "pagerank": "Integer fixed-point PageRank: the (src, dst, outdeg) relation is persisted once and read from cache in each of the 5 rounds (InMemoryTableScan, pinned); a round is ONE equi-join on src + ONE sum aggregate on dst — state never exceeds one long per node, nothing quadratic. Exact long arithmetic on a 10^12 lattice makes the result bit-identical across engines/partitionings — float PageRank loses to summation order in round 2. NOTE: the committed PLANS.md shows the post-checkpoint scan (the entry materializes eagerly); the recurrence shape is pinned from the checkpoint=False form in tests/test_plans.py.",
+    "pagerank": "Integer fixed-point PageRank: the (src, dst, outdeg) and node relations are eagerly checkpointed once and read in each of the 5 rounds (ExistingRDD scans, pinned); a round is ONE equi-join on src + ONE sum aggregate on dst — state never exceeds one long per node, nothing quadratic. Exact long arithmetic on a 10^12 lattice makes the result bit-identical across engines/partitionings — float PageRank loses to summation order in round 2.",
     "ivfpq_search": "IVF-PQ (FAISS IVFx,PQy shape): corpus prep computes (cell, codes) in ONE zero-exchange projection against two broadcast 1-row models (coarse cells + codebook); the probe stage is a cell-keyed BroadcastHashJoin against the exploded (query, probed-cell) list — candidates are n_probe/n_cells of the corpus, never all of it (at write time: a cell-partitioned codes table makes this a pruned scan); ADC shortlist is WindowGroupLimit; exact L2 re-rank reads vectors for candidates only. Full-probe == pq_search equivalence and clustered-data recall >= 0.9 pinned; the near-uniform testdata embeddings are the documented adversarial case for coarse pruning.",
     "repeated_spans": "ExactSubstr-style span removal (fixed-L window relaxation of the suffix-array spans): per-position md5(L-gram) projection, ONE gram-keyed exchange for the count + packed-integer min winner election (map-side combinable), occurrences x repeated-grams equi-join on the 16-byte hash, covered-position fan-out + rebuild keyed on the doc id — gram TEXT never crosses an exchange, document text rides only the first projection and the final rebuild join; nothing quadratic (pinned).",
     "market_share": "TPC-H Q8 analogue (round 11): six BroadcastHashJoins stack the dimensions onto ONE lineitem scan — the fact table shuffles exactly once, for the year aggregate; the conditional NATION_3 numerator folds into the SAME HashAggregate as the denominator (one pass, no self-join); region/type filters push into their dimension scans.",
@@ -194,7 +194,7 @@ CUSTOM = {
         "to a fixpoint with eager localCheckpoints, so the per-round plan is "
         "the scalable unit): neighbor-label join + min aggregation + fold "
         "join, every exchange keyed on the vertex id — no cartesian anywhere; "
-        "the edge relation is persisted once outside the loop.",
+        "the edge relation is checkpointed once outside the loop.",
         None,  # filled in main() — needs the session
     ),
 }
