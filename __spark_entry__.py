@@ -5789,18 +5789,18 @@ WITH e AS (
   SELECT node, CAST(%d AS BIGINT) AS h FROM nodes
 )""" % scale]
     for i in range(1, rounds + 1):
-        out.append(""", a%dr AS (
+        out.append(""", a%dr AS MATERIALIZED (
   SELECT e.dst AS node, SUM(h) AS v
   FROM e JOIN h%d ON e.src = h%d.node GROUP BY e.dst
-), a%d AS (
+), a%d AS MATERIALIZED (
   SELECT n.node,
          COALESCE(CAST(CAST(v AS HUGEINT) * %d // (SELECT MAX(v) FROM a%dr) AS BIGINT),
                   CAST(0 AS BIGINT)) AS a
   FROM nodes n LEFT JOIN a%dr USING (node)
-), h%dr AS (
+), h%dr AS MATERIALIZED (
   SELECT e.src AS node, SUM(a) AS v
   FROM e JOIN a%d ON e.dst = a%d.node GROUP BY e.src
-), h%d AS (
+), h%d AS MATERIALIZED (
   SELECT n.node,
          COALESCE(CAST(CAST(v AS HUGEINT) * %d // (SELECT MAX(v) FROM h%dr) AS BIGINT),
                   CAST(0 AS BIGINT)) AS h

@@ -65,18 +65,6 @@ def seeded_hyperplanes(dim: int, n: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def hyperplane_bucket(a: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: bit i = (a · planes[i] > 0).
-    The proper member of the sign-LSH family (vs the axis-aligned
-    ``sign_lsh_bucket`` cheap variant): every bit looks at the WHOLE
-    vector, so collision probability follows 1 − θ/π per bit."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        d = dot(a, F.array(*[F.lit(float(x)) for x in plane]))
-        bucket = bucket + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def sign_lsh_bucket(a: Column, n_bits: int = 4) -> Column:
     """Axis-aligned sign-LSH bucket id from the first ``n_bits`` vector
     components: bit i = (a[i] > 0). 2^n_bits buckets.

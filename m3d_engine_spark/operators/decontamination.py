@@ -44,77 +44,6 @@ from m3d_engine_spark.functions.text import tokens
 from m3d_engine_spark.operators.dedup import shingle_array
 
 
-def compression_ratio(
-    docs: "DataFrame",
-    id_col: str,
-    text_col: str,
-    level: int = 6,
-) -> "DataFrame":
-    """(id, n_bytes, compressed_bytes, ratio): zlib compression ratio
-    per document — the Dolma/Gopher-family quality signal the
-    JVM-expression rules cannot express (repetitive or templated text
-    compresses far below natural prose; random/binary junk barely
-    compresses at all, so BOTH tails flag problems).
-
-    This is a deliberate Arrow-kernel operator: zlib is not a Spark SQL
-    function, so the kernel runs in ``mapInPandas`` (Arrow batches, the
-    multimodal-decode contract — never a row-at-a-time UDF). It is a
-    pure per-row map — ZERO exchanges, embarrassingly parallel over the
-    scan — and the only Python-side payload is the text bytes already
-    being scanned. ``ratio`` = compressed/uncompressed rounded to 4dp
-    (1.0 for empty text: zero information, nothing compressed away —
-    keeps the column total and NaN-free).
-
-    Determinism: zlib with a fixed ``level`` is bit-stable for a given
-    zlib version, and the DEFLATE format pins the algorithm — but it is
-    NOT a cross-library contract like md5, so this operator is pinned
-    by property tests (ordering between repetitive and diverse text),
-    not a SQL oracle.
-    """
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    id_field = docs.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("n_bytes", LongType()),
-            StructField("compressed_bytes", LongType()),
-            StructField("ratio", DoubleType()),
-        ]
-    )
-    lvl = int(level)
-
-    def kernel(batches):
-        import zlib
-
-        for pdf in batches:
-            raw = pdf[text_col].map(
-                lambda t: (t or "").encode("utf-8", "surrogatepass")
-            )
-            n = raw.map(len)
-            comp = raw.map(lambda b: len(zlib.compress(b, lvl)) if b else 0)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": n.astype("int64"),
-                    "compressed_bytes": comp.astype("int64"),
-                    "ratio": [
-                        round(c / nn, 4) if nn else 1.0
-                        for c, nn in zip(comp, n)
-                    ],
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(kernel, schema=schema)
-
-
 def contamination_check(
     docs: DataFrame,
     probes: DataFrame,

@@ -121,22 +121,6 @@ def winnowing_fingerprints(
 
 
 # -------------------------------------------------------- MinHash + LSH
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """array<string> of ``num_hashes`` MinHash values: hash_j = min over
-    shingles of md5('<j>|' + shingle). Lexicographic min over hex md5 is
-    a valid uniform min-hash and engine-portable.
-
-    Note: as a single Column expression this re-evaluates the shingle
-    array once per hash function — fine for ad-hoc use on one column,
-    but ``lsh_bands`` below uses the explode→hash→groupBy-min topology
-    so each md5 is computed exactly once.
-    """
-    sh = F.array_distinct(shingle_array(text, shingle_n))
-
-    def mh(j: int) -> Column:
-        return F.array_min(F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{j}|"), s))))
-
-    return F.array(*[mh(j) for j in range(num_hashes)])
 
 
 def _minhash_sig_wide(
@@ -701,8 +685,8 @@ def _exact_jaccard_on_candidates(
 ) -> DataFrame:
     """Exact round(J,4) ≥ threshold over candidate (id_a, id_b) pairs,
     from the full ``sh`` shingle arrays in ``base`` — the verification
-    stage of the prefix-filter variant (the df-cutoff path instead uses
-    the count+hot-set-correction form, which never ships full arrays)."""
+    stage of FuzzyDedup (the df-cutoff path instead uses the
+    count+hot-set-correction form, which never ships full arrays)."""
     sets = base.select(F.col(id_col), F.col("sh"))
     jac = F.round(
         F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -721,81 +705,6 @@ def _exact_jaccard_on_candidates(
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_cols: Sequence[str],
-    shingle_n: int = 3,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Exact Jaccard pairs via AllPairs-style prefix filtering
-    (Bayardo et al.): shingles get a global total order by (document
-    frequency asc, shingle asc); a pair with J ≥ t must collide on a
-    shingle inside BOTH docs' prefixes of length
-    ``|x| − ⌈t·|x|⌉ + 1``, so the candidate join touches only the
-    RAREST shingles — the hot-shingle quadratic blowup of the plain
-    inverted-index join disappears by construction. Exact Jaccard is
-    then recomputed on candidates from the full shingle sets.
-
-    Same output as ``ngram_jaccard_pairs`` (pinned by test); worthwhile
-    at production thresholds (≥0.5) where the prefix is short. At low
-    thresholds the prefix covers most of the document and the plain
-    join is simpler.
-    """
-    if threshold <= 0:
-        raise ValueError("prefix filtering requires threshold > 0")
-    base = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in block_cols],
-        F.array_distinct(shingle_array(F.col(text_col), shingle_n)).alias("sh"),
-    ).withColumn("n_sh", F.size("sh"))
-    exploded = base.select(
-        F.col(id_col), *[F.col(c) for c in block_cols], F.col("n_sh"),
-        F.explode("sh").alias("shingle"),
-    )
-    # freq is VOCABULARY-sized (one row per distinct shingle) — never
-    # broadcast it: at the corpus scales this module targets that is a
-    # driver-side collect of billions of rows. The equi-join on shingle
-    # rides the same keyed exchange the groupBy planned (AQE picks the
-    # strategy; exchange reuse pinned in PLANS.md).
-    freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
-    ranked = (
-        exploded.join(freq, on="shingle")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy("df_count", "shingle")
-            ),
-        )
-        # prefix length = n - ceil(t*n) + 1, with t the HALF-ULP-relaxed
-        # threshold (the verify filter compares round(J,4) >= threshold,
-        # so raw J down to threshold - 5e-5 must survive every prune).
-        # Round before the ceiling: float upward error (e.g. 100*0.07 =
-        # 7.000000000000001) would otherwise ceil one too high and
-        # silently shorten the prefix, dropping qualifying pairs.
-        .filter(
-            F.col("rn")
-            <= F.col("n_sh")
-            - F.ceil(F.round(F.col("n_sh") * (threshold - 0.00005), 9)) + 1
-        )
-        .select(id_col, *block_cols, "n_sh", "shingle")
-    )
-    l, r = ranked.alias("l").hint("merge"), ranked.alias("r")
-    cond = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in block_cols]
-    cond.append(F.col("l.shingle") == F.col("r.shingle"))
-    cond.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-    tm = threshold - 0.00005  # 4dp half-ulp, see ngram_jaccard_pairs
-    cond.append(F.col("l.n_sh") >= F.col("r.n_sh") * tm)
-    cond.append(F.col("r.n_sh") >= F.col("l.n_sh") * tm)
-    cands = (
-        l.join(r, on=cond)
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return _exact_jaccard_on_candidates(base, cands, id_col, threshold)
 
 
 # ----------------------------------------------------- embedding cosine

@@ -212,18 +212,14 @@ def solve_removal(
     k_steps: int = 12,
     scale: int = 10**12,
 ) -> list[tuple]:
-    """The driver-side exact-integer absorption solve shared by the
-    batch operator above and the streaming twin
-    (``streaming.pipeline.removal_attribution_batch``): the censuses
-    are states²-sized metadata; everything stays on the integer
-    lattice (floor division) until the reported doubles, so any two
-    paths that accumulate the SAME censuses report bit-identical
-    attributions — which is exactly what the streaming==batch
-    equivalence test pins."""
+    """The driver-side exact-integer absorption solve of the batch
+    operator above: the censuses are states²-sized metadata;
+    everything stays on the integer lattice (floor division) until the
+    reported doubles, so any two paths that accumulate the SAME
+    censuses report bit-identical attributions."""
     n_journeys = sum(n for _, n in starts)
     if n_journeys == 0:
-        # empty events relation / no journeys accumulated yet (first
-        # streaming batch): an empty attribution table, not a
+        # empty events relation: an empty attribution table, not a
         # ZeroDivisionError in the absorb() floor division
         return []
     cnt = {(a, b): int(n) for a, b, n in trans}

@@ -21,7 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -29,14 +28,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("source_uri", StringType()),
-    ]
-)
 
 DECODED_SCHEMA = StructType(
     [

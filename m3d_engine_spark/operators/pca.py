@@ -1,4 +1,4 @@
-"""Distributed covariance / PCA for embedding columns.
+"""Distributed covariance for embedding columns.
 
 Beyond-reference capability. Embedding post-processing (whitening,
 dimensionality reduction before clustering or dedup, the "remove the
@@ -14,11 +14,6 @@ the computation at 100 TB:
   not grow with N. (An Arrow kernel computing per-partition numpy
   Gram partials would trade JVM fan-out CPU for Python dispatch; the
   aggregate topology — tiny keyed exchange — would be identical.)
-* the eigendecomposition of a d×d matrix is a DRIVER-side numpy call
-  (d ≤ a few thousand — microscopic next to the corpus): exactly the
-  k-row-collect discipline of ``kmeans.py``. The resulting components
-  broadcast back as literals and projection is a zero-exchange JVM
-  fold per row.
 
 Determinism: embedding floats cast to double are exact; a float×float
 product in double is EXACT (24+24 mantissa bits < 53), and the sums go
@@ -108,89 +103,3 @@ def embedding_covariance(
             ).alias("cov"),
         )
     )
-
-
-def pca_project(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
-    """Project embeddings onto their top-``k`` principal components.
-
-    Moments via the shared ``embedding_covariance`` relations — ONE
-    d-row first-moment pass (which also yields the per-dim means the
-    centering needs, no extra corpus scan) and ONE d²/2-row
-    second-moment pass; the covariance matrix is assembled driver-side
-    from those exact decimal sums (the k-row-collect discipline),
-    eigendecomposed with numpy.linalg.eigh (symmetric, deterministic),
-    and the components broadcast back as literals; projection is a
-    zero-exchange ``zip_with``+``aggregate`` fold per row (no Python
-    in the per-row path). Component sign is normalized (largest-|w|
-    coordinate positive) so results don't flip run to run.
-
-    Scores are CENTERED: the fold computes ``x·w`` and the constant
-    ``μ·w`` (per-dim means dotted with each component driver-side) is
-    subtracted before rounding, so the returned coordinates are
-    ``(x−μ)·w`` — what whitening and remove-the-dominant-direction
-    expect. (Uncentered ``x·w`` would be offset by ``μ·w`` per
-    component: harmless for pairwise distances, wrong for everything
-    that treats 0 as the corpus center.)
-
-    Returns ``(id_col, pc)`` where ``pc`` is the length-k projection
-    array, each coordinate rounded at ``out_dp``.
-    """
-    import numpy as np
-
-    base = _vec_base(df, vec_col)
-    sum_rows = (
-        _dim_sums(base)
-        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("_n"))))
-        .collect()
-    )
-    if not sum_rows:
-        raise ValueError("pca_project: no non-null vectors")
-    n = sum_rows[0]._n
-    d = max(r.i for r in sum_rows) + 1
-    if not 0 < k <= d:
-        raise ValueError(f"k must be in 1..{d}")
-    s = np.zeros(d)
-    for r in sum_rows:
-        s[r.i] = r._s
-    mu = s / n
-    sxy_rows = _pair_products(base).collect()
-    mat = np.zeros((d, d))
-    for r in sxy_rows:
-        cov = (r._sxy - s[r.i] * s[r.j] / n) / n
-        mat[r.i, r.j] = cov
-        mat[r.j, r.i] = cov
-    vals, vecs = np.linalg.eigh(mat)  # ascending eigenvalues
-    comps = []
-    offsets = []
-    for c in range(1, k + 1):
-        w = vecs[:, -c]
-        # sign convention: the largest-magnitude coordinate is positive
-        w = w * (1.0 if w[int(np.argmax(np.abs(w)))] >= 0 else -1.0)
-        comps.append([float(x) for x in w])
-        offsets.append(float(mu @ w))
-    v = F.col(vec_col).cast("array<double>")
-    pcs = F.array(
-        *[
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.array(*[F.lit(x) for x in comp]),
-                        lambda a, b: a * b,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                - F.lit(off),
-                out_dp,
-            )
-            for comp, off in zip(comps, offsets)
-        ]
-    )
-    return df.select(F.col(id_col), pcs.alias("pc"))

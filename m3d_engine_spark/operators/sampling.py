@@ -138,79 +138,6 @@ def pack_sequences(
     )
 
 
-def pack_sequences_greedy(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    id_col: str,
-    token_count_col,
-    budget: int,
-    shard_budget: int | None = None,
-):
-    """EXACT close-on-overflow sequence packing — stage 2 of the design
-    ``pack_sequences`` documents: greedy packing is a sequential
-    recurrence (a bin closes the moment the next document would
-    overflow it), which no window can express; but it only needs to be
-    sequential WITHIN a bounded shard.
-
-    Stage 1: ``pack_sequences`` with ``shard_budget`` (default
-    64 × ``budget``) splits each group into deterministic token-bounded
-    shards — the window relaxation's bins, used here purely as a
-    sharding key, so no shard ever exceeds ``shard_budget`` tokens
-    plus one straddling document.
-    Stage 2: one Arrow batch per (group, shard): sort by the same
-    (md5(id), id) order (the md5 is computed JVM-side before the
-    kernel) and run the close-on-overflow recurrence.
-
-    Properties (tests/test_sampling_tfidf.py):
-    * no bin exceeds ``budget`` unless a single document does (an
-      oversized document gets a bin of its own);
-    * on inputs where no document straddles a stage-1 boundary, the
-      greedy bins refine the window relaxation exactly;
-    * fully deterministic — same bins on every run and partitioning.
-
-    Output = input columns + ``n_tokens`` + ``shard`` + ``bin``; the
-    pack key is (group, shard, bin) — bin numbering restarts per shard
-    (a global ordinal would need a second sequential pass over shard
-    totals for zero benefit: packs are identified, not ordered).
-
-    Scale: the kernel's unit of work is one shard (≤ ~``shard_budget``
-    tokens of METADATA — ids and counts, never text), so task memory is
-    bounded by the dial, groups pack in parallel across shards, and the
-    one exchange is the stage-2 groupBy on (group, shard).
-    """
-    import pandas as pd
-
-    from pyspark.sql.types import IntegerType, StructField
-
-    shard_budget = int(shard_budget or budget * 64)
-    staged = pack_sequences(
-        df, group_cols, id_col, token_count_col, shard_budget,
-        bin_col="shard",
-    ).withColumn("_ord", F.md5(F.col(id_col).cast("string")))
-    out_schema = (
-        staged.drop("_ord").schema.add(StructField("bin", IntegerType()))
-    )
-    id_name, budget_ = id_col, int(budget)
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["_ord", id_name], kind="mergesort")
-        bins: list[int] = []
-        cur, acc = 0, 0
-        for t in pdf["n_tokens"]:
-            t = int(t)
-            if acc > 0 and acc + t > budget_:
-                cur, acc = cur + 1, 0
-            acc += t
-            bins.append(cur)
-        out = pdf.drop(columns=["_ord"])
-        out["bin"] = pd.array(bins, dtype="int32")
-        return out
-
-    return staged.groupBy(*group_cols, "shard").applyInPandas(
-        pack, schema=out_schema
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     id_col: str,

@@ -16,11 +16,8 @@ epoch permutation, and changing ``epoch`` reshuffles everything.
 
 Scale shape: the one exchange is keyed on the shard id — choose
 ``num_shards`` ≥ cluster parallelism (shards are uniform by
-construction: md5 is balanced, no skew possible). The production
-write path is ``partitionBy(shard)`` with ``sortWithinPartitions(h)``
-— readers stream each shard file in order and no explicit rank column
-is ever materialized; ``rank=True`` materializes it anyway
-(row_number per shard) for audits and the equivalence oracle.
+construction: md5 is balanced, no skew possible). ``rank=True``
+materializes the in-shard order as a column (row_number per shard).
 """
 
 from __future__ import annotations
@@ -55,36 +52,6 @@ def epoch_shuffle(
     return out.drop("_h")
 
 
-def epoch_shuffle_write(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    epoch: int,
-    num_shards: int = 256,
-) -> None:
-    """The production form: shard dirs (``shard=N``) each holding the
-    epoch's documents PHYSICALLY SORTED in shuffle order — readers
-    stream files sequentially, no rank column, no extra pass. One
-    keyed exchange + in-partition sort, like any sorted write."""
-    keyed = epoch_shuffle(df, id_col, epoch, num_shards, rank=False)
-    h = F.md5(
-        F.concat(F.lit(f"{int(epoch)}:"), F.col(id_col).cast("string"))
-    )
-    (
-        keyed.repartition(int(num_shards), "shard")
-        # Lead the sort with the partition column: the partitioned
-        # writer requires rows grouped by partition value and will
-        # inject its own (non-stable) sort on `shard` if the incoming
-        # order doesn't already satisfy it — silently destroying the
-        # shuffle order. Sorting (shard, h, id) satisfies the writer's
-        # requirement, so OUR order survives into the files.
-        .sortWithinPartitions("shard", h, F.col(id_col))
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
-    )
-
-
 def rendezvous_assign(
     df: DataFrame,
     id_col: str,
@@ -102,9 +69,8 @@ def rendezvous_assign(
     Pure projection: the S candidate weights evaluate per row inside
     codegen (array argmax over md5 prefixes — lowercase hex compares
     lexicographically == numerically, no integer conversion), zero
-    exchanges, deterministic everywhere. S beyond a few hundred wants
-    the two-level variant (HRW over shard GROUPS, then within); the
-    argmax cost is S md5s per row.
+    exchanges, deterministic everywhere. The argmax cost is S md5s per
+    row.
     """
     if num_shards < 1:
         raise ValueError("num_shards must be >= 1")
@@ -122,85 +88,4 @@ def rendezvous_assign(
     )
     return df.withColumn(
         "shard", F.array_max(weights).getField("s")
-    )
-
-
-def rendezvous_assign_two_level(
-    df: DataFrame,
-    id_col: str,
-    num_groups: int,
-    shards_per_group: int,
-    salt: str = "",
-) -> DataFrame:
-    """Two-level rendezvous assignment for LARGE shard counts: HRW
-    over ``num_groups`` groups, then HRW over ``shards_per_group``
-    within the chosen group (inner weights salted by the group, so
-    placements are independent across groups). Cost per row is
-    G + W md5s instead of the flat form's G·W — 1024 shards as
-    32 + 32 — with the same minimal-movement property at each level:
-    growing W moves ~1/(W+1) of every group's keys and never moves a
-    key across groups; growing G moves ~1/(G+1) of all keys.
-
-    Returns ``group``, ``subshard`` and the flat ``shard = group ·
-    shards_per_group + subshard``. Pure projection, zero exchanges.
-    """
-    if num_groups < 1 or shards_per_group < 1:
-        raise ValueError("num_groups and shards_per_group must be >= 1")
-    key = F.col(id_col).cast("string")
-
-    def argmax(prefix: str, n: int):
-        return F.array_max(
-            F.array(
-                *[
-                    F.struct(
-                        F.substring(
-                            F.md5(F.concat(F.lit(f"{prefix}{s}:"), key)),
-                            1,
-                            16,
-                        ).alias("w"),
-                        F.lit(s).cast("int").alias("s"),
-                    )
-                    for s in range(int(n))
-                ]
-            )
-        ).getField("s")
-
-    out = df.withColumn("group", argmax(f"{salt}:g:", num_groups))
-    # inner salt folds the CHOSEN group value into the hashed string —
-    # W expressions total, not a G-branch CASE of G·W expressions (the
-    # when-chain form made the 32×32 plan as large as the flat 1024
-    # one, defeating the two-level construction's whole point).
-    # Placements stay independent across groups because the group
-    # value is part of every inner hash input.
-    def inner_argmax(n: int):
-        return F.array_max(
-            F.array(
-                *[
-                    F.struct(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit(f"{salt}:w:"),
-                                    F.col("group").cast("string"),
-                                    F.lit(f":{s}:"),
-                                    key,
-                                )
-                            ),
-                            1,
-                            16,
-                        ).alias("w"),
-                        F.lit(s).cast("int").alias("s"),
-                    )
-                    for s in range(int(n))
-                ]
-            )
-        ).getField("s")
-
-    return out.withColumn(
-        "subshard", inner_argmax(shards_per_group)
-    ).withColumn(
-        "shard",
-        (F.col("group") * int(shards_per_group) + F.col("subshard")).cast(
-            "int"
-        ),
     )

@@ -23,8 +23,7 @@ FULL OUTER join is one sort-merge join keyed on the business key — the
 same single co-partitioned exchange pair ANY keyed comparison of two
 corpora must pay, and nothing else. At 100 TB both sides shuffle once
 on the key; if the snapshots are written bucketed by the key (see
-``sources/bucketing.py``) even that exchange disappears. Counts by
-status partial-aggregate map-side.
+``sources/bucketing.py``) even that exchange disappears.
 
 Determinism: md5 over canonical strings; output is (key…, status,
 old_fp, new_fp) with exact values — no floats anywhere.
@@ -85,20 +84,3 @@ def snapshot_diff(
     if not include_unchanged:
         out = out.filter(F.col("status") != "unchanged")
     return out
-
-
-def snapshot_diff_counts(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: Sequence[str],
-    compare_cols: Sequence[str],
-) -> DataFrame:
-    """(status, n) rollup of the full diff including unchanged — the
-    one-line load-audit record. Same single keyed join; the count
-    partial-aggregates map-side so the second exchange carries ≤ 4
-    rows per task."""
-    return (
-        snapshot_diff(old, new, key_cols, compare_cols, include_unchanged=True)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )

@@ -1261,11 +1261,6 @@ def committed_tag_dirs(
     return paths, sigs
 
 
-# the pre-promotion private name, kept so in-flight callers/tests keep
-# resolving; new code uses the public name
-_committed_tag_dirs = committed_tag_dirs
-
-
 def _span_tokens_param(params) -> int:
     # {"span_tokens": true} would coerce to 1 and scrub every token
     # shared with the benchmark VOCABULARY — the shared ParamsFile

@@ -1,30 +1,15 @@
 """Algorithm scaffold — the starting point for a new algorithm.
 
 Reference parity: algo/templates/AlgorithmTemplate.scala +
-config/templates/AlgorithmTemplateConfiguration.scala (including the
-``today``/``yesterday``/literal date-rule parser, :88-97). Copy this
+config/templates/AlgorithmTemplateConfiguration.scala. Copy this
 module, rename the class and CLI name, and fill in the three steps.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame
 
 from m3d_engine_spark.operators.base import Algorithm, register
-
-
-def resolve_date_rule(rule: str, today: _dt.date | None = None) -> str:
-    """'today' / 'yesterday' / literal 'yyyy-MM-dd' → ISO date string
-    (AlgorithmTemplateConfiguration.scala:88-97)."""
-    base = today or _dt.date.today()
-    if rule == "today":
-        return base.isoformat()
-    if rule == "yesterday":
-        return (base - _dt.timedelta(days=1)).isoformat()
-    _dt.date.fromisoformat(rule)  # validates
-    return rule
 
 
 @register("AlgorithmTemplate")

@@ -121,30 +121,6 @@ def bpe_train(
     return merges
 
 
-def bpe_segment(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[tuple[str, str]],
-) -> DataFrame:
-    """Tokenize the corpus with a learned merge list: each word is
-    char-split then the merges apply IN TRAINING ORDER (the BPE
-    application rule). Returns ``(id_col, word, pieces)`` one row per
-    word occurrence — feed it to a census for fertility audits.
-
-    Scale: a pure projection chain (one fold per merge) over the
-    exploded word stream — zero exchanges beyond the explode's
-    narrow dependency; apply it to the distinct-word relation and
-    join back when the merge list is long.
-    """
-    out = df.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("word")
-    ).withColumn("pieces", _to_symbols("word"))
-    for a, b in merges:
-        out = out.withColumn("pieces", _apply_merge(F.col("pieces"), a, b))
-    return out
-
-
 def piece_candidates(
     vocab: DataFrame, max_piece_len: int = 6, min_count: int = 2,
     seed_size: int = 4096,
@@ -298,178 +274,6 @@ def unigram_lm_train(
         sorted(scores.items()), "piece string, logp double"
     )
     return pieces, vocab
-
-
-def _fb_expectation_kernel(scores: dict, max_piece_len: int, floor: float):
-    """Forward-backward expected piece usages of one word under piece
-    log-probs — the E-step the hard-EM Viterbi kernel approximates
-    with its single best parse. Log-space alpha/beta over the
-    segmentation lattice; each arc (j, i, piece) contributes
-    ``exp(alpha[j] + lp + beta[i] - Z)`` expected occurrences.
-    Out-of-vocabulary single chars score ``floor`` (the alphabet
-    fallback), so every word has Z > -inf. Expectations are rounded to
-    9dp so the downstream DECIMAL aggregation is order-independent."""
-    import math
-
-    def lse(a: float, b: float) -> float:
-        if a == float("-inf"):
-            return b
-        if b == float("-inf"):
-            return a
-        hi, lo = (a, b) if a >= b else (b, a)
-        return hi + math.log1p(math.exp(lo - hi))
-
-    def expect(word: str) -> list[tuple[str, float]]:
-        L = len(word)
-        arcs: list[tuple[int, int, str, float]] = []
-        for i in range(1, L + 1):
-            for j in range(max(0, i - max_piece_len), i):
-                piece = word[j:i]
-                lp = scores.get(piece)
-                if lp is None:
-                    if i - j > 1:
-                        continue
-                    lp = floor
-                arcs.append((j, i, piece, lp))
-        neg = float("-inf")
-        alpha = [neg] * (L + 1)
-        alpha[0] = 0.0
-        for j, i, _, lp in sorted(arcs, key=lambda a: a[1]):
-            alpha[i] = lse(alpha[i], alpha[j] + lp)
-        beta = [neg] * (L + 1)
-        beta[L] = 0.0
-        for j, i, _, lp in sorted(arcs, key=lambda a: -a[0]):
-            beta[j] = lse(beta[j], lp + beta[i])
-        z = alpha[L]
-        exp: dict[str, float] = {}
-        for j, i, piece, lp in arcs:
-            e = math.exp(alpha[j] + lp + beta[i] - z)
-            if e > 0.0:
-                exp[piece] = exp.get(piece, 0.0) + e
-        # drop entries the 1e-9 lattice rounds to zero — a (piece, 0.0)
-        # row would register the piece as "used" downstream and defeat
-        # the single-char alphabet floor
-        out = [(p, round(e, 9)) for p, e in sorted(exp.items())]
-        return [(p, r) for p, r in out if r > 0.0]
-
-    return expect
-
-
-def unigram_lm_train_soft(
-    df: DataFrame,
-    text_col: str,
-    n_iters: int = 2,
-    max_piece_len: int = 6,
-    min_count: int = 2,
-    seed_size: int = 4096,
-    floor_logp: float = -23.0,
-    prune_below: float = 1e-6,
-):
-    """Soft-EM (full forward-backward) unigram-LM training — the exact
-    E-step next to ``unigram_lm_train``'s hard-EM (Viterbi) relaxation
-    (Kudo 2018 trains this way). Same distributed shape: the corpus is
-    scanned ONCE into the word vocabulary; every EM round runs one
-    Arrow kernel pass over the VOCABULARY relation, returning each
-    distinct word's expected piece usages (all parses, posterior-
-    weighted) instead of its single best parse; expectations are
-    weighted by word frequency and re-estimated as log relative usage.
-
-    Determinism discipline: per-word alpha/beta sums run in a fixed
-    arc order inside one kernel invocation, expectations round onto a
-    1e-9 lattice there, and the cross-word aggregation is a DECIMAL
-    sum of exact (count × lattice-expectation) products — so retrain
-    is bit-identical under any repartitioning (pinned). Pieces whose
-    total expected usage falls below ``prune_below`` of the total are
-    dropped (soft EM never zeroes a piece exactly — without a prune
-    rule the seed vocabulary would never shrink); single characters
-    always survive (alphabet fallback).
-
-    Returns ``(pieces, vocab)`` like the hard-EM trainer.
-    """
-    import math
-
-    from pyspark.sql.functions import pandas_udf
-
-    vocab = word_vocabulary(df, text_col).localCheckpoint()
-    spark = df.sparkSession
-    cand = piece_candidates(
-        vocab, max_piece_len=max_piece_len, min_count=min_count,
-        seed_size=seed_size,
-    ).collect()
-    total = float(sum(r.cnt for r in cand))
-    scores = {r.piece: math.log(r.cnt / total) for r in cand}
-
-    for _ in range(int(n_iters)):
-        kern = _fb_expectation_kernel(
-            dict(scores), int(max_piece_len), float(floor_logp)
-        )
-
-        @pandas_udf("array<struct<piece string, e double>>")
-        def exp_udf(words):
-            return words.map(kern)
-
-        usage = (
-            vocab.select(F.col("n"), F.explode(exp_udf("word")).alias("pe"))
-            .select(
-                F.col("pe.piece").alias("piece"),
-                (F.col("n") * F.col("pe.e").cast("decimal(20,9)")).alias("w"),
-            )
-            .groupBy("piece")
-            .agg(F.sum("w").cast("double").alias("u"))
-            .collect()
-        )
-        used = {r.piece: r.u for r in usage}
-        # single characters always survive (alphabet fallback): floor
-        # their usage at 1.0 — as a MAX, not only an absent-key default,
-        # so a char whose posterior mass decimal-sums to ~0 (every word
-        # containing it dominated by whole-word pieces) cannot be
-        # starved out of the vocabulary by self-reinforcing EM rounds
-        floor_u = {
-            p: (max(used.get(p, 0.0), 1.0) if len(p) == 1
-                else used.get(p, 0.0))
-            for p in scores
-        }
-        tot = float(sum(floor_u.values()))
-        kept = {
-            p: u
-            for p, u in floor_u.items()
-            if u > 0.0 and (len(p) == 1 or u / tot >= float(prune_below))
-        }
-        tot = float(sum(kept.values()))
-        scores = {p: math.log(u / tot) for p, u in kept.items()}
-
-    pieces = spark.createDataFrame(
-        sorted(scores.items()), "piece string, logp double"
-    )
-    return pieces, vocab
-
-
-def unigram_segment(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    pieces: DataFrame,
-    max_piece_len: int = 6,
-    floor_logp: float = -23.0,
-) -> DataFrame:
-    """Tokenize with a trained unigram LM: Viterbi best parse of each
-    word under the piece log-probs. Same kernel discipline as
-    training: the corpus explodes to words JVM-side, the Arrow kernel
-    sees one row per word occurrence. Apply to the distinct-word
-    relation and join back when fertility is the only question.
-    Returns ``(id_col, word, pieces)``."""
-    from pyspark.sql.functions import pandas_udf
-
-    scores = {r.piece: r.logp for r in pieces.collect()}
-    seg = _viterbi_segmenter(scores, int(max_piece_len), float(floor_logp))
-
-    @pandas_udf("array<string>")
-    def seg_udf(words):
-        return words.map(seg)
-
-    return df.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("word")
-    ).withColumn("pieces", seg_udf("word"))
 
 
 from m3d_engine_spark.operators.base import Algorithm, register  # noqa: E402

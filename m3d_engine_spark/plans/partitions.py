@@ -168,11 +168,6 @@ def is_empty(df: DataFrame) -> bool:
     return len(df.head(1)) == 0
 
 
-def non_empty(df: DataFrame) -> bool:
-    """Negation of ``is_empty`` (util/DataFrameUtils.scala:99)."""
-    return not is_empty(df)
-
-
 def add_missing_columns(df: DataFrame, target_schema: StructType) -> DataFrame:
     """Pad ``df`` with typed NULLs to match ``target_schema`` (name + order).
 

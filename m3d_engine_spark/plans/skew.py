@@ -1,13 +1,13 @@
-"""Skew mitigation: salted joins, two-stage aggregations, and the one
-hot-key split every pair-generating join in this package goes through.
+"""Skew mitigation: salted joins and the one hot-key split every
+pair-generating join in this package goes through.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
 runtime by splitting oversized partitions; these explicit forms cover
 the cases AQE cannot: a broadcast-ineligible join against a *hot key*
-(one key ≫ one partition), high-cardinality aggregation states, and
-the pair-generating self-joins that deliberately pin ReusedExchange
-(AQE skips splitting a join whose shuffle is reused — repartitioning
-one consumer would invalidate the other).
+(one key ≫ one partition) and the pair-generating self-joins that
+deliberately pin ReusedExchange (AQE skips splitting a join whose
+shuffle is reused — repartitioning one consumer would invalidate the
+other).
 
 The hot-key split is one decision — which join keys are hot, and how
 their rows spread over ``salt_parts`` tasks — and this module owns it:
@@ -82,37 +82,6 @@ def salted_join(
     )
     out = left.join(right, on=[*on, "__salt"], how=how)
     return out.drop("__salt")
-
-
-def two_stage_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict[str, tuple[str, str]],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-stage (salted) aggregation for decomposable aggregates:
-    stage 1 groups by (keys..., salt) — hot keys split across tasks —
-    stage 2 re-aggregates partials by keys alone.
-
-    ``aggs`` maps output name → (input column, fn) with fn in
-    {sum, count, min, max}. Note Spark's hash aggregate already does
-    map-side partial aggregation; explicit salting matters when the
-    *reduce-side per-key state* is the bottleneck (e.g. a hot key whose
-    partial results still overwhelm one task, or when feeding a window
-    function that cannot partial-aggregate).
-    """
-    merge_fn = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    first_fn = {"sum": F.sum, "count": lambda c: F.count(F.lit(1)), "min": F.min, "max": F.max}
-    for _, (c, fn) in aggs.items():
-        if fn not in merge_fn:
-            raise ValueError(f"{fn!r} is not decomposable here; use sum/count/min/max")
-    salted = df.withColumn("__salt", deterministic_salt(list(keys), salt_buckets))
-    partial = salted.groupBy(*keys, "__salt").agg(
-        *[first_fn[fn](c).alias(name) for name, (c, fn) in aggs.items()]
-    )
-    return partial.groupBy(*keys).agg(
-        *[merge_fn[fn](name).alias(name) for name, (c, fn) in aggs.items()]
-    )
 
 
 # ------------------------------------------------------ threshold rule

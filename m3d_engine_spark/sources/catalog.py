@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from typing import Any, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -28,10 +28,6 @@ def table_schema(spark: SparkSession, table: str, drop_columns: Sequence[str] = 
     schema = spark.table(table).schema
     drop = {c.lower() for c in drop_columns}
     return StructType([f for f in schema.fields if f.name.lower() not in drop])
-
-
-def set_table_location(spark: SparkSession, table: str, location: str) -> None:
-    spark.sql(f"ALTER TABLE {table} SET LOCATION '{location}'")
 
 
 def recreate_table_at_location(
@@ -129,17 +125,6 @@ def add_partitions(
     for s in stmts:
         spark.sql(s)
     return stmts
-
-
-def recover_partitions_custom(
-    spark: SparkSession, table: str, df: DataFrame, partition_columns: Sequence[str]
-) -> list[str]:
-    """Per-partition ADD PARTITION statements generated from the distinct
-    partition values present in ``df``
-    (util/RecoverPartitionsCustom.scala:12-31)."""
-    from m3d_engine_spark.plans.partitions import collect_partitions
-
-    return add_partitions(spark, table, collect_partitions(df, partition_columns))
 
 
 def update_partition_metadata(

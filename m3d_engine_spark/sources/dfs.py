@@ -175,25 +175,6 @@ def next_version_dir(base: str, ts: float | None = None) -> str:
     return f"{base.rstrip('/')}/{stamp}"
 
 
-def copy_dir(dfs: DFS, src: str, dst: str, overwrite: bool = True) -> bool:
-    """Recursive directory copy via Hadoop FileUtil — the DistCp-wrapper
-    equivalent (util/DistCpWrapper.scala:10-24). The reference shells out
-    to MapReduce DistCp for cross-cluster copies; inside one filesystem
-    FileUtil.copy covers the same backup/staging uses without a second
-    framework. For genuinely huge cross-cluster moves prefer an
-    executor-parallel read→write of the dataset itself."""
-    jvm = dfs._jvm()
-    conf = dfs.spark._jsc.hadoopConfiguration()
-    src_p, dst_p = dfs._jpath(src), dfs._jpath(dst)
-    return bool(
-        jvm.org.apache.hadoop.fs.FileUtil.copy(
-            src_p.getFileSystem(conf), src_p,
-            dst_p.getFileSystem(conf), dst_p,
-            False, overwrite, conf,
-        )
-    )
-
-
 def version_as_of(
     dfs: DFS, base: str, as_of: float | str | None = None
 ) -> str:

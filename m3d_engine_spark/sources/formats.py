@@ -117,23 +117,3 @@ def format_from_params(params: Mapping[str, Any]) -> DataFormat:
             # .scala:38 + CatalogTableManager.scala:135-150)
             options["columnNameOfCorruptRecord"] = params["columnNameOfCorruptRecord"]
     return DataFormat(spark_format, schema, options)
-
-
-def read_table_location(
-    spark: SparkSession,
-    table: str,
-    file_format: str = "parquet",
-    options: Mapping[str, Any] | None = None,
-) -> DataFrame:
-    """Read the files at a table's location, bypassing the metastore
-    schema (util/InputReader.scala:80-88 + CatalogTableManager.scala:18-40).
-
-    Used by loads that must see the on-disk schema — e.g. after a
-    schema-evolving append the directory may carry columns the catalog
-    does not know yet."""
-    from m3d_engine_spark.sources.catalog import table_location
-
-    loc = table_location(spark, table)
-    if loc is None:
-        raise ValueError(f"table {table!r} has no resolvable location")
-    return spark.read.format(file_format).options(**(options or {})).load(loc)

@@ -38,8 +38,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", as_timestamp("ts", df.schema["ts"].dataType)
         )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -341,8 +341,10 @@ class AtomicWriter:
                     _rename_or_raise(dfs, new_dir, final_dir)
                     if not had_prior:
                         created.append(final_dir)
-        except Exception:
+        except BaseException:
             # Restore: put backups back (OutputWriter.scala:230-261).
+            # BaseException: an interrupt mid-rename must restore too,
+            # or the finally below leaves the old data only in backup.
             for final_dir in created:
                 dfs.delete(final_dir)
             for final_dir, bak_dir in moved:

@@ -17,7 +17,6 @@ equivalents of its load semantics, built on Structured Streaming:
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
@@ -25,35 +24,6 @@ from pyspark.sql.types import StructType
 
 from m3d_engine_spark.functions.dates import with_date_components
 from m3d_engine_spark.functions.text import fingerprint
-
-
-def _read_prior_state(spark: SparkSession, path: str) -> DataFrame | None:
-    """Carried-state parquet read for foreachBatch operators. Returns
-    None exactly when NO batch has ever committed state:
-
-    * ``PATH_NOT_FOUND`` — true first micro-batch; or
-    * ``UNABLE_TO_INFER_SCHEMA`` — the dir exists but holds zero
-      VISIBLE data files. Spark's job commit moves part files out of
-      ``_temporary`` atomically, so a crashed first-batch write leaves
-      only invisible remnants; on retry the batch must be able to
-      proceed as no-prior-state rather than wedge permanently behind
-      an unreadable dir (any earlier SUCCESSFUL batch would have left
-      visible files and the read would succeed).
-
-    Every other failure — permissions, transient storage errors,
-    corrupt footers at scan time — propagates so the micro-batch fails
-    and retries instead of silently computing without prior state and
-    committing wrong output. The try is scoped to the read alone;
-    downstream analysis errors (e.g. a unionByName schema mismatch)
-    are bugs and must surface."""
-    from m3d_engine_spark.errors import error_condition
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if error_condition(e) in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
 
 
 def streaming_append_load(
@@ -196,55 +166,6 @@ def streaming_dedup(
     return with_fp.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         ["fingerprint"]
     )
-
-
-def streaming_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    lower: str = "0 seconds",
-    upper: str = "2 hours",
-    left_watermark: str = "1 hour",
-    right_watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream inner join on key + event-time interval:
-    keep (l, r) when ``r.right_ts`` ∈ [l.left_ts + lower,
-    l.left_ts + upper]. The canonical streaming enrichment shape
-    ("attach the purchase that followed this click within 2 hours").
-
-    Both sides carry watermarks and the join condition bounds the time
-    range, so Structured Streaming can size the state store and EVICT:
-    each side buffers only watermark + interval width of history —
-    without the range condition the state would grow forever. On batch
-    inputs the same expression runs as a plain range join, which is how
-    the test pins semantics against a naive reference.
-
-    ``left_ts`` / ``right_ts`` must be distinct names (rename before
-    calling): both survive into the output for downstream latency
-    computation.
-    """
-    l = left.withWatermark(left_ts, left_watermark) if left.isStreaming else left
-    r = (
-        right.withWatermark(right_ts, right_watermark)
-        if right.isStreaming
-        else right
-    )
-    cond = None
-    for k in on:
-        c = l[k] == r[k]
-        cond = c if cond is None else cond & c
-    lo = F.col(left_ts) + F.expr(f"INTERVAL {lower}")
-    hi = F.col(left_ts) + F.expr(f"INTERVAL {upper}")
-    cond = cond & (F.col(right_ts) >= lo) & (F.col(right_ts) <= hi)
-    joined = l.join(r, on=cond, how="inner")
-    # De-duplicate the key columns (present on both sides after a
-    # condition-form join).
-    keep = [l[k].alias(k) for k in on]
-    keep += [l[c] for c in left.columns if c not in on]
-    keep += [r[c] for c in right.columns if c not in on]
-    return joined.select(*keep)
 
 
 # ------------------------------------------------- custom stateful op
@@ -439,104 +360,6 @@ def sessionize(
                 if idle_timeout
                 else GroupStateTimeout.NoTimeout
             ),
-        )
-    )
-
-
-ANOMALY_STATE_SCHEMA = "buf array<bigint>"
-
-
-def streaming_rolling_zscore(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    lookback: int = 20,
-    min_history: int = 8,
-    z_cut: float = 3.0,
-    value_decimals: int = 2,
-    watermark: str = "1 hour",
-    order_cols: "Sequence[str] | None" = None,
-) -> DataFrame:
-    """Streaming twin of ``operators/anomaly.py::rolling_zscore_flags``:
-    each event scored against the key's trailing ``lookback`` values
-    via ``applyInPandasWithState``. State per key is the bounded ring
-    buffer of the last ``lookback`` fixed-point values — O(lookback),
-    never the event history — so the state store stays flat at any
-    stream length.
-
-    The buffer holds INTEGERS (``value_decimals`` fixed point) and the
-    kernel derives mean/std with the identical expression sequence the
-    batch operator's window form uses, so on in-order input the two
-    produce bit-identical scores (equivalence-pinned). Cross-batch
-    ordering is the source's contract, as with any per-key stateful
-    op: within a micro-batch the kernel sorts STABLY by
-    ``order_cols`` (default: event time — pass a tiebreaking column
-    such as an event id when equal timestamps are possible, exactly as
-    the batch operator's order_cols demands); late records beyond
-    ``watermark`` are dropped by the runtime. Output columns are named
-    after ``key_col``/``ts_col``/``value_col`` with the input's own
-    key/timestamp types."""
-    import math
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    scale = 10 ** value_decimals
-    sort_cols = list(order_cols) if order_cols else [ts_col]
-    out_cols = [key_col, ts_col, value_col, "z", "is_anomaly"]
-    schema = events.schema
-    out_schema = (
-        f"{key_col} {schema[key_col].dataType.simpleString()}, "
-        f"{ts_col} {schema[ts_col].dataType.simpleString()}, "
-        f"{value_col} double, z double, is_anomaly boolean"
-    )
-
-    def stateful(key, batches, state):
-        (uid,) = key
-        buf = list(state.get[0]) if state.exists else []
-        out = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # mergesort = stable: equal sort keys keep source order, so
-            # scoring order is deterministic for a deterministic source
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            for ts, val in zip(pdf[ts_col], pdf[value_col]):
-                if pd.isna(val):
-                    # mirror the batch operator: NULL/NaN values score
-                    # NULL, flag false, and never enter the history
-                    # buffer (count(x)/sum(x) skip them there)
-                    out.append((uid, ts, None, None, False))
-                    continue
-                n = len(buf)
-                z = None
-                if n >= min_history:
-                    sx = float(sum(buf)) / scale
-                    sxx = float(sum(v * v for v in buf)) / (scale * scale)
-                    nd = float(n)
-                    var = (sxx - sx * sx / nd) / (nd - 1.0)
-                    if var > 0:
-                        z = round((float(val) - sx / nd) / math.sqrt(var), 4)
-                flag = z is not None and abs(z) > z_cut
-                out.append((uid, ts, float(val), z, flag))
-                buf.append(int(round(float(val) * scale)))
-                if len(buf) > lookback:
-                    buf.pop(0)
-        state.update((buf,))
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            stateful,
-            outputStructType=out_schema,
-            stateStructType=ANOMALY_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -1127,722 +950,3 @@ class StreamingNightlyIngestAlgorithm(Algorithm):
             **dedup_kwargs,
         )
         query.awaitTermination()
-
-
-def transition_census_batch(
-    batch: DataFrame,
-    batch_id: int,
-    census_path: str,
-    state_path: str,
-    key_col: str,
-    order_col: str,
-    tie_col: str,
-    state_col: str,
-) -> None:
-    """One micro-batch of the streaming transition census (the
-    foreachBatch body, exposed for direct testing like
-    ``incremental_dedup_batch``).
-
-    Cross-batch correctness: a user's last event of an earlier batch
-    and first event of this batch form a REAL transition the per-batch
-    window would miss, so each batch (a) prepends every affected
-    user's carried last event (read from the state relation) before
-    the lead window, and (b) writes its own users' latest events to
-    ``state_path/batch_id=<id>``. "Latest carried event" is the
-    max_by over all earlier state partitions — append-only, and
-    idempotent under replay because both writes overwrite their own
-    batch partition. Assumes the stream is time-ordered per key across
-    batches (the file-stream contract); late events would need the
-    watermarked ``session_rollup`` machinery instead, documented
-    trade-off.
-
-    At 100 TB-of-history scale the state relation is one row per key
-    per batch that key appeared in — compact it periodically with the
-    same max_by (an idempotent rewrite); the census relation is
-    states²-sized per batch, negligible.
-    """
-    from pyspark.sql import Window
-
-    spark = batch.sparkSession
-    ev = batch.select(
-        F.col(key_col), F.col(order_col), F.col(tie_col), F.col(state_col)
-    )
-    prior = _read_prior_state(spark, state_path)
-    if prior is not None:
-        carried = (
-            prior.filter(F.col("batch_id") < batch_id)
-            .groupBy(key_col)
-            .agg(
-                F.max_by(
-                    F.struct(order_col, tie_col, state_col),
-                    F.struct(order_col, tie_col),
-                ).alias("_s")
-            )
-            .select(key_col, "_s.*")
-        )
-        ev = ev.unionByName(carried)
-    w = Window.partitionBy(key_col).orderBy(F.col(order_col), F.col(tie_col))
-    pairs = (
-        ev.withColumn("_next", F.lead(state_col).over(w))
-        .filter(F.col("_next").isNotNull())
-        .groupBy(
-            F.col(state_col).alias("from_state"),
-            F.col("_next").alias("to_state"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    pairs.write.mode("overwrite").parquet(f"{census_path}/batch_id={batch_id}")
-    latest = (
-        batch.groupBy(key_col)
-        .agg(
-            F.max_by(
-                F.struct(order_col, tie_col, state_col),
-                F.struct(order_col, tie_col),
-            ).alias("_s")
-        )
-        .select(key_col, "_s.*")
-    )
-    latest.write.mode("overwrite").parquet(f"{state_path}/batch_id={batch_id}")
-
-
-def streaming_transition_census(
-    stream: DataFrame,
-    census_path: str,
-    state_path: str,
-    checkpoint: str,
-    key_col: str,
-    order_col: str,
-    tie_col: str,
-    state_col: str,
-):
-    """Streaming twin of ``operators/markov.transition_matrix``: the
-    first-order transition census maintained incrementally over an
-    append-only event stream — per-batch partial counts plus a carried
-    per-key last-event state so cross-batch transitions are never
-    lost. Read the census with ``read_transition_census``; equivalence
-    with the batch operator over the same data is pinned by test.
-
-    Returns the started availableNow StreamingQuery (call
-    ``awaitTermination()``; later invocations process only new files).
-    """
-    def process(batch: DataFrame, batch_id: int) -> None:
-        transition_census_batch(
-            batch, batch_id, census_path, state_path,
-            key_col, order_col, tie_col, state_col,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_transition_census(spark, census_path: str) -> DataFrame:
-    """Fold the per-batch partial counts into the same
-    (from_state, to_state, n, p) relation the batch operator returns —
-    one keyed aggregate over the (tiny, states²·batches) census
-    relation, probabilities from the folded exact counts."""
-    from pyspark.sql import Window
-
-    totals = (
-        spark.read.parquet(census_path)
-        .groupBy("from_state", "to_state")
-        .agg(F.sum("n").alias("n"))
-    )
-    w_tot = Window.partitionBy("from_state")
-    return totals.select(
-        "from_state",
-        "to_state",
-        "n",
-        F.round(F.col("n") / F.sum("n").over(w_tot), 4).alias("p"),
-    )
-
-
-def scd2_batch(
-    batch: DataFrame,
-    batch_id: int,
-    changes_path: str,
-    key_col: str,
-    order_col: str,
-    tie_col: str,
-    attr_col: str,
-) -> None:
-    """One micro-batch of the streaming SCD2 dimension (the
-    foreachBatch body, exposed for direct testing like
-    ``transition_census_batch``).
-
-    Incremental type-2 dimension maintenance: each batch condenses its
-    own events to state CHANGES (the ``operators/temporal.scd2_history``
-    change-detect step) — but a key whose first event of this batch
-    repeats its last carried state is NOT a change, so the change
-    detection runs against the carried last state (max_by over earlier
-    ``changes_path`` partitions, the ``transition_census_batch`` state
-    discipline; here the change log IS the state — no second relation).
-    Writes this batch's changes to ``changes_path/batch_id=<id>``
-    (overwrite → idempotent under foreachBatch replay). Validity
-    intervals are assembled at READ time by ``read_scd2_dimension`` —
-    a fold over the CONDENSED change log (one row per state change
-    ever), not the event stream, which is what keeps the write path
-    append-only and the read cheap.
-
-    Same ordering contract as the census: the stream is time-ordered
-    per key across batches; late events need the watermarked machinery
-    instead.
-    """
-    from pyspark.sql import Window
-
-    spark = batch.sparkSession
-    ev = batch.select(
-        F.col(key_col), F.col(order_col), F.col(tie_col), F.col(attr_col)
-    )
-    prior = _read_prior_state(spark, changes_path)
-    if prior is not None:
-        carried = (
-            prior.filter(F.col("batch_id") < batch_id)
-            .groupBy(key_col)
-            .agg(
-                F.max_by(
-                    F.struct(order_col, tie_col, attr_col),
-                    F.struct(order_col, tie_col),
-                ).alias("_s")
-            )
-            .select(key_col, "_s.*")
-            .withColumn("_carried", F.lit(1))
-        )
-        ev = ev.withColumn("_carried", F.lit(0)).unionByName(carried)
-    else:
-        ev = ev.withColumn("_carried", F.lit(0))
-    w = Window.partitionBy(key_col).orderBy(F.col(order_col), F.col(tie_col))
-    state = F.struct(F.col(attr_col))
-    changes = (
-        ev.withColumn("_prev", F.lag(state).over(w))
-        .filter(F.col("_prev").isNull() | ~state.eqNullSafe(F.col("_prev")))
-        # the carried row itself was written by an earlier batch
-        .filter(F.col("_carried") == 0)
-        .select(key_col, order_col, tie_col, attr_col)
-    )
-    changes.write.mode("overwrite").parquet(
-        f"{changes_path}/batch_id={batch_id}"
-    )
-
-
-def streaming_scd2(
-    stream: DataFrame,
-    changes_path: str,
-    checkpoint: str,
-    key_col: str,
-    order_col: str,
-    tie_col: str,
-    attr_col: str,
-):
-    """Streaming twin of ``operators/temporal.scd2_history``: the
-    type-2 dimension maintained incrementally over an append-only
-    change stream. Read the dimension with ``read_scd2_dimension``;
-    equivalence with the batch operator over the same data is pinned
-    by test. Returns the started availableNow StreamingQuery."""
-    def process(batch: DataFrame, batch_id: int) -> None:
-        scd2_batch(
-            batch, batch_id, changes_path,
-            key_col, order_col, tie_col, attr_col,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_scd2_dimension(
-    spark,
-    changes_path: str,
-    key_col: str,
-    order_col: str,
-    tie_col: str,
-    attr_col: str,
-) -> DataFrame:
-    """Assemble the SCD2 dimension from the incremental change log:
-    one lead/row_number window over the CONDENSED changes (a row per
-    state change ever — orders of magnitude smaller than the event
-    stream), producing the exact columns of the batch operator:
-    (key, attr, valid_from, valid_to, version, is_current)."""
-    from pyspark.sql import Window
-
-    ch = spark.read.parquet(changes_path).drop("batch_id")
-    w = Window.partitionBy(key_col).orderBy(F.col(order_col), F.col(tie_col))
-    return (
-        ch.withColumn("valid_from", F.col(order_col))
-        .withColumn("valid_to", F.lead(order_col).over(w))
-        .withColumn("version", F.row_number().over(w).cast("int"))
-        .withColumn(
-            "is_current",
-            F.when(F.col("valid_to").isNull(), F.lit(1))
-            .otherwise(F.lit(0)).cast("int"),
-        )
-        .select(
-            key_col, attr_col, "valid_from", "valid_to", "version",
-            "is_current",
-        )
-    )
-
-
-def agg_maintenance_batch(
-    batch: DataFrame,
-    batch_id: int,
-    deltas_path: str,
-    key_cols: list,
-    value_col: str,
-    op_col: str,
-) -> None:
-    """One micro-batch of incremental aggregate maintenance (the
-    foreachBatch body, exposed for direct testing): maintain per-key
-    SUM/COUNT over a CDC stream carrying retractions — ``op_col`` is
-    +1 (insert) or −1 (retract/delete); an update arrives as the
-    retract+insert pair, the standard change-relation encoding.
-
-    The trick that keeps this exactly-once AND cheap: sums and counts
-    are ADDITIVE, so each batch writes only its own DELTA aggregate
-    (one map-side-combinable groupBy, overwriting its own
-    ``batch_id=<id>`` partition — idempotent under replay), and the
-    current aggregate is the fold of all delta partitions at READ
-    time (``read_maintained_agg``): one aggregate over a relation
-    with ≤ keys·batches rows, never the event history. Compact by
-    folding old partitions with the same read (an idempotent
-    rewrite). Non-additive aggregates (min/max under retraction)
-    need the full-history rebuild — out of scope by design.
-    """
-    vals = F.col(value_col).cast("decimal(30,12)")
-    delta = batch.groupBy(*key_cols).agg(
-        F.sum(F.col(op_col) * vals).alias("sum_delta"),
-        F.sum(F.col(op_col)).cast("long").alias("n_delta"),
-    )
-    delta.write.mode("overwrite").parquet(f"{deltas_path}/batch_id={batch_id}")
-
-
-def streaming_agg_maintenance(
-    stream: DataFrame,
-    deltas_path: str,
-    checkpoint: str,
-    key_cols: list,
-    value_col: str,
-    op_col: str,
-):
-    """Streaming twin of a keyed SUM/COUNT aggregate over a CDC
-    change relation (inserts + retractions). Read the maintained
-    aggregate with ``read_maintained_agg``; equivalence with the
-    batch aggregate over the same changes is pinned by test. Returns
-    the started availableNow StreamingQuery."""
-    def process(batch: DataFrame, batch_id: int) -> None:
-        agg_maintenance_batch(
-            batch, batch_id, deltas_path, key_cols, value_col, op_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_maintained_agg(spark, deltas_path: str, key_cols: list) -> DataFrame:
-    """Fold the delta partitions into the current aggregate: one
-    aggregate over ≤ keys·batches delta rows. Keys whose rows have
-    all been retracted (count 0) are dropped — they no longer exist
-    in the maintained relation."""
-    d = spark.read.parquet(deltas_path)
-    return (
-        d.groupBy(*key_cols)
-        .agg(
-            F.sum("sum_delta").cast("double").alias("sum_value"),
-            F.sum("n_delta").cast("long").alias("n"),
-        )
-        .filter(F.col("n") != 0)
-    )
-
-
-MEDIAN_STATE_SCHEMA = "buf array<double>"
-
-
-def streaming_rolling_median(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window_rows: int = 10,
-    out_dp: int = 4,
-    watermark: str = "1 hour",
-    order_cols: "Sequence[str] | None" = None,
-) -> DataFrame:
-    """Streaming twin of ``operators/anomaly.py::rolling_median``: the
-    trailing-``window_rows`` median per key, maintained with
-    ``applyInPandasWithState``. State per key is the bounded buffer of
-    the last ``window_rows − 1`` ROW slots (NaN marks a NULL row —
-    the batch window frame counts rows, while ``collect_list`` skips
-    NULLs, and the kernel reproduces exactly that), so the state
-    store is O(window_rows) at any stream length.
-
-    The median expression mirrors the batch operator's sorted-buffer
-    arithmetic (mean of the two middle values, ``out_dp`` rounding);
-    on in-order input the two are equivalence-pinned. Ordering/late
-    data contract identical to ``streaming_rolling_zscore``."""
-    import math
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    sort_cols = list(order_cols) if order_cols else [ts_col]
-    out_cols = [key_col, ts_col, value_col, "rolling_median"]
-    schema = events.schema
-    out_schema = (
-        f"{key_col} {schema[key_col].dataType.simpleString()}, "
-        f"{ts_col} {schema[ts_col].dataType.simpleString()}, "
-        f"{value_col} double, rolling_median double"
-    )
-    keep = int(window_rows) - 1
-
-    def stateful(key, batches, state):
-        (uid,) = key
-        buf = list(state.get[0]) if state.exists else []
-        out = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            for ts, val in zip(pdf[ts_col], pdf[value_col]):
-                null = pd.isna(val)
-                vals = [v for v in buf if not math.isnan(v)]
-                if not null:
-                    vals.append(float(val))
-                if vals:
-                    vals.sort()
-                    n = len(vals)
-                    med = round(
-                        (vals[(n - 1) // 2] + vals[n // 2]) / 2.0, out_dp
-                    )
-                else:
-                    med = None
-                out.append((uid, ts, None if null else float(val), med))
-                buf.append(math.nan if null else float(val))
-                if len(buf) > keep:
-                    buf.pop(0)
-        state.update((buf,))
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            stateful,
-            outputStructType=out_schema,
-            stateStructType=MEDIAN_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-GAPFILL_STATE_SCHEMA = (
-    "prev_ts bigint, prev_v double, pend_ts array<bigint>, "
-    "pend_tie array<bigint>"
-)
-
-
-def streaming_gap_fill(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tie_col: str = "event_id",
-    out_dp: int = 4,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of ``operators/temporal.py::linear_interpolate``
-    in its causal form: a NULL-valued row cannot be interpolated until
-    the NEXT present value arrives, so gap rows wait in per-key state
-    and are emitted — with the identical interpolation expression the
-    batch operator uses — the moment a closing anchor shows up.
-
-    Emission contract vs the batch operator on in-order input:
-    * present rows and leading-boundary NULLs (no prior anchor — the
-      batch operator leaves these NULL too) emit immediately;
-    * interior gap rows emit when their closing anchor arrives,
-      bit-identical to the batch fill (equivalence-pinned);
-    * trailing-boundary NULLs stay pending (a stream cannot know the
-      future the batch operator also has no answer for); they emit
-      only if a later value closes them.
-
-    State per key is (last anchor, pending gap row ids): O(gap
-    length), independent of stream length. Timestamps ride as epoch
-    microseconds (the batch entry's ``ts_us`` convention)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_cols = [key_col, "ts_us", tie_col, value_col, "value_filled",
-                "interpolated"]
-    schema = events.schema
-    out_schema = (
-        f"{key_col} {schema[key_col].dataType.simpleString()}, "
-        f"ts_us bigint, {tie_col} {schema[tie_col].dataType.simpleString()},"
-        f" {value_col} double, value_filled double, interpolated int"
-    )
-
-    def stateful(key, batches, state):
-        (uid,) = key
-        if state.exists:
-            prev_ts, prev_v, pend_ts, pend_tie = state.get
-            pend = list(zip(pend_ts, pend_tie))
-        else:
-            prev_ts, prev_v, pend = None, None, []
-        out = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values([ts_col, tie_col], kind="mergesort")
-            for ts, tie, val in zip(pdf[ts_col], pdf[tie_col], pdf[value_col]):
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                if pd.isna(val):
-                    if prev_ts is None:
-                        # leading boundary: the batch operator leaves
-                        # these NULL as well — emit now
-                        out.append((uid, ts_us, tie, None, None, 0))
-                    else:
-                        pend.append((ts_us, int(tie)))
-                    continue
-                v = float(val)
-                for gts, gtie in pend:
-                    # identical op order to the batch expression:
-                    # pv + (nv - pv) * Δt₁ / Δt₂, then round
-                    fill = round(
-                        prev_v
-                        + (v - prev_v)
-                        * float(gts - prev_ts)
-                        / float(ts_us - prev_ts),
-                        out_dp,
-                    )
-                    out.append((uid, gts, gtie, None, fill, 1))
-                pend = []
-                out.append((uid, ts_us, tie, v, v, 0))
-                prev_ts, prev_v = ts_us, v
-        state.update((
-            prev_ts,
-            prev_v,
-            [t for t, _ in pend],
-            [i for _, i in pend],
-        ))
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            stateful,
-            outputStructType=out_schema,
-            stateStructType=GAPFILL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def removal_attribution_batch(
-    batch: DataFrame,
-    batch_id: int,
-    census_path: str,
-    state_path: str,
-    key_col: str,
-    order_col: str,
-    tie_col: str,
-    state_col: str,
-    conv_state: str,
-) -> None:
-    """One micro-batch of streaming Markov removal-effect attribution —
-    the incremental twin of ``operators.markov.removal_attribution``
-    (a foreachBatch body, exposed for direct testing like
-    ``transition_census_batch``, whose carried-state machinery it
-    extends with the journey-truncation flag).
-
-    The distributed work per batch is census-sized: the per-key carried
-    state here is ``(last order, tie, state, conv)`` where ``conv``
-    marks an already-converted journey — such keys drop their entire
-    batch (post-conversion events never count, exactly the batch
-    operator's truncation), unconverted keys prepend their carried last
-    event so the cross-batch transition is counted once, in-batch
-    truncation runs the same cumulative-conversions window, and only
-    keys with NO prior state contribute their first event to the start
-    census. Both census deltas (transition pairs, starts) and the state
-    rewrite overwrite their own ``batch_id`` partition — idempotent
-    under replay.
-
-    The attribution itself is NOT computed per batch: censuses are
-    additive, so ``read_removal_attribution`` sums the deltas and runs
-    the shared exact-integer solve (``markov.solve_removal``) whenever
-    asked; because both paths feed identical censuses into an
-    integer-lattice solve, streaming == batch is bit-exact (pinned).
-
-    Like ``transition_census_batch``, this assumes the stream is
-    time-ordered per key ACROSS batches (the file-stream contract) —
-    and the converted-key truncation makes the dependence strict: a
-    late event arriving after its key's conversion was recorded is
-    dropped by the ``done`` anti-join even if its order precedes the
-    conversion, where the batch operator would have counted it.
-    Restoring bit-exactness under arbitrary out-of-order arrival would
-    require carrying full journeys (not census-sized state); late data
-    needs the watermarked ``session_rollup`` machinery instead — same
-    documented trade-off as the census twin.
-    """
-    from pyspark.sql import Window
-
-    spark = batch.sparkSession
-    ev = batch.select(
-        F.col(key_col), F.col(order_col), F.col(tie_col),
-        F.col(state_col), F.lit(0).alias("_carried"),
-    )
-    prior = _read_prior_state(spark, state_path)
-    if prior is not None:
-        carried = (
-            prior.filter(F.col("batch_id") < batch_id)
-            .groupBy(key_col)
-            .agg(
-                F.max_by(
-                    F.struct(order_col, tie_col, state_col, "conv"),
-                    F.struct(order_col, tie_col),
-                ).alias("_s")
-            )
-            .select(key_col, "_s.*")
-        )
-        done = carried.filter(F.col("conv") == 1).select(key_col)
-        ev = ev.join(done, on=key_col, how="left_anti")
-        live = (
-            carried.filter(F.col("conv") == 0)
-            .select(
-                key_col, order_col, tie_col, state_col,
-                F.lit(1).alias("_carried"),
-            )
-        )
-        seq = ev.unionByName(live)
-        known = carried.select(key_col, F.lit(1).alias("_known"))
-    else:
-        seq = ev
-        known = None
-    w = Window.partitionBy(key_col).orderBy(F.col(order_col), F.col(tie_col))
-    conv_before = F.coalesce(
-        F.sum((F.col(state_col) == conv_state).cast("int")).over(
-            w.rowsBetween(Window.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
-    kept = (
-        seq.withColumn("_cb", conv_before)
-        .filter(F.col("_cb") == 0)
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_to", F.lead(state_col).over(w))
-    )
-    trans = (
-        kept.filter(F.col("_to").isNotNull())
-        .groupBy(
-            F.col(state_col).alias("from_state"),
-            F.col("_to").alias("to_state"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    trans.write.mode("overwrite").parquet(
-        f"{census_path}/trans/batch_id={batch_id}"
-    )
-    first = kept.filter(F.col("_rn") == 1)
-    if known is not None:
-        first = first.join(known, on=key_col, how="left_anti")
-    starts = first.groupBy(F.col(state_col).alias("state")).agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    starts.write.mode("overwrite").parquet(
-        f"{census_path}/starts/batch_id={batch_id}"
-    )
-    new_state = (
-        kept.filter(F.col("_carried") == 0)
-        .groupBy(key_col)
-        .agg(
-            F.max_by(
-                F.struct(order_col, tie_col, state_col),
-                F.struct(order_col, tie_col),
-            ).alias("_s")
-        )
-        .select(key_col, "_s.*")
-        .withColumn(
-            "conv", (F.col(state_col) == conv_state).cast("int")
-        )
-    )
-    new_state.write.mode("overwrite").parquet(
-        f"{state_path}/batch_id={batch_id}"
-    )
-
-
-def streaming_removal_attribution(
-    events: DataFrame,
-    census_path: str,
-    state_path: str,
-    checkpoint: str,
-    key_col: str,
-    order_col: str,
-    tie_col: str,
-    state_col: str,
-    conv_state: str,
-):
-    """foreachBatch wiring for ``removal_attribution_batch`` (same
-    availableNow/trigger contract as ``streaming_transition_census``)."""
-    return (
-        events.writeStream.foreachBatch(
-            lambda b, i: removal_attribution_batch(
-                b, i, census_path, state_path,
-                key_col, order_col, tie_col, state_col, conv_state,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_removal_attribution(
-    spark: SparkSession,
-    census_path: str,
-    conv_state: str,
-    k_steps: int = 12,
-    scale: int = 10**12,
-) -> DataFrame:
-    """Sum the accumulated per-batch census deltas (additive by
-    construction) and run the shared exact-integer absorption solve.
-    The collected relations are states²-sized metadata."""
-    from m3d_engine_spark.operators.markov import solve_removal
-
-    trans = (
-        spark.read.parquet(f"{census_path}/trans")
-        .groupBy("from_state", "to_state")
-        .agg(F.sum("n").cast("long").alias("n"))
-        .collect()
-    )
-    starts = (
-        spark.read.parquet(f"{census_path}/starts")
-        .groupBy("state")
-        .agg(F.sum("n").cast("long").alias("n"))
-        .collect()
-    )
-    rows = solve_removal(
-        [(r.from_state, r.to_state, int(r.n)) for r in trans],
-        [(r.state, int(r.n)) for r in starts],
-        conv_state,
-        k_steps=k_steps,
-        scale=scale,
-    )
-    return spark.createDataFrame(
-        rows,
-        "channel string, base_cvr double, removed_cvr double,"
-        " removal_effect double",
-    )

@@ -5,10 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from m3d_engine_spark.operators.dedup import containment_pairs
-from m3d_engine_spark.operators.snapshot_diff import (
-    snapshot_diff,
-    snapshot_diff_counts,
-)
+from m3d_engine_spark.operators.snapshot_diff import snapshot_diff
 
 
 def test_containment_catches_embedded_quote(spark):
@@ -47,34 +44,6 @@ def test_containment_blocking_respected(spark):
     )
 
 
-def test_compression_ratio_signal(spark):
-    """zlib ratio: repetitive text compresses far below natural prose;
-    empty text reports ratio 1.0; pure map (no exchange, Arrow only)."""
-    from m3d_engine_spark.operators.decontamination import compression_ratio
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spam ham " * 400),
-            (2, "the committee reviewed seventeen distinct proposals about "
-                "watershed management, glacier monitoring and rural "
-                "electrification before adjourning without a decision"),
-            (3, ""),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in
-            compression_ratio(docs, "doc_id", "text").collect()}
-    assert rows[1].ratio < 0.05  # 400x repetition collapses
-    assert rows[2].ratio > 0.5   # prose barely compresses at this size
-    assert rows[3] .ratio == 1.0 and rows[3].n_bytes == 0
-    assert rows[1].n_bytes == len("spam ham " * 400)
-    from conftest import plan_simple
-
-    plan = plan_simple(compression_ratio(docs, "doc_id", "text"))
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan  # Arrow kernel, not row-at-a-time
-
-
 def test_snapshot_diff_classification(spark):
     old = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, None, 40)],
@@ -93,9 +62,6 @@ def test_snapshot_diff_classification(spark):
         old, new, ["k"], ["v", "p"], include_unchanged=True
     )
     assert with_unchanged.filter(F.col("status") == "unchanged").count() == 1
-    counts = {r.status: r.n for r in
-              snapshot_diff_counts(old, new, ["k"], ["v", "p"]).collect()}
-    assert counts == {"unchanged": 1, "changed": 2, "removed": 1, "added": 1}
 
 
 def test_snapshot_diff_column_shift_not_aliased(spark):

@@ -151,39 +151,6 @@ def test_seeded_ann_recall_vs_brute_force(spark):
     assert recall >= 0.9, f"recall@5 {recall:.3f} below the 0.9 gate"
 
 
-@pytest.mark.slow
-def test_prefix_filtered_jaccard_equals_plain(spark):
-    """AllPairs prefix filtering must return the exact same pairs as the
-    plain inverted-index join at its target (high) threshold."""
-    from m3d_engine_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
-    import random
-
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(40)]
-    rows = []
-    for i in range(60):
-        words = [rng.choice(vocab) for _ in range(30)]
-        rows.append((2 * i, " ".join(words), "b0"))
-        mutated = list(words)
-        for _ in range(rng.randint(0, 6)):  # some near-dups, some not
-            mutated[rng.randrange(len(mutated))] = rng.choice(vocab)
-        rows.append((2 * i + 1, " ".join(mutated), "b0"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    for t in (0.5, 0.7):
-        plain = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in ngram_jaccard_pairs(docs, "doc_id", "text", ["source"], 3, t).collect()
-        }
-        pref = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in ngram_jaccard_pairs_prefix(docs, "doc_id", "text", ["source"], 3, t).collect()
-        }
-        assert pref == plain and len(plain) > 0, f"t={t}: {len(pref)} vs {len(plain)}"
-
-
 def test_jaccard_df_cutoff_equals_uncut_below_cutoff(spark):
     """With no shingle above the cutoff, the df-cutoff path must return
     exactly the uncut output (values are recomputed on full sets, so

@@ -4,10 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from m3d_engine_spark.operators.shuffle import (
-    epoch_shuffle,
-    epoch_shuffle_write,
-)
+from m3d_engine_spark.operators.shuffle import epoch_shuffle
 
 
 def test_epoch_shuffle_deterministic_and_epoch_sensitive(spark):
@@ -35,20 +32,3 @@ def test_epoch_shuffle_deterministic_and_epoch_sensitive(spark):
         per_shard.setdefault(s, []).append(rk)
     for rks in per_shard.values():
         assert sorted(rks) == list(range(1, len(rks) + 1))
-
-
-def test_epoch_shuffle_write_sorted_shards(spark, tmp_path):
-    docs = spark.range(1000).select(F.col("id").alias("doc_id"))
-    loc = str(tmp_path / "epoch0")
-    epoch_shuffle_write(docs, loc, "doc_id", epoch=0, num_shards=4)
-    back = spark.read.parquet(loc)
-    assert back.count() == 1000
-    assert {r.shard for r in back.select("shard").distinct().collect()} == {
-        0, 1, 2, 3,
-    }
-    # within a shard file, rows are physically in shuffle order
-    one = back.filter(F.col("shard") == 0).withColumn(
-        "_h", F.md5(F.concat(F.lit("0:"), F.col("doc_id").cast("string")))
-    )
-    file_order = [r._h for r in one.collect()]
-    assert file_order == sorted(file_order)

@@ -203,52 +203,6 @@ def test_streaming_append_load_algorithm_incremental(spark, tmp_path):
     }
 
 
-@pytest.mark.slow
-def test_streaming_interval_join_matches_batch_and_bounds_state(spark, tmp_path, sf_dir):
-    """Stream-stream event-time join: the availableNow streaming run
-    over file sources must produce exactly the batch result of the same
-    expression, and the streaming plan must carry watermarks on both
-    sides (the state-eviction precondition)."""
-    from m3d_engine_spark.sources.testdata import load_table
-    from m3d_engine_spark.streaming.pipeline import streaming_interval_join
-
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts")
-    ).limit(500)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("purchase_ts"), "value"
-    )
-    c_dir, p_dir = str(tmp_path / "clicks"), str(tmp_path / "purch")
-    clicks.write.parquet(c_dir)
-    purchases.write.parquet(p_dir)
-
-    batch = streaming_interval_join(
-        spark.read.parquet(c_dir), spark.read.parquet(p_dir),
-        on=["user_id"], left_ts="click_ts", right_ts="purchase_ts",
-    )
-    expected = sorted(tuple(r) for r in batch.collect())
-
-    cs = spark.readStream.schema(clicks.schema).parquet(c_dir)
-    ps = spark.readStream.schema(purchases.schema).parquet(p_dir)
-    out_stream = streaming_interval_join(
-        cs, ps, on=["user_id"], left_ts="click_ts", right_ts="purchase_ts",
-    )
-    analyzed = out_stream._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
-    assert analyzed.count("EventTimeWatermark") == 2, analyzed
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        out_stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
-    assert got == expected and len(expected) > 0
-
-
 def test_sample_frames_fanout_and_kernel(spark, sf_dir):
     """JVM-side fan-out: every video yields ceil(n_frames/8) rows with
     idx 0,8,16,...; the Arrow kernel's frame_sha is a pure function of

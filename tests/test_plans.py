@@ -146,27 +146,6 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
     assert salted == plain and len(plain) > 0
 
 
-def test_two_stage_agg_matches_plain_agg(spark, sf_dir):
-    from m3d_engine_spark.plans.skew import two_stage_agg
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    plain = {
-        (r.event_type, r.n, r.mx)
-        for r in ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.max("event_id").alias("mx"))
-        .collect()
-    }
-    staged = {
-        (r.event_type, r.n, r.mx)
-        for r in two_stage_agg(
-            ev, ["event_type"],
-            {"n": ("event_id", "count"), "mx": ("event_id", "max")},
-            salt_buckets=8,
-        ).collect()
-    }
-    assert staged == plain
-
-
 def test_jaccard_cutoff_path_has_no_array_recompute(spark):
     """The hot-shingle df-cutoff must NOT route pairs through a
     full-shingle-array recompute (the round-3 perf regression): exact
@@ -208,12 +187,11 @@ def test_simhash64_banded_join_shape(spark):
 
 
 def test_is_empty_non_empty(spark):
-    from m3d_engine_spark.plans.partitions import is_empty, non_empty
+    from m3d_engine_spark.plans.partitions import is_empty
 
     df = spark.range(3)
-    assert non_empty(df) and not is_empty(df)
-    empty = df.filter("id < 0")
-    assert is_empty(empty) and not non_empty(empty)
+    assert not is_empty(df)
+    assert is_empty(df.filter("id < 0"))
 
 
 def test_ivf_assignment_aggregates_before_exchange(spark, sf_dir):

@@ -23,7 +23,11 @@ lane, which is where a guard against future registry additions has to
 live.
 """
 
+import ast
+import os
+import re
 from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
 
 import pytest
 
@@ -154,3 +158,97 @@ def test_oracle_keys_subset_of_queries_and_no_duplicates():
     # dict literals silently drop duplicate keys only in CPython >=3.7
     # when identical; guard against a paste error shrinking the registry.
     assert len(q) >= 201, len(q)
+
+
+# ------------------------------------------------------ reachability
+_REPO = Path(__file__).resolve().parents[1]
+_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _defined_names(node: ast.stmt) -> list[str]:
+    """Names a top-level statement defines. ``@register`` Algorithm
+    classes are reached through the CLI registry by their registered
+    name, and dunders by the interpreter, so neither is a candidate."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        registered = any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in node.decorator_list
+        )
+        names = [] if registered else [node.name]
+    elif isinstance(node, ast.Assign):
+        names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+    elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+        names = [node.target.id]
+    else:
+        names = []
+    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+
+
+def _unreached_definitions() -> list[str]:
+    """``module:name`` of every top-level definition in
+    ``m3d_engine_spark/`` that no non-test ``.py``/``.json`` file names,
+    apart from mentions inside its own span or inside another
+    unreached definition (the least fixed point of the name graph).
+    ``tests/hive_scripts.py`` sets up the Hive scenarios, so it counts
+    as a caller. Each file's word tokens are indexed once."""
+    pkg = _REPO / "m3d_engine_spark"
+    tests = _REPO / "tests"
+    roots = set(_WORD.findall((tests / "hive_scripts.py").read_text()))
+    defs: list[tuple[str, str, set[str]]] = []  # (module, name, span tokens)
+    for dirpath, dirnames, filenames in os.walk(_REPO):
+        dirnames[:] = [
+            d for d in dirnames
+            if not d.startswith(".") and d != "__pycache__"
+            and Path(dirpath, d) != tests
+        ]
+        for fn in filenames:
+            path = Path(dirpath, fn)
+            if path.suffix not in (".py", ".json"):
+                continue
+            text = path.read_text(encoding="utf-8")
+            if pkg not in path.parents:
+                roots.update(_WORD.findall(text))
+                continue
+            lines = text.splitlines()
+            owned = set()
+            for node in ast.parse(text).body:
+                names = _defined_names(node)
+                if not names:
+                    continue
+                lo = min(
+                    [node.lineno]
+                    + [d.lineno for d in getattr(node, "decorator_list", [])]
+                )
+                span = set(_WORD.findall("\n".join(lines[lo - 1 : node.end_lineno])))
+                owned.update(range(lo, node.end_lineno + 1))
+                module = str(path.relative_to(_REPO))
+                defs += [(module, n, span - {n}) for n in names]
+            for i, line in enumerate(lines, 1):
+                if i not in owned:
+                    roots.update(_WORD.findall(line))
+    by_name: dict[str, list[int]] = {}
+    for i, (_, name, _) in enumerate(defs):
+        by_name.setdefault(name, []).append(i)
+    todo = [i for name in roots for i in by_name.get(name, ())]
+    reached = set(todo)
+    while todo:
+        for token in defs[todo.pop()][2]:
+            for i in by_name.get(token, ()):
+                if i not in reached:
+                    reached.add(i)
+                    todo.append(i)
+    return sorted(
+        f"{module}:{name}"
+        for i, (module, name, _) in enumerate(defs)
+        if i not in reached
+    )
+
+
+def test_every_package_definition_is_reached():
+    """Code that only tests reach is code the engine never runs: a
+    top-level definition must be named by a registry entry, an
+    algorithm, a tool, a bench, an example or another reached
+    definition. Delete what this lists, with the tests that only
+    check it."""
+    unreached = _unreached_definitions()
+    assert not unreached, "unreached:\n" + "\n".join(unreached)

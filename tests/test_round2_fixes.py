@@ -29,31 +29,40 @@ from m3d_engine_spark.sources.writers import (
 
 
 # ------------------------------------------------------ atomic protocol
+class _Interrupt(BaseException):
+    """Stands in for KeyboardInterrupt/SystemExit without stopping pytest."""
+
+
 def test_atomic_writer_restores_on_induced_failure(spark, tmp_path, monkeypatch):
     """Make the tmp→final move throw after the backup ran; the old
-    partition content must be restored (OutputWriter.scala:230-261)."""
-    target = str(tmp_path / "t")
+    partition content must be restored (OutputWriter.scala:230-261),
+    for an error and for an interrupt alike, and the temp dir removed."""
     base = spark.createDataFrame(
         [(1, "old1", 1), (2, "old2", 2)], "k int, v string, year int"
     )
-    writer = AtomicWriter(spark, target, partition_columns=["year"])
-    writer.write(base, LoadMode.OVERWRITE_TABLE)
-
     update = spark.createDataFrame([(2, "new2", 2)], "k int, v string, year int")
     orig_rename = DFS.rename
+    for exc in (RuntimeError, _Interrupt):
+        root = tmp_path / exc.__name__
+        target = str(root / "t")
+        writer = AtomicWriter(spark, target, partition_columns=["year"])
+        writer.write(base, LoadMode.OVERWRITE_TABLE)
 
-    def flaky(self, src, dst):
-        if "__tmp_" in src:  # the move-into-place step
-            raise RuntimeError("injected rename failure")
-        return orig_rename(self, src, dst)
+        def flaky(self, src, dst):
+            if "__tmp_" in src:  # the move-into-place step
+                raise exc("injected rename failure")
+            return orig_rename(self, src, dst)
 
-    monkeypatch.setattr(DFS, "rename", flaky)
-    with pytest.raises(RuntimeError, match="injected"):
-        writer.write(update, LoadMode.OVERWRITE_PARTITIONS)
-    monkeypatch.setattr(DFS, "rename", orig_rename)
+        monkeypatch.setattr(DFS, "rename", flaky)
+        with pytest.raises(exc, match="injected"):
+            writer.write(update, LoadMode.OVERWRITE_PARTITIONS)
+        monkeypatch.setattr(DFS, "rename", orig_rename)
 
-    rows = {tuple(r) for r in spark.read.parquet(target).collect()}
-    assert rows == {(1, "old1", 1), (2, "old2", 2)}, "old data must survive the failed swap"
+        rows = {tuple(r) for r in spark.read.parquet(target).collect()}
+        assert rows == {(1, "old1", 1), (2, "old2", 2)}, (
+            f"old data must survive the failed swap ({exc.__name__})"
+        )
+        assert not [p for p in os.listdir(root) if "__tmp_" in p]
 
 
 def test_recreate_table_restore_with_saved_schema(spark, tmp_path):
@@ -375,47 +384,6 @@ def test_delta_lake_load_lifecycle_fallback(spark, tmp_path):
     part_dir = os.path.join(delta_dir, "year=2020")
     files = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
     assert len(files) == 1, f"compaction should leave 1 file, saw {files}"
-
-
-# -------------------------------- TableLocationReader / copy / template
-def test_read_table_location_sees_on_disk_schema(spark, tmp_path):
-    """On-disk schema ahead of the catalog must be visible
-    (util/InputReader.scala:80-88)."""
-    from m3d_engine_spark.sources.formats import read_table_location
-
-    loc = str(tmp_path / "tl")
-    spark.createDataFrame([(1, "x", 9.5)], "k int, v string, extra double").write.parquet(loc)
-    spark.sql("DROP TABLE IF EXISTS tl_t")
-    # catalog knows only (k, v); disk also has 'extra'
-    spark.sql(f"CREATE TABLE tl_t (k int, v string) USING PARQUET LOCATION '{loc}'")
-    assert "extra" not in spark.table("tl_t").columns
-    df = read_table_location(spark, "tl_t")
-    assert "extra" in df.columns
-    spark.sql("DROP TABLE tl_t")
-
-
-def test_copy_dir(spark, tmp_path):
-    from m3d_engine_spark.sources.dfs import DFS, copy_dir
-
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "f.txt").write_text("payload")
-    dst = tmp_path / "dst"
-    assert copy_dir(DFS(spark), str(src), str(dst))
-    assert (dst / "f.txt").read_text() == "payload"
-
-
-def test_algorithm_template_date_rule():
-    import datetime
-
-    from m3d_engine_spark.operators.template import resolve_date_rule
-
-    today = datetime.date(2026, 8, 13)
-    assert resolve_date_rule("today", today) == "2026-08-13"
-    assert resolve_date_rule("yesterday", today) == "2026-08-12"
-    assert resolve_date_rule("2020-02-29", today) == "2020-02-29"
-    with pytest.raises(ValueError):
-        resolve_date_rule("not-a-date", today)
 
 
 # ----------------------------------------------------- reader modes

@@ -746,33 +746,6 @@ def test_embedding_covariance_matches_numpy(spark):
     assert rerun == out
 
 
-def test_pca_project_finds_dominant_direction(spark):
-    """Data stretched 10× along a known axis: PC1 aligns with it
-    (|corr| ≈ 1 between pc[0] and that coordinate), and projection
-    variance is non-increasing across components."""
-    import numpy as np
-    from m3d_engine_spark.operators.pca import pca_project
-
-    rng = np.random.RandomState(11)
-    base = rng.randn(200, 4)
-    base[:, 2] *= 10.0  # dominant direction = e2
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(base)],
-        "id long, v array<float>",
-    )
-    rows = pca_project(df, "id", "v", k=3).collect()
-    P = np.array([r.pc for r in sorted(rows, key=lambda r: r.id)])
-    x2 = np.array(sorted(zip(range(200), base[:, 2])))[:, 1]
-    corr = np.corrcoef(P[:, 0], x2)[0, 1]
-    assert abs(corr) > 0.99, corr
-    var = P.var(axis=0)
-    assert var[0] >= var[1] >= var[2]
-    # scores are centered: (x−μ)·w, not x·w — each component's mean
-    # projection must be ~0 (offset-invariant checks above can't see
-    # the μ·w shift that breaks whitening / direction-removal uses)
-    assert np.abs(P.mean(axis=0)).max() < 1e-4, P.mean(axis=0)
-
-
 def test_interval_overlap_join_exactly_once(spark):
     """Bucketed overlap join: every truly-overlapping same-key pair
     appears EXACTLY once regardless of how many buckets the pair
@@ -828,7 +801,7 @@ def test_bpe_train_classic_corpus(spark):
     """Sennrich's hugging-face-docs corpus shape: 'low'×5 'lower'×2
     'newest'×6 'widest'×3. First merges must follow pair frequencies:
     (e,s)=9 wins round 1, then (es,t)=9; determinism pinned by rerun."""
-    from m3d_engine_spark.operators.tokenizer import bpe_segment, bpe_train
+    from m3d_engine_spark.operators.tokenizer import bpe_train
 
     text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
     df = spark.createDataFrame([(text,)], ["text"])
@@ -837,26 +810,24 @@ def test_bpe_train_classic_corpus(spark):
     assert merges[1] == ("es", "t")  # es followed by t in all 9
     assert merges == bpe_train(df, "text", num_merges=4)
 
-    seg = bpe_segment(df, "text", "text", merges)
-    pieces = {r.word: r.pieces for r in seg.collect()}
-    assert pieces["newest"][-1] == "est" or "est" in pieces["newest"]
-    # fertility never increases with more merges
-    seg0 = bpe_segment(df, "text", "text", [])
-    n0 = sum(len(r.pieces) for r in seg0.collect())
-    n4 = sum(len(r.pieces) for r in seg.collect())
-    assert n4 < n0
-
 
 def test_bpe_merge_application_greedy_nonoverlap(spark):
     """Greedy left-to-right: 'aaaa' under merge (a,a) → [aa, aa];
     'aaa' → [aa, a]; early-stop when min_count unreachable."""
-    from m3d_engine_spark.operators.tokenizer import bpe_segment, bpe_train
+    from m3d_engine_spark.operators.tokenizer import _apply_merge, bpe_train
 
-    df = spark.createDataFrame([("aaaa aaa",)], ["text"])
-    seg = bpe_segment(df, "text", "text", [("a", "a")])
-    got = {r.word: r.pieces for r in seg.collect()}
+    syms = spark.createDataFrame(
+        [(list("aaaa"),), (list("aaa"),)], "syms array<string>"
+    )
+    got = {
+        "".join(r.merged): r.merged
+        for r in syms.select(
+            _apply_merge(F.col("syms"), "a", "a").alias("merged")
+        ).collect()
+    }
     assert got["aaaa"] == ["aa", "aa"]
     assert got["aaa"] == ["aa", "a"]
+    df = spark.createDataFrame([("aaaa aaa",)], ["text"])
     assert bpe_train(df, "text", num_merges=5, min_count=100) == []
 
 
@@ -1194,35 +1165,6 @@ def test_fastss_pairs_complete_and_exact(spark):
     assert (1, 2) not in got     # bat vs cart is dist 2
 
 
-def test_erase_keys_atomic_idempotent(spark, tmp_path):
-    """Erasure removes exactly the requested keys, preserves every
-    other row byte-for-byte, reports a correct audit, and re-running
-    the same request is a no-op with n_before = 0."""
-    from m3d_engine_spark.operators.erasure import erase_keys
-
-    loc = str(tmp_path / "events_table")
-    rows = [(i, i % 10, f"payload-{i}") for i in range(200)]
-    spark.createDataFrame(rows, "id long, user long, payload string").write.parquet(loc)
-    keys = spark.createDataFrame([(3,), (7,), (99,)], ["user"])
-
-    audit = {r.key: (r.n_before, r.n_after) for r in
-             erase_keys(spark, loc, "user", keys).collect()}
-    assert audit["3"] == (20, 0) and audit["7"] == (20, 0)
-    assert audit["99"] == (0, 0)  # unknown key: clean no-op
-    left = spark.read.parquet(loc)
-    assert left.count() == 160
-    assert left.filter(F.col("user").isin(3, 7)).count() == 0
-    kept = {(r.id, r.user, r.payload) for r in left.collect()}
-    want = {(i, i % 10, f"payload-{i}") for i in range(200)
-            if i % 10 not in (3, 7)}
-    assert kept == want
-    # idempotent: second run reports nothing to erase
-    again = {r.key: (r.n_before, r.n_after) for r in
-             erase_keys(spark, loc, "user", keys).collect()}
-    assert all(v == (0, 0) for v in again.values())
-    assert spark.read.parquet(loc).count() == 160
-
-
 def test_feature_hash_stability_and_sign_cancellation(spark):
     """The hashed vector of a document is identical regardless of
     corpus contents or partitioning (the trick's deployability
@@ -1450,29 +1392,6 @@ def test_ndcg_and_recall_hand_cases(spark):
     assert pr[1].n_exact == 2 and pr[1].n_hit == 1 and pr[1].recall == 0.5
 
 
-def test_two_level_hrw_stability_and_independence(spark):
-    """Two-level HRW: growing the within-group width moves ~1/(W+1)
-    of keys and NEVER changes any key's group; flat shard ids are
-    dense in [0, G·W); deterministic."""
-    from m3d_engine_spark.operators.shuffle import (
-        rendezvous_assign_two_level,
-    )
-
-    df = spark.createDataFrame([(i,) for i in range(3000)], ["k"])
-    a = rendezvous_assign_two_level(df, "k", 4, 4)
-    b = rendezvous_assign_two_level(df, "k", 4, 5)
-    ja = {r.k: (r.group, r.subshard, r.shard) for r in a.collect()}
-    jb = {r.k: (r.group, r.subshard) for r in b.collect()}
-    assert all(ja[k][0] == jb[k][0] for k in ja)  # groups never move
-    moved = sum(ja[k][1] != jb[k][1] for k in ja) / len(ja)
-    assert 0.13 < moved < 0.28, moved             # ~1/5 ± noise
-    shards = {v[2] for v in ja.values()}
-    assert shards <= set(range(16)) and len(shards) == 16
-    rerun = {r.k: r.shard for r in
-             rendezvous_assign_two_level(df.repartition(5), "k", 4, 4).collect()}
-    assert rerun == {k: v[2] for k, v in ja.items()}
-
-
 def test_top_paths_order_truncation_census(spark):
     """Paths are built in event order regardless of input order,
     truncate at max_len, and the census counts identical journeys."""
@@ -1519,8 +1438,8 @@ def test_unigram_lm_train_learns_pieces(spark):
     pieces, keep the single-char alphabet as fallback, segment via
     the trained scores, and be run-over-run deterministic."""
     from m3d_engine_spark.operators.tokenizer import (
+        _viterbi_segmenter,
         unigram_lm_train,
-        unigram_segment,
     )
 
     df = spark.createDataFrame(
@@ -1535,12 +1454,11 @@ def test_unigram_lm_train_learns_pieces(spark):
     assert max(scores, key=scores.get) == "abab"
     # alphabet fallback chars survive training
     assert {"z", "q", "a", "b"} <= set(scores)
-    seg = unigram_segment(df, "doc_id", "text", pieces, max_piece_len=4)
-    out = {(r.doc_id, r.word): list(r.pieces) for r in seg.collect()}
-    assert out[(1, "abab")] == ["abab"]
-    assert out[(2, "xy")] == ["xy"]
+    seg = _viterbi_segmenter(scores, max_piece_len=4, floor=-23.0)
+    assert seg("abab") == ["abab"]
+    assert seg("xy") == ["xy"]
     # below-min-count word falls back to the alphabet
-    assert out[(3, "zq")] == ["z", "q"]
+    assert seg("zq") == ["z", "q"]
     # determinism: identical scores on a re-train
     pieces2, _ = unigram_lm_train(
         df, "text", n_iters=2, max_piece_len=4, min_count=2, seed_size=64
@@ -1666,70 +1584,6 @@ def test_kaplan_meier_hand_computed(spark, tmp_path):
     }
 
 
-def test_unigram_lm_train_soft_em(spark):
-    """Soft-EM (forward-backward) trainer: promotes the dominant
-    multi-char piece like hard-EM, keeps the alphabet fallback,
-    spreads posterior mass across AMBIGUOUS parses (the thing Viterbi
-    cannot do: with 'abab' both the ab-ab parse and the abab parse
-    carry mass, so 'ab' retains probability even where hard-EM's best
-    parse is the whole word), and retrains bit-identically under
-    repartitioning (the decimal-lattice aggregation pin)."""
-    from m3d_engine_spark.operators.tokenizer import (
-        unigram_lm_train,
-        unigram_lm_train_soft,
-        unigram_segment,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "abab abab abab xy"), (2, "abab ab xy xy"), (3, "zq abab")],
-        "doc_id long, text string",
-    )
-    pieces, _ = unigram_lm_train_soft(
-        df, "text", n_iters=2, max_piece_len=4, min_count=2, seed_size=64
-    )
-    scores = {r.piece: r.logp for r in pieces.collect()}
-    assert max(scores, key=scores.get) == "abab"
-    assert {"z", "q", "a", "b"} <= set(scores)
-    # posterior mass keeps 'ab' materially probable: hard-EM gives it
-    # only the one standalone occurrence, soft-EM also credits the
-    # ab-ab parses of every 'abab'
-    hard, _ = unigram_lm_train(
-        df, "text", n_iters=2, max_piece_len=4, min_count=2, seed_size=64
-    )
-    hard_scores = {r.piece: r.logp for r in hard.collect()}
-    assert scores["ab"] > hard_scores["ab"]
-    # the trained scores still drive the shared Viterbi segmenter
-    seg = unigram_segment(df, "doc_id", "text", pieces, max_piece_len=4)
-    out = {(r.doc_id, r.word): list(r.pieces) for r in seg.collect()}
-    assert out[(1, "abab")] == ["abab"]
-    assert out[(3, "zq")] == ["z", "q"]
-    # determinism: identical under repartitioning
-    pieces2, _ = unigram_lm_train_soft(
-        df.repartition(7), "text",
-        n_iters=2, max_piece_len=4, min_count=2, seed_size=64,
-    )
-    assert scores == {r.piece: r.logp for r in pieces2.collect()}
-
-
-def test_fb_expectation_kernel_exact_lattice(spark):
-    """Hand-checkable forward-backward: word 'ab' with P(a)=P(b)=p1,
-    P(ab)=p2 has exactly two parses; expected counts must match the
-    closed form e(ab)=P2/(P1+P2), e(a)=e(b)=P1/(P1+P2) where
-    P1=p1², P2=p2."""
-    import math
-
-    from m3d_engine_spark.operators.tokenizer import _fb_expectation_kernel
-
-    lp = {"a": math.log(0.3), "b": math.log(0.3), "ab": math.log(0.4)}
-    kern = _fb_expectation_kernel(lp, 2, -23.0)
-    got = dict(kern("ab"))
-    p1, p2 = 0.3 * 0.3, 0.4
-    z = p1 + p2
-    assert abs(got["ab"] - p2 / z) < 1e-9
-    assert abs(got["a"] - p1 / z) < 1e-9
-    assert abs(got["b"] - p1 / z) < 1e-9
-
-
 def test_grid_quantile_scores_match_ntile_and_group_ties(spark):
     """The sort-free ntile swap (rfm_segments' 10⁹-customer path):
     on clean data (n divisible by q, distinct values) the broadcast
@@ -1805,28 +1659,6 @@ def test_grid_quantile_scores_null_rows_follow_ntile_ordering(spark):
     assert out[100] == (1, 5) and out[101] == (1, 5)
     # non-null rows unaffected: best descending score goes to the max
     assert out[99][1] == 1 and out[0][0] == 1
-
-
-def test_unigram_lm_train_soft_alphabet_survives_zero_posterior(spark):
-    """A character whose every occurrence sits inside a word dominated
-    by a whole-word piece gets posterior mass below the 1e-9 rounding
-    lattice; the single-char usage floor must be applied as max(u, 1),
-    not only as an absent-key default, or the char is starved out of
-    the vocabulary and the alphabet-fallback invariant breaks."""
-    from m3d_engine_spark.operators.tokenizer import unigram_lm_train_soft
-
-    # 'cd' appears many times; chars c and d appear ONLY inside it, so
-    # after iteration 1 the whole-word piece dominates and the char
-    # arcs' posteriors underflow the lattice.
-    df = spark.createDataFrame(
-        [(1, "cd cd cd cd cd cd cd cd"), (2, "cd cd cd cd cd cd cd cd")],
-        "doc_id long, text string",
-    )
-    pieces, _ = unigram_lm_train_soft(
-        df, "text", n_iters=3, max_piece_len=2, min_count=2, seed_size=64
-    )
-    got = {r.piece for r in pieces.collect()}
-    assert {"c", "d", "cd"} <= got, got
 
 
 def test_feature_hash_emits_row_for_empty_documents(spark):

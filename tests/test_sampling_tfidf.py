@@ -166,65 +166,6 @@ def test_pack_sequences_bins_respect_budget_relaxation(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
-class TestGreedyPacking:
-    def _docs(self, spark, toks):
-        return spark.createDataFrame(
-            [(i, "g", t) for i, t in enumerate(toks)], ["doc_id", "grp", "nt"]
-        )
-
-    def test_no_bin_exceeds_budget_unless_single_doc_does(self, spark):
-        from m3d_engine_spark.operators.sampling import pack_sequences_greedy
-
-        toks = [37, 512, 64, 800, 120, 90, 1500, 3, 3, 3, 700, 256, 255, 1]
-        out = pack_sequences_greedy(
-            self._docs(spark, toks), ["grp"], "doc_id", F.col("nt"),
-            budget=1000, shard_budget=2000,
-        )
-        sums = (
-            out.groupBy("grp", "shard", "bin")
-            .agg(F.sum("n_tokens").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        for r in sums:
-            assert r.s <= 1000 or r.n == 1, r  # overflow only as a singleton
-        # every doc packed exactly once
-        assert out.count() == len(toks)
-
-    def test_refines_window_relaxation_on_boundary_free_input(self, spark):
-        """Docs of exactly budget/2 tokens: no straddle is possible, so
-        greedy bins must partition docs identically to the window form
-        (same pairs-per-bin structure, 2 docs per bin)."""
-        from m3d_engine_spark.operators.sampling import (
-            pack_sequences, pack_sequences_greedy,
-        )
-
-        docs = self._docs(spark, [500] * 12)
-        greedy = pack_sequences_greedy(
-            docs, ["grp"], "doc_id", F.col("nt"),
-            budget=1000, shard_budget=1000,
-        )
-        window = pack_sequences(docs, ["grp"], "doc_id", F.col("nt"), 1000)
-        # same deterministic order → shard i holds the same 2 docs the
-        # window put in bin i, and greedy packs them into one local bin
-        g = {r.doc_id: (r.shard, r.bin) for r in greedy.collect()}
-        w = {r.doc_id: r.bin for r in window.collect()}
-        assert all(g[d][0] == w[d] and g[d][1] == 0 for d in w)
-
-    def test_deterministic_across_partitionings(self, spark):
-        from m3d_engine_spark.operators.sampling import pack_sequences_greedy
-
-        toks = list(range(1, 60))
-        a = pack_sequences_greedy(
-            self._docs(spark, toks), ["grp"], "doc_id", F.col("nt"),
-            budget=100, shard_budget=300,
-        )
-        b = pack_sequences_greedy(
-            self._docs(spark, toks).repartition(7), ["grp"], "doc_id",
-            F.col("nt"), budget=100, shard_budget=300,
-        )
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_weighted_sample_law_and_exclusions(spark):
     """Pins the uniform-race law: over many independent {w, 3w} pairs,
     the heavy row takes top-1 with p = P(u_b/3 < u_a) = 5/6 (NOT the

@@ -177,50 +177,6 @@ def test_group_top_terms_values(spark):
     assert out == {("a", "x"): (4, 1), ("a", "y"): (3, 2), ("b", "w"): (2, 1)}
 
 
-def test_streaming_rolling_zscore_matches_batch(spark, tmp_path):
-    """The stateful streaming kernel must produce bit-identical scores
-    to the batch window operator on in-order input."""
-    from m3d_engine_spark.streaming.pipeline import streaming_rolling_zscore
-
-    rows = []
-    eid = 0
-    for u in range(4):
-        for k in range(30):
-            val = 10.0 + (k % 5) + (25.0 if k == 27 else 0.0)
-            rows.append((eid, _ts(u + k * 2), u, val))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, value double"
-    )
-    src = tmp_path / "anom_src"
-    df.coalesce(1).write.parquet(str(src))
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, value double"
-    ).parquet(str(src))
-    q = (
-        streaming_rolling_zscore(stream.select("user_id", "ts", "value"))
-        .writeStream.format("memory")
-        .queryName("anom_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "anom_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180)
-    got = {
-        (r.user_id, r.ts, r.z, r.is_anomaly)
-        for r in spark.sql("SELECT * FROM anom_out").collect()
-    }
-    want = {
-        (r.user_id, r.ts, r.z, r.is_anomaly)
-        for r in rolling_zscore_flags(
-            df, "user_id", ["ts", "event_id"], "value"
-        ).collect()
-    }
-    assert got == want and len(want) == 120
-    assert any(f for (_, _, _, f) in want), "spike must flag"
-
-
 def test_ccnet_buckets_terciles_and_ties(spark):
     from m3d_engine_spark.operators.curation import ccnet_buckets
 
@@ -378,111 +334,6 @@ def test_remove_repeated_spans_semantics(spark):
     )
     d = {r.doc_id: r for r in remove_repeated_spans(dup, "doc_id", "text").collect()}
     assert d[1].n_removed == 0 and d[2].clean_text == "" and d[2].n_removed == 8
-
-
-def test_streaming_rolling_median_matches_batch(spark, tmp_path):
-    """The stateful trailing-median kernel must match the batch window
-    operator exactly on in-order input, NULL rows included (they hold
-    a frame slot but never enter the buffer)."""
-    from m3d_engine_spark.operators.anomaly import rolling_median
-    from m3d_engine_spark.streaming.pipeline import streaming_rolling_median
-
-    rows = []
-    eid = 0
-    for u in range(3):
-        for k in range(25):
-            val = None if k % 6 == 5 else 10.0 + ((k * 7 + u) % 9) / 4.0
-            rows.append((eid, _ts(u + k * 3), u, val))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, value double"
-    )
-    src = tmp_path / "med_src"
-    df.coalesce(1).write.parquet(str(src))
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, value double"
-    ).parquet(str(src))
-    q = (
-        streaming_rolling_median(
-            stream.select("user_id", "ts", "value"), window_rows=5
-        )
-        .writeStream.format("memory")
-        .queryName("med_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "med_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180)
-    got = {
-        (r.user_id, r.ts, r.value, r.rolling_median)
-        for r in spark.sql("SELECT * FROM med_out").collect()
-    }
-    want = {
-        (r.user_id, r.ts, r.value, r.rolling_median)
-        for r in rolling_median(
-            df, ["user_id"], ["ts", "event_id"], "value", window_rows=5
-        ).collect()
-    }
-    assert got == want and len(want) == 75
-
-
-def test_streaming_gap_fill_matches_batch(spark, tmp_path):
-    """Interior gap rows emitted on anchor arrival must carry the
-    bit-identical fill of the batch interpolator; leading NULLs emit
-    immediately with a NULL fill; a closing present row per key means
-    nothing stays pending, so the sets match exactly."""
-    from m3d_engine_spark.functions.epoch import epoch_us_of
-    from m3d_engine_spark.operators.temporal import linear_interpolate
-    from m3d_engine_spark.streaming.pipeline import streaming_gap_fill
-
-    rows = []
-    eid = 0
-    for u in range(3):
-        for k in range(20):
-            # leading null (k=0), interior nulls, present final row
-            val = (
-                None
-                if (k == 0 or (0 < k < 19 and k % 3 == 0))
-                else 5.0 + ((k * 11 + u) % 13) / 8.0
-            )
-            rows.append((eid, _ts(u + k * 5), u, val))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, value double"
-    )
-    src = tmp_path / "gap_src"
-    df.coalesce(1).write.parquet(str(src))
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, value double"
-    ).parquet(str(src))
-    q = (
-        streaming_gap_fill(stream)
-        .writeStream.format("memory")
-        .queryName("gap_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "gap_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180)
-    got = {
-        (r.user_id, r.ts_us, r.event_id, r.value, r.value_filled,
-         r.interpolated)
-        for r in spark.sql("SELECT * FROM gap_out").collect()
-    }
-    batch_src = df.select(
-        "event_id", "user_id", epoch_us_of(df, "ts").alias("ts_us"), "value"
-    )
-    want = {
-        (r.user_id, r.ts_us, r.event_id, r.value, r.value_filled,
-         int(r.interpolated))
-        for r in linear_interpolate(
-            batch_src, ["user_id"], "ts_us", "value", tie_cols=["event_id"]
-        ).collect()
-    }
-    assert got == want and len(want) == 60
-    assert sum(1 for t in want if t[5] == 1) > 0, "must interpolate"
 
 
 def test_awkward_column_names_survive_sql_string_operators(spark):

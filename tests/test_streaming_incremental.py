@@ -143,274 +143,3 @@ def test_streaming_incremental_dedup_grows_corpus(spark, tmp_path):
         "doc_id", "text", threshold=0.5,
     )
     assert {r.doc_id for r in seq2.collect()} == {21}
-
-
-def test_streaming_transition_census_equals_batch(spark, tmp_path):
-    """Streaming census over time-chunked files (one file per trigger)
-    must fold to EXACTLY the batch transition_matrix — including the
-    cross-batch transitions the carried per-key state exists for, and
-    idempotently under batch replay."""
-    from m3d_engine_spark.operators.markov import transition_matrix
-    from m3d_engine_spark.streaming.pipeline import (
-        read_transition_census,
-        streaming_transition_census,
-        transition_census_batch,
-    )
-
-    landing = str(tmp_path / "tc_landing")
-    census = str(tmp_path / "tc_census")
-    state = str(tmp_path / "tc_state")
-    ckpt = str(tmp_path / "tc_ckpt")
-
-    rows = []
-    eid = 0
-    for u in range(6):
-        for t in range(9):
-            rows.append((u, t, eid, "abcd"[(u + t) % 4]))
-            eid += 1
-    schema = "u long, t long, eid long, s string"
-    # chunk by TIME so each user's events stay ordered across batches
-    full = spark.createDataFrame(rows, schema)
-    for chunk, (lo, hi) in enumerate([(0, 3), (3, 6), (6, 9)]):
-        full.filter((F.col("t") >= lo) & (F.col("t") < hi)).coalesce(
-            1
-        ).write.mode("append").parquet(landing)
-        q = streaming_transition_census(
-            spark.readStream.schema(schema).option(
-                "maxFilesPerTrigger", "1"
-            ).parquet(landing),
-            census, state, ckpt, "u", "t", "eid", "s",
-        )
-        assert q.awaitTermination(180)
-
-    got = {
-        (r.from_state, r.to_state): (r.n, r.p)
-        for r in read_transition_census(spark, census).collect()
-    }
-    want = {
-        (r.from_state, r.to_state): (r.n, r.p)
-        for r in transition_matrix(full, ["u"], "t", "s",
-                                   tie_cols=["eid"]).collect()
-    }
-    assert got == want and got  # cross-batch pairs present and exact
-
-    # replaying a batch overwrites its own partitions (exactly-once)
-    replay = spark.read.parquet(f"{landing}")
-    b1 = replay.filter((F.col("t") >= 3) & (F.col("t") < 6))
-    transition_census_batch(b1, 1, census, state, "u", "t", "eid", "s")
-    again = {
-        (r.from_state, r.to_state): (r.n, r.p)
-        for r in read_transition_census(spark, census).collect()
-    }
-    assert again == want
-
-
-@pytest.mark.slow
-def test_streaming_scd2_equals_batch(spark, tmp_path):
-    """Streaming SCD2 over time-chunked files must assemble to EXACTLY
-    the batch scd2_history — cross-batch condensation included (a key
-    repeating its carried state across a batch boundary must NOT open
-    a new version), idempotently under batch replay."""
-    from m3d_engine_spark.operators.temporal import scd2_history
-    from m3d_engine_spark.streaming.pipeline import (
-        read_scd2_dimension,
-        scd2_batch,
-        streaming_scd2,
-    )
-
-    landing = str(tmp_path / "scd_landing")
-    changes = str(tmp_path / "scd_changes")
-    ckpt = str(tmp_path / "scd_ckpt")
-
-    rows = []
-    eid = 0
-    for u in range(5):
-        for t in range(9):
-            # long runs of equal states + boundary-straddling repeats
-            rows.append((u, t, eid, "xyz"[(u + t // 2) % 3]))
-            eid += 1
-    schema = "u long, t long, eid long, s string"
-    full = spark.createDataFrame(rows, schema)
-    for lo, hi in [(0, 3), (3, 6), (6, 9)]:
-        full.filter((F.col("t") >= lo) & (F.col("t") < hi)).coalesce(
-            1
-        ).write.mode("append").parquet(landing)
-        q = streaming_scd2(
-            spark.readStream.schema(schema).option(
-                "maxFilesPerTrigger", "1"
-            ).parquet(landing),
-            changes, ckpt, "u", "t", "eid", "s",
-        )
-        assert q.awaitTermination(180)
-
-    got = sorted(
-        tuple(r)
-        for r in read_scd2_dimension(spark, changes, "u", "t", "eid", "s")
-        .collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in scd2_history(full, ["u"], ["t", "eid"], ["s"], ts_col="t")
-        .select("u", "s", "valid_from", "valid_to", "version", "is_current")
-        .collect()
-    )
-    assert got == want and got
-    # versions actually condensed: far fewer rows than events
-    assert len(got) < len(rows)
-
-    # replay of a middle batch rewrites only its own partition
-    replay = spark.read.parquet(landing)
-    b1 = replay.filter((F.col("t") >= 3) & (F.col("t") < 6))
-    scd2_batch(b1, 1, changes, "u", "t", "eid", "s")
-    again = sorted(
-        tuple(r)
-        for r in read_scd2_dimension(spark, changes, "u", "t", "eid", "s")
-        .collect()
-    )
-    assert again == want
-
-
-@pytest.mark.slow
-def test_streaming_agg_maintenance_with_retractions(spark, tmp_path):
-    """CDC stream with inserts, updates (retract+insert pairs) and
-    deletes over 3 batches folds to EXACTLY the batch aggregate of
-    the surviving rows; fully-retracted keys vanish; batch replay is
-    idempotent."""
-    from m3d_engine_spark.streaming.pipeline import (
-        agg_maintenance_batch,
-        read_maintained_agg,
-        streaming_agg_maintenance,
-    )
-
-    landing = str(tmp_path / "cdc_landing")
-    deltas = str(tmp_path / "cdc_deltas")
-    ckpt = str(tmp_path / "cdc_ckpt")
-    schema = "b long, k string, v double, op int"
-
-    batches = [
-        # batch 0: inserts
-        [(0, "a", 10.0, 1), (0, "a", 5.0, 1), (0, "b", 3.0, 1),
-         (0, "c", 7.0, 1)],
-        # batch 1: update a's 5.0 -> 6.0 (retract + insert), delete c
-        [(1, "a", 5.0, -1), (1, "a", 6.0, 1), (1, "c", 7.0, -1)],
-        # batch 2: new key d, delete b entirely
-        [(2, "d", 1.5, 1), (2, "b", 3.0, -1)],
-    ]
-    for rows in batches:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        q = streaming_agg_maintenance(
-            spark.readStream.schema(schema).option(
-                "maxFilesPerTrigger", "1"
-            ).parquet(landing),
-            deltas, ckpt, ["k"], "v", "op",
-        )
-        assert q.awaitTermination(180)
-
-    got = {r.k: (r.sum_value, r.n) for r in
-           read_maintained_agg(spark, deltas, ["k"]).collect()}
-    assert got == {"a": (16.0, 2), "d": (1.5, 1)}  # b, c fully gone
-
-    # replaying batch 1 rewrites only its own partition
-    b1 = spark.createDataFrame(batches[1], schema)
-    agg_maintenance_batch(b1, 1, deltas, ["k"], "v", "op")
-    again = {r.k: (r.sum_value, r.n) for r in
-             read_maintained_agg(spark, deltas, ["k"]).collect()}
-    assert again == got
-
-
-def test_streaming_removal_attribution_equals_batch(spark, tmp_path):
-    """Streaming Markov removal-effect attribution over time-chunked
-    files must fold to EXACTLY the batch operator — journeys that
-    convert in an early batch contribute no later transitions, the
-    cross-batch carried event closes the pair the per-batch window
-    would miss, starts count each key once, and the shared
-    integer-lattice solve makes the equality bit-exact. Replaying the
-    last batch changes nothing (idempotent overwrite-by-batch)."""
-    from m3d_engine_spark.operators.markov import removal_attribution
-    from m3d_engine_spark.streaming.pipeline import (
-        read_removal_attribution,
-        removal_attribution_batch,
-        streaming_removal_attribution,
-    )
-
-    landing = str(tmp_path / "ra_landing")
-    census = str(tmp_path / "ra_census")
-    state = str(tmp_path / "ra_state")
-    ckpt = str(tmp_path / "ra_ckpt")
-
-    rows = []
-    eid = 0
-    # user journeys with conversions at varying depths; 'buy' converts
-    paths = [
-        ["ad", "email", "buy", "ad", "email"],   # converts batch 1
-        ["email", "ad", "ad", "buy", "email"],   # converts batch 2
-        ["ad", "ad", "email", "ad", "ad"],       # never converts
-        ["email", "buy", "email", "buy", "ad"],  # converts batch 0
-        ["ad", "email", "ad", "email", "buy"],   # converts batch 2
-        ["buy", "ad", "ad", "email", "email"],   # converts at start
-    ]
-    for u, p in enumerate(paths):
-        for t, s in enumerate(p):
-            rows.append((u, t, eid, s))
-            eid += 1
-    schema = "u long, t long, eid long, s string"
-    full = spark.createDataFrame(rows, schema)
-    for lo, hi in [(0, 2), (2, 4), (4, 5)]:
-        full.filter((F.col("t") >= lo) & (F.col("t") < hi)).coalesce(
-            1
-        ).write.mode("append").parquet(landing)
-        q = streaming_removal_attribution(
-            spark.readStream.schema(schema).option(
-                "maxFilesPerTrigger", "1"
-            ).parquet(landing),
-            census, state, ckpt, "u", "t", "eid", "s", "buy",
-        )
-        assert q.awaitTermination(180)
-
-    got = {
-        r.channel: (r.base_cvr, r.removed_cvr, r.removal_effect)
-        for r in read_removal_attribution(spark, census, "buy").collect()
-    }
-    want = {
-        r.channel: (r.base_cvr, r.removed_cvr, r.removal_effect)
-        for r in removal_attribution(
-            full, ["u"], "t", "s", "buy", tie_cols=["eid"]
-        ).collect()
-    }
-    assert got == want and got
-    # replay the final batch directly: overwrite-by-batch idempotency
-    last = full.filter((F.col("t") >= 4) & (F.col("t") < 5))
-    removal_attribution_batch(
-        last, 2, census, state, "u", "t", "eid", "s", "buy"
-    )
-    again = {
-        r.channel: (r.base_cvr, r.removed_cvr, r.removal_effect)
-        for r in read_removal_attribution(spark, census, "buy").collect()
-    }
-    assert again == want
-
-
-def test_read_prior_state_contract(spark, tmp_path):
-    """The carried-state read maps exactly two conditions to
-    no-prior-state — a missing path (true first batch) and an
-    existing dir with zero visible data files (crashed first-batch
-    write: only _temporary remnants; the retry must proceed, not wedge
-    behind an unreadable dir) — and propagates everything else."""
-    from m3d_engine_spark.streaming.pipeline import _read_prior_state
-
-    missing = str(tmp_path / "never_written")
-    assert _read_prior_state(spark, missing) is None
-
-    # crashed-first-batch remnant: dir exists, no visible data files
-    remnant = tmp_path / "state" / "batch_id=0" / "_temporary"
-    remnant.mkdir(parents=True)
-    assert _read_prior_state(spark, str(tmp_path / "state")) is None
-
-    # a committed batch makes the read succeed even with remnants
-    spark.createDataFrame([(1, 7)], "k long, v long").write.parquet(
-        str(tmp_path / "state" / "batch_id=1")
-    )
-    got = _read_prior_state(spark, str(tmp_path / "state"))
-    assert got is not None and got.count() == 1
