@@ -23,7 +23,10 @@ oracle hash-match:
   cast to INT explicitly on both sides (DuckDB ``year()``/``len()``
   return BIGINT, Spark return INT).
 * Rankings order by ``(round(score,4) DESC, id ASC)`` — a total order.
-* All hashes are md5-of-string (identical bytes in both engines).
+* Every base hash is md5-of-string (identical bytes in both engines);
+  MinHash derives its hash functions from one md5 per shingle by the
+  engine's own affine coefficients (``_sql_minhash_bands``), BIGINT
+  arithmetic that is exact in both.
 """
 
 from __future__ import annotations
@@ -37,7 +40,9 @@ from m3d_engine_spark.functions import text as T
 from m3d_engine_spark.functions.dates import with_date_components
 from m3d_engine_spark.functions.epoch import epoch_us_of
 from m3d_engine_spark.operators.dedup import (
+    MINHASH_PRIME,
     exact_duplicates,
+    minhash_coeffs,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
     simhash64_hamming_pairs,
@@ -1267,25 +1272,38 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_candidates(docs, "doc_id", "text", num_hashes=16, bands=8)
 
 
-def _sql_minhash_lsh() -> str:
+def _sql_minhash_bands(src: str, prefix: str = "") -> str:
+    """DuckDB twin of dedup.py::lsh_bands (16 hashes, 8 bands) over the
+    relation ``src``, as the CTEs ``{prefix}toks``, ``{prefix}sh``
+    (distinct shingles), ``{prefix}sigs`` (BIGINT[16]) and
+    ``{prefix}bands``: one md5 per shingle folded to x, then the
+    engine's own ``minhash_coeffs`` affine maps, so the two cannot
+    drift apart."""
+    p = MINHASH_PRIME
     hashes = ", ".join(
-        f"list_aggregate(list_transform(s, x -> md5('{j}|' || x)), 'min')"
-        for j in range(16)
+        f"list_min(list_transform(xs, x -> ({a} * x + {b}) % {p}))"
+        for a, b in minhash_coeffs(16)
     )
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band, md5(sig[{2 * b + 1}] || '|' || sig[{2 * b + 2}]) AS band_key FROM sigs"
-        for b in range(8)
-    )
+    return f"""{prefix}toks AS (
+  SELECT doc_id, {_SQL_TOKS} AS t FROM {src}
+), {prefix}sh AS (
+  SELECT doc_id, {_SQL_SHINGLES} AS s FROM {prefix}toks
+), {prefix}sigs AS (
+  SELECT doc_id, [{hashes}] AS sig
+  FROM (SELECT doc_id, list_transform(s, x ->
+          CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT) % {p}) AS xs
+        FROM {prefix}sh)
+), {prefix}bands AS (
+  SELECT doc_id, CAST(b AS INTEGER) AS band,
+         md5(CAST(sig[2 * b + 1] AS VARCHAR) || '|' ||
+             CAST(sig[2 * b + 2] AS VARCHAR)) AS band_key
+  FROM {prefix}sigs, range(0, 8) r(b)
+)"""
+
+
+def _sql_minhash_lsh() -> str:
     return f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_TOKS} AS t FROM documents
-), sh AS (
-  SELECT doc_id, {_SQL_SHINGLES} AS s FROM toks
-), sigs AS (
-  SELECT doc_id, [{hashes}] AS sig FROM sh
-), bands AS (
-{band_rows}
-)
+WITH {_sql_minhash_bands("documents")}
 SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
 FROM bands l JOIN bands r
   ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
@@ -1355,24 +1373,8 @@ FROM dialed
 
 
 def _sql_dedup_advisor() -> str:
-    hashes = ", ".join(
-        f"list_aggregate(list_transform(s, x -> md5('{j}|' || x)), 'min')"
-        for j in range(16)
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band, md5(sig[{2 * b + 1}] || '|' || sig[{2 * b + 2}]) AS band_key FROM sigs"
-        for b in range(8)
-    )
     return f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_TOKS} AS t FROM documents
-), sh AS (
-  SELECT doc_id, {_SQL_SHINGLES} AS s FROM toks
-), sigs AS (
-  SELECT doc_id, [{hashes}] AS sig FROM sh
-), bands AS (
-{band_rows}
-), counts AS (
+WITH {_sql_minhash_bands("documents")}, counts AS (
   SELECT band, band_key, CAST(COUNT(*) AS BIGINT) AS k
   FROM bands GROUP BY band, band_key
 ),{_sql_dial_tail(2, 2)}"""
@@ -2968,18 +2970,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_incremental_dedup() -> str:
-    hashes = ", ".join(
-        f"list_aggregate(list_transform(s, x -> md5('{j}|' || x)), 'min')"
-        for j in range(16)
-    )
-
-    def band_rows(sigs: str) -> str:
-        return "\n  UNION ALL\n".join(
-            f"  SELECT doc_id, {b} AS band, md5(sig[{2 * b + 1}] || '|' || "
-            f"sig[{2 * b + 2}]) AS band_key FROM {sigs}"
-            for b in range(8)
-        )
-
     return f"""
 WITH newb AS (
   SELECT * FROM documents WHERE doc_id % 5 = 0
@@ -2988,23 +2978,7 @@ WITH newb AS (
 ), exact_surv AS (
   SELECT * FROM newb
   WHERE md5(text) NOT IN (SELECT DISTINCT md5(text) FROM old)
-), ntoks AS (
-  SELECT doc_id, {_SQL_TOKS} AS t FROM exact_surv
-), nsh AS (
-  SELECT doc_id, {_SQL_SHINGLES} AS s FROM ntoks
-), nsigs AS (
-  SELECT doc_id, [{hashes}] AS sig FROM nsh
-), nbands AS (
-{band_rows("nsigs")}
-), otoks AS (
-  SELECT doc_id, {_SQL_TOKS} AS t FROM old
-), osh AS (
-  SELECT doc_id, {_SQL_SHINGLES} AS s FROM otoks
-), osigs AS (
-  SELECT doc_id, [{hashes}] AS sig FROM osh
-), obands AS (
-{band_rows("osigs")}
-), cand AS (
+), {_sql_minhash_bands("exact_surv", "n")}, {_sql_minhash_bands("old", "o")}, cand AS (
   SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
   FROM nbands n JOIN obands o
     ON n.band = o.band AND n.band_key = o.band_key
@@ -5859,41 +5833,25 @@ def q_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_lsh_calibration() -> str:
-    hashes = ", ".join(
-        f"list_aggregate(list_transform(s, x -> md5('{j}|' || x)), 'min')"
-        for j in range(16)
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band, md5(sig[{2 * b + 1}] || '|' || sig[{2 * b + 2}]) AS band_key FROM sigs"
-        for b in range(8)
-    )
     return f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_TOKS} AS t FROM documents
-), sh AS (
-  SELECT doc_id, {_SQL_SHINGLES} AS s FROM toks
-), sigs AS (
-  SELECT doc_id, s, [{hashes}] AS sig FROM sh
-), bands AS (
-{band_rows}
-), cands AS (
+WITH {_sql_minhash_bands("documents")}, cands AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM bands l JOIN bands r
     ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
+), scored AS (
+  SELECT id_a, id_b,
+         round(len(list_filter(range(1, 17),
+                   i -> sa.sig[i] = sb.sig[i])) / 16.0, 4) AS est_j,
+         round(len(list_intersect(ha.s, hb.s)) /
+               len(list_distinct(list_concat(ha.s, hb.s))), 4) AS exact_j
+  FROM cands
+  JOIN sigs sa ON sa.doc_id = cands.id_a
+  JOIN sigs sb ON sb.doc_id = cands.id_b
+  JOIN sh ha ON ha.doc_id = cands.id_a
+  JOIN sh hb ON hb.doc_id = cands.id_b
 )
-SELECT id_a, id_b,
-       round(len(list_filter(range(1, 17),
-                 i -> sa.sig[i] = sb.sig[i])) / 16.0, 4) AS est_j,
-       round(len(list_intersect(sa.s, sb.s)) /
-             len(list_distinct(list_concat(sa.s, sb.s))), 4) AS exact_j,
-       round(abs(round(len(list_filter(range(1, 17),
-                 i -> sa.sig[i] = sb.sig[i])) / 16.0, 4)
-               - round(len(list_intersect(sa.s, sb.s)) /
-                       len(list_distinct(list_concat(sa.s, sb.s))), 4)),
-             4) AS abs_err
-FROM cands
-JOIN sigs sa ON sa.doc_id = cands.id_a
-JOIN sigs sb ON sb.doc_id = cands.id_b
+SELECT id_a, id_b, est_j, exact_j, round(abs(est_j - exact_j), 4) AS abs_err
+FROM scored
 """
 
 

@@ -19,13 +19,17 @@ ordinary shuffles:
 * **embedding cosine** — near-dup pairs in sign-LSH buckets with cosine
   above a threshold (see operators/similarity.py for the ANN machinery).
 
-Determinism: every hash is md5-of-string (same bytes in any engine), so
-results are reproducible and oracle-checkable. All thresholds compare
+Determinism: the base hash is md5-of-string (same bytes in any engine);
+MinHash folds one md5 per shingle to an integer and derives its k hash
+functions from it by a fixed affine family (``minhash_coeffs``), plain
+BIGINT arithmetic that every engine computes identically. Results are
+reproducible and oracle-checkable. All thresholds compare
 ``round(x, 4)`` to avoid float-boundary flakiness.
 """
 
 from __future__ import annotations
 
+import hashlib
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -123,16 +127,44 @@ def winnowing_fingerprints(
 # -------------------------------------------------------- MinHash + LSH
 
 
+# MinHash family: one md5 per shingle, folded to x in [0, p), then
+# h_j = (a_j·x + b_j) mod p — min-wise hashing (Broder 1997), the family
+# Spark ML's MinHashLSH uses. With p = 2^31 − 1 every a_j·x + b_j stays
+# below 2^62, so nothing overflows BIGINT under ANSI mode or in DuckDB.
+MINHASH_PRIME = (1 << 31) - 1
+# Recorded in persisted band artifacts: band keys of a different family
+# never match, so a batch hashed with another one would admit every dup.
+MINHASH_FAMILY = "md5-affine-p31-v1"
+
+
+def minhash_coeffs(n: int) -> tuple[tuple[int, int], ...]:
+    """The fixed ``(a_j, b_j)`` pairs of the first ``n`` hash functions:
+    ``a_j`` in [1, p−1] and ``b_j`` in [0, p−1], each from the leading
+    32 bits of ``md5("a{j}")`` / ``md5("b{j}")``. Literals shared by
+    the engine and its DuckDB twins."""
+
+    def word(tag: str) -> int:
+        return int(hashlib.md5(tag.encode()).hexdigest()[:8], 16)
+
+    return tuple(
+        (word(f"a{j}") % (MINHASH_PRIME - 1) + 1, word(f"b{j}") % MINHASH_PRIME)
+        for j in range(n)
+    )
+
+
 def _minhash_sig_wide(
     df: DataFrame, id_col: str, text_col: str,
     num_hashes: int, shingle_n: int,
 ) -> DataFrame:
-    """Wide (id, h0..h{n-1}) signature relation — THE production
-    minhash pipeline: explode distinct shingles, compute every md5
-    exactly once, min-aggregate keyed on the id (map-side combinable;
-    the shuffle carries only 32-byte hex values, never documents).
-    Shared by ``lsh_bands`` and ``lsh_calibration`` so the calibration
-    audit measures exactly the LSH production runs."""
+    """Wide (id, h0..h{n-1}) BIGINT signature relation — THE production
+    minhash pipeline: explode distinct shingles, one md5 per distinct
+    shingle folded to x, the ``minhash_coeffs`` affine maps of x, then
+    a min-aggregate keyed on the id (fixed-width buffers, so it plans
+    as a map-side-combined HashAggregate; the shuffle carries only
+    8-byte values, never documents). Shared by ``lsh_bands`` and
+    ``lsh_calibration`` so the calibration audit measures exactly the
+    LSH production runs."""
+    p = F.lit(MINHASH_PRIME)
     exploded = df.select(
         F.col(id_col),
         # explode_outer: shingle_array is never null/empty, and the inner
@@ -140,15 +172,17 @@ def _minhash_sig_wide(
         # shingle pipeline per scan row (see ngram_jaccard_pairs).
         F.explode_outer(F.array_distinct(shingle_array(F.col(text_col), shingle_n))).alias("shingle"),
     )
-    hashed = exploded.select(
+    folded = exploded.select(
         F.col(id_col),
-        *[
-            F.md5(F.concat(F.lit(f"{j}|"), F.col("shingle"))).alias(f"h{j}")
-            for j in range(num_hashes)
-        ],
+        (
+            F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("bigint") % p
+        ).alias("x"),
     )
-    return hashed.groupBy(id_col).agg(
-        *[F.min(f"h{j}").alias(f"h{j}") for j in range(num_hashes)]
+    return folded.groupBy(id_col).agg(
+        *[
+            F.min((F.lit(a) * F.col("x") + F.lit(b)) % p).alias(f"h{j}")
+            for j, (a, b) in enumerate(minhash_coeffs(num_hashes))
+        ]
     )
 
 
@@ -156,13 +190,15 @@ def _band_keys(
     sig: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
     """(id, band, band_key) from the wide signature relation:
-    band_key = md5 of the band's joined hashes."""
+    band_key = md5 of the band's '|'-joined decimal hashes."""
     rows = num_hashes // bands
     return sig.select(
         F.col(id_col),
         F.posexplode(
             F.array(*[
-                F.md5(F.concat_ws("|", *[F.col(f"h{b * rows + r}") for r in range(rows)]))
+                F.md5(F.concat_ws("|", *[
+                    F.col(f"h{b * rows + r}").cast("string") for r in range(rows)
+                ]))
                 for b in range(bands)
             ])
         ).alias("band", "band_key"),
@@ -244,13 +280,14 @@ def lsh_bands(
     band_key = md5 of the band's joined hashes. Same band_key in the same
     band ⇒ LSH candidate.
 
-    Topology: explode distinct shingles → compute the ``num_hashes``
-    md5s per shingle once → groupBy(id).min per hash → band keys. One
-    Generate + one shuffle on the id; every md5 is evaluated exactly
-    once (a naive nested-expression form re-evaluates the shingle array
-    per hash function and per band — ~(hashes×bands)× the CPU).
-    The shuffle carries only (id, num_hashes × 32-byte hex) rows, never
-    documents, so at 10⁹ docs the agg is map-side-combinable and small.
+    Topology: explode distinct shingles → one md5 per distinct shingle
+    and its ``num_hashes`` affine images (``minhash_coeffs``) →
+    groupBy(id).min per hash → band keys (one md5 per band). One
+    Generate + one shuffle on the id (a naive nested-expression form
+    re-evaluates the shingle array per hash function and per band —
+    ~(hashes×bands)× the CPU). The shuffle carries only
+    (id, num_hashes × BIGINT) rows, never documents, so at 10⁹ docs the
+    agg is map-side-combinable and small.
     """
     assert num_hashes % bands == 0
     sig = _minhash_sig_wide(df, id_col, text_col, num_hashes, shingle_n)
@@ -1231,7 +1268,7 @@ def lsh_calibration(
     spread directly exposes whether num_hashes is big enough.
 
     Topology: signatures via the hash-once explode→min aggregation of
-    ``lsh_bands`` (each md5 computed exactly once), kept as columns;
+    ``lsh_bands`` (one md5 per distinct shingle), kept as columns;
     band keys posexplode from the SAME signature relation; candidates
     from the banded self-equi-join; the signature compare and the
     exact verify are candidate-sized equi-joins back to node-keyed

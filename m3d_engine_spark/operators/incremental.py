@@ -30,7 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from m3d_engine_spark.operators.dedup import lsh_bands, shingle_array
+from m3d_engine_spark.config import ConfigError
+from m3d_engine_spark.operators.dedup import (
+    MINHASH_FAMILY,
+    lsh_bands,
+    shingle_array,
+)
 from m3d_engine_spark.plans.skew import (
     SALT_PART_COL,
     collect_hot_threshold,
@@ -144,6 +149,7 @@ def materialize_dedup_artifacts(
         f"{base_path}/_meta.json",
         json.dumps(
             {
+                "minhash": MINHASH_FAMILY,
                 "num_hashes": int(num_hashes),
                 "bands": int(bands),
                 "shingle_n": int(shingle_n),
@@ -188,8 +194,10 @@ def incremental_dedup_against_artifacts(
     they are read from the artifacts' ``_meta.json`` — a batch hashed
     with different dials than the stored bands would candidate-match
     nothing and silently admit duplicates, so the only safe source of
-    truth is the artifact itself. The hot-bucket skew control follows
-    the same rule: when the artifacts carry ``hot_bands`` (+ its
+    truth is the artifact itself. For the same reason artifacts whose
+    ``minhash`` family id is absent or not ``dedup.MINHASH_FAMILY``
+    raise ``ConfigError``: they must be materialized again. The
+    hot-bucket skew control follows the same rule: when the artifacts carry ``hot_bands`` (+ its
     ``salt_size`` in _meta.json, precomputed by
     ``materialize_dedup_artifacts``), those buckets are split off the
     band join — the batch rows of a hot bucket replicate over
@@ -208,6 +216,16 @@ def incremental_dedup_against_artifacts(
 
     spark = new.sparkSession
     meta = json.loads(DFS(spark).read_text(artifacts["meta"]))
+    if meta.get("minhash") != MINHASH_FAMILY:
+        # the batch's band keys could never equal the stored ones: every
+        # fuzzy duplicate would pass
+        raise ConfigError(
+            f"{artifacts['meta']} records MinHash family "
+            f"{meta.get('minhash')!r}, this engine hashes with "
+            f"{MINHASH_FAMILY!r}: its band relation cannot match a new "
+            "batch — re-run materialize_dedup_artifacts (IncrementalDedup "
+            "action=materialize) over the accepted corpus"
+        )
     num_hashes = int(meta["num_hashes"])
     bands = int(meta["bands"])
     shingle_n = int(meta["shingle_n"])
@@ -486,7 +504,9 @@ class IncrementalDedupAlgorithm(Algorithm):
     surface (target_location / target_table). LSH dials come from the
     artifacts' _meta.json — a batch hashed with different dials than
     the stored bands would silently admit duplicates, so params carry
-    dials only for "materialize".
+    dials only for "materialize". Artifacts of another MinHash family
+    (``_meta.json`` ``minhash``) raise ConfigError: run "materialize"
+    again.
 
     Config keys: action, source_location OR source_table,
     artifact_location, id_column ("doc_id"), text_column ("text"),

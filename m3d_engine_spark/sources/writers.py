@@ -18,11 +18,12 @@ one unit (criterion ``[]``) for ``OverwriteTable`` and for any mode on
 a non-partitioned target. An absent target is written directly;
 otherwise: write ``<target>__tmp_<12 hex>``, then per unit rename the
 live dir into ``<target>__bak_<12 hex>`` and the new one into place,
-then delete the backup. A failure restores the moved units and removes
-newly created ones; the temp dir is deleted on every exit. The live
-target is never overwritten in place, so a frame that reads it stays
-valid. ``operators.suffix._recover_swap_litter`` relies on these names
-and this order.
+then delete the backup. A failure restores the moved units, removes
+newly created ones and deletes the backup once every unit is back; the
+temp dir is deleted on every exit. The live target is never
+overwritten in place, so a frame that reads it stays valid.
+``operators.suffix._recover_swap_litter`` relies on these names and
+this order.
 
 Scale notes: affected-partition discovery is a distinct+collect on the
 partition columns only; existing-partition reads are scoped with a
@@ -316,7 +317,10 @@ class AtomicWriter:
         backed up and not replaced, i.e. deleted. Every rename is
         CHECKED (_rename_or_raise); the restore also removes units
         newly CREATED before the failure, or a retry would union the
-        landing data with its own half-committed copy."""
+        landing data with its own half-committed copy. A restore rename
+        is checked too: the backup is deleted only once every unit is
+        back, else it stays and an IOError (or, for an interrupt, a note
+        on it) names what it still holds."""
         dfs = self._dfs()
         base = self.target_location.rstrip("/")
         if not dfs.exists(base):
@@ -341,15 +345,28 @@ class AtomicWriter:
                     _rename_or_raise(dfs, new_dir, final_dir)
                     if not had_prior:
                         created.append(final_dir)
-        except BaseException:
+        except BaseException as exc:
             # Restore: put backups back (OutputWriter.scala:230-261).
             # BaseException: an interrupt mid-rename must restore too,
             # or the finally below leaves the old data only in backup.
             for final_dir in created:
                 dfs.delete(final_dir)
+            stranded = []
             for final_dir, bak_dir in moved:
                 dfs.delete(final_dir)
-                dfs.rename(bak_dir, final_dir)
+                if not dfs.rename(bak_dir, final_dir):
+                    stranded.append(bak_dir)
+            if stranded:
+                # the backup is now the only copy of these units
+                msg = (
+                    f"commit restore failed; old data kept in {backup}: "
+                    + ", ".join(stranded)
+                )
+                if not isinstance(exc, Exception):
+                    exc.add_note(msg)  # an interrupt stays an interrupt
+                    raise
+                raise IOError(msg) from exc
+            dfs.delete(backup)
             raise
         finally:
             dfs.delete(tmp)

@@ -156,3 +156,32 @@ def test_bucketed_bands_artifact_equivalent_and_shuffle_free(
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_artifacts_without_minhash_family_are_refused(spark, tmp_path):
+    """Band keys of another MinHash family never equal the batch's, so
+    a stale ``{base}/bands`` would silently admit every fuzzy dup: an
+    absent or different ``minhash`` id in ``_meta.json`` is refused,
+    naming the artifact and the re-materialize fix."""
+    import json
+
+    from m3d_engine_spark.config import ConfigError
+    from m3d_engine_spark.operators.dedup import MINHASH_FAMILY
+
+    corpus = spark.createDataFrame(
+        [(1, _BASE), (2, "a short unrelated text")], "doc_id long, text string"
+    )
+    arts = materialize_dedup_artifacts(
+        corpus, "doc_id", "text", str(tmp_path / "arts"), salt_size=None
+    )
+    meta_path = tmp_path / "arts" / "_meta.json"
+    meta = json.loads(meta_path.read_text())
+    assert meta["minhash"] == MINHASH_FAMILY
+    batch = spark.createDataFrame([(9, _BASE)], "doc_id long, text string")
+    for stale in ({}, {"minhash": "md5-per-hash"}):
+        meta_path.write_text(
+            json.dumps({k: v for k, v in meta.items() if k != "minhash"} | stale)
+        )
+        with pytest.raises(ConfigError, match="materialize_dedup_artifacts") as e:
+            incremental_dedup_against_artifacts(batch, arts, "doc_id", "text")
+        assert str(meta_path) in str(e.value)

@@ -63,6 +63,47 @@ def test_atomic_writer_restores_on_induced_failure(spark, tmp_path, monkeypatch)
             f"old data must survive the failed swap ({exc.__name__})"
         )
         assert not [p for p in os.listdir(root) if "__tmp_" in p]
+        assert not [p for p in os.listdir(root) if "__bak_" in p]
+
+
+def test_atomic_writer_keeps_backup_when_restore_rename_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A restore rename that returns False (HDFS/S3A report failure
+    that way) leaves the backup as the only copy of the unit: it must
+    survive, and the error must name it — an IOError chained to the
+    commit failure, or a note on an interrupt, which keeps propagating."""
+    base = spark.createDataFrame(
+        [(1, "old1", 1), (2, "old2", 2)], "k int, v string, year int"
+    )
+    update = spark.createDataFrame([(2, "new2", 2)], "k int, v string, year int")
+    orig_rename = DFS.rename
+    for exc, raised in ((RuntimeError, IOError), (_Interrupt, _Interrupt)):
+        root = tmp_path / exc.__name__
+        target = str(root / "t")
+        writer = AtomicWriter(spark, target, partition_columns=["year"])
+        writer.write(base, LoadMode.OVERWRITE_TABLE)
+
+        def flaky(self, src, dst):
+            if "__tmp_" in src:  # the move-into-place step
+                raise exc("injected rename failure")
+            if "__bak_" in src:  # the restore
+                return False
+            return orig_rename(self, src, dst)
+
+        monkeypatch.setattr(DFS, "rename", flaky)
+        with pytest.raises(raised) as err:
+            writer.write(update, LoadMode.OVERWRITE_PARTITIONS)
+        monkeypatch.setattr(DFS, "rename", orig_rename)
+        if raised is IOError:
+            assert isinstance(err.value.__cause__, RuntimeError)
+            msg = str(err.value)
+        else:
+            msg = "\n".join(err.value.__notes__)
+        (bak,) = [p for p in os.listdir(root) if "__bak_" in p]
+        assert "restore failed" in msg and f"{bak}/year=2" in msg, msg
+        kept = spark.read.parquet(str(root / bak / "year=2")).collect()
+        assert [(r.k, r.v) for r in kept] == [(2, "old2")]
 
 
 def test_recreate_table_restore_with_saved_schema(spark, tmp_path):

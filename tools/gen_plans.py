@@ -75,7 +75,7 @@ HEADLINERS = {
     "benford_audit": "Benford first-digit audit: digit from the string form (no float log bucketing) -> one (digit)-keyed partial/final HashAggregate; the global totals window runs over the 9-row digit census above the aggregate, so the single-partition exchange carries 9 rows, not the scan.",
     "hits_scores": "HITS hubs/authorities, 3 exact-integer rounds: each half-round is one keyed join + one sum off the edge relation, eagerly checkpointed once; the L-infinity renormalization references each round aggregate twice, so each half-round is collapsed to a lazy localCheckpoint (ExistingRDD scans here) - left lazy the logical plan doubles per half-round and OOMs in stringification alone by round 3.",
     "ngram_novelty": "Per-doc shingle novelty: the inverted-index backbone - explode distinct shingles, corpus df as a map-side-combinable aggregate on the 64-bit xxhash key, equi-join back on the hash, one per-doc aggregate. Shingle TEXT never crosses an exchange.",
-    "lsh_calibration": "MinHash dial audit: signatures via the hash-once explode->min aggregation (each md5 computed exactly once), band keys posexplode from the same signature relation, banded self-equi-join for candidates; signature compare and exact-Jaccard verify are candidate-sized keyed joins - full shingle arrays ride only to candidate pairs, never the banded join.",
+    "lsh_calibration": "MinHash dial audit: signatures via the hash-once explode->min aggregation (one md5 per distinct shingle, BIGINT minima), band keys posexplode from the same signature relation, banded self-equi-join for candidates; signature compare and exact-Jaccard verify are candidate-sized keyed joins - full shingle arrays ride only to candidate pairs, never the banded join.",
     "classifier_calibration": "Reliability diagram: zero-exchange scoring projection -> ONE bin-keyed map-side-combinable aggregate (exact 1e-4-lattice sums); output is bins-sized, nothing else moves.",
     "mmr_diversify": "Greedy MMR: relevance scan (broadcast queries, corpus unexchanged) and the candidate-pair sim matrix compute ONCE into lazy checkpoints; each of the 4 greedy rounds is a keyed join + max aggregate + candidate-sized window over <= |Q|*shortlist rows - the recurrence is sequential by nature, so the design makes rounds trivial instead of parallel.",
     "kcore_nodes": "k-core peel: per round one map-side-combinable degree aggregate + two semi-joins keyed on the surviving endpoints; the edge relation collapses to a lazy checkpoint per round (referenced by aggregate AND joins - left lazy the plan doubles per round).",
