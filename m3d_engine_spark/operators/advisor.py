@@ -176,19 +176,23 @@ def dedup_preflight_report_from_artifacts(
     ``salt_size`` (when present) records the threshold materialize
     already committed; this report recomputes the recommendation from
     the same distribution, so a drifted corpus shows up as a changed
-    dial next to the committed one.
+    dial next to the committed one. Artifacts of another MinHash family
+    raise ``ConfigError`` (``incremental.check_minhash_family``): their
+    bands are not the buckets the from-scratch report would count.
     """
     import json
 
+    from m3d_engine_spark.operators.incremental import check_minhash_family
     from m3d_engine_spark.sources.dfs import DFS
 
-    meta = json.loads(DFS(spark).read_text(f"{artifact_location}/_meta.json"))
+    meta_path = f"{artifact_location}/_meta.json"
+    meta = json.loads(DFS(spark).read_text(meta_path))
     for key in ("num_hashes", "bands", "shingle_n"):
         if key not in meta:
             raise ValueError(
-                f"{artifact_location}/_meta.json lacks {key!r} — not a "
-                f"dedup artifact directory"
+                f"{meta_path} lacks {key!r} — not a dedup artifact directory"
             )
+    check_minhash_family(meta, meta_path)
     band_rel = spark.read.parquet(f"{artifact_location}/bands")
     return bucket_dial_report(
         band_rel.select("band", "band_key"),

@@ -173,6 +173,22 @@ def materialize_dedup_artifacts(
     }
 
 
+def check_minhash_family(meta: dict, meta_path: str) -> None:
+    """Refuse artifacts whose ``_meta.json`` (parsed: ``meta``, read
+    from ``meta_path``) does not record ``dedup.MINHASH_FAMILY``: their
+    band keys come from another hash family, so they can never equal a
+    new batch's — every fuzzy duplicate would pass — and their band
+    histogram describes buckets this engine no longer builds."""
+    if meta.get("minhash") != MINHASH_FAMILY:
+        raise ConfigError(
+            f"{meta_path} records MinHash family "
+            f"{meta.get('minhash')!r}, this engine hashes with "
+            f"{MINHASH_FAMILY!r}: its band relation cannot match a new "
+            "batch — re-run materialize_dedup_artifacts (IncrementalDedup "
+            "action=materialize) over the accepted corpus"
+        )
+
+
 def incremental_dedup_against_artifacts(
     new: DataFrame,
     artifacts: dict[str, str],
@@ -216,16 +232,7 @@ def incremental_dedup_against_artifacts(
 
     spark = new.sparkSession
     meta = json.loads(DFS(spark).read_text(artifacts["meta"]))
-    if meta.get("minhash") != MINHASH_FAMILY:
-        # the batch's band keys could never equal the stored ones: every
-        # fuzzy duplicate would pass
-        raise ConfigError(
-            f"{artifacts['meta']} records MinHash family "
-            f"{meta.get('minhash')!r}, this engine hashes with "
-            f"{MINHASH_FAMILY!r}: its band relation cannot match a new "
-            "batch — re-run materialize_dedup_artifacts (IncrementalDedup "
-            "action=materialize) over the accepted corpus"
-        )
+    check_minhash_family(meta, artifacts["meta"])
     num_hashes = int(meta["num_hashes"])
     bands = int(meta["bands"])
     shingle_n = int(meta["shingle_n"])

@@ -317,10 +317,10 @@ class AtomicWriter:
         backed up and not replaced, i.e. deleted. Every rename is
         CHECKED (_rename_or_raise); the restore also removes units
         newly CREATED before the failure, or a retry would union the
-        landing data with its own half-committed copy. A restore rename
-        is checked too: the backup is deleted only once every unit is
-        back, else it stays and an IOError (or, for an interrupt, a note
-        on it) names what it still holds."""
+        landing data with its own half-committed copy. The restore is
+        checked by listing the backup afterwards: it is deleted only
+        when it holds no files, else it stays and an IOError (or, for an
+        interrupt, a note on it) names the units it still holds."""
         dfs = self._dfs()
         base = self.target_location.rstrip("/")
         if not dfs.exists(base):
@@ -351,16 +351,21 @@ class AtomicWriter:
             # or the finally below leaves the old data only in backup.
             for final_dir in created:
                 dfs.delete(final_dir)
-            stranded = []
             for final_dir, bak_dir in moved:
                 dfs.delete(final_dir)
-                if not dfs.rename(bak_dir, final_dir):
-                    stranded.append(bak_dir)
-            if stranded:
-                # the backup is now the only copy of these units
+                dfs.rename(bak_dir, final_dir)
+            # Not `moved` but the backup's own listing decides: a unit
+            # can reach it unrecorded (a rename that finished in the JVM
+            # before an interrupt, or a copy-based rename that raised
+            # part way), and a failed restore rename leaves files too.
+            kept = sorted(
+                {f.rsplit("/", 1)[0] for f in dfs.list_files(backup)}
+            )
+            if kept:
+                # the backup may now be the only copy of these units
                 msg = (
                     f"commit restore failed; old data kept in {backup}: "
-                    + ", ".join(stranded)
+                    + ", ".join(kept)
                 )
                 if not isinstance(exc, Exception):
                     exc.add_note(msg)  # an interrupt stays an interrupt

@@ -162,10 +162,14 @@ def test_artifacts_without_minhash_family_are_refused(spark, tmp_path):
     """Band keys of another MinHash family never equal the batch's, so
     a stale ``{base}/bands`` would silently admit every fuzzy dup: an
     absent or different ``minhash`` id in ``_meta.json`` is refused,
-    naming the artifact and the re-materialize fix."""
+    naming the artifact and the re-materialize fix — by the batch join
+    and by the advisor that reads the same bands."""
     import json
 
     from m3d_engine_spark.config import ConfigError
+    from m3d_engine_spark.operators.advisor import (
+        dedup_preflight_report_from_artifacts,
+    )
     from m3d_engine_spark.operators.dedup import MINHASH_FAMILY
 
     corpus = spark.createDataFrame(
@@ -184,4 +188,7 @@ def test_artifacts_without_minhash_family_are_refused(spark, tmp_path):
         )
         with pytest.raises(ConfigError, match="materialize_dedup_artifacts") as e:
             incremental_dedup_against_artifacts(batch, arts, "doc_id", "text")
+        assert str(meta_path) in str(e.value)
+        with pytest.raises(ConfigError, match="materialize_dedup_artifacts") as e:
+            dedup_preflight_report_from_artifacts(spark, str(tmp_path / "arts"))
         assert str(meta_path) in str(e.value)

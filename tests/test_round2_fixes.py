@@ -72,24 +72,41 @@ def test_atomic_writer_keeps_backup_when_restore_rename_fails(
     """A restore rename that returns False (HDFS/S3A report failure
     that way) leaves the backup as the only copy of the unit: it must
     survive, and the error must name it — an IOError chained to the
-    commit failure, or a note on an interrupt, which keeps propagating."""
+    commit failure, or a note on an interrupt, which keeps propagating.
+    So must a unit the restore never heard of: the move into the backup
+    finished, then an interrupt cut the commit before it was recorded."""
     base = spark.createDataFrame(
         [(1, "old1", 1), (2, "old2", 2)], "k int, v string, year int"
     )
     update = spark.createDataFrame([(2, "new2", 2)], "k int, v string, year int")
     orig_rename = DFS.rename
-    for exc, raised in ((RuntimeError, IOError), (_Interrupt, _Interrupt)):
-        root = tmp_path / exc.__name__
-        target = str(root / "t")
-        writer = AtomicWriter(spark, target, partition_columns=["year"])
-        writer.write(base, LoadMode.OVERWRITE_TABLE)
 
+    def restore_fails(exc):
         def flaky(self, src, dst):
             if "__tmp_" in src:  # the move-into-place step
                 raise exc("injected rename failure")
             if "__bak_" in src:  # the restore
                 return False
             return orig_rename(self, src, dst)
+
+        return flaky
+
+    def interrupted_after_backup(self, src, dst):
+        done = orig_rename(self, src, dst)
+        if "__bak_" in dst:  # the move into the backup, already done
+            raise _Interrupt("injected interrupt")
+        return done
+
+    cases = (
+        ("error", restore_fails(RuntimeError), IOError),
+        ("interrupt", restore_fails(_Interrupt), _Interrupt),
+        ("unrecorded", interrupted_after_backup, _Interrupt),
+    )
+    for name, flaky, raised in cases:
+        root = tmp_path / name
+        target = str(root / "t")
+        writer = AtomicWriter(spark, target, partition_columns=["year"])
+        writer.write(base, LoadMode.OVERWRITE_TABLE)
 
         monkeypatch.setattr(DFS, "rename", flaky)
         with pytest.raises(raised) as err:
@@ -103,7 +120,7 @@ def test_atomic_writer_keeps_backup_when_restore_rename_fails(
         (bak,) = [p for p in os.listdir(root) if "__bak_" in p]
         assert "restore failed" in msg and f"{bak}/year=2" in msg, msg
         kept = spark.read.parquet(str(root / bak / "year=2")).collect()
-        assert [(r.k, r.v) for r in kept] == [(2, "old2")]
+        assert [(r.k, r.v) for r in kept] == [(2, "old2")], name
 
 
 def test_recreate_table_restore_with_saved_schema(spark, tmp_path):
