@@ -12,7 +12,8 @@ Two interchangeable implementations, same signature and output:
       label(v) <- min(label(v), min over neighbors(label(u)))
 
   Each iteration is ONE distributed join + aggregation (shuffles keyed
-  on vertex id); the driver only probes for one changed label.
+  on vertex id); whether any label changed is observed while the
+  round's checkpoint runs, so the driver adds no job of its own.
   Iterations needed = graph diameter — dedup-cluster diameters are
   tiny (banded LSH emits near-cliques), so 2-4 rounds in practice.
   This is the default for dedup workloads.
@@ -36,10 +37,8 @@ engine-portable and oracle-checkable with a recursive CTE.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-
-from m3d_engine_spark.plans.partitions import is_empty
 
 
 def propagation_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
@@ -124,19 +123,22 @@ def connected_components(
     )
     converged = False
     for _ in range(max_iterations):
-        # Materialize: the convergence probe below is an action, and
-        # without a checkpoint every later round would re-execute the
-        # whole join chain from the start (quadratic in rounds); the
-        # checkpoint also truncates the two-joins-per-round lineage.
-        updated = propagation_round(sym, labels).localCheckpoint(eager=True)
-        # head(1), not limit(1).count(): a LIMIT in generated code names
-        # its counter from a JVM-global id, so a per-round limit(1)
-        # compiles fresh classes every round of every run. head(1) runs
-        # as executeTake with no LIMIT operator in the generated code,
-        # and later rounds and runs hit the codegen cache.
-        unchanged = is_empty(updated.filter(F.col("_changed")))
+        # Materialize: without a checkpoint every later round would
+        # re-execute the whole join chain from the start (quadratic in
+        # rounds); the checkpoint also truncates the two-joins-per-round
+        # lineage. The convergence probe rides on the checkpoint's own
+        # job: the observation is filled when it finishes, so a round is
+        # one query, not two. The fixed name keeps the generated code
+        # the same every round, and later rounds and runs hit the
+        # codegen cache.
+        changed = Observation("cc_round")
+        updated = (
+            propagation_round(sym, labels)
+            .observe(changed, F.bool_or("_changed").alias("changed"))
+            .localCheckpoint(eager=True)
+        )
         labels = updated.drop("_changed")
-        if unchanged:
+        if not changed.get["changed"]:  # None: no vertices at all
             converged = True
             break
     if not converged:
@@ -209,11 +211,12 @@ def connected_components_star(
     per hop and this pays O(log² n) rounds total.
 
     Convergence: each (large, small) round ends with an aggregate
-    fingerprint of the edge set — (count, sum of xxhash64(a, b)) — one
-    scan, no driver-side edge collection; the loop stops when the
-    fingerprint repeats. Both operations only move edge endpoints
-    downward, so the fingerprint sequence reaches its fixpoint in
-    O(log² n) rounds (SoCC'14, Thm 1-2).
+    fingerprint of the edge set — (count, sum of xxhash64(a, b)) —
+    observed while the round's checkpoint runs, so it costs no job and
+    no driver-side edge collection; the loop stops when the fingerprint
+    repeats. Both operations only move edge endpoints downward, so the
+    fingerprint sequence reaches its fixpoint in O(log² n) rounds
+    (SoCC'14, Thm 1-2).
 
     ``stats``, if given, receives {"rounds": n} — pinned by
     tests/test_graph.py on a long chain.
@@ -235,15 +238,21 @@ def connected_components_star(
     rounds = 0
     converged = False
     for _ in range(max_iterations):
-        new_down = _small_star(_large_star(down)).localCheckpoint(eager=True)
+        fingerprint = Observation("cc_star_round")
+        down = (
+            _small_star(_large_star(down))
+            .observe(
+                fingerprint,
+                F.count(F.lit(1)).alias("n"),
+                # decimal sum: a long sum of 64-bit hashes overflows
+                # under ANSI mode; decimal(38,0) has 18 digits of
+                # headroom.
+                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
+            )
+            .localCheckpoint(eager=True)
+        )
         rounds += 1
-        fp = new_down.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: a long sum of 64-bit hashes overflows under
-            # ANSI mode; decimal(38,0) has 18 digits of headroom.
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        down = new_down
+        fp = fingerprint.get
         if (fp["n"], fp["h"]) == prev_fp:
             converged = True
             break

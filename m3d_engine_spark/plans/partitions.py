@@ -160,14 +160,6 @@ def collect_partitions(df: DataFrame, partition_columns: Sequence[str]) -> list[
     return out
 
 
-def is_empty(df: DataFrame) -> bool:
-    """True iff the DataFrame has no rows — ``head(1)``, never a full
-    ``count()`` (reference: util/DataFrameUtils.scala:97-99). Spark's
-    own ``df.isEmpty()`` exists since 3.3; this wrapper keeps the
-    reference's API name for callers porting from it."""
-    return len(df.head(1)) == 0
-
-
 def add_missing_columns(df: DataFrame, target_schema: StructType) -> DataFrame:
     """Pad ``df`` with typed NULLs to match ``target_schema`` (name + order).
 

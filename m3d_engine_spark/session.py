@@ -63,6 +63,17 @@ SCALE_DEFAULTS: dict[str, str] = {
     # generates 58 and already fit. 1000 holds both working sets with
     # room for plans that grow.
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # Piece size of every TorrentBroadcast: each stage's task binary,
+    # each parquet scan's Hadoop conf, each broadcast join. Static:
+    # read when the context starts. blockifyObject allocates a whole
+    # first piece however small the payload, and Spark's 4m makes that
+    # a G1 humongous object (regions are 1-32 MB; an object of half a
+    # region or more bypasses eden) on any heap below 32 GB. 256k is
+    # the largest power of two below half of G1's smallest (1 MB)
+    # region: a 512 KiB piece plus its 16-byte array header is already
+    # humongous. The trade: a 64 MB broadcast moves as 256 pieces, not
+    # 16.
+    "spark.broadcast.blockSize": "256k",
 }
 
 
@@ -97,6 +108,12 @@ def codegen_compiles(spark: SparkSession) -> int:
     """Generated classes Janino has compiled so far in this driver JVM
     (Spark's ``CodegenMetrics``). In local mode the executors share the
     JVM, so classes compiled inside tasks count too; read it before and
-    after a run to see how much of its working set missed the cache."""
+    after a run to see how much of its working set missed the cache.
+
+    Local mode counts each first-run whole-stage class twice: the cache
+    is keyed on (class loader, source), and the driver-side compile and
+    the task-side compile use different class loaders. On a cluster the
+    task side compiles once per executor JVM anyway. Warm runs hit both
+    entries, so a warm count of 0 still means no misses."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
     return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -21,6 +21,16 @@ def test_session_sizes_codegen_cache(spark):
     assert spark.conf.get(_CACHE_CONF) == SCALE_DEFAULTS[_CACHE_CONF]
 
 
+def test_session_keeps_broadcast_pieces_out_of_humongous_regions(spark):
+    # G1's smallest region is 1 MB; an object of half a region or more
+    # is allocated outside eden. A piece is a byte[] with a 16-byte
+    # header, and a unitless blockSize counts KiB, as Spark reads it.
+    key = "spark.broadcast.blockSize"
+    conf = spark.sparkContext._jsc.sc().conf()  # noqa: SLF001
+    assert conf.get(key) == SCALE_DEFAULTS[key]
+    assert conf.getSizeAsKb(key) * 1024 + 16 < 512 * 1024
+
+
 def test_components_rerun_compiles_nothing(spark):
     # Two rounds of propagation plus the converged one; each round's
     # convergence probe runs a plan of its own.

@@ -228,6 +228,38 @@ def test_components_raise_instead_of_returning_unconverged(spark):
         connected_components(nodes, edges, max_iterations=2)
 
 
+def test_components_round_is_one_job(spark):
+    """A round is one query: whether any label changed is observed while
+    the round's checkpoint runs, so the driver adds no probe job. With
+    AQE every shuffle stage runs as a job of its own, so the jobs are
+    counted with it off, where one query is one job."""
+    nodes = spark.createDataFrame([Row(id=i) for i in range(6)])
+    edges = spark.createDataFrame(
+        [Row(src=0, dst=1), Row(src=1, dst=2), Row(src=3, dst=4)]
+    )
+    sc = spark.sparkContext
+    jobs = []
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        # The 0-1-2 chain changes labels in rounds 1 and 2 and converges
+        # in round 3.
+        for rounds in (1, 2, 3):
+            group = f"test_components_round_is_one_job_{rounds}"
+            sc.setJobGroup(group, group)
+            try:
+                connected_components(nodes, edges, max_iterations=rounds)
+            except RuntimeError:
+                assert rounds < 3
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert [b - a for a, b in zip(jobs, jobs[1:])] == [1, 1], jobs
+
+
 def _stage_tasks(spark, group, action):
     """Run ``action()`` under job group ``group`` with 16 shuffle
     partitions; return its result and {stage id: completed tasks} for

@@ -186,14 +186,6 @@ def test_simhash64_banded_join_shape(spark):
     assert "ReusedExchange" in executed, "banded self-join exchange not reused"
 
 
-def test_is_empty_non_empty(spark):
-    from m3d_engine_spark.plans.partitions import is_empty
-
-    df = spark.range(3)
-    assert not is_empty(df)
-    assert is_empty(df.filter("id < 0"))
-
-
 def test_ivf_assignment_aggregates_before_exchange(spark, sf_dir):
     """VERDICT r4 #2: corpus-to-centroid assignment must NOT shuffle the
     corpus x centroids similarity relation. The argmax is a max_by
