@@ -32,6 +32,35 @@ def register(cli_name: str) -> Callable[[Type["Algorithm"]], Type["Algorithm"]]:
     return deco
 
 
+def tracked_checkpoint(df: DataFrame, track: "list | None") -> DataFrame:
+    """Lazy localCheckpoint, registered on ``track`` so the caller can
+    free its blocks once the consumers have run (long-lived sessions
+    otherwise accumulate them). The engine's one form for a frame read
+    more than once: unlike a cache, it keeps AQE's coalesced partition
+    count, and every column pruning of it reads the one computed
+    relation. The trade: its blocks die with their executor (dynamic
+    allocation, spot loss), where a cache would be recomputed."""
+    out = df.localCheckpoint(eager=False)
+    if track is not None:
+        track.append(out)
+    return out
+
+
+def unpersist_checkpoints(dfs) -> None:
+    """Free the RDD blocks behind localCheckpoint'd frames. NOTE:
+    ``DataFrame.unpersist()`` is the WRONG tool here — it uncaches the
+    plan via the CacheManager and leaves the checkpoint's persisted
+    RDD untouched; the blocks live behind the plan's LogicalRDD, so we
+    reach through it. Only call after the consumer has materialized
+    its results (a checkpoint's lineage is truncated — the blocks are
+    the only copy)."""
+    for df in dfs:
+        try:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        except Exception:
+            pass  # non-checkpoint plan shape / already freed: best-effort
+
+
 class Algorithm(abc.ABC):
     """read → transform → write → update_statistics."""
 
@@ -40,15 +69,8 @@ class Algorithm(abc.ABC):
     def __init__(self, spark: SparkSession, params: ParamsFile):
         self.spark = spark
         self.params = params
-        # DataFrames persisted for the duration of one run(); always
-        # unpersisted when the run ends so long-lived sessions (thrift
-        # server, notebook, test suite) never accumulate cached blocks.
-        self._persisted: list[DataFrame] = []
-        # localCheckpoint'd frames (lineage-cut tiers pass this as
-        # their `track` list). Freed separately because
-        # DataFrame.unpersist() only uncaches the plan — checkpoint
-        # blocks live behind the LogicalRDD and need the RDD-level
-        # unpersist (operators/suffix.py:unpersist_checkpoints).
+        # tracked_checkpoint's `track` list for one run(), freed when
+        # the run ends (thrift server, notebook, test suite sessions).
         self._checkpointed: list[DataFrame] = []
 
     def prepare(self) -> None:
@@ -74,16 +96,8 @@ class Algorithm(abc.ABC):
             if self.params.get_optional("compute_table_statistics", False):
                 self.update_statistics()
         finally:
-            for df in self._persisted:
-                df.unpersist()
-            self._persisted.clear()
-            if self._checkpointed:
-                from m3d_engine_spark.operators.suffix import (
-                    unpersist_checkpoints,
-                )
-
-                unpersist_checkpoints(self._checkpointed)
-                self._checkpointed.clear()
+            unpersist_checkpoints(self._checkpointed)
+            self._checkpointed.clear()
 
 
 def run_algorithm(spark: SparkSession, name: str, params_path: str) -> None:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from m3d_engine_spark.config import ParamsFile
-from m3d_engine_spark.operators.base import Algorithm, register
+from m3d_engine_spark.operators.base import Algorithm, register, tracked_checkpoint
 from m3d_engine_spark.operators.delta_load import condense, merge_delta
 from m3d_engine_spark.plans.partitions import collect_partitions, partition_predicate
 
@@ -228,8 +228,7 @@ class DeltaLakeLoadAlgorithm(Algorithm):
         # condensed data would leave the old partition out of merge and
         # snapshot scope, stranding the stale row in delta dir and lake.
         if targets:
-            new_data = new_data.persist()
-            self._persisted.append(new_data)
+            new_data = tracked_checkpoint(new_data, self._checkpointed)
             self.affected = collect_partitions(new_data, targets)
         # Reference condensation dials
         # (DeltaLakeLoadConfiguration.scala:59-71):
@@ -239,15 +238,16 @@ class DeltaLakeLoadAlgorithm(Algorithm):
         if is_init and not init_cond:
             condensed = new_data  # DeltaLakeLoad.scala:84-88
         else:
-            condensed = condense(
-                new_data, bk, tk, record_mode_column=rm,
-                init_load=is_init and init_rm,
-                records_to_condense=rtc,
+            # pinned: a merge reads it twice (anti-join keys, upserts)
+            condensed = tracked_checkpoint(
+                condense(
+                    new_data, bk, tk, record_mode_column=rm,
+                    init_load=is_init and init_rm,
+                    records_to_condense=rtc,
+                ),
+                self._checkpointed,
             )
         drop_cols = [c for c in tk if c in condensed.columns] + [rm]
-        if targets:
-            condensed = condensed.persist()
-            self._persisted.append(condensed)
         # affected_partitions_merge=False (DeltaLakeLoad.scala:270-281):
         # the partition columns join the merge key INSTEAD of the
         # affected-partitions predicate — the documented misconfiguration

@@ -18,13 +18,12 @@ Scale notes:
 * Condensation is a ranking window behind a shuffle on the business key.
   AQE splits skewed joins, not windows: a hot key stays in one task.
 * The merge reads the condensed frame twice, as the anti-join's key set
-  and as the upserts, and the two reads do not share that shuffle:
-  Catalyst prunes each read's columns, so the window runs twice, each
-  time behind its own ``hashpartitioning`` on the business key. On the
-  perfbench lake_loads DeltaLoad (seed 1, 100k active rows, 3% CDC
-  batch) the keys-only read shuffles 29,416 B and the full-row read
-  130,131 B. The anti-join is a ``BroadcastHashJoin`` of the condensed
-  keys, so the active side is not shuffled.
+  and as the upserts. Column pruning would give the two reads two
+  plans, each running the window behind its own ``hashpartitioning``
+  on the business key, so ``condensed`` is a tracked lazy checkpoint
+  and both reads scan the one computed relation: the window runs once.
+  The anti-join is a ``BroadcastHashJoin`` of the condensed keys, so
+  the active side is not shuffled.
 * The merge only rewrites *affected partitions*: callers first scope the
   active side with ``partition_predicate`` (plans/partitions.py), which
   prunes at the parquet scan — the reference's row-lambda filter read
@@ -39,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from m3d_engine_spark.config import ParamsFile
-from m3d_engine_spark.operators.base import Algorithm, register
+from m3d_engine_spark.operators.base import Algorithm, register, tracked_checkpoint
 from m3d_engine_spark.plans.partitions import (
     add_missing_columns,
     collect_partitions,
@@ -177,13 +176,15 @@ class DeltaLoadAlgorithm(Algorithm):
                     p.get_string("partition_column_format"),
                     targets,
                 )
-            delta = delta.persist()
-            self._persisted.append(delta)
+            delta = tracked_checkpoint(delta, self._checkpointed)
             affected = collect_partitions(delta, targets)
             self.affected = affected
             # Partition-pruned scan of the active table (SURVEY.md §4).
             active = active.filter(partition_predicate(affected))
-        condensed = condense(delta, bk, tk, record_mode_column=rm)
+        # pinned: the merge reads it twice (anti-join keys, upserts)
+        condensed = tracked_checkpoint(
+            condense(delta, bk, tk, record_mode_column=rm), self._checkpointed
+        )
         return [merge_delta(active, condensed, bk, record_mode_column=rm)]
 
     def update_statistics(self) -> None:

@@ -118,7 +118,7 @@ def table_checksum(df: DataFrame) -> DataFrame:
 # CLI algorithm: params-driven dispatch (the CurationPipeline pattern)
 # --------------------------------------------------------------------------
 
-from m3d_engine_spark.operators.base import Algorithm, register  # noqa: E402
+from m3d_engine_spark.operators.base import Algorithm, register, tracked_checkpoint  # noqa: E402
 
 
 @register("ExpectationsCheck")
@@ -152,7 +152,8 @@ class ExpectationsCheckAlgorithm(Algorithm):
     def write(self, dfs: list[DataFrame]) -> None:
         from m3d_engine_spark.sources.writers import write_output
 
-        report = dfs[0].localCheckpoint()
+        # read twice: the report write, then the failed-rule collect
+        report = tracked_checkpoint(dfs[0], self._checkpointed)
         write_output(self.spark, report, self.params)
         if self.params.get_optional("fail_on_violation", True):
             failed = [r.rule for r in report.collect() if r.passed == 0]

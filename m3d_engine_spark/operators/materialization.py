@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from m3d_engine_spark.config import ParamsFile
 from m3d_engine_spark.functions.dates import aligned_week_of_year  # noqa: F401 (week parity)
-from m3d_engine_spark.operators.base import Algorithm, register
+from m3d_engine_spark.operators.base import Algorithm, register, tracked_checkpoint
 from m3d_engine_spark.plans.partitions import partition_predicate
 from m3d_engine_spark.sources import catalog as cat
 from m3d_engine_spark.sources.dfs import DFS, next_version_dir
@@ -119,8 +119,8 @@ class FullMaterialization(Algorithm):
     def read(self) -> list[DataFrame]:
         df = self.spark.table(self.params.get_string("source_table"))
         if self.params.get_optional("to_cache", False):
-            df = df.cache()  # Materialization.scala:19
-            self._persisted.append(df)
+            # Materialization.scala:19
+            df = tracked_checkpoint(df, self._checkpointed)
         return [df]
 
     def transform(self, dfs: list[DataFrame]) -> list[DataFrame]:

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from m3d_engine_spark.functions.text import tokens
+from m3d_engine_spark.operators.base import Algorithm, register, tracked_checkpoint
 from m3d_engine_spark.operators.dedup import (
     md5_window_occ,
     rebuild_without_positions,
@@ -56,33 +57,6 @@ def _tokenized(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return docs.select(
         F.col(id_col), tokens(F.col(text_col)).alias("_tk")
     )
-
-
-def _ck(df: DataFrame, track: "list | None") -> DataFrame:
-    """Lazy localCheckpoint, registered on ``track`` when the caller
-    wants to free the blocks after materializing (long-lived sessions
-    — thrift server, multi-step Pipelines — otherwise accumulate them
-    across runs; only bench.py sweeps getPersistentRDDs, and only for
-    the bench)."""
-    out = df.localCheckpoint(eager=False)
-    if track is not None:
-        track.append(out)
-    return out
-
-
-def unpersist_checkpoints(dfs) -> None:
-    """Free the RDD blocks behind localCheckpoint'd frames. NOTE:
-    ``DataFrame.unpersist()`` is the WRONG tool here — it uncaches the
-    plan via the CacheManager and leaves the checkpoint's persisted
-    RDD untouched; the blocks live behind the plan's LogicalRDD, so we
-    reach through it. Only call after the consumer has materialized
-    its results (a checkpoint's lineage is truncated — the blocks are
-    the only copy)."""
-    for df in dfs:
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass  # non-checkpoint plan shape / already freed: best-effort
 
 
 def suffix_window_classes(
@@ -154,7 +128,7 @@ def suffix_window_classes(
         independently — exponential recompute in the round count
         (measured: zero ReusedExchange across a 32-exchange plan at
         L=8 before the cut)."""
-        cur = _ck(cur, track)
+        cur = tracked_checkpoint(cur, track)
         mate = cur.select(
             F.col(id_col),
             (F.col("_pos") - F.lit(shift)).alias("_pos"),
@@ -168,7 +142,7 @@ def suffix_window_classes(
                 "_key"
             ),
         )
-        joined = _ck(joined, track)
+        joined = tracked_checkpoint(joined, track)
         named = joined.groupBy("_key").agg(F.min(rep).alias("_cls"))
         return joined.join(named, on="_key").select(
             id_col, "_n", "_pos", "_cls"
@@ -184,7 +158,7 @@ def suffix_window_classes(
         cur = _combine(cur, L - k)
     # the caller's removal/report tail reads the class relation twice
     # (count election + join) — pin it once here
-    return _ck(
+    return tracked_checkpoint(
         cur.filter(F.col("_pos") + F.lit(L) <= F.col("_n")).select(
             id_col, "_pos", "_cls"
         ),
@@ -390,7 +364,7 @@ def incremental_exact_substr(
     # Three consumers read this batch-sized relation (the artifact
     # contribution, the state semi-probe, the removal election) — pin
     # it once, house style of the cascade's self-joins.
-    agg = _ck(
+    agg = tracked_checkpoint(
         occ.groupBy("gh").agg(
             F.count(F.lit(1)).alias("_c"), F.min(pack).alias("_win")
         ),
@@ -950,8 +924,6 @@ def resolve_artifact_span_tokens(
 # --------------------------------------------------------------------------
 # CLI algorithm: params-driven dispatch (the FuzzyDedup pattern)
 # --------------------------------------------------------------------------
-
-from m3d_engine_spark.operators.base import Algorithm, register  # noqa: E402
 
 
 def _maybe_compact_state(spark, params, state_loc: str) -> None:

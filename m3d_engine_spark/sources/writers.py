@@ -46,6 +46,7 @@ from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from m3d_engine_spark.operators.base import tracked_checkpoint, unpersist_checkpoints
 from m3d_engine_spark.plans.partitions import (
     add_missing_columns,
     collect_partitions,
@@ -187,7 +188,7 @@ class AtomicWriter:
     # ``repartitioned``); off by default.
     spread_output_files: bool = False
     # Partition criteria the last write() touched, collected while the
-    # frame was persisted — callers needing the ANALYZE scope reuse this
+    # frame was pinned — callers needing the ANALYZE scope reuse this
     # instead of re-scanning the source (None for whole-target writes).
     last_affected: list | None = None
 
@@ -228,15 +229,15 @@ class AtomicWriter:
             self._commit(df, self.last_affected)
             return
         # The frame feeds two jobs (partition discovery, then the
-        # write): cache it so the source is computed once.
-        df = df.persist()
+        # write): pin it so the source is computed once.
+        df = tracked_checkpoint(df, None)
         try:
             self.last_affected = _canonical_criteria(
                 collect_partitions(df, self.partition_columns)
             )
             self._commit(df, self.last_affected)
         finally:
-            df.unpersist()
+            unpersist_checkpoints([df])
 
     def _existing_schema(self):
         """On-disk schema from ONE data-file footer plus the partition

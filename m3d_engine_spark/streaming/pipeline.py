@@ -733,9 +733,9 @@ def nightly_ingest_stream_batch(
     )
     if span_state_path is None:
         return
+    from m3d_engine_spark.operators.base import unpersist_checkpoints
     from m3d_engine_spark.operators.suffix import (
         incremental_exact_substr,
-        unpersist_checkpoints,
         window_count_state,
     )
 

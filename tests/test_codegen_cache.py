@@ -33,7 +33,7 @@ def test_session_keeps_broadcast_pieces_out_of_humongous_regions(spark):
 
 def test_components_rerun_compiles_nothing(spark):
     # Two rounds of propagation plus the converged one; each round's
-    # convergence probe runs a plan of its own.
+    # convergence probe is an Observation on that round's checkpoint.
     nodes = spark.createDataFrame([Row(id=i) for i in range(6)])
     edges = spark.createDataFrame(
         [Row(src=0, dst=1), Row(src=1, dst=2), Row(src=3, dst=4)]

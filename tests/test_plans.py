@@ -2041,10 +2041,9 @@ def test_state_table_probe_cli_plan_is_exchange_free(spark, tmp_path):
     from conftest import drop_table_clean
 
     from m3d_engine_spark.config import ParamsFile
-    from m3d_engine_spark.operators.base import REGISTRY
+    from m3d_engine_spark.operators.base import REGISTRY, unpersist_checkpoints
     from m3d_engine_spark.operators.suffix import (
         materialize_window_count_table,
-        unpersist_checkpoints,
     )
 
     state_loc = str(tmp_path / "state")
@@ -2164,9 +2163,7 @@ def test_scrubbed_ids_table_probe_cli_plan_is_exchange_free(
         simple = _plan_simple(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        from m3d_engine_spark.operators.suffix import (
-            unpersist_checkpoints,
-        )
+        from m3d_engine_spark.operators.base import unpersist_checkpoints
 
         unpersist_checkpoints(algo._checkpointed)
         algo._checkpointed.clear()
@@ -2192,3 +2189,91 @@ def test_scrubbed_ids_table_probe_cli_plan_is_exchange_free(
         )
         d0 = depth(ln)
     spark.sql("DROP TABLE ids_state_cli")
+
+
+
+def _condense_nodes(df, key: str) -> tuple[int, int]:
+    """(ranking ``Window`` nodes, exchanges hash-partitioned on
+    ``key``) in the final plan ``df`` ran."""
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    final = executed.split("== Initial Plan ==")[0]
+    return (
+        final.count("Window ["),
+        final.count(f"Exchange hashpartitioning({key}#"),
+    )
+
+
+_CDC_ROWS = [(1, 1, 11, 20240101, "N"), (2, 1, 12, 20240101, "N"),
+             (1, 2, 20, 20240102, "D"), (1, 4, 40, 20240102, "")]
+
+
+def test_delta_load_merge_condenses_once(spark, tmp_path):
+    """DeltaLoad's merge reads ``condensed`` twice (anti-join keys,
+    upserts). Column pruning gives the two reads two plans, each with
+    its own ranking window behind its own business-key shuffle; pinned
+    as one checkpoint, both reads scan one computed relation. Inputs
+    are parquet, as in a load: the checkpoint keeps their size
+    estimate, so the condensed keys still broadcast."""
+    from m3d_engine_spark.config import ParamsFile
+    from m3d_engine_spark.operators.base import unpersist_checkpoints
+    from m3d_engine_spark.operators.delta_load import DeltaLoadAlgorithm
+
+    delta, active = str(tmp_path / "delta"), str(tmp_path / "active")
+    spark.createDataFrame(
+        _CDC_ROWS, "ts int, k int, v int, date int, recordmode string"
+    ).write.parquet(delta)
+    spark.createDataFrame(
+        [(k, 10 * k, 20240100 + k, 2024, 1) for k in (1, 2, 3)],
+        "k int, v int, date int, year int, month int",
+    ).write.partitionBy("year", "month").parquet(active)
+    algo = DeltaLoadAlgorithm(spark, ParamsFile({
+        "business_key": ["k"],
+        "technical_key": ["ts"],
+        "target_partitions": ["year", "month"],
+        "partition_column": "date",
+        "partition_column_format": "yyyyMMdd",
+    }))
+    try:
+        merged = algo.transform(
+            [spark.read.parquet(delta), spark.read.parquet(active)]
+        )[0]
+        nodes = _condense_nodes(merged, "k")
+        rows = sorted((r.k, r.v) for r in merged.collect())
+    finally:
+        unpersist_checkpoints(algo._checkpointed)
+    assert rows == [(1, 12), (3, 30), (4, 40)]
+    assert nodes == (0, 0), "the merge runs the condense window per read"
+
+
+def test_delta_lake_load_degenerate_merge_condenses_once(spark, tmp_path):
+    """DeltaLakeLoad with no ``delta_table_dir`` merges straight into
+    the lake through the same ``merge_delta``; its ``condensed`` is
+    pinned without ``target_partitions`` too, so the window runs
+    once."""
+    from m3d_engine_spark.config import ParamsFile
+    from m3d_engine_spark.operators.base import unpersist_checkpoints
+    from m3d_engine_spark.operators.delta_lake_load import (
+        DeltaLakeLoadAlgorithm,
+    )
+
+    src, lake = str(tmp_path / "src"), str(tmp_path / "lake")
+    spark.createDataFrame(
+        _CDC_ROWS, "ts int, k int, v int, date int, recordmode string"
+    ).write.parquet(src)
+    spark.createDataFrame(
+        [(k, 10 * k, 20240100 + k) for k in (1, 2, 3)], "k int, v int, date int"
+    ).write.parquet(lake)
+    algo = DeltaLakeLoadAlgorithm(spark, ParamsFile({
+        "business_key": ["k"],
+        "technical_key": ["ts"],
+        "target_location": lake,
+    }))
+    try:
+        merged = algo.transform([spark.read.parquet(src)])[0]
+        nodes = _condense_nodes(merged, "k")
+        rows = sorted((r.k, r.v) for r in merged.collect())
+    finally:
+        unpersist_checkpoints(algo._checkpointed)
+    assert rows == [(1, 12), (3, 30), (4, 40)]
+    assert nodes == (0, 0), "the merge runs the condense window per read"

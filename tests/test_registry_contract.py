@@ -252,3 +252,18 @@ def test_every_package_definition_is_reached():
     check it."""
     unreached = _unreached_definitions()
     assert not unreached, "unreached:\n" + "\n".join(unreached)
+
+
+def test_reused_frames_have_one_materialization_form():
+    """A frame read more than once is a tracked lazy local checkpoint
+    (``operators.base.tracked_checkpoint``), freed by whoever tracks
+    it. A ``.persist(``/``.cache(`` would bring back a second form and
+    a second lifetime to release."""
+    pkg = _REPO / "m3d_engine_spark"
+    hits = [
+        f"{path.relative_to(_REPO)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".persist(" in line or ".cache(" in line
+    ]
+    assert not hits, hits

@@ -30,10 +30,10 @@ def test_suffix_track_collects_and_unpersists(spark):
     localCheckpoint; unpersist_checkpoints frees the RDD blocks (via
     the LogicalRDD — DataFrame.unpersist() would be a no-op for
     checkpoint blocks)."""
+    from m3d_engine_spark.operators.base import unpersist_checkpoints
     from m3d_engine_spark.operators.suffix import (
         _tokenized,
         suffix_window_classes,
-        unpersist_checkpoints,
     )
 
     before = _persistent_rdd_ids(spark)

@@ -1,14 +1,16 @@
 """Unpersist audit: no algorithm run() may leave cached blocks behind.
 
-Every persist point in the engine (AtomicWriter's affected-partition
-persist, DeltaLoad's delta, DeltaLakeLoad's raw+condensed frames,
-FullMaterialization's to_cache) must be released by the time run()
-returns — a long-lived session (thrift server, notebook, orchestrated
-batch loop) would otherwise accumulate executor storage until eviction
-thrash. The base Algorithm.run() owns the guarantee via the
-``_persisted`` registry; this test pins it for the algorithms that
-actually persist, so a future persist point cannot ship without joining
-the registry.
+Every reused frame on the load path is a tracked lazy local checkpoint
+(AtomicWriter's affected-partition frame, DeltaLoad's delta and
+condensed frames, DeltaLakeLoad's raw+condensed frames,
+FullMaterialization's to_cache, ExpectationsCheck's report), and each
+must be released by the time run() returns — a long-lived session
+(thrift server, notebook, orchestrated batch loop) would otherwise
+accumulate executor storage until eviction thrash. The base
+Algorithm.run() owns the guarantee via the ``_checkpointed`` registry
+(AtomicWriter frees its own frame); this test pins it for the
+algorithms that pin frames, so a future pin point cannot ship without
+joining the registry.
 """
 
 from __future__ import annotations
@@ -162,3 +164,22 @@ def test_delta_lake_load_run_leaves_no_cache(spark, tmp_path, clean_cache):
     )
     DeltaLakeLoad(spark, params).run()
     assert _n_persistent_rdds(spark) == 0
+
+
+def test_expectations_check_run_leaves_no_cache(spark, tmp_path, clean_cache):
+    """The report is read twice (written, then collected for the
+    failed rules); repeated runs in one session must not pile up its
+    checkpoint blocks."""
+    from m3d_engine_spark.operators.expectations import ExpectationsCheckAlgorithm
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([Row(k=1), Row(k=2)]).write.parquet(src)
+    for i in range(2):
+        ExpectationsCheckAlgorithm(spark, ParamsFile({
+            "source_location": src,
+            "rules": {"k_positive": "k > 0"},
+            "target_location": str(tmp_path / f"report{i}"),
+        })).run()
+        assert _n_persistent_rdds(spark) == 0
+    rows = spark.read.parquet(str(tmp_path / "report1")).collect()
+    assert [(r.rule, r.passed) for r in rows] == [("k_positive", 1)]

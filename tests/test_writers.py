@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from m3d_engine_spark.sources import writers
 from m3d_engine_spark.sources.writers import AtomicWriter, LoadMode
 from tests.conftest import multiset_equal
 
@@ -218,26 +219,22 @@ def test_frame_persisted_only_when_writer_collects_partitions(spark, tmp_path, m
     _write(spark, tgt, [Row(k=1, year=2016)], ["year"], LoadMode.OVERWRITE_TABLE)
     batch = spark.createDataFrame([Row(k=2, year=2016)])
     calls = []
-    for name in ("persist", "unpersist"):
-        # the concrete class: Spark 4's classic DataFrame overrides both
-        real = getattr(type(batch), name)
+    for name in ("tracked_checkpoint", "unpersist_checkpoints"):
+        real = getattr(writers, name)
         monkeypatch.setattr(
-            type(batch), name,
-            lambda self, *a, _real=real, _name=name, **kw: (
-                calls.append(_name) or _real(self, *a, **kw)
-            ),
+            writers, name,
+            lambda *a, _real=real, _name=name: calls.append(_name) or _real(*a),
         )
     writer = AtomicWriter(spark, tgt, partition_columns=["year"])
     writer.write(batch, LoadMode.OVERWRITE_PARTITIONS, affected=[[("year", 2016)]])
     assert calls == []
     writer.write(batch, LoadMode.OVERWRITE_PARTITIONS)
-    assert calls == ["persist", "unpersist"]
+    assert calls == ["tracked_checkpoint", "unpersist_checkpoints"]
     assert writer.last_affected == [[("year", 2016)]]
 
 
 def test_write_output_append_join_collects_partitions_once(spark, monkeypatch):
     from m3d_engine_spark.config import ParamsFile
-    from m3d_engine_spark.sources import writers
 
     calls = []
     real = writers.collect_partitions
