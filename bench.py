@@ -77,7 +77,7 @@ def main() -> int:
     # Also warm the parquet reader + shuffle + window machinery: the
     # range-sum alone left the first ~5 sweep entries paying 0.5-1 s of
     # scan/codegen bring-up (measured round 10 when the registry
-    # rotation fronted different entries — their numbers jumped with
+    # order put different entries first — their numbers jumped with
     # zero code change). region is the smallest table (~5 rows/sf).
     try:
         from pyspark.sql import functions as _F
@@ -90,12 +90,12 @@ def main() -> int:
         spark.read.parquet(f"{sf_dir}/lineitem.parquet").agg(
             _F.sum("l_quantity")
         ).collect()
-        # documents is the other big table the rotation front usually
-        # reads (the LLM-pipeline entries); r15 measured the front
-        # cohort paying ~1.3 s of string-scan/codegen bring-up that a
+        # documents is the other big table the registry's first
+        # entries often read (the LLM-pipeline entries); r15 measured
+        # them paying ~1.3 s of string-scan/codegen bring-up that a
         # quiet warm-first read did not (4.25 vs 2.94 s at position 0)
-        # — warm its reader too so in-sweep front reads stop needing
-        # positional adjudication every rotation
+        # — warm its reader too so in-sweep first reads stop needing
+        # positional adjudication each time the driver window moves
         spark.read.parquet(f"{sf_dir}/documents.parquet").agg(
             _F.sum(_F.length("text"))
         ).collect()

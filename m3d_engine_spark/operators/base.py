@@ -32,15 +32,18 @@ def register(cli_name: str) -> Callable[[Type["Algorithm"]], Type["Algorithm"]]:
     return deco
 
 
-def tracked_checkpoint(df: DataFrame, track: "list | None") -> DataFrame:
-    """Lazy localCheckpoint, registered on ``track`` so the caller can
-    free its blocks once the consumers have run (long-lived sessions
-    otherwise accumulate them). The engine's one form for a frame read
-    more than once: unlike a cache, it keeps AQE's coalesced partition
-    count, and every column pruning of it reads the one computed
-    relation. The trade: its blocks die with their executor (dynamic
-    allocation, spot loss), where a cache would be recomputed."""
-    out = df.localCheckpoint(eager=False)
+def tracked_checkpoint(
+    df: DataFrame, track: "list | None", *, eager: bool = False
+) -> DataFrame:
+    """localCheckpoint (lazy unless ``eager``), registered on ``track``
+    so the caller can free its blocks once the consumers have run
+    (long-lived sessions otherwise accumulate them). The engine's one
+    form for a frame read more than once: unlike a cache, it keeps
+    AQE's coalesced partition count, and every column pruning of it
+    reads the one computed relation. The trade: its blocks die with
+    their executor (dynamic allocation, spot loss), where a cache would
+    be recomputed."""
+    out = df.localCheckpoint(eager=eager)
     if track is not None:
         track.append(out)
     return out

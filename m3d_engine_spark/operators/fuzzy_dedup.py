@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from m3d_engine_spark.operators.base import Algorithm, register, tracked_checkpoint
 from m3d_engine_spark.operators.dedup import (
     _exact_jaccard_on_candidates,
     minhash_lsh_candidates,
@@ -81,6 +82,7 @@ def fuzzy_dedup_corpus(
     max_bucket_size: int | None = None,
     salt_size: int | None | str = "auto",
     salt_parts: int = 8,
+    track: "list | None" = None,
 ) -> DataFrame:
     """The cleaned corpus: every input column of ``docs`` for the rows
     that survive near-dedup, plus ``component`` (duplicate-cluster id =
@@ -106,6 +108,10 @@ def fuzzy_dedup_corpus(
     identical. The threshold costs one extra exchange of
     map-side-combined per-bucket counts. Pass an int to force the
     threshold or None to disable salting entirely.
+
+    Every checkpoint taken here and in connected components goes on
+    ``track`` (``operators.base.tracked_checkpoint``) for the caller to
+    free once the result has been consumed.
     """
     if quality is None:
         quality = F.length(F.col(text_col))
@@ -127,7 +133,7 @@ def fuzzy_dedup_corpus(
     # Lazy: materializes inside the edges checkpoint's action — no
     # extra job barrier; measured -14% CPU vs corpus-wide verify and
     # wall-neutral locally (interleaved min-of-5, OPTIMIZATION_r16.md).
-    cands = cands.localCheckpoint(eager=False)
+    cands = tracked_checkpoint(cands, track)
     # Explicit broadcast (guide §3.2): the id set comes off an RDD
     # scan (the checkpoint) whose size the planner cannot estimate —
     # without the hint the semi-join plans as a SortMergeJoin that
@@ -145,15 +151,17 @@ def fuzzy_dedup_corpus(
     # Eager checkpoint: the ONE materialization of the LSH+verify
     # pipeline. CC's per-round edge re-reads hit this checkpoint, never
     # the md5 pipeline above it.
-    edges = (
-        _exact_jaccard_on_candidates(sets, cands, id_col, threshold)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
+    edges = tracked_checkpoint(
+        _exact_jaccard_on_candidates(sets, cands, id_col, threshold).select(
+            "id_a", "id_b"
+        ),
+        track,
+        eager=True,
     )
     cc = connected_components_star if use_star else connected_components
     comp = cc(
         docs.select(id_col), edges, id_col=id_col,
-        src_col="id_a", dst_col="id_b",
+        src_col="id_a", dst_col="id_b", track=track,
     )
     survivors = cluster_survivors(
         comp,
@@ -196,9 +204,6 @@ def _positive_or_none(p, key: str) -> int | None:
             f"omit the parameter to disable the dial"
         )
     return val
-
-
-from m3d_engine_spark.operators.base import Algorithm, register  # noqa: E402
 
 
 @register("FuzzyDedup")
@@ -289,6 +294,7 @@ class FuzzyDedupAlgorithm(Algorithm):
                 max_bucket_size=_positive_or_none(p, "max_bucket_size"),
                 salt_size=salt_size_param(p),
                 salt_parts=p.get_optional_int("salt_parts", 8, minimum=1),
+                track=self._checkpointed,
             )
         ]
 

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from m3d_engine_spark.operators.base import tracked_checkpoint
+
 
 def propagation_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label-propagation round: join each vertex's neighbors'
@@ -95,6 +97,7 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 20,
+    track: "list | None" = None,
 ) -> DataFrame:
     """(id, component) with component = min id reachable from ``id``
     (including itself); nodes absent from ``edges`` form singleton
@@ -104,22 +107,29 @@ def connected_components(
     propagate over the full edge set (endpoints unioned in) and only
     the output is restricted to ``nodes`` — the same semantics as
     ``connected_components_star``, so the two stay swap-equivalent
-    when ``nodes`` was pre-filtered but ``edges`` was not (pinned)."""
+    when ``nodes`` was pre-filtered but ``edges`` was not (pinned).
+
+    Every checkpoint the loop takes goes on ``track``
+    (``operators.base.tracked_checkpoint``) for the caller to free once
+    the result has been consumed."""
     # The edge list is re-read EVERY round; left lazy, an expensive
     # upstream (an LSH pair pipeline) would be re-executed per
     # iteration. A checkpoint, not a cache: AQE coalesces the distinct's
     # shuffle before the rows land, so every round reads a state-sized
     # partition count (a cached plan keeps all spark.sql.shuffle.partitions
     # partitions and pays one task each, every round).
-    sym = _symmetrize(edges, src_col, dst_col).localCheckpoint(eager=True)
+    sym = tracked_checkpoint(
+        _symmetrize(edges, src_col, dst_col), track, eager=True
+    )
     # Checkpointed once for the same reason; left lazy, round 1 would
     # compute the union + distinct twice (its join and its fold).
-    labels = (
+    labels = tracked_checkpoint(
         nodes.select(F.col(id_col).alias("a"))
         .union(sym.select("a"))  # sym is symmetric: "a" covers both ends
         .distinct()
-        .select("a", F.col("a").alias("component"))
-        .localCheckpoint(eager=True)
+        .select("a", F.col("a").alias("component")),
+        track,
+        eager=True,
     )
     converged = False
     for _ in range(max_iterations):
@@ -132,10 +142,12 @@ def connected_components(
         # the same every round, and later rounds and runs hit the
         # codegen cache.
         changed = Observation("cc_round")
-        updated = (
-            propagation_round(sym, labels)
-            .observe(changed, F.bool_or("_changed").alias("changed"))
-            .localCheckpoint(eager=True)
+        updated = tracked_checkpoint(
+            propagation_round(sym, labels).observe(
+                changed, F.bool_or("_changed").alias("changed")
+            ),
+            track,
+            eager=True,
         )
         labels = updated.drop("_changed")
         if not changed.get["changed"]:  # None: no vertices at all
@@ -204,6 +216,7 @@ def connected_components_star(
     dst_col: str = "dst",
     max_iterations: int = 20,
     stats: dict | None = None,
+    track: "list | None" = None,
 ) -> DataFrame:
     """Large-star/small-star contraction. Same contract as
     ``connected_components``; use when the graph may contain LONG
@@ -219,37 +232,39 @@ def connected_components_star(
     (SoCC'14, Thm 1-2).
 
     ``stats``, if given, receives {"rounds": n} — pinned by
-    tests/test_graph.py on a long chain.
+    tests/test_graph.py on a long chain. ``track`` as in
+    ``connected_components``.
     """
     # Directed hi→lo representation throughout: (a, b) with a > b.
     # Half the rows of the symmetric form, and both star operations
     # emit edges already in this orientation, so no re-symmetrize
     # (union+distinct) shuffle between rounds.
-    down = (
+    down = tracked_checkpoint(
         edges.select(
             F.greatest(F.col(src_col), F.col(dst_col)).alias("a"),
             F.least(F.col(src_col), F.col(dst_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        track,
+        eager=True,
     )
     prev_fp = None
     rounds = 0
     converged = False
     for _ in range(max_iterations):
         fingerprint = Observation("cc_star_round")
-        down = (
-            _small_star(_large_star(down))
-            .observe(
+        down = tracked_checkpoint(
+            _small_star(_large_star(down)).observe(
                 fingerprint,
                 F.count(F.lit(1)).alias("n"),
                 # decimal sum: a long sum of 64-bit hashes overflows
                 # under ANSI mode; decimal(38,0) has 18 digits of
                 # headroom.
                 F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            track,
+            eager=True,
         )
         rounds += 1
         fp = fingerprint.get

@@ -17,15 +17,18 @@ Spark output column and its DuckDB oracle twin.
 Construction is done ONCE on a thread pool (module-scoped fixture):
 building a registry DataFrame is mostly driver-side analysis, and the
 handful of entries that run collects at build time (kmeans, pagerank,
-calibration) overlap, so the full 201-entry walk costs ~20 s on the
+calibration) overlap, so the full registry walk costs ~20 s on the
 shared session instead of ~95 s serial — cheap enough for the default
 lane, which is where a guard against future registry additions has to
 live.
 """
 
 import ast
+import json
 import os
 import re
+import subprocess
+import sys
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
@@ -34,6 +37,7 @@ import pytest
 import __spark_entry__ as entry
 
 _NON_SCALAR = ("array", "struct", "map")
+_REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -152,16 +156,72 @@ def test_oracle_dtype_family_parity(registry_schemas, oracle_described):
 
 
 def test_oracle_keys_subset_of_queries_and_no_duplicates():
-    q = entry.queries()
-    o = entry.oracle_sql()
-    assert set(o) <= set(q), sorted(set(o) - set(q))
-    # dict literals silently drop duplicate keys only in CPython >=3.7
-    # when identical; guard against a paste error shrinking the registry.
-    assert len(q) >= 201, len(q)
+    """Both registries are derived from the module's top-level
+    ``q_<name>`` functions: every entry has an oracle, and nothing
+    else is an entry."""
+    tree = ast.parse((_REPO / "__spark_entry__.py").read_text())
+    q_names = {
+        node.name[2:]
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("q_")
+    }
+    assert set(entry.oracle_sql()) == set(entry.queries()) == q_names
+    assert len(q_names) == 210, len(q_names)
+
+
+def _ledger_green_rounds(ledger_dir: Path) -> dict[str, int]:
+    """name -> latest round whose ``CORRECTNESS_r<N>.json`` row is green."""
+    last: dict[str, int] = {}
+    for path in ledger_dir.glob("CORRECTNESS_r*.json"):
+        rnd = int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name).group(1))
+        for name, row in json.loads(path.read_text()).items():
+            green = row["rows_match"] and row["schema_match"] and row["hash_match"]
+            if green and not row["err"]:
+                last[name] = max(last.get(name, -1), rnd)
+    return last
+
+
+def test_driver_window_is_the_stalest_green_rows():
+    """The driver checks the first 50 entries of ``queries()``: they
+    must be the 50 whose latest green ledger row is oldest (no green
+    row at all first), ties by name, so every entry comes round."""
+    last = _ledger_green_rounds(_REPO)
+    names = list(entry.queries())
+    stalest = sorted(names, key=lambda n: (last.get(n, -1), n))
+    assert names[:50] == stalest[:50]
+
+
+def test_red_latest_row_sorts_as_stale(tmp_path):
+    """An entry whose latest row is red counts from its last GREEN
+    round; one never green comes first."""
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "err": None}
+    ledgers = {
+        1: {"a": green, "m": green, "z": green},
+        2: {"a": green, "m": green, "z": {**green, "hash_match": False}},
+        3: {"a": green, "m": {**green, "err": "boom"}},
+    }
+    for rnd, rows in ledgers.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    order = entry._stalest_first(["a", "m", "new", "z"], tmp_path)
+    assert order == ["new", "z", "m", "a"]
+
+
+def test_driver_mimic_rejects_unknown_entries(tmp_path):
+    """A misspelled entry name must fail the mimic before any Spark
+    session starts, not end in "0 failures" having checked nothing.
+    Run from another directory: the tool finds the repo itself."""
+    proc = subprocess.run(
+        [sys.executable, str(_REPO / "tools" / "driver_mimic.py"),
+         str(tmp_path), "pricing_summary", "no_such_entry"],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    assert "no_such_entry" in proc.stderr
+    assert "pricing_summary" not in proc.stderr
 
 
 # ------------------------------------------------------ reachability
-_REPO = Path(__file__).resolve().parents[1]
 _WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 

@@ -183,3 +183,32 @@ def test_expectations_check_run_leaves_no_cache(spark, tmp_path, clean_cache):
         assert _n_persistent_rdds(spark) == 0
     rows = spark.read.parquet(str(tmp_path / "report1")).collect()
     assert [(r.rule, r.passed) for r in rows] == [("k_positive", 1)]
+
+
+def test_fuzzy_dedup_runs_leave_no_cache(spark, tmp_path, clean_cache):
+    """The LSH candidates, the verified edges and every
+    connected-components checkpoint (edges, labels, one per round) go
+    on the run's registry; repeated runs in one session must not pile
+    them up."""
+    from m3d_engine_spark.operators.fuzzy_dedup import FuzzyDedupAlgorithm
+
+    src = str(tmp_path / "corpus")
+    # ten clusters of three near copies (the last word differs)
+    spark.createDataFrame(
+        [
+            Row(
+                doc_id=10 * c + k,
+                text=" ".join([f"c{c}w{j}" for j in range(10)] + [f"k{k}"]),
+            )
+            for c in range(10)
+            for k in range(3)
+        ]
+    ).write.parquet(src)
+    for i in range(2):
+        FuzzyDedupAlgorithm(spark, ParamsFile({
+            "source_location": src,
+            "target_location": str(tmp_path / f"out{i}"),
+        })).run()
+        assert _n_persistent_rdds(spark) == 0
+    out = spark.read.parquet(str(tmp_path / "out1"))
+    assert sorted(r.cluster_size for r in out.collect()) == [3] * 10

@@ -11,18 +11,23 @@ by all columns, dtype FAMILY compared per column, then an exact
 (``check_exact=True``) frame comparison.
 
 Usage: python tools/driver_mimic.py [sf_dir] [entry ...]
+
+With no entry names every ``queries()`` entry runs. An unknown name
+exits 2 before any Spark session starts; otherwise the exit code is 1
+if any entry fails, else 0.
 """
 
 from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod
 from m3d_engine_spark.session import build_session
@@ -48,6 +53,13 @@ def _family(d) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entry_mod.queries()
+    unknown = only - set(qs)
+    if unknown:
+        # a misspelled name would otherwise be skipped and the run end
+        # "0 failures" having checked nothing
+        print(f"unknown entries: {sorted(unknown)}", file=sys.stderr)
+        return 2
     spark = build_session(
         app_name="driver-mimic",
         master="local[8]",
@@ -56,14 +68,10 @@ def main() -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: no oracle")
             continue
         t0 = time.time()
         try:
