@@ -30,14 +30,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from m3d_engine_spark.operators.dedup import lsh_bands
-from m3d_engine_spark.plans.skew import auto_salt_threshold
+from m3d_engine_spark.plans.skew import AUTO_SALT_FLOOR, auto_salt_threshold
 
 
 def bucket_dial_report(
     rel: DataFrame,
     key_cols: list[str],
     *,
-    floor: int = 4096,
+    floor: int = AUTO_SALT_FLOOR,
     ratio: int = 8,
     max_parts: int = 64,
     boilerplate_factor: int = 16,
@@ -133,7 +133,7 @@ def dedup_preflight_report(
     num_hashes: int = 16,
     bands: int = 8,
     shingle_n: int = 3,
-    floor: int = 4096,
+    floor: int = AUTO_SALT_FLOOR,
     ratio: int = 8,
 ) -> DataFrame:
     """The FuzzyDedup/IncrementalDedup pre-flight: LSH band relation →
@@ -157,7 +157,7 @@ def dedup_preflight_report_from_artifacts(
     spark,
     artifact_location: str,
     *,
-    floor: int = 4096,
+    floor: int = AUTO_SALT_FLOOR,
     ratio: int = 8,
 ) -> DataFrame:
     """``dedup_preflight_report`` fed from materialized dedup artifacts
@@ -209,7 +209,7 @@ def jaccard_dial_report(
     block_cols: list[str],
     *,
     shingle_n: int = 3,
-    floor: int = 4096,
+    floor: int = AUTO_SALT_FLOOR,
     ratio: int = 8,
 ) -> DataFrame:
     """The ``ngram_jaccard_pairs`` pre-flight: the same

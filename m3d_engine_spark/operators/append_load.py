@@ -109,7 +109,8 @@ class AppendLoad(Algorithm):
         try:
             pat = re.compile(regex)
         except re.error:
-            jm = self.spark._jvm.java.util.regex.Pattern.compile(regex).matcher(path)
+            pattern = getattr(self.spark._jvm, "java.util.regex.Pattern")
+            jm = pattern.compile(regex).matcher(path)
             return jm.group(1) if jm.find() else None
         m = pat.search(path)
         return m.group(1) if m else None

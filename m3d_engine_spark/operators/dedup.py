@@ -234,8 +234,13 @@ def _banded_candidates(
       ``salt_size="auto"`` derives the threshold IN-PLAN from the
       per-bucket count distribution (``plans/skew.py::
       auto_salt_threshold``; no driver collect) — the self-tuning
-      default the compositions use. It costs one extra exchange of
-      map-side-combined per-bucket counts.
+      default the compositions use. It costs an exchange of
+      map-side-combined per-bucket counts, the count histogram's two
+      exchanges, a 1-row threshold broadcast and the hot stream
+      (``plans/skew.py::_flag_hot``), even when no bucket turns out
+      hot; ``fuzzy_dedup_corpus`` therefore passes ``None`` for a
+      corpus of at most ``plans.skew.AUTO_SALT_FLOOR`` rows, where no
+      bucket can reach the threshold.
 
     Why AQE doesn't cover this: these self-joins deliberately pin
     ReusedExchange (one evaluation of the signature pipeline), and

@@ -65,7 +65,7 @@ from m3d_engine_spark.operators.graph import (
     connected_components,
     connected_components_star,
 )
-from m3d_engine_spark.plans.skew import salt_size_param
+from m3d_engine_spark.plans.skew import AUTO_SALT_FLOOR, salt_size_param
 
 
 def fuzzy_dedup_corpus(
@@ -101,13 +101,19 @@ def fuzzy_dedup_corpus(
     per-bucket count distribution (``plans/skew.py::
     auto_salt_threshold`` over a ``groupBy(band, band_key)`` count,
     broadcast back as one row; no driver collect, no checkpoint). When
-    no bucket is hot — the common case — the hot streams are empty at
-    runtime and every pair flows through the same exchange-reused cold
-    join as ``salt_size=None``; when a boilerplate bucket IS hot, its
-    pair stream spreads over ``salt_parts`` tasks with output pinned
-    identical. The threshold costs one extra exchange of
-    map-side-combined per-bucket counts. Pass an int to force the
-    threshold or None to disable salting entirely.
+    no bucket is hot the hot stream is empty at runtime and every pair
+    flows through the same exchange-reused cold join as
+    ``salt_size=None``; when a boilerplate bucket IS hot, its pair
+    stream spreads over ``salt_parts`` tasks with output pinned
+    identical. The salted plan costs an exchange of map-side-combined
+    per-bucket counts, the histogram's two exchanges, the 1-row
+    threshold broadcast and the hot stream's own exchanges
+    (``plans/skew.py::_flag_hot``), so "auto" plans it only when a
+    bucket can be hot: a bucket holds at most one row per document and
+    the threshold is never below ``AUTO_SALT_FLOOR``, so a corpus of at
+    most that many rows gets the plain join, found by one bounded
+    ``take`` of the ids. Pass an int to force the threshold or None to
+    disable salting entirely.
 
     Every checkpoint taken here and in connected components goes on
     ``track`` (``operators.base.tracked_checkpoint``) for the caller to
@@ -115,6 +121,13 @@ def fuzzy_dedup_corpus(
     """
     if quality is None:
         quality = F.length(F.col(text_col))
+    if salt_size == "auto" and len(
+        docs.select(id_col).take(AUTO_SALT_FLOOR + 1)
+    ) <= AUTO_SALT_FLOOR:
+        # No bucket can exceed the floor: the plain join, same pairs.
+        # take runs as executeTake; limit().count() would generate a
+        # fresh _limit_counter per run and recompile on every rerun.
+        salt_size = None
     cands = minhash_lsh_candidates(
         docs, id_col, text_col, num_hashes=num_hashes, bands=bands,
         shingle_n=shingle_n, max_bucket_size=max_bucket_size,
@@ -228,8 +241,10 @@ class FuzzyDedupAlgorithm(Algorithm):
       use_star (false) — large/small-star CC for long-chain graphs
       max_bucket_size (null) — drop LSH buckets larger than this
       salt_size ("auto") — hot-bucket salted join: "auto" derives the
-        threshold from the per-bucket count distribution, an int
-        forces it, "off" disables; salt_parts (8) — spread factor
+        threshold from the per-bucket count distribution (planned only
+        for corpora above ``plans.skew.AUTO_SALT_FLOOR`` rows, the
+        smallest threshold it can pick), an int forces it, "off"
+        disables; salt_parts (8) — spread factor
       target_location OR target_table (+ target_partitions,
       output_files_num, load_mode — the full write_output surface)
 

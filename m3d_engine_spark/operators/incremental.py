@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from m3d_engine_spark.config import ConfigError
+from m3d_engine_spark.operators.base import Algorithm, register, tracked_checkpoint
 from m3d_engine_spark.operators.dedup import (
     MINHASH_FAMILY,
     lsh_bands,
@@ -197,6 +198,7 @@ def incremental_dedup_against_artifacts(
     *,
     threshold: float = 0.5,
     salt_parts: int = 8,
+    track: "list | None" = None,
 ) -> DataFrame:
     """``incremental_dedup`` reading the corpus side from materialized
     artifacts: the nightly-batch form — corpus text is NEVER touched,
@@ -225,6 +227,10 @@ def incremental_dedup_against_artifacts(
     identical to the unsalted form — pinned by test. Zero derivation
     cost here: the hot relation was counted when the corpus was
     accepted, the only time its distribution can change.
+
+    The checkpoint of the exact-dedup survivors goes on ``track``
+    (``operators.base.tracked_checkpoint``) for the caller to free once
+    the result has been consumed.
     """
     import json
 
@@ -241,14 +247,15 @@ def incremental_dedup_against_artifacts(
     # id_column still resolves them)
     old_id = meta.get("id_col", id_col)
     fp_old = spark.read.parquet(artifacts["fingerprints"])
-    exact_surv = (
+    # three consumers below (bands, shingle verify, final anti-join)
+    # would each replay the corpus fingerprint anti-join — the
+    # checkpoint discipline every sibling operator applies
+    exact_surv = tracked_checkpoint(
         new.withColumn("_fp", F.md5(F.col(text_col)))
         .join(fp_old, on="_fp", how="left_anti")
-        .drop("_fp")
-        # three consumers below (bands, shingle verify, final anti-join)
-        # would each replay the corpus fingerprint anti-join — the
-        # checkpoint discipline every sibling operator applies
-        .localCheckpoint(eager=True)
+        .drop("_fp"),
+        track,
+        eager=True,
     )
     nb = lsh_bands(exact_surv, id_col, text_col, num_hashes, bands, shingle_n)
     # Prefer the bucketed metastore form when the artifacts carry one:
@@ -480,9 +487,6 @@ def incremental_dedup(
 # CLI algorithm: params-driven dispatch (the CurationPipeline pattern)
 # --------------------------------------------------------------------------
 
-from m3d_engine_spark.operators.base import Algorithm, register  # noqa: E402
-
-
 @register("IncrementalDedup")
 class IncrementalDedupAlgorithm(Algorithm):
     """The nightly-batch dedup shape behind the JSON-params dispatch —
@@ -598,6 +602,7 @@ class IncrementalDedupAlgorithm(Algorithm):
                 dfs[0], artifacts, id_col, text_col,
                 threshold=float(p.get_optional("threshold", 0.5)),
                 salt_parts=int(p.get_optional("salt_parts", 8)),
+                track=self._checkpointed,
             )
         ]
 

@@ -44,6 +44,9 @@ from pyspark.sql import functions as F
 
 SALT_PART_COL = "_salt_part"
 _SIZE_COL = "_salt_bsz"
+# The "auto" threshold's lower bound, ``max(floor, ratio·p95)``: no key
+# of at most this many rows is ever hot (see ``auto_salt_threshold``).
+AUTO_SALT_FLOOR = 4096
 
 # join(left, right, *extra_keys) -> joined rows; the helpers pass
 # SALT_PART_COL as the extra key of the hot stream
@@ -127,7 +130,7 @@ def auto_salt_threshold(
     counts: DataFrame,
     size_col: str,
     *,
-    floor: int = 4096,
+    floor: int = AUTO_SALT_FLOOR,
     ratio: int = 8,
 ) -> DataFrame:
     """The hot-key threshold rule as a 1-ROW RELATION computed entirely
@@ -194,7 +197,7 @@ def collect_hot_threshold(
     size_col: str,
     salt_size: int | str,
     *,
-    floor: int = 4096,
+    floor: int = AUTO_SALT_FLOOR,
     ratio: int = 8,
 ) -> int | None:
     """The threshold as a driver-side int, for callers that persist it
@@ -293,7 +296,7 @@ def salted_self_join(
     salt_size: int | str | None,
     salt_parts: int,
     *,
-    floor: int = 4096,
+    floor: int = AUTO_SALT_FLOOR,
     ratio: int = 8,
 ) -> DataFrame:
     """``join(rel, rel)`` with hot keys salted — the pair-generation
@@ -322,8 +325,9 @@ def salted_self_join(
     broadcast-joined back so every row compares against it IN-PLAN —
     no driver collect, no checkpoint. On un-skewed data the hot stream
     is empty at runtime and the cold stream carries everything; the
-    threshold costs one extra exchange of map-side-combined per-key
-    counts (see ``_flag_hot``).
+    threshold still costs an exchange of map-side-combined per-key
+    counts, the histogram's two exchanges and the hot stream's plan
+    (see ``_flag_hot``).
     """
     if salt_size is None:
         return join(rel, rel)
@@ -424,7 +428,7 @@ def salted_big_side_join(
     salt_size: int | str,
     salt_parts: int,
     *,
-    floor: int = 4096,
+    floor: int = AUTO_SALT_FLOOR,
     ratio: int = 8,
 ) -> DataFrame:
     """``join(small, big)`` with hot keys salted, for the ASYMMETRIC

@@ -41,8 +41,8 @@ from m3d_engine_spark.sources.writers import AtomicWriter, LoadMode
 def dir_bytes(dfs: DFS, path: str) -> int:
     """Total data bytes under ``path`` (driver-side listing via the
     Hadoop FS — metadata only, no data read)."""
-    fs = dfs._fs(path)  # noqa: SLF001 — same-package use of the wrapper
-    return int(fs.getContentSummary(dfs._jpath(path)).getLength())  # noqa: SLF001
+    fs, p = dfs._fs_path(path)  # noqa: SLF001 — same-package use of the wrapper
+    return int(fs.getContentSummary(p).getLength())
 
 
 def plan_file_count(

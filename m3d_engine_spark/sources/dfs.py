@@ -20,44 +20,47 @@ from pyspark.sql import SparkSession
 class DFS:
     spark: SparkSession
 
-    def _jvm(self) -> Any:
-        return self.spark._jvm
-
-    def _fs(self, path: str) -> Any:
-        jvm = self._jvm()
-        hconf = self.spark._jsc.hadoopConfiguration()
-        return jvm.org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
+    def _jclass(self, name: str) -> Any:
+        """The JVM class ``name`` by its fully qualified name: one py4j
+        lookup, where ``jvm.org.apache...`` walks the package chain and
+        pays a failed class lookup per segment."""
+        return getattr(self.spark._jvm, name)
 
     def _jpath(self, path: str) -> Any:
-        return self._jvm().org.apache.hadoop.fs.Path(path)
+        return self._jclass("org.apache.hadoop.fs.Path")(path)
+
+    def _fs_path(self, path: str) -> tuple[Any, Any]:
+        """(FileSystem, Path) of ``path``, building the Path once."""
+        p = self._jpath(path)
+        return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
 
     # ------------------------------------------------------------ basics
     def exists(self, path: str) -> bool:
-        return self._fs(path).exists(self._jpath(path))
+        fs, p = self._fs_path(path)
+        return fs.exists(p)
 
     def mkdirs(self, path: str) -> None:
-        self._fs(path).mkdirs(self._jpath(path))
+        fs, p = self._fs_path(path)
+        fs.mkdirs(p)
 
     def delete(self, path: str, recursive: bool = True) -> bool:
-        fs = self._fs(path)
-        p = self._jpath(path)
+        fs, p = self._fs_path(path)
         return bool(fs.exists(p) and fs.delete(p, recursive))
 
     def rename(self, src: str, dst: str) -> bool:
         """Atomic on HDFS/posix; copy-based on S3 — callers must treat it
         as a commit step, not a lock (HadoopLoadHelper.scala:212-239)."""
-        fs = self._fs(src)
+        fs, src_p = self._fs_path(src)
         dst_p = self._jpath(dst)
         parent = dst_p.getParent()
         if parent is not None and not fs.exists(parent):
             fs.mkdirs(parent)
-        return bool(fs.rename(self._jpath(src), dst_p))
+        return bool(fs.rename(src_p, dst_p))
 
     def list_dirs(self, path: str, reverse: bool = True) -> list[str]:
         """Ordered subdirectory names (HadoopLoadHelper.scala:99-117);
         skips hidden and EMR '$folder$' placeholder entries."""
-        fs = self._fs(path)
-        p = self._jpath(path)
+        fs, p = self._fs_path(path)
         if not fs.exists(p):
             return []
         out = []
@@ -71,8 +74,7 @@ class DFS:
         """ALL direct child names — files and directories, hidden or
         not. The raw listing cleanupDirectoryLeftovers works from
         (HadoopLoadHelper.scala:50-58)."""
-        fs = self._fs(path)
-        p = self._jpath(path)
+        fs, p = self._fs_path(path)
         if not fs.exists(p):
             return []
         return [st.getPath().getName() for st in fs.listStatus(p)]
@@ -92,8 +94,7 @@ class DFS:
         ``committed_files`` are thin wrappers, so what 'committed'
         means can never diverge between schema discovery and the
         state/compaction paths."""
-        fs = self._fs(path)
-        p = self._jpath(path)
+        fs, p = self._fs_path(path)
         if not fs.exists(p):
             return
         base = p.toUri().getPath().rstrip("/")
@@ -117,8 +118,7 @@ class DFS:
         )
 
     def list_files(self, path: str, recursive: bool = True) -> list[str]:
-        fs = self._fs(path)
-        p = self._jpath(path)
+        fs, p = self._fs_path(path)
         if not fs.exists(p):
             return []
         it = fs.listFiles(p, recursive)
@@ -139,16 +139,16 @@ class DFS:
         ]
 
     def read_bytes(self, path: str) -> bytes:
-        fs = self._fs(path)
-        stream = fs.open(self._jpath(path))
+        fs, p = self._fs_path(path)
+        stream = fs.open(p)
         try:
-            ioutils = self._jvm().org.apache.commons.io.IOUtils
+            ioutils = self._jclass("org.apache.commons.io.IOUtils")
             return bytes(ioutils.toByteArray(stream))
         finally:
             stream.close()
 
     def write_bytes(self, path: str, content: bytes) -> None:
-        fs = self._fs(path)
+        fs, p = self._fs_path(path)
         try:
             # LocalFileSystem is checksummed by default and would write
             # a hidden .crc sibling next to every file — noise in landing
@@ -156,7 +156,7 @@ class DFS:
             fs.setWriteChecksum(False)
         except Exception:
             pass
-        stream = fs.create(self._jpath(path), True)
+        stream = fs.create(p, True)
         try:
             stream.write(bytearray(content))
         finally:

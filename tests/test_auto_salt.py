@@ -10,6 +10,8 @@ exactly-once contract of the salted join helpers.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,6 +113,82 @@ def test_salted_self_join_reserves_count_column(spark):
 
 
 # --------------------------------------- composition output identity
+def _spy_candidates(monkeypatch, fd) -> list:
+    """Record every candidate relation ``fuzzy_dedup_corpus`` plans
+    (the composition checkpoints it, which hides its plan)."""
+    seen = []
+    real = fd.minhash_lsh_candidates
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(fd, "minhash_lsh_candidates", spy)
+    return seen
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+
+
+def _dedup_jobs(spark, docs, salt_size):
+    """Sorted output rows of ``fuzzy_dedup_corpus`` and the jobs it ran,
+    counted with AQE off, where one query is one job (with AQE every
+    shuffle stage runs as a job of its own)."""
+    from m3d_engine_spark.operators.fuzzy_dedup import fuzzy_dedup_corpus
+
+    sc = spark.sparkContext
+    group = f"fuzzy_dedup_jobs_{uuid.uuid4().hex}"
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        rows = sorted(
+            fuzzy_dedup_corpus(docs, "doc_id", "text", salt_size=salt_size)
+            .select("doc_id", "component", "cluster_size")
+            .collect()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fuzzy_dedup_auto_small_corpus_plans_plain_join(spark, sf_dir, monkeypatch):
+    """A corpus of at most AUTO_SALT_FLOOR docs cannot hold a hot LSH
+    bucket (one row per doc per bucket, threshold ≥ the floor), so
+    "auto" plans the plain self-join: no salt part, no threshold
+    broadcast. Deciding that costs one bounded take, one job."""
+    import m3d_engine_spark.operators.fuzzy_dedup as fd
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert docs.count() <= fd.AUTO_SALT_FLOOR
+    off, off_jobs = _dedup_jobs(spark, docs, None)
+    cands = _spy_candidates(monkeypatch, fd)
+    auto, auto_jobs = _dedup_jobs(spark, docs, "auto")
+    plan = _plan(cands[0])
+    assert SALT_PART_COL not in plan and "BroadcastNestedLoopJoin" not in plan
+    assert auto_jobs == off_jobs + 1
+    assert auto == off and len(off) > 0
+
+
+def test_fuzzy_dedup_auto_above_floor_plans_salted_join(spark, sf_dir, monkeypatch):
+    """Above the floor "auto" keeps the two-stream salted join (the cold
+    self-join plus the hot stream keyed on the salt part), and its
+    output is that of the plain join."""
+    import m3d_engine_spark.operators.fuzzy_dedup as fd
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    monkeypatch.setattr(fd, "AUTO_SALT_FLOOR", 10)
+    off, _ = _dedup_jobs(spark, docs, None)
+    cands = _spy_candidates(monkeypatch, fd)
+    auto, _ = _dedup_jobs(spark, docs, "auto")
+    smj = [ln for ln in _plan(cands[0]).splitlines() if "SortMergeJoin" in ln]
+    assert len(smj) == 2 and sum(SALT_PART_COL in ln for ln in smj) == 1, smj
+    assert auto == off and len(off) > 0
+
+
 @pytest.mark.slow
 def test_fuzzy_dedup_auto_default_equals_unsalted(spark, sf_dir):
     """The new 'auto' default must be output-identical to the old
@@ -132,7 +210,8 @@ def test_fuzzy_dedup_auto_hot_path_equals_unsalted(spark, sf_dir, monkeypatch):
     """Force the in-plan tuner hot (threshold relation pinned to 2 →
     most LSH buckets route through the salted stream) and pin output
     identity — the salted plan is a pure re-partitioning of the same
-    pairs."""
+    pairs. The floor is lowered below the corpus size so that "auto"
+    plans the salted join at all."""
     import m3d_engine_spark.operators.fuzzy_dedup as fd
     import m3d_engine_spark.plans.skew as skew
 
@@ -145,7 +224,10 @@ def test_fuzzy_dedup_auto_hot_path_equals_unsalted(spark, sf_dir, monkeypatch):
             F.lit(2).cast("bigint").alias("_thr")
         ),
     )
+    monkeypatch.setattr(fd, "AUTO_SALT_FLOOR", 100)
+    cands = _spy_candidates(monkeypatch, fd)
     hot = fd.fuzzy_dedup_corpus(docs, "doc_id", "text")  # auto → thr 2
+    assert SALT_PART_COL in _plan(cands[0])
     cols = sorted(off.columns)
     assert sorted(r for r in hot.select(cols).collect()) == sorted(
         r for r in off.select(cols).collect()

@@ -352,8 +352,9 @@ def test_fuzzy_dedup_corpus_plan(spark):
     df = m.queries()["fuzzy_dedup_corpus"](spark, "/root/testdata/sf0.001")
     plan = _plan_simple(df)
     assert "CartesianProduct" not in plan
-    # the only nested-loop joins are the in-plan auto-salt threshold
-    # broadcasts (1-row sides) — their plan lines must stay tiny
+    # 500 docs are below the salting floor, so "auto" plans the plain
+    # LSH join with no threshold broadcast; a nested-loop join that
+    # appears here must have a 1-row side, and its plan line stays tiny
     bnlj = [ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln]
     assert all(len(ln.strip()) < 400 for ln in bnlj), bnlj
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

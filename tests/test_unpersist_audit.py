@@ -212,3 +212,40 @@ def test_fuzzy_dedup_runs_leave_no_cache(spark, tmp_path, clean_cache):
         assert _n_persistent_rdds(spark) == 0
     out = spark.read.parquet(str(tmp_path / "out1"))
     assert sorted(r.cluster_size for r in out.collect()) == [3] * 10
+
+
+def test_incremental_dedup_batch_runs_leave_no_cache(spark, tmp_path, clean_cache):
+    """A batch run checkpoints its exact-dedup survivors (read by the
+    band, verify and final anti-join consumers); repeated nightly
+    batches in one session must not pile them up."""
+    from m3d_engine_spark.operators.incremental import IncrementalDedupAlgorithm
+
+    def write(path, rows):
+        spark.createDataFrame(
+            [
+                Row(doc_id=i, text=" ".join([f"{tag}w{j}" for j in range(10)] + [tail]))
+                for i, tag, tail in rows
+            ]
+        ).write.parquet(path)
+
+    src, batch = str(tmp_path / "corpus"), str(tmp_path / "batch")
+    write(src, [(c, f"c{c}", "old") for c in range(10)])
+    # a near copy of every corpus document (the last word differs) and
+    # three unseen documents
+    write(batch, [(100 + c, f"c{c}", "new") for c in range(10)]
+          + [(200 + u, f"u{u}", "new") for u in range(3)])
+    arts = str(tmp_path / "arts")
+    IncrementalDedupAlgorithm(spark, ParamsFile({
+        "action": "materialize",
+        "source_location": src,
+        "artifact_location": arts,
+    })).run()
+    for i in range(3):
+        IncrementalDedupAlgorithm(spark, ParamsFile({
+            "source_location": batch,
+            "artifact_location": arts,
+            "target_location": str(tmp_path / f"out{i}"),
+        })).run()
+        assert _n_persistent_rdds(spark) == 0
+    out = spark.read.parquet(str(tmp_path / "out2"))
+    assert sorted(r.doc_id for r in out.collect()) == [200, 201, 202]
