@@ -49,6 +49,29 @@ def tracked_checkpoint(
     return out
 
 
+def _broadcastable(df: DataFrame) -> bool:
+    """The planner's own test: the size estimate fits
+    ``spark.sql.autoBroadcastJoinThreshold``."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()  # noqa: SLF001
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
+
+
+def pinned_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
+    """``left.join(right, on)`` with a strategy that does not depend on
+    timing. When neither side's size estimate fits the broadcast
+    threshold (an RDD scan or a checkpoint has no estimate at all) the
+    planner picks sort-merge, and AQE turns it into a broadcast once a
+    side's shuffle stage turns out small, with the build side taken
+    from whichever stage finishes first: a rerun can plan a different
+    join, generate different code and miss the codegen cache. Such a
+    join is hinted sort-merge, the plan at scale anyway. When a side
+    fits, the planner broadcasts it, the same way every run."""
+    if not (_broadcastable(left) or _broadcastable(right)):
+        left = left.hint("merge")
+    return left.join(right, on=on)
+
+
 def unpersist_checkpoints(dfs) -> None:
     """Free the RDD blocks behind localCheckpoint'd frames. NOTE:
     ``DataFrame.unpersist()`` is the WRONG tool here — it uncaches the

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from m3d_engine_spark.functions.text import fingerprint, tokens, with_tokens
 from m3d_engine_spark.functions.vectors import sign_lsh_bucket
+from m3d_engine_spark.operators.base import pinned_join
 from m3d_engine_spark.plans.skew import salted_self_join
 
 
@@ -238,9 +239,8 @@ def _banded_candidates(
       map-side-combined per-bucket counts, the count histogram's two
       exchanges, a 1-row threshold broadcast and the hot stream
       (``plans/skew.py::_flag_hot``), even when no bucket turns out
-      hot; ``fuzzy_dedup_corpus`` therefore passes ``None`` for a
-      corpus of at most ``plans.skew.AUTO_SALT_FLOOR`` rows, where no
-      bucket can reach the threshold.
+      hot; ``plans/skew.py::planned_salt_size`` says when it can skip
+      them.
 
     Why AQE doesn't cover this: these self-joins deliberately pin
     ReusedExchange (one evaluation of the signature pipeline), and
@@ -735,12 +735,14 @@ def _exact_jaccard_on_candidates(
         / F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))),
         4,
     )
+    with_a = pinned_join(
+        cands,
+        sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")),
+        on="id_a",
+    )
     return (
-        cands.join(
-            sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")),
-            on="id_a",
-        )
-        .join(
+        pinned_join(
+            with_a,
             sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")),
             on="id_b",
         )

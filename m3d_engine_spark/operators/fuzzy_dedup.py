@@ -54,7 +54,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from m3d_engine_spark.operators.base import Algorithm, register, tracked_checkpoint
+from m3d_engine_spark.operators.base import (
+    Algorithm,
+    pinned_join,
+    register,
+    tracked_checkpoint,
+)
 from m3d_engine_spark.operators.dedup import (
     _exact_jaccard_on_candidates,
     minhash_lsh_candidates,
@@ -65,7 +70,7 @@ from m3d_engine_spark.operators.graph import (
     connected_components,
     connected_components_star,
 )
-from m3d_engine_spark.plans.skew import AUTO_SALT_FLOOR, salt_size_param
+from m3d_engine_spark.plans.skew import planned_salt_size, salt_size_param
 
 
 def fuzzy_dedup_corpus(
@@ -109,10 +114,10 @@ def fuzzy_dedup_corpus(
     per-bucket counts, the histogram's two exchanges, the 1-row
     threshold broadcast and the hot stream's own exchanges
     (``plans/skew.py::_flag_hot``), so "auto" plans it only when a
-    bucket can be hot: a bucket holds at most one row per document and
-    the threshold is never below ``AUTO_SALT_FLOOR``, so a corpus of at
-    most that many rows gets the plain join, found by one bounded
-    ``take`` of the ids. Pass an int to force the threshold or None to
+    bucket can be hot: a bucket holds at most one row per document, and
+    a corpus of at most ``plans.skew.AUTO_SALT_FLOOR`` rows gets the
+    plain join (``plans/skew.py::planned_salt_size``, a bounded
+    ``take`` of the ids). Pass an int to force the threshold or None to
     disable salting entirely.
 
     Every checkpoint taken here and in connected components goes on
@@ -121,13 +126,7 @@ def fuzzy_dedup_corpus(
     """
     if quality is None:
         quality = F.length(F.col(text_col))
-    if salt_size == "auto" and len(
-        docs.select(id_col).take(AUTO_SALT_FLOOR + 1)
-    ) <= AUTO_SALT_FLOOR:
-        # No bucket can exceed the floor: the plain join, same pairs.
-        # take runs as executeTake; limit().count() would generate a
-        # fresh _limit_counter per run and recompile on every rerun.
-        salt_size = None
+    salt_size = planned_salt_size(salt_size, salt_parts, docs.select(id_col))
     cands = minhash_lsh_candidates(
         docs, id_col, text_col, num_hashes=num_hashes, bands=bands,
         shingle_n=shingle_n, max_bucket_size=max_bucket_size,
@@ -182,7 +181,8 @@ def fuzzy_dedup_corpus(
         id_col=id_col,
         quality_col="_q",
     )
-    return docs.join(
+    return pinned_join(
+        docs,
         survivors.select(
             F.col("survivor_id").alias(id_col), "component", "cluster_size"
         ),

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from m3d_engine_spark.operators.base import tracked_checkpoint
+from m3d_engine_spark.operators.base import pinned_join, tracked_checkpoint
 
 
 def propagation_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
@@ -163,11 +163,9 @@ def connected_components(
             f"budget); raise max_iterations or use "
             f"connected_components_star (O(log^2 n) rounds on chains)"
         )
-    return (
-        nodes.select(F.col(id_col).alias("a"))
-        .join(labels, on="a")
-        .select(F.col("a").alias(id_col), "component")
-    )
+    return pinned_join(
+        nodes.select(F.col(id_col).alias("a")), labels, on="a"
+    ).select(F.col("a").alias(id_col), "component")
 
 
 def _large_star(down: DataFrame) -> DataFrame:
@@ -315,8 +313,8 @@ def cluster_survivors(
     the total order silently with ANSI off). One min_by aggregation —
     map-side combinable, one exchange on the component key. Returns
     (component, survivor_id, cluster_size)."""
-    joined = labels.join(
-        quality.select(F.col(id_col), F.col(quality_col)), on=id_col
+    joined = pinned_join(
+        labels, quality.select(F.col(id_col), F.col(quality_col)), on=id_col
     )
     return joined.groupBy(component_col).agg(
         F.min_by(

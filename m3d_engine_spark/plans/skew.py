@@ -26,7 +26,9 @@ their rows spread over ``salt_parts`` tasks — and this module owns it:
   one ``groupBy(keys).count()`` relation. ``collect_hot_threshold`` is
   the driver-side read of the same rule for callers that persist the
   threshold, and ``operators/advisor.py`` reports its percentiles.
-  ``salt_size_param`` parses the CLI form of the dial.
+  ``salt_size_param`` parses the CLI form of the dial, and
+  ``planned_salt_size`` turns "auto" off for an input too small to
+  hold a hot key.
 * **One owner of** ``SALT_PART_COL``. The helpers add the part column
   to the join key and drop it from the output; callers never name it.
 
@@ -126,6 +128,35 @@ def _is_auto(salt_size: int | str) -> bool:
     return False
 
 
+def planned_salt_size(
+    salt_size: int | str | None, salt_parts: int, rows: DataFrame
+) -> int | str | None:
+    """The ``salt_size`` a salted join should plan with: ``"auto"``
+    becomes None when ``rows`` holds at most ``AUTO_SALT_FLOOR`` rows,
+    any other value passes through. ``rows`` must bound every join
+    key's row count (the documents of a join where each document holds
+    at most one row per key); the threshold is never below the floor,
+    so no key can be hot and the plain join returns the same pairs
+    without the salted plan's count exchange, histogram exchanges,
+    threshold broadcast and hot stream.
+
+    Deciding costs one bounded ``rows.take(AUTO_SALT_FLOOR + 1)``, which
+    runs as ``executeTake``: one job per round, the first round scanning
+    one partition and each further one up to
+    ``spark.sql.limit.scaleUpFactor`` (4) times as many until it has
+    the rows or has read them all. A single-partition input costs one
+    job. (``limit(n).count()`` would be one job too, but its generated
+    ``_limit_counter`` differs every run and recompiles on a rerun.)
+    ``salt_parts`` is checked before the probe, so a bad spread factor
+    fails at any corpus size."""
+    if salt_size != "auto":
+        return salt_size
+    _check_parts(salt_parts)
+    if len(rows.take(AUTO_SALT_FLOOR + 1)) <= AUTO_SALT_FLOOR:
+        return None
+    return salt_size
+
+
 def auto_salt_threshold(
     counts: DataFrame,
     size_col: str,
@@ -222,11 +253,15 @@ def collect_hot_threshold(
 
 
 # -------------------------------------------------------- join helpers
+def _check_parts(salt_parts: int) -> None:
+    if salt_parts < 2:
+        raise ValueError("salt_parts must be ≥ 2 when salt_size is set")
+
+
 def _check_salted(
     what: str, salt_parts: int, reserved: set[str], **sides: DataFrame
 ) -> None:
-    if salt_parts < 2:
-        raise ValueError("salt_parts must be ≥ 2 when salt_size is set")
+    _check_parts(salt_parts)
     for side, df in sides.items():
         # a caller column silently clobbered by withColumn would turn
         # into corrupted pair output (or an AMBIGUOUS_REFERENCE deep in

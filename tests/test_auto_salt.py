@@ -159,11 +159,13 @@ def test_fuzzy_dedup_auto_small_corpus_plans_plain_join(spark, sf_dir, monkeypat
     """A corpus of at most AUTO_SALT_FLOOR docs cannot hold a hot LSH
     bucket (one row per doc per bucket, threshold ≥ the floor), so
     "auto" plans the plain self-join: no salt part, no threshold
-    broadcast. Deciding that costs one bounded take, one job."""
+    broadcast. Deciding that costs one bounded take: one job on this
+    single-file corpus (``plans/skew.py::planned_salt_size``)."""
     import m3d_engine_spark.operators.fuzzy_dedup as fd
+    import m3d_engine_spark.plans.skew as skew
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert docs.count() <= fd.AUTO_SALT_FLOOR
+    assert docs.count() <= skew.AUTO_SALT_FLOOR
     off, off_jobs = _dedup_jobs(spark, docs, None)
     cands = _spy_candidates(monkeypatch, fd)
     auto, auto_jobs = _dedup_jobs(spark, docs, "auto")
@@ -178,15 +180,28 @@ def test_fuzzy_dedup_auto_above_floor_plans_salted_join(spark, sf_dir, monkeypat
     self-join plus the hot stream keyed on the salt part), and its
     output is that of the plain join."""
     import m3d_engine_spark.operators.fuzzy_dedup as fd
+    import m3d_engine_spark.plans.skew as skew
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    monkeypatch.setattr(fd, "AUTO_SALT_FLOOR", 10)
+    monkeypatch.setattr(skew, "AUTO_SALT_FLOOR", 10)
     off, _ = _dedup_jobs(spark, docs, None)
     cands = _spy_candidates(monkeypatch, fd)
     auto, _ = _dedup_jobs(spark, docs, "auto")
     smj = [ln for ln in _plan(cands[0]).splitlines() if "SortMergeJoin" in ln]
     assert len(smj) == 2 and sum(SALT_PART_COL in ln for ln in smj) == 1, smj
     assert auto == off and len(off) > 0
+
+
+def test_fuzzy_dedup_auto_rejects_one_salt_part_at_any_size(spark):
+    """A spread factor below 2 is a config error whether or not the
+    corpus is large enough for "auto" to plan the salted join."""
+    from m3d_engine_spark.operators.fuzzy_dedup import fuzzy_dedup_corpus
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="salt_parts must be ≥ 2"):
+        fuzzy_dedup_corpus(docs, "doc_id", "text", salt_parts=1)
 
 
 @pytest.mark.slow
@@ -224,7 +239,7 @@ def test_fuzzy_dedup_auto_hot_path_equals_unsalted(spark, sf_dir, monkeypatch):
             F.lit(2).cast("bigint").alias("_thr")
         ),
     )
-    monkeypatch.setattr(fd, "AUTO_SALT_FLOOR", 100)
+    monkeypatch.setattr(skew, "AUTO_SALT_FLOOR", 100)
     cands = _spy_candidates(monkeypatch, fd)
     hot = fd.fuzzy_dedup_corpus(docs, "doc_id", "text")  # auto → thr 2
     assert SALT_PART_COL in _plan(cands[0])
